@@ -8,8 +8,9 @@ but in one Spark session:
   Parquet + zstd, hive-partitioned by processing-time
   ``year/month/day/hour`` (partition pruning ≡ the reference's only
   query-cost lever, README.md:114,230);
-* ``ingest_batch`` / ``streaming.ingest.start_ingest`` — landing files →
-  intake → plugin pipeline → partitioned append (replaces the
+* ``land`` — the one landing path: normalized rows → partitioned
+  append plus quarantine.  ``ingest_batch`` and both stream starters in
+  ``streaming.ingest`` write through it (replaces the
   S3→lambda→Firehose→lambda→S3 hop chain);
 * ``spark.sql`` — the full Presto-surface replacement, including the
   compat JSON functions, so both README sample queries run verbatim.
@@ -28,6 +29,7 @@ from defenda_data_lake_spark.operators.pipeline import (
     add_partition_columns,
     normalize_df,
 )
+from defenda_data_lake_spark.schema import SHELL_FIELDS
 
 DATABASE = "defenda_data_lake"
 EVENTS_TABLE = f"{DATABASE}.events"
@@ -37,6 +39,11 @@ def create_events_table(spark: SparkSession, location: str | None = None) -> Non
     """Create the events database/table if absent.  With ``location``
     the table is external (the lake layout on shared storage)."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {DATABASE}")
+    if location:
+        # a missing directory costs the first CREATE TABLE and the first
+        # insertInto a FileNotFoundException warning each
+        path = spark._jvm.org.apache.hadoop.fs.Path(location)
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(path)
     location_clause = f" LOCATION '{location}'" if location else ""
     spark.sql(
         f"""
@@ -62,30 +69,50 @@ def create_events_table(spark: SparkSession, location: str | None = None) -> Non
     )
 
 
+def land(
+    spark: SparkSession, normalized: DataFrame, quarantine_path: str | None
+) -> None:
+    """The one write of the lake: append ``normalized``'s ``_status =
+    'Ok'`` rows to ``defenda_data_lake.events`` and every other row's
+    non-shell columns (``_status``, ``_raw``, plus ``dup_of`` on the
+    dedup path) to the quarantine as JSON (the reference's result
+    envelope, processor.py:59-76).  ``normalized`` is persisted for the
+    two writes, so the plugin kernel runs once per event."""
+    normalized = normalized.persist()
+    try:
+        good = normalized.filter(normalized["_status"] == STATUS_OK)
+        good = add_partition_columns(good.select(*SHELL_FIELDS))
+        good.write.mode("append").insertInto(EVENTS_TABLE)
+        # appending into an already-scanned partition leaves the
+        # session's file-status cache stale; refresh so concurrent
+        # readers see the new files immediately
+        spark.catalog.refreshTable(EVENTS_TABLE)
+        if quarantine_path:
+            envelope = [c for c in normalized.columns if c not in SHELL_FIELDS]
+            bad = normalized.filter(normalized["_status"] != STATUS_OK)
+            bad.select(*envelope).write.mode("append").json(quarantine_path)
+    finally:
+        # blocking: an asynchronous release competes with the caller's
+        # next job (measured on the read-back after a batch)
+        normalized.unpersist(blocking=True)
+
+
 def ingest_batch(
     spark: SparkSession,
     input_path: str,
     mode: str = "blob",
     quarantine_path: str | None = None,
 ) -> DataFrame:
-    """Batch-ingest landed files into ``defenda_data_lake.events``.
+    """Batch-ingest landed files into ``defenda_data_lake.events``
+    through :func:`land`.
 
     ``mode='blob'`` uses the whole-file intake (concatenated JSON,
     CloudTrail bundles); ``mode='ndjson'`` uses the splittable
-    line-based scan.  Returns the normalized good-rows DataFrame (after
-    it has been appended to the table)."""
+    line-based scan.  Returns ``spark.table(EVENTS_TABLE)``, the whole
+    events table after the append."""
     reader = read_blob_events if mode == "blob" else read_ndjson_events
     raw = reader(spark, input_path)
-    normalized = normalize_df(raw, raw_col="raw", source_col="source")
-    good = add_partition_columns(
-        normalized.filter(normalized["_status"] == STATUS_OK)
-    ).drop("_status", "_raw")
-    good.write.mode("append").insertInto(EVENTS_TABLE)
-    if quarantine_path:
-        bad = normalized.filter(normalized["_status"] != STATUS_OK).select(
-            "_status", "_raw"
-        )
-        bad.write.mode("append").json(quarantine_path)
+    land(spark, normalize_df(raw, raw_col="raw", source_col="source"), quarantine_path)
     return spark.table(EVENTS_TABLE)
 
 

@@ -34,8 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Reference filename convention for CloudTrail drops
-# (reference utils/helpers.py:10-12).
-_CLOUDTRAIL_RE = re.compile(r"\d+_cloudtrail_.+\.json\.gz$", re.IGNORECASE)
+# (reference utils/helpers.py:10-12), shared by the Python and JVM taggers.
+_CLOUDTRAIL_PATTERN = r"\d+_cloudtrail_.+\.json\.gz$"
+_CLOUDTRAIL_RE = re.compile(_CLOUDTRAIL_PATTERN, re.IGNORECASE)
 
 DEFAULT_SOURCE = "s3json"
 
@@ -48,7 +49,8 @@ def split_concatenated_json(text: str) -> Iterator[str]:
     """Yield each top-level ``{...}`` block from a text blob that may
     hold multiple JSON objects with no separators (reference
     utils/helpers.py:14-33).  Unlike the reference's bare brace count,
-    braces inside JSON strings are ignored."""
+    braces inside JSON strings are ignored, and an unterminated last
+    block is yielded too (it fails to parse, and is quarantined)."""
     depth = 0
     start = -1
     in_string = False
@@ -73,24 +75,27 @@ def split_concatenated_json(text: str) -> Iterator[str]:
                 depth -= 1
                 if depth == 0:
                     yield text[start : i + 1]
-    return
+    if depth > 0:
+        yield text[start:]
 
 
 def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:
     """Turn one raw file blob into ``(event_json, source)`` pairs with
     the reference's parse/unroll/tag semantics
-    (reference s3_to_firehose.py:100-126)."""
+    (reference s3_to_firehose.py:100-126).  A blob or concatenated block
+    that does not parse is yielded as-is, so the pipeline quarantines it
+    as ``ProcessingFailed`` with its payload instead of losing it."""
     source = "cloudtrail" if is_cloudtrail(filename) else DEFAULT_SOURCE
     try:
-        parsed = json.loads(blob)
-        chunks = [parsed]
+        chunks = [json.loads(blob)]
     except json.JSONDecodeError:
         chunks = []
-        for block in split_concatenated_json(blob):
+        blocks = list(split_concatenated_json(blob))
+        for block in blocks or ([blob] if blob.strip() else []):
             try:
                 chunks.append(json.loads(block))
             except json.JSONDecodeError:
-                continue
+                yield block, source
     for parsed in chunks:
         if isinstance(parsed, dict) and isinstance(parsed.get("Records"), list):
             records = parsed["Records"]
@@ -162,18 +167,22 @@ def decode_firehose_records(
     return df.select(*cols)
 
 
+def ndjson_intake(lines: DataFrame) -> DataFrame:
+    """A text scan's ``value`` lines → ``(raw, source)`` rows: blank
+    lines dropped, ``source`` tagged from the file name JVM-side.  The
+    one NDJSON intake expression, shared by the batch scan and the
+    streaming ``FileLandingSource``."""
+    is_cloudtrail_file = F.input_file_name().rlike("(?i)" + _CLOUDTRAIL_PATTERN)
+    return lines.filter(F.length(F.trim(F.col("value"))) > 0).select(
+        F.col("value").alias("raw"),
+        F.when(is_cloudtrail_file, "cloudtrail")
+        .otherwise(DEFAULT_SOURCE)
+        .alias("source"),
+    )
+
+
 def read_ndjson_events(spark: SparkSession, path: str) -> DataFrame:
     """Line-based intake for newline-delimited JSON (the reference's
     storage format, processor.py:51-57).  Splittable scan — this is the
-    scale path.  Source tagging from the filename happens JVM-side."""
-    df = spark.read.text(path).withColumn("file", F.input_file_name())
-    return df.filter(F.length(F.trim(F.col("value"))) > 0).select(
-        F.col("value").alias("raw"),
-        F.when(
-            F.regexp_count(F.col("file"), F.lit(r"(?i)\d+_cloudtrail_.+\.json\.gz$"))
-            > 0,
-            F.lit("cloudtrail"),
-        )
-        .otherwise(F.lit(DEFAULT_SOURCE))
-        .alias("source"),
-    )
+    scale path."""
+    return ndjson_intake(spark.read.text(path))

@@ -21,6 +21,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: the driver-heap ceiling for large hosts
+MAX_DRIVER_MEMORY_GB = 24
+
+
+def default_driver_memory() -> str:
+    """Half the machine's physical RAM, capped at
+    ``MAX_DRIVER_MEMORY_GB``: in local mode the driver JVM holds every
+    executor, and the other half is left to its Python workers and the
+    OS.  A fixed 24g heap could outgrow a smaller box under load."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return f"{MAX_DRIVER_MEMORY_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "defenda-data-lake-spark",
     master: str | None = None,
@@ -71,7 +87,10 @@ def get_spark(
         # (Spark has no nanos timestamp type); converted at load, see
         # plans.catalog._t
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -15,11 +15,13 @@ pipeline is shuffle-free.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from defenda_data_lake_spark.operators.intake import ndjson_intake
 
 
 class FileLandingSource:
-    """NDJSON landing-prefix stream → ``raw`` rows."""
+    """NDJSON landing-prefix stream → ``raw`` rows plus the ``source``
+    tag batch intake gives the same file (``read_ndjson_events``)."""
 
     def __init__(
         self, landing_path: str, max_files_per_trigger: int | None = None
@@ -33,4 +35,4 @@ class FileLandingSource:
             reader = reader.option(
                 "maxFilesPerTrigger", self.max_files_per_trigger
             )
-        return reader.load(self.landing_path).select(F.col("value").alias("raw"))
+        return ndjson_intake(reader.load(self.landing_path))

@@ -14,7 +14,9 @@ Semantics preserved:
   needed for parity (reference has no streaming SQL, SURVEY.md §2B);
 * failed/dropped records go to a quarantine sink instead of the main
   table (the ``ProcessingFailed`` envelope, processor.py:59-76);
-* partition columns are **processing time** at write (§1.2).
+* partition columns are **processing time** at write (§1.2);
+* every micro-batch lands through ``lake.land`` — the same write, and
+  the same ``source`` tagging for file landings, as ``ingest_batch``.
 
 Scale notes: each micro-batch is a narrow scan → mapInPandas →
 partitioned append; no shuffle.  For very high event rates, raise
@@ -27,14 +29,47 @@ partition-registration cron (generate_partitions.py) is unnecessary.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from defenda_data_lake_spark.lake import EVENTS_TABLE, create_events_table
+from defenda_data_lake_spark.lake import create_events_table, land
 from defenda_data_lake_spark.operators.pipeline import (
+    STATUS_DROPPED,
     STATUS_OK,
-    add_partition_columns,
     normalize_df,
 )
+
+
+def _open_stream(
+    spark: SparkSession,
+    landing_path: str | None,
+    checkpoint_path: str | None,
+    max_files_per_trigger: int | None,
+    source,
+) -> DataFrame:
+    """The starters' shared preamble: check arguments, create the events
+    table, and load the adapter's non-blank ``raw`` rows."""
+    if checkpoint_path is None:
+        raise ValueError("checkpoint_path is required")
+    create_events_table(spark)
+    if source is None:
+        if landing_path is None:
+            raise ValueError("pass landing_path or an explicit source")
+        from defenda_data_lake_spark.sources import FileLandingSource
+
+        source = FileLandingSource(landing_path, max_files_per_trigger)
+    return source.load(spark).filter(F.length(F.trim(F.col("raw"))) > 0)
+
+
+def _start(
+    stream: DataFrame, process_batch, checkpoint_path: str, trigger_seconds: int
+) -> StreamingQuery:
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
 
 
 def start_ingest(
@@ -52,47 +87,21 @@ def start_ingest(
     ``source`` is any adapter from ``defenda_data_lake_spark.sources``
     (streaming DataFrame with a ``raw`` string column); when omitted, a
     ``FileLandingSource`` over ``landing_path`` — the reference's own
-    Firehose→S3 delivery layout."""
-    if checkpoint_path is None:
-        raise ValueError("checkpoint_path is required")
-    create_events_table(spark)
-
-    if source is None:
-        if landing_path is None:
-            raise ValueError("pass landing_path or an explicit source")
-        from defenda_data_lake_spark.sources import FileLandingSource
-
-        source = FileLandingSource(landing_path, max_files_per_trigger)
-    lines = source.load(spark)
+    Firehose→S3 delivery layout.  When the adapter supplies a ``source``
+    column, it stamps each event's ``source`` as batch intake does."""
+    lines = _open_stream(
+        spark, landing_path, checkpoint_path, max_files_per_trigger, source
+    )
+    source_col = "source" if "source" in lines.columns else None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
+        land(
+            spark,
+            normalize_df(batch_df, raw_col="raw", source_col=source_col),
+            quarantine_path,
+        )
 
-        raw = batch_df.filter(F.length(F.trim(F.col("raw"))) > 0).select("raw")
-        normalized = normalize_df(raw, raw_col="raw").cache()
-        try:
-            good = add_partition_columns(
-                normalized.filter(normalized["_status"] == STATUS_OK)
-            ).drop("_status", "_raw")
-            good.write.mode("append").insertInto(EVENTS_TABLE)
-            # appending into an already-scanned partition leaves the
-            # session's file-status cache stale; refresh so concurrent
-            # readers see the new files immediately
-            spark.catalog.refreshTable(EVENTS_TABLE)
-            if quarantine_path:
-                bad = normalized.filter(normalized["_status"] != STATUS_OK).select(
-                    "_status", "_raw"
-                )
-                bad.write.mode("append").json(quarantine_path)
-        finally:
-            normalized.unpersist()
-
-    return (
-        lines.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start(lines, process_batch, checkpoint_path, trigger_seconds)
 
 
 def start_deduped_ingest(
@@ -116,96 +125,59 @@ def start_deduped_ingest(
     normalization, events whose ``text_col`` is a MinHash near-match of
     an earlier event in the same LSH bucket (within the watermark
     horizon) are diverted to the quarantine with a ``Dropped`` status
-    and a ``dup_of`` pointer instead of landing in the events table —
-    a continuous crawl/ingest discarding near-re-posts with no nightly
-    batch job.
+    and a ``dup_of`` pointer instead of landing in the events table.
 
-    Composition (the round-5 verdict's missing end-to-end wiring):
-    normalization runs IN-PLAN (``normalize_df`` is a stateless
-    Arrow-batched map, legal on a stream), then
-    ``near_dedupe_stream`` adds the stateful candidate+verify stage,
-    and ``foreachBatch`` resolves per-event verdicts
-    (:func:`resolve_stream_flags`) and routes three ways: survivors →
-    events table, near-dups → quarantine (``Dropped``), processing
-    failures → quarantine (``ProcessingFailed``).  Failed records have
-    no usable timestamp or summary, so they ride the dedup stage's
-    bypass branch (no-row-lost invariant) and arrive here intact.
-
-    Semantics note: ``Dropped`` in the reference envelope means "a
-    plugin declined the event" (processor.py:59-76); here it also
-    covers near-duplicate suppression — both are policy drops, kept
-    distinct from failures by the ``dup_of`` field.
+    Composition: normalization runs in-plan (``normalize_df`` is a
+    stateless Arrow-batched map), ``near_dedupe_stream`` adds the
+    stateful candidate+verify stage, and ``foreachBatch`` resolves
+    per-event verdicts (:func:`resolve_stream_flags`) and lands through
+    ``lake.land``: survivors → events table, near-dups → quarantine
+    (``Dropped``), processing failures → quarantine
+    (``ProcessingFailed``).  Failed records have no usable timestamp or
+    summary, so they ride the dedup stage's bypass branch (no row lost)
+    and arrive here intact.  ``Dropped`` in the reference envelope means
+    "a plugin declined the event" (processor.py:59-76); here it also
+    covers near-duplicate suppression, told apart by ``dup_of``.
 
     The dedup stage runs in ``timeout_mode="processing"`` (wall-clock
-    state TTL, NO event-time watermark): an ingest pipeline must land
+    state TTL, no event-time watermark): an ingest pipeline must land
     every event, and an event-time watermark makes the engine silently
-    discard rows that arrive behind it — the round-7 500k probe
-    measured 239k of 500k events lost that way before this default.
+    discard rows that arrive behind it (239k of 500k events in a
+    measured probe).
 
     ``dedup_shards=256`` by default: the sharded bucket-table kernel
-    (see ``near_dedupe_stream``) serves thousands of LSH buckets per
-    Python call instead of one — measured 5.8x throughput (2,152 ->
-    12,564 ev/s) at the 500k probe; ``None`` selects the per-bucket
+    serves thousands of LSH buckets per Python call instead of one
+    (5.8x throughput at 500k events); ``None`` selects the per-bucket
     reference kernel (verdict-identical, parity-pinned).
 
-    Claimant re-sends are handled ON THE DEFAULT PATH (round 12,
-    VERDICT r11 item 1): a byte-identical re-delivery of a bucket
-    claimant in a later micro-batch is flagged ``dup_of`` by the
-    stateful kernel (judged by signature agreement once its bucket
-    pre-exists) and lands in the QUARANTINE with its audit record —
-    it no longer silently lands in the events table twice.  The one
-    documented residual: bypass rows (no parseable timestamp / no
-    shingles) survive unconditionally, so their exact re-sends still
-    double-land unless ``exact_predrop`` is on.
+    A byte-identical re-delivery of a bucket claimant in a later
+    micro-batch is flagged ``dup_of`` by the stateful kernel and lands
+    in the quarantine, not twice in the events table.  Bypass rows (no
+    parseable timestamp / no shingles) survive unconditionally, so their
+    exact re-sends still double-land unless ``exact_predrop`` is on.
 
-    ``exact_predrop=True`` adds a pure-JVM exact-duplicate stage on
-    the RAW LINE, before normalization (round 12; the round-11
-    post-normalize placement could not see byte-identical re-sends at
-    all on this path — the pipeline mints eventids, so re-sends never
-    share an id after normalization).  A byte-identical re-send
-    within the watermark horizon is suppressed in-stream instead of
-    being flagged/quarantined: it skips the entire Python pipeline,
-    and this is the only stage that can catch re-sends of BYPASS
-    rows (unparseable timestamp / unshingleable text), which
-    otherwise double-land by design.  A CORRECTNESS-coverage flag,
-    not a throughput lever: the r12 probe measured it 1.03-1.31x
-    SLOWER than the default path at 20-50% re-send fractions (the
-    raw-line exchange + second stateful stage cost more than the
-    suppressed rows' skipped Python work — SCALING.md "Round 12").
-    Off by default, two documented reasons:
-    it changes the quarantine contract (suppressed re-sends leave no
-    quarantine record — on the default path a shingleable re-send
-    lands in the quarantine flagged ``dup_of``) and the streaming DAG
-    (existing checkpoints are not resumable across the flag OR across
-    the round-11 -> round-12 relocation of the pre-drop to the raw
-    line — a predrop stream upgraded across rounds must restart on a
-    fresh checkpoint, optionally seeding via
-    ``seed_near_dedup_state``; the DEFAULT path's round-12 kernel
-    changes are state-schema-compatible and resume fine).  Note byte-identical DISTINCT events
-    inside one horizon are indistinguishable from transport re-sends
-    at this stage by construction — the same trade
-    ``dedupe_stream`` documents."""
-    if checkpoint_path is None:
-        raise ValueError("checkpoint_path is required")
-    create_events_table(spark)
-
-    if source is None:
-        if landing_path is None:
-            raise ValueError("pass landing_path or an explicit source")
-        from defenda_data_lake_spark.sources import FileLandingSource
-
-        source = FileLandingSource(landing_path, max_files_per_trigger)
-    lines = source.load(spark)
-
-    from pyspark.sql import functions as F
-
+    ``exact_predrop=True`` adds a pure-JVM exact-duplicate stage on the
+    raw line, before normalization (the pipeline mints eventids, so
+    re-sends never share an id after it): a byte-identical re-send
+    within the watermark horizon is suppressed, skips the Python
+    pipeline, and leaves no quarantine record.  It is the only stage
+    that catches re-sends of bypass rows.  A correctness flag, not a
+    throughput lever (measured 1.03-1.31x slower at 20-50% re-sends,
+    SCALING.md "Round 12"), and off by default because it changes the
+    quarantine contract and the streaming DAG: checkpoints do not resume
+    across the flag (restart fresh, optionally seeding via
+    ``seed_near_dedup_state``).  Byte-identical distinct events inside
+    one horizon are indistinguishable from re-sends at this stage, the
+    same trade ``dedupe_stream`` documents."""
     from defenda_data_lake_spark.schema import SHELL_FIELDS
     from defenda_data_lake_spark.streaming.dedup import (
         near_dedupe_stream,
         resolve_stream_flags,
     )
 
-    raw = lines.filter(F.length(F.trim(F.col("raw"))) > 0).select("raw")
+    raw = _open_stream(
+        spark, landing_path, checkpoint_path, max_files_per_trigger, source
+    )
     if scan_parallelism:
         # a file-landing micro-batch scans at one task per FILE; the
         # normalize + signature kernels then run at file parallelism,
@@ -215,33 +187,12 @@ def start_deduped_ingest(
         # when files-per-trigger < cores and batches are large.
         raw = raw.repartition(scan_parallelism)
     if exact_predrop:
-        # ------------------------------------------------------------------
-        # RAW-level exact pre-drop (round 12; supersedes the round-11
-        # post-normalize placement for the INGEST path): the pipeline
-        # MINTS eventids (uuid4, the reference's ensure_eventid quirk
-        # — a payload eventid demotes into details), so a
-        # byte-identical transport re-send never shares an id after
-        # normalization; any (id, text)-keyed stage downstream of the
-        # mint cannot recognize it.  The raw LINE is the one
-        # representation where a transport re-send is literally equal,
-        # so the drop happens here — pure JVM, BEFORE normalize, which
-        # means suppressed re-sends skip the whole Python pipeline
-        # (normalize + signature + stateful), not just the dedup
-        # stages.  This is also the only place byte-identical re-sends
-        # of BYPASS rows (unparseable timestamp / unshingleable text)
-        # can be caught: those survive the dedup stage unconditionally
-        # by design.  The single arrival-time watermark for the WHOLE
-        # query is defined here (Spark forbids redefining a watermark
-        # on a linear chain), and near_dedupe_stream is told so via
-        # external_watermark=True — its own arrival column carries the
-        # same micro-batch timestamp values, so eviction timing is
-        # unchanged.
-        # ------------------------------------------------------------------
-        # keyed on md5(raw), not the raw line: the dedup key is what
-        # the state store persists per distinct row per horizon (and
-        # what the exchange hashes), and a 32-hex digest is a fraction
-        # of a typical event line; collision risk is the same 2^-128
-        # the r11 operator-level predrop accepted
+        # the raw line is the one form in which a transport re-send is
+        # literally equal.  The query's single arrival-time watermark is
+        # defined here (Spark forbids a second on a linear chain) and
+        # near_dedupe_stream adopts it via external_watermark.  Keyed on
+        # md5(raw): the state store keeps a 32-hex digest per row, not
+        # the line (collision risk 2^-128)
         raw = (
             raw.withColumn("_ingest_arrival", F.current_timestamp())
             .withColumn("_ingest_xh", F.md5(F.col("raw")))
@@ -257,6 +208,7 @@ def start_deduped_ingest(
     normalized = normalize_df(
         raw,
         raw_col="raw",
+        source_col="source" if "source" in raw.columns else None,
         passthrough=["_ingest_arrival"] if exact_predrop else (),
     )
     flagged = near_dedupe_stream(
@@ -273,41 +225,28 @@ def start_deduped_ingest(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()
+        # cached so the two routes below do not each re-run the
+        # stateful stage
+        batch_df = batch_df.withColumnRenamed("_ndd_id", "eventid").cache()
         try:
             ok = resolve_stream_flags(
-                batch_df.filter(F.col("_status") == STATUS_OK)
-            ).withColumnRenamed("_ndd_id", "eventid")
-            ok = ok.cache()
-            try:
-                survivors = ok.filter(F.col("dup_of").isNull()).select(
-                    *SHELL_FIELDS
-                )
-                good = add_partition_columns(survivors)
-                good.write.mode("append").insertInto(EVENTS_TABLE)
-                spark.catalog.refreshTable(EVENTS_TABLE)
-                if quarantine_path:
-                    near_dups = ok.filter(F.col("dup_of").isNotNull()).select(
-                        F.lit("Dropped").alias("_status"),
-                        F.col("_raw"),
-                        F.col("dup_of"),
-                    )
-                    failed = batch_df.filter(
-                        F.col("_status") != STATUS_OK
-                    ).select(
-                        "_status", "_raw", F.lit(None).cast("string").alias("dup_of")
-                    )
-                    near_dups.unionByName(failed).write.mode("append").json(
-                        quarantine_path
-                    )
-            finally:
-                ok.unpersist()
+                batch_df.filter(F.col("_status") == STATUS_OK), id_col="eventid"
+            )
+            near_dup = F.col("dup_of").isNotNull()
+            routed = ok.select(
+                *SHELL_FIELDS,
+                F.when(near_dup, STATUS_DROPPED).otherwise(STATUS_OK).alias("_status"),
+                "_raw",
+                "dup_of",
+            )
+            failed = batch_df.filter(F.col("_status") != STATUS_OK).select(
+                *SHELL_FIELDS,
+                "_status",
+                "_raw",
+                F.lit(None).cast("string").alias("dup_of"),
+            )
+            land(spark, routed.unionByName(failed), quarantine_path)
         finally:
             batch_df.unpersist()
 
-    return (
-        flagged.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start(flagged, process_batch, checkpoint_path, trigger_seconds)

@@ -66,7 +66,11 @@ def test_row_count_and_shell(lake):
 def test_quarantine_captured(lake):
     spark, tmp = lake["spark"], lake["tmp"]
     bad = spark.read.json(str(tmp / "quarantine"))
-    assert bad.count() == 0 or bad.filter("_status = 'ProcessingFailed'").count() >= 0
+    # broken.json does not parse as a whole or as blocks: it is
+    # quarantined with its payload, not lost
+    assert [r.asDict() for r in bad.collect()] == [
+        {"_status": "ProcessingFailed", "_raw": '{"unterminated": '}
+    ]
 
 
 def test_source_tagging(lake):
@@ -207,7 +211,19 @@ def test_extract_events_unrolls_records():
 def test_extract_events_list_and_dict():
     assert len(list(extract_events(json.dumps([{"a": 1}, {"b": 2}]), "x.json"))) == 2
     assert len(list(extract_events(json.dumps({"a": 1}), "x.json"))) == 1
-    assert len(list(extract_events("not json at all", "x.json"))) == 0
+    # an unparseable blob comes back raw, for the pipeline to quarantine
+    assert list(extract_events("not json at all", "x.json")) == [
+        ("not json at all", "s3json")
+    ]
+    assert list(extract_events('{"a": 1}{"b": ', "x.json")) == [
+        ('{"b": ', "s3json"),
+        ('{"a": 1, "source": "s3json"}', "s3json"),
+    ]
+    assert list(extract_events('{"a": }{"b": 2}', "x.json")) == [
+        ('{"a": }', "s3json"),
+        ('{"b": 2, "source": "s3json"}', "s3json"),
+    ]
+    assert list(extract_events(" \n", "x.json")) == []
 
 
 def test_verbatim_partition_ddl_registers_external_hour(lake):

@@ -1,0 +1,124 @@
+"""The one landing path (``lake.land``): the plugin kernel runs once per
+event, and batch and stream intake land the same rows from the same
+landing files."""
+
+import functools
+import gzip
+import json
+from collections import Counter
+
+from defenda_data_lake_spark import lake
+from defenda_data_lake_spark.lake import EVENTS_TABLE, create_events_table, ingest_batch
+from defenda_data_lake_spark.operators import pipeline
+from tests.fixtures.events import ALL_FIXTURES, deep_copy
+
+
+def test_ingest_batch_runs_kernel_once_per_event(spark, tmp_path, monkeypatch):
+    calls = spark.sparkContext.accumulator(0)
+
+    class Counting(pipeline.Plugin):
+        name = "counting"
+        priority = 0
+
+        def on_event(self, event, metadata):
+            calls.add(1)
+            return event
+
+    def plugin_factory():
+        return [Counting(), *pipeline.default_plugins()]
+
+    monkeypatch.setattr(
+        lake,
+        "normalize_df",
+        functools.partial(pipeline.normalize_df, plugin_factory=plugin_factory),
+    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    n = 25
+    with open(landing / "events.json", "w") as f:
+        for i in range(n):
+            f.write(json.dumps({"srcaddr": f"198.51.100.{i}", "start": 1418530010 + i}) + "\n")
+        f.write("{not json\n")
+
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    create_events_table(spark, location=str(tmp_path / "table"))
+    try:
+        ingest_batch(
+            spark, str(landing), mode="ndjson", quarantine_path=str(tmp_path / "quarantine")
+        )
+        assert spark.table(EVENTS_TABLE).count() == n
+        assert spark.read.json(str(tmp_path / "quarantine")).count() == 1
+        assert calls.value == n
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+
+
+def _write_landing(landing):
+    landing.mkdir()
+    # a raw CloudTrail record (no ``source`` of its own) under the
+    # CloudTrail filename convention
+    with gzip.open(landing / "123456_cloudtrail_demo.json.gz", "wt") as f:
+        f.write(json.dumps(deep_copy("cloudtrail")["details"]) + "\n")
+    with open(landing / "flows.json", "w") as f:
+        f.write(json.dumps(ALL_FIXTURES["vpc_flow"]()) + "\n")
+        f.write(json.dumps(ALL_FIXTURES["cloudfront"]()) + "\n")
+        f.write("\n")
+        f.write("{not json\n")
+
+
+def _landed(spark, quarantine):
+    rows = Counter(
+        (r["source"], r["summary"], r["category"], r["severity"])
+        + (tuple(r["tags"]), tuple(r["plugins"]))
+        for r in spark.table(EVENTS_TABLE).collect()
+    )
+    statuses = Counter(r["_status"] for r in spark.read.json(quarantine).collect())
+    return rows, statuses
+
+
+def test_batch_and_stream_land_the_same_rows(spark, tmp_path):
+    from defenda_data_lake_spark.streaming.ingest import start_ingest
+
+    landing = tmp_path / "landing"
+    _write_landing(landing)
+
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    try:
+        create_events_table(spark, location=str(tmp_path / "batch_table"))
+        batch_quarantine = str(tmp_path / "batch_quarantine")
+        ingest_batch(spark, str(landing), mode="ndjson", quarantine_path=batch_quarantine)
+        batch = _landed(spark, batch_quarantine)
+
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+        create_events_table(spark, location=str(tmp_path / "stream_table"))
+        stream_quarantine = str(tmp_path / "stream_quarantine")
+        query = start_ingest(
+            spark,
+            landing_path=str(landing),
+            checkpoint_path=str(tmp_path / "ckpt"),
+            quarantine_path=stream_quarantine,
+            trigger_seconds=1,
+        )
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+        stream = _landed(spark, stream_quarantine)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+
+    assert stream == batch
+    rows, statuses = batch
+    sources = sorted(source for source, *_ in rows.elements())
+    assert sources == ["cloudtrail", "s3json", "s3json"]
+    assert statuses == Counter({"ProcessingFailed": 1})
+
+
+def test_create_events_table_creates_location(spark, tmp_path):
+    location = tmp_path / "fresh" / "events"
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    try:
+        create_events_table(spark, location=str(location))
+        assert location.is_dir()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")

@@ -14,7 +14,7 @@ def test_file_landing_source_contract(spark, tmp_path):
     (landing / "a.json").write_text(json.dumps({"summary": "hi"}) + "\n")
     df = FileLandingSource(str(landing), max_files_per_trigger=4).load(spark)
     assert df.isStreaming
-    assert df.columns == ["raw"]
+    assert df.columns == ["raw", "source"]
 
 
 def test_kinesis_source_options():
@@ -99,4 +99,4 @@ def test_kafka_source_without_connector_raises_actionable(spark):
         assert "spark-sql-kafka" in str(exc)
     else:
         # connector present in this build: the contract column exists
-        assert df.columns == ["raw"]
+        assert df.columns == ["raw", "source"]
