@@ -77,6 +77,14 @@ def _dumps(value: Any) -> str:
     return _JSON_ENCODE(value)
 
 
+#: ``metadata`` entry holding the event's key index, ``(keys, hits)``:
+#: ``keys`` is the recursive key set, ``hits`` is ``None`` or the
+#: ``collect_fields`` hits of ``plugins.CANDIDATE_FIELDS``.  Exact for
+#: the current event whenever present; a reader that finds none walks
+#: the event itself.
+KEY_INDEX = "key_index"
+
+
 class Plugin:
     """One pipeline step.
 
@@ -116,12 +124,14 @@ def event_criteria_values(event: dict) -> set:
     return tokens
 
 
-def _criteria_match(event: dict, wanted: frozenset) -> bool:
+def _criteria_match(event: dict, wanted: frozenset, keys: set | None = None) -> bool:
     """``bool(wanted & event_criteria_values(event))`` without
     materializing the token set: an early-exit walk over the same
     token space (every nested key, ``tags`` values, ``category``).
     The full-set form costed ~40 µs/event at the ingest kernel's row
-    rate — the routing check was as expensive as a plugin."""
+    rate — the routing check was as expensive as a plugin.  ``keys``,
+    the event's recursive key set when a key index holds it, replaces
+    the walk."""
     category = event.get("category")
     if isinstance(category, str) and category in wanted:
         return True
@@ -130,6 +140,8 @@ def _criteria_match(event: dict, wanted: frozenset) -> bool:
         for t in tags:
             if isinstance(t, str) and t in wanted:
                 return True
+    if keys is not None:
+        return not wanted.isdisjoint(keys)
     stack = [event]
     while stack:
         cur = stack.pop()
@@ -191,21 +203,34 @@ def run_pipeline(
     (reference utils/plugins.py:61-110).  Returns the transformed event,
     or ``None`` if a plugin dropped it.  Pass ``presorted=True`` when
     the caller already ran ``order_plugins`` (the Arrow host does, once
-    per task instead of once per event)."""
+    per task instead of once per event).
+
+    The built-in plugins share one key index through
+    ``metadata[KEY_INDEX]`` instead of each walking the event again."""
     if not isinstance(event, dict):
         raise TypeError(f"event is type {type(event)}, should be a dict")
     metadata = metadata if metadata is not None else {}
+    metadata.pop(KEY_INDEX, None)
+    keepers = _index_keepers()
     executed: list[str] = []
     for plugin in plugins if presorted else order_plugins(plugins):
         if "*" in plugin.registration:
             fire = True
         else:
-            fire = _criteria_match(event, _wanted_tokens(plugin.registration))
+            index = metadata.get(KEY_INDEX)
+            fire = _criteria_match(
+                event,
+                _wanted_tokens(plugin.registration),
+                index[0] if index is not None else None,
+            )
         if fire:
             event = plugin.on_event(event, metadata)
+            if type(plugin) not in keepers:
+                metadata.pop(KEY_INDEX, None)
             if event is None:
                 return None
             executed.append(plugin.name)
+    metadata.pop(KEY_INDEX, None)
     event["plugins"] = list(event.get("plugins") or []) + executed
     return event
 
@@ -229,6 +254,22 @@ def default_plugins() -> list[Plugin]:
         IpAddresses(),
         GsuiteLogin(),
     ]
+
+
+@functools.cache
+def _index_keepers() -> frozenset:
+    """The plugin classes whose ``on_event`` leaves ``metadata[KEY_INDEX]``
+    exact for the event it returns, or removes it.  Exact classes only: a
+    subclass, even of one of these, may mutate the event behind the
+    index's back."""
+    from defenda_data_lake_spark.operators.plugins import (
+        EventShell,
+        IpAddresses,
+        LowercaseKeys,
+        Timestamps,
+    )
+
+    return frozenset([LowercaseKeys, EventShell, Timestamps, IpAddresses])
 
 
 class ReferencePluginAdapter(Plugin):

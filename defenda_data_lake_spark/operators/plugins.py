@@ -5,6 +5,13 @@ Each plugin is a pure ``dict -> dict`` transform hosted by the
 Arrow-batched router in ``operators.pipeline`` — the Spark-side
 contract is: stateless per record, no shuffle, linear scale-out.
 Reference citations are per-class.
+
+Instead of each walking the event again, the plugins share one key index
+in the per-event ``metadata`` (``pipeline.KEY_INDEX``): ``LowercaseKeys``
+builds the key set, ``EventShell`` reads it, and the first of
+``Timestamps``/``IpAddresses`` adds the candidate-field hits.  Every
+mutation below either keeps the index exact or drops it; a plugin that
+finds no index walks the event itself.
 """
 
 from __future__ import annotations
@@ -15,7 +22,7 @@ import re
 import uuid
 from datetime import datetime, timezone
 
-from defenda_data_lake_spark.operators.pipeline import Plugin
+from defenda_data_lake_spark.operators.pipeline import KEY_INDEX, Plugin
 from defenda_data_lake_spark.schema import SHELL_DEFAULTS
 from defenda_data_lake_spark.utils.dates import to_utc
 from defenda_data_lake_spark.utils.templating import render
@@ -25,8 +32,7 @@ from defenda_data_lake_spark.utils.json_tree import (
     dict_match,
     enum_keys,
     get_by_path,
-    lowercase_keys,
-    set_by_path,
+    lowercase_keys_into,
 )
 
 # Candidate-field lists; ORDER MATTERS (first-match-wins, reference
@@ -69,6 +75,42 @@ LIKELY_DESTINATION_IP_FIELDS = [
     "id_resp_h",
     "serverip",
 ]
+
+#: every field the timestamp and IP searches read: one ``collect_fields``
+#: walk over them serves both plugins through the key index
+CANDIDATE_FIELDS = frozenset(
+    LIKELY_TIMESTAMP_FIELDS
+    + ["date"]
+    + LIKELY_SOURCE_IP_FIELDS
+    + LIKELY_DESTINATION_IP_FIELDS
+)
+
+
+def _candidate_hits(event: dict, metadata: dict) -> dict:
+    """The ``CANDIDATE_FIELDS`` hits of ``event``, from the key index when
+    it holds them, else from one walk that then becomes the index."""
+    index = metadata.get(KEY_INDEX)
+    if index is None or index[1] is None:
+        index = metadata[KEY_INDEX] = collect_fields(event, CANDIDATE_FIELDS)
+    return index[1]
+
+
+def _assign(metadata: dict, node: dict, key: str, value) -> None:
+    """``node[key] = value`` for a ``node`` inside the event, keeping the
+    key index exact: ``key`` joins the key set, the hits go when ``key``
+    is a candidate field, and the whole index goes when the old value was
+    a container (its keys may occur nowhere else)."""
+    old = node.get(key)
+    node[key] = value
+    index = metadata.get(KEY_INDEX)
+    if index is None:
+        return
+    if isinstance(old, (dict, list)):
+        del metadata[KEY_INDEX]
+        return
+    index[0].add(key)
+    if key in CANDIDATE_FIELDS:
+        metadata[KEY_INDEX] = (index[0], None)
 
 
 #: dotted-quad matcher: 0-255 per octet, no leading zeros, exactly four
@@ -114,7 +156,13 @@ class LowercaseKeys(Plugin):
     priority = 1
 
     def on_event(self, event: dict, metadata: dict) -> dict:
-        return lowercase_keys(event)
+        keys: set = set()
+        event = lowercase_keys_into(event, keys)
+        if None in keys:  # two keys collided; keys may name lost ones
+            metadata.pop(KEY_INDEX, None)
+        else:
+            metadata[KEY_INDEX] = (keys, None)
+        return event
 
 
 class EventShell(Plugin):
@@ -138,7 +186,9 @@ class EventShell(Plugin):
     )
 
     def on_event(self, event: dict, metadata: dict) -> dict:
-        if not self.SHELL_KEYS <= set(enum_keys(event)):
+        index = metadata.get(KEY_INDEX)
+        keys = index[0] if index is not None else set(enum_keys(event))
+        if not self.SHELL_KEYS <= keys:
             # shell built only when the merge fires: construction has
             # no side effects, and already-shelled events skip the
             # datetime.now + dict build entirely
@@ -150,8 +200,14 @@ class EventShell(Plugin):
                 "details": {},
             }
             event = deep_merge(shell, event)
+            keys |= self.SHELL_KEYS
+        # demoting moves keys but changes the walk order of the hits
+        metadata[KEY_INDEX] = (keys, None)
         for key in [k for k in event if k not in self.SHELL_KEYS]:
-            event["details"][key] = event.pop(key)
+            details = event["details"]
+            if key in details:  # the demoted value replaces a subtree
+                metadata.pop(KEY_INDEX, None)
+            details[key] = event.pop(key)
         return event
 
 
@@ -200,35 +256,33 @@ class Timestamps(Plugin):
     registration = ["*"]
     priority = 20
 
-    _WANTED = None  # class-level cache of the candidate-field set
-
     def on_event(self, event: dict, metadata: dict) -> dict:
-        if Timestamps._WANTED is None:
-            Timestamps._WANTED = set(LIKELY_TIMESTAMP_FIELDS) | {"date"}
-        # one walk instead of set(enum_keys) + find_keys per field
-        keys, hits = collect_fields(event, Timestamps._WANTED)
+        hits = _candidate_hits(event, metadata)
         done = False
         for field in LIKELY_TIMESTAMP_FIELDS:
-            if done or field not in keys:
+            if done or field not in hits:
                 continue
-            candidates = hits.get(field, [])
-            if field == "time" and "date" in keys:
-                dates = hits.get("date", [])
-                if dates:
-                    candidates = [f"{d} {t}" for d, t in zip(dates, candidates)]
+            candidates = hits[field]
+            if field == "time" and "date" in hits:
+                candidates = [f"{d} {t}" for d, t in zip(hits["date"], candidates)]
             for candidate in candidates:
                 try:
                     stamp = to_utc(candidate)
                 except Exception:
                     continue
-                event["utctimestamp"] = stamp.isoformat()
+                _assign(metadata, event, "utctimestamp", stamp.isoformat())
                 done = True
                 break
-        details = event.setdefault("details", {})
+        if "details" not in event:
+            _assign(metadata, event, "details", {})
+        details = event["details"]
         if isinstance(details, dict):
-            details["_utcprocessedtimestamp"] = datetime.now(
-                timezone.utc
-            ).isoformat()
+            _assign(
+                metadata,
+                details,
+                "_utcprocessedtimestamp",
+                datetime.now(timezone.utc).isoformat(),
+            )
         return event
 
 
@@ -251,41 +305,40 @@ class IpAddresses(Plugin):
     registration = ["*"]
     priority = 20
 
-    _WANTED = None  # class-level cache of the candidate-field set
-
     @staticmethod
     def _first_valid_ip(
-        hits: dict, fields: list[str], keys: set, split_commas: bool = False
+        hits: dict, fields: list[str], split_commas: bool = False
     ) -> str | None:
         for field in fields:
-            if field not in keys:
-                continue
-            for value in hits.get(field, []):
+            for value in hits.get(field, ()):
                 if split_commas and isinstance(value, str) and "," in value:
                     value = value.split(",")[0].strip()
                 if is_ip(value):
                     return value
         return None
 
+    @staticmethod
+    def _put(event: dict, metadata: dict, key: str, value) -> None:
+        """``set_by_path(event, "details." + key, value)``, keeping the key
+        index exact."""
+        details = event.get("details")
+        if not isinstance(details, dict):
+            metadata.pop(KEY_INDEX, None)  # the old details goes
+            details = event["details"] = {}
+        _assign(metadata, details, key, value)
+
     def on_event(self, event: dict, metadata: dict) -> dict:
-        if IpAddresses._WANTED is None:
-            IpAddresses._WANTED = set(LIKELY_SOURCE_IP_FIELDS) | set(
-                LIKELY_DESTINATION_IP_FIELDS
-            )
-        # one walk instead of set(enum_keys) + find_keys per field;
         # both searches use the pre-mutation view, as the reference does
-        keys, hits = collect_fields(event, IpAddresses._WANTED)
+        hits = _candidate_hits(event, metadata)
         found: list[str] = []
 
         source_ip = get_by_path(event, "details.sourceipaddress")
         if not source_ip:
-            ip = self._first_valid_ip(
-                hits, LIKELY_SOURCE_IP_FIELDS, keys, split_commas=True
-            )
+            ip = self._first_valid_ip(hits, LIKELY_SOURCE_IP_FIELDS, split_commas=True)
             if ip is not None:
                 # freshly discovered -> already validated by
                 # _first_valid_ip; skip the re-get + re-is_ip
-                set_by_path(event, "details.sourceipaddress", ip)
+                self._put(event, metadata, "sourceipaddress", ip)
                 found.append(ip)
         elif is_ip(source_ip):
             found.append(source_ip)
@@ -293,12 +346,13 @@ class IpAddresses(Plugin):
             # CloudTrail writes service hostnames (config.amazonaws.com)
             # into both fields; drop the fake address.
             del event["details"]["sourceipaddress"]
+            metadata.pop(KEY_INDEX, None)
 
         dest_ip = get_by_path(event, "details.destinationipaddress")
         if not dest_ip:
-            ip = self._first_valid_ip(hits, LIKELY_DESTINATION_IP_FIELDS, keys)
+            ip = self._first_valid_ip(hits, LIKELY_DESTINATION_IP_FIELDS)
             if ip is not None:
-                set_by_path(event, "details.destinationipaddress", ip)
+                self._put(event, metadata, "destinationipaddress", ip)
                 found.append(ip)
         elif is_ip(dest_ip):
             found.append(dest_ip)
@@ -306,7 +360,7 @@ class IpAddresses(Plugin):
         if found:
             existing = get_by_path(event, "details._ipaddresses")
             if not existing:
-                set_by_path(event, "details._ipaddresses", found)
+                self._put(event, metadata, "_ipaddresses", found)
             elif isinstance(existing, list):
                 existing.extend(ip for ip in found if ip not in existing)
         return event

@@ -12,6 +12,22 @@ overridden down for local testing):
   ~2-4x total cores; locally we pin it to the core count.
 * Arrow enabled: every Python-side operator in this package is hosted in
   ``mapInPandas``/``pandas_udf`` (Arrow-batched), never row-at-a-time UDFs.
+* Under a ``local`` master, Python workers fork from ``worker_daemon``
+  (``spark.python.daemon.module``) instead of ``pyspark.daemon``.  It
+  runs pyspark's own daemon, but stops the per-task
+  ``importlib.invalidate_caches()`` from re-reading every unchanged zip
+  archive, and freezes what survives a worker's first task so the
+  daemon's ``gc.collect()`` after each task skips pandas and pyarrow.
+  Measured on 4 cores: an 8-task ``mapInPandas`` job that does no work
+  used about 250 ms of Python-worker CPU per task with
+  ``pyspark.daemon``, 45 ms without the freeze and 3 ms with it; a
+  16-event ``ingest_batch`` over 8 files used 0.8-1.0 s against
+  0.01-0.05 s.  Every Python task then starts from this package, so
+  ``get_spark`` also puts the package's parent directory on the workers'
+  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``; Spark appends the
+  JVM's own ``PYTHONPATH``).  Other masters keep ``pyspark.daemon``: the
+  daemon starts before any ``--py-files`` entry reaches ``sys.path``, so
+  it would need the package installed on every executor.
 """
 
 from __future__ import annotations
@@ -20,6 +36,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+#: the directory that holds this package, for the workers' PYTHONPATH
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: the driver-heap ceiling for large hosts
 MAX_DRIVER_MEMORY_GB = 24
@@ -94,6 +113,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if master.startswith("local"):
+        # workers on this host: they can import the package from here.
+        # Spark appends the JVM's own PYTHONPATH to this value.
+        builder = builder.config(
+            "spark.python.daemon.module", "defenda_data_lake_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 

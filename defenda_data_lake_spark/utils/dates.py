@@ -18,7 +18,9 @@ columns with known formats use ``F.to_timestamp`` /
 
 from __future__ import annotations
 
+import functools
 import math
+import time
 from datetime import datetime, timezone
 from typing import Any
 
@@ -28,8 +30,17 @@ from dateutil.parser import parse as _fuzzy_parse
 _EPOCH_MAGNITUDE = 9  # 10-digit epochs are seconds until the year 2286
 
 
-def _local_tz():
+@functools.lru_cache(maxsize=8)
+def _tzlocal_for(setting: tuple):
     return _dateutil_tz.tzlocal()
+
+
+def _local_tz():
+    """``dateutil.tz.tzlocal()``, built once per local-zone setting
+    instead of once per naive timestamp.  ``tzlocal`` reads exactly
+    these four ``time`` attributes when built, so keying on them lets a
+    later ``time.tzset()`` take effect."""
+    return _tzlocal_for((time.timezone, time.altzone, time.daylight, time.tzname))
 
 
 def _from_epoch(value: float) -> datetime:

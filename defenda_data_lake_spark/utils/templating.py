@@ -23,6 +23,7 @@ value found, exactly the mustache spec's behavior.
 
 from __future__ import annotations
 
+import functools
 import html
 import re
 from typing import Any
@@ -66,48 +67,49 @@ def _resolve(name: str, stack: list[Any]) -> Any:
     return value
 
 
-def _find_section_end(template: str, start: int, name: str) -> tuple[int, int]:
-    """Return (body_end, resume) for the section opened at ``start``
-    whose closing tag is ``{{/name}}``, honoring nesting."""
+@functools.lru_cache(maxsize=256)
+def _tokens(template: str) -> tuple:
+    """``template``'s tags as ``(start, end, tag, name)``, scanned once per
+    template instead of once per render.  ``tag`` is ``"{"`` for a triple
+    mustache, else the sigil (``""`` for a plain interpolation)."""
+    return tuple(
+        (m.start(), m.end(), "{", m.group("triple").strip())
+        if m.group("triple") is not None
+        else (m.start(), m.end(), m.group("tag"), m.group("name").strip())
+        for m in _TAG.finditer(template)
+    )
+
+
+def _find_section_end(tokens: tuple, i: int, name: str) -> int:
+    """Return the index of the ``{{/name}}`` token that closes the
+    section whose body starts at ``tokens[i]``, honoring nesting."""
     depth = 1
-    for match in _TAG.finditer(template, start):
-        tag, tag_name = match.group("tag"), (
-            match.group("name") or match.group("triple") or ""
-        ).strip()
+    for j in range(i, len(tokens)):
+        tag, tag_name = tokens[j][2], tokens[j][3]
         if tag in ("#", "^") and tag_name == name:
             depth += 1
         elif tag == "/" and tag_name == name:
             depth -= 1
             if depth == 0:
-                return match.start(), match.end()
+                return j
     raise ValueError(f"unclosed mustache section: {name!r}")
 
 
 def _render(template: str, stack: list[Any]) -> str:
+    tokens = _tokens(template)
     out: list[str] = []
     pos = 0
-    while True:
-        match = _TAG.search(template, pos)
-        if match is None:
-            out.append(template[pos:])
-            return "".join(out)
-        out.append(template[pos : match.start()])
-        triple = match.group("triple")
-        if triple is not None:
-            value = _resolve(triple.strip(), stack)
-            out.append("" if value is None else str(value))
-            pos = match.end()
-            continue
-        tag, name = match.group("tag"), match.group("name").strip()
+    i = 0
+    while i < len(tokens):
+        start, end, tag, name = tokens[i]
+        out.append(template[pos:start])
+        pos = end
+        i += 1
         if tag == "!":
-            pos = match.end()
-        elif tag == "&":
-            value = _resolve(name, stack)
-            out.append("" if value is None else str(value))
-            pos = match.end()
-        elif tag in ("#", "^"):
-            body_end, resume = _find_section_end(template, match.end(), name)
-            body = template[match.end() : body_end]
+            continue
+        if tag in ("#", "^"):
+            close = _find_section_end(tokens, i, name)
+            body = template[end : tokens[close][0]]
             value = _resolve(name, stack)
             truthy = bool(value) if not isinstance(value, (list, tuple)) else bool(
                 len(value)
@@ -118,13 +120,17 @@ def _render(template: str, stack: list[Any]) -> str:
                     out.append(_render(body, stack + [item]))
             elif tag == "^" and not truthy:
                 out.append(_render(body, stack))
-            pos = resume
+            pos = tokens[close][1]
+            i = close + 1
         elif tag == "/":
             raise ValueError(f"unexpected section close: {name!r}")
         else:
             value = _resolve(name, stack)
-            out.append("" if value is None else html.escape(str(value), quote=False))
-            pos = match.end()
+            if value is not None:
+                value = str(value)
+                out.append(html.escape(value, quote=False) if tag == "" else value)
+    out.append(template[pos:])
+    return "".join(out)
 
 
 def render(template: str, context: Any) -> str:

@@ -65,3 +65,23 @@ def test_iso_utc_format():
         iso_utc(datetime(2019, 9, 4, 17, 54, 59, tzinfo=timezone.utc))
         == "2019-09-04T17:54:59+00:00"
     )
+
+
+def test_naive_timestamps_follow_tzset(monkeypatch):
+    """The cached local zone is keyed on the ``time`` settings, so a
+    ``TZ`` change plus ``tzset()`` takes effect in-process."""
+    import time
+
+    naive = "2020-07-01 12:00:00"
+    try:
+        monkeypatch.setenv("TZ", "XXX-5")  # UTC+5, no DST
+        time.tzset()
+        assert to_utc(naive).isoformat() == "2020-07-01T07:00:00+00:00"
+        monkeypatch.setenv("TZ", "EST+5EDT,M3.2.0/2,M11.1.0/2")
+        time.tzset()
+        assert to_utc(naive).isoformat() == "2020-07-01T16:00:00+00:00"
+        assert to_utc("2020-01-01 12:00:00").isoformat() == "2020-01-01T17:00:00+00:00"
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert to_utc(naive).isoformat() == "2020-07-01T12:00:00+00:00"
