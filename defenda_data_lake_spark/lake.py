@@ -161,11 +161,11 @@ def register_hour_partition(
     )
     location '{base_location}/{year}/{month}/{day}/{hour}'
     """
-    already = spark.sql(
+    # isEmpty reads the command's local result; count() would submit a job
+    if spark.sql(
         f"SHOW PARTITIONS {DATABASE}.events "
         f"PARTITION (year='{year}', month='{month}', day='{day}', hour='{hour}')"
-    ).count()
-    if not already:
+    ).isEmpty():
         spark.sql(query)
     return query
 

@@ -61,7 +61,7 @@ the application auto-switches to an Arrow kernel (same
 literal-replace semantics,
 vectorized per batch, still distinct-words-only); the DuckDB oracle
 side re-learns 64/128/256-merge tables green in 1.7/6.5/30 s at
-sf0.01 (r10 probe, `scripts/bpe256_probe_r10.py`) — linear-in-merges,
+sf0.01 (r10 probe) — linear-in-merges,
 so the oracle form is the thing that gives out first, not the engine.
 
 No reference counterpart: the reference engine has no tokenizer; this

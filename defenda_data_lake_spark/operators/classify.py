@@ -186,9 +186,7 @@ def save_nb_model(model: DataFrame, totals: DataFrame, path: str) -> None:
 
 
 def load_nb_model(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load a persisted model for :func:`nb_score` /
-    ``streaming.classify.nb_model_row`` (the streaming restart path:
-    reload + re-fold instead of refitting)."""
+    """Load a persisted model for :func:`nb_score`."""
     return (
         spark.read.parquet(f"{path}/model"),
         spark.read.parquet(f"{path}/totals"),

@@ -30,6 +30,7 @@ growth with iterations.
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -42,45 +43,42 @@ from defenda_data_lake_spark.utils.partitioning import (
 
 
 def _dlit(v: float) -> str:
-    """Shortest-roundtrip SQL double literal — parses to the identical
-    IEEE value ``F.lit(float)`` would produce (the operators/pq.py
-    convention).  Non-finite values need the string-cast spelling:
-    ``repr()`` would emit bare ``nan``/``inf``, which the SQL parser
-    reads as COLUMN REFERENCES (AnalysisException on any embedding
-    containing a non-finite component), where the old F.lit form
-    produced defined NaN-propagating arithmetic.
+    """SQL double literal for ``v``, shared by the kmeans and PQ plans
+    (``operators/pq.py``).  It parses to the same IEEE value
+    ``F.lit(float(v))`` holds, except that -0.0 becomes +0.0: a squared
+    distance cannot tell them apart, and one spelling per zero keeps
+    the plan text independent of the zero's sign.
 
-    Finite values use the ``D``-suffixed double literal (round 13):
-    one lexer token instead of the old ``CAST(<repr> AS DOUBLE)``'s
-    six plus a Cast node for the optimizer to fold — the kmeans/PQ
-    assignment plans inline ~1k of these, and parsing+analyzing them
-    is a measured driver-side cost (q96 decomposition).  The parsed
-    value is bit-identical for every finite double except -0.0, whose
-    sign the old decimal-literal CAST path dropped — normalized here
-    to keep plans byte-for-byte value-stable with the r12 form."""
+    Finite values are ``D``-suffixed shortest-roundtrip literals: one
+    lexer token instead of a six-token CAST plus a Cast node to fold —
+    these plans inline ~1k literals, and parsing and analyzing them is
+    a measured driver-side cost (q96 decomposition, round 13).
+    Non-finite values use the string-cast spelling: ``repr()`` emits
+    bare ``nan``/``inf``, which the SQL parser reads as column
+    references."""
     v = float(v)
     if math.isnan(v):
         return "CAST('NaN' AS DOUBLE)"
     if math.isinf(v):
         return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
     if v == 0.0:
-        v = 0.0  # -0.0 -> +0.0, matching CAST(-0.0 AS DOUBLE)
+        v = 0.0  # -0.0 -> +0.0
     return f"{v!r}D"
 
 
-def _sq_dist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """SQL text of the squared distance of ``vec_sql`` to a literal
-    centroid — the SAME aggregate(zip_with(transform(...))) tree (and
-    therefore the same left-to-right IEEE summation order) the old
-    Column-composed form built, as ONE parsed string.  SQL text rather
-    than py4j-composed Columns: composing k centroids × dim literals
-    through py4j cost ~1.4 s of driver round trips PER assignment plan
-    (measured at k=16, dim=16 — q96 builds eight such plans, ~11 s of
-    its 13 s training wall); one ``expr()`` parse is milliseconds."""
+def _sq_dist_sql(vec_sql: str, centroid: Sequence[float]) -> str:
+    """SQL text of the squared distance of the double-array expression
+    ``vec_sql`` to a literal centroid, shared by the kmeans assignment
+    and PQ encoding.  The aggregate(zip_with(...)) tree sums left to
+    right, the same IEEE order as the DuckDB
+    ``list_sum(list_transform(...))`` replay.  SQL text rather than
+    py4j-composed Columns: composing k centroids × dim literals through
+    py4j cost ~1.4 s of driver round trips per assignment plan
+    (measured at k=16, dim=16); one ``expr()`` parse is milliseconds."""
     arr = ", ".join(_dlit(c) for c in centroid)
     return (
-        f"aggregate(zip_with(transform({vec_sql}, v -> CAST(v AS DOUBLE)), "
-        f"array({arr}), (x, y) -> (x - y) * (x - y)), "
+        f"aggregate(zip_with({vec_sql}, array({arr}), "
+        "(x, y) -> (x - y) * (x - y)), "
         f"{_dlit(0.0)}, (acc, v) -> acc + v)"
     )
 
@@ -89,8 +87,9 @@ def _assignment_plan(base: DataFrame, cents: list[list[float]]) -> DataFrame:
     """(id, vec, cluster, sq_dist) for fixed centroids: argmin over
     squared distance, ties to the lowest centroid id."""
     k = len(cents)
+    vec = "transform(vec, v -> CAST(v AS DOUBLE))"
     dist_exprs = [
-        f"{_sq_dist_sql('vec', c)} AS d{i}" for i, c in enumerate(cents)
+        f"{_sq_dist_sql(vec, c)} AS d{i}" for i, c in enumerate(cents)
     ]
     with_d = base.selectExpr("id", "vec", *dist_exprs)
     names = [f"d{i}" for i in range(k)]

@@ -173,7 +173,7 @@ def ndjson_intake(lines: DataFrame) -> DataFrame:
     one NDJSON intake expression, shared by the batch scan and the
     streaming ``FileLandingSource``."""
     is_cloudtrail_file = F.input_file_name().rlike("(?i)" + _CLOUDTRAIL_PATTERN)
-    return lines.filter(F.length(F.trim(F.col("value"))) > 0).select(
+    return lines.filter(F.trim(F.col("value")) != "").select(
         F.col("value").alias("raw"),
         F.when(is_cloudtrail_file, "cloudtrail")
         .otherwise(DEFAULT_SOURCE)

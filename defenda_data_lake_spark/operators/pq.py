@@ -34,11 +34,12 @@ shuffled in full.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from defenda_data_lake_spark.operators.clustering import _dlit, _sq_dist_sql
 
 Codebooks = list[list[list[float]]]  #: [subspace][centroid][component]
 
@@ -46,41 +47,6 @@ Codebooks = list[list[list[float]]]  #: [subspace][centroid][component]
 def _check_pq(dim: int, m: int) -> None:
     if m < 1 or dim % m != 0:
         raise ValueError(f"m must divide the dimension; got dim={dim}, m={m}")
-
-
-def _dlit(v: float) -> str:
-    """Shortest-roundtrip SQL double literal (both engines parse the
-    identical IEEE value — the house convention for float constants).
-    Non-finite values use the string-cast spelling — ``repr()`` emits
-    bare ``nan``/``inf``, which SQL parses as column references.
-    Finite values are ``D``-suffixed literals (one token; the old
-    ``CAST(<repr> AS DOUBLE)`` was six plus a Cast to fold — a
-    measured driver cost at ~1k literals per PQ plan); -0.0 is
-    normalized to +0.0, the value the old CAST path produced."""
-    v = float(v)
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-    if v == 0.0:
-        v = 0.0  # -0.0 -> +0.0, matching CAST(-0.0 AS DOUBLE)
-    return f"{v!r}D"
-
-
-def _sq_dist_sql(sub_sql: str, centroid: Sequence[float]) -> str:
-    """SQL text of the squared distance of a subvector expression to a
-    literal centroid — the same zip_with/aggregate shape (and therefore
-    the same left-to-right summation order) as the kmeans assignment
-    and the DuckDB ``list_sum(list_transform(...))`` replay.  SQL TEXT
-    rather than py4j-composed Columns: building m·k of these through
-    py4j cost seconds of driver round trips; one parsed string is
-    ~free."""
-    arr = ", ".join(_dlit(c) for c in centroid)
-    return (
-        f"aggregate(zip_with({sub_sql}, array({arr}), "
-        "(x, y) -> (x - y) * (x - y)), "
-        f"{_dlit(0.0)}, (acc, v) -> acc + v)"
-    )
 
 
 def _dist_array_sql(sub_sql: str, cents: list[list[float]]) -> str:
@@ -240,6 +206,11 @@ def pq_encode(
     expression tree of the former inline-twice form."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
+    # the bound names must not shadow an input column (e.g. the id)
+    taken = {c.lower() for c in df.columns}
+    prefix = "__pq_da"
+    while any(f"{prefix}{s}" in taken for s in range(m)):
+        prefix = "_" + prefix
     da_cols = []
     for s in range(m):
         sub = (
@@ -247,10 +218,10 @@ def pq_encode(
             "v -> CAST(v AS DOUBLE))"
         )
         da_cols.append(
-            f"{_dist_array_sql(sub, codebooks[s])} AS `__pq_da{s}`"
+            f"{_dist_array_sql(sub, codebooks[s])} AS `{prefix}{s}`"
         )
     argmins = ", ".join(
-        _argmin_from_dists_sql(f"`__pq_da{s}`") for s in range(m)
+        _argmin_from_dists_sql(f"`{prefix}{s}`") for s in range(m)
     )
     return df.selectExpr(f"`{id_col}`", *da_cols).selectExpr(
         f"`{id_col}`", f"array({argmins}) AS `{out}`"

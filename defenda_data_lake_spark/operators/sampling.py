@@ -490,9 +490,7 @@ def dsir_bucket_counts(
 ) -> DataFrame:
     """The fitted DSIR "model": per-bucket raw and target feature
     counts from ONE corpus pass — ``(bucket, raw_c, tgt_c)``,
-    <= ``buckets`` rows.  Shared by the batch scorer
-    (:func:`dsir_importance_weights`) and the streaming scorer
-    (``streaming/dsir.py``), which folds it into a broadcast map."""
+    <= ``buckets`` rows, consumed by :func:`dsir_importance_weights`."""
     feats = df.select(
         target.alias("_is_target"),
         F.explode(dsir_feature_array(text_col)).alias("feat"),

@@ -442,11 +442,7 @@ def centroid_table(
 ) -> DataFrame:
     """``(list_id, centroid, n)`` aggregated from a corpus and its
     list-key column expression — per-component partial aggregation
-    (map-side combine, no vector explode).  The list size rides along
-    so incremental maintenance (``incremental_ivf.append_ivf_index``)
-    can fold exact running means without rescanning the corpus.  ONE
-    definition serves the build and ``compact_ivf_index``'s exact
-    recompute."""
+    (map-side combine, no vector explode)."""
     return (
         corpus.groupBy(list_key.alias("list_id"))
         .agg(
@@ -490,8 +486,7 @@ def build_ivf_index(
     values round-trip through paths; probing compares strings
     consistently on both sides).  Rebuild after significant corpus
     churn — like any IVF deployment, centroid drift degrades recall,
-    not correctness; ``incremental_ivf.append_ivf_index`` folds
-    arrival batches in between rebuilds and reports the drift."""
+    not correctness."""
     dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).head()
     if dim_row is None:
         raise ValueError("cannot build an IVF index from an empty corpus")
@@ -509,31 +504,6 @@ def build_ivf_index(
     centroid_table(corpus, lk, vec_col, dim).write.mode(
         "overwrite"
     ).parquet(f"{index_dir}/centroids")
-    # zeroed arrival-fit history: appends accumulate the fit of each
-    # arrival batch to the centroids of ITS time, and compare new
-    # batches against that history (see incremental_ivf's drift
-    # section).  A rebuild resets the history — the geometry changed.
-    from defenda_data_lake_spark.utils.partitioning import bounded_local_df
-
-    spark = corpus.sparkSession
-    (
-        bounded_local_df(
-            spark, [(0.0, 0)], "arr_fit_sum double, arr_n long"
-        )
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/arrival_fit")
-    )
-    # ...and a rebuild also invalidates streaming-maintenance
-    # bookkeeping: delete the fold marker `start_ivf_maintenance`
-    # leaves here — the documented rebuild-and-restart workflow uses a
-    # FRESH checkpoint whose batches renumber from 0, and a stale
-    # high-water marker would make every one of them look like a
-    # redelivery and silently skip it
-    jvm = spark.sparkContext._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/_last_batch_id")
-    fs = marker.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(marker):
-        fs.delete(marker, False)
 
 
 def ivf_probe(

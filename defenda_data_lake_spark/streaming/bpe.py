@@ -2,8 +2,7 @@
 (``operators/bpe.py``) to a document STREAM — real-token budget
 metering at ingest time instead of over a corpus at rest.
 
-Same plan-shape move as ``streaming/classify.py`` /
-``streaming/dsir.py``: the batch accountant
+The batch accountant
 (:func:`~defenda_data_lake_spark.operators.bpe.tokenize_corpus`)
 explodes words, dedups them, and re-joins — but accounting a streamed
 document only ever needs ITS OWN words, and the merge table is a
@@ -14,10 +13,8 @@ store, no watermark, no shuffle, no distinct-word table.
 The trade is per-element interpretation: inside the higher-order
 ``aggregate`` lambda the 120-replace chain evaluates interpreted per
 word (the batch path runs it whole-stage-codegen once per DISTINCT
-word) — the same stateless-vs-kernel trade the NB/DSIR stream scorers
-document.  For an ingest-time meter the per-row cost is what you pay
-to need no state; for corpus-at-rest accounting use the batch
-operator.
+word).  For an ingest-time meter the per-row cost is what you pay to
+need no state; for corpus-at-rest accounting use the batch operator.
 
 One deliberate contract difference from the batch operator (pinned by
 test): the batch inner-join drops documents with NO qualifying words;

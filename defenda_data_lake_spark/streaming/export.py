@@ -1,7 +1,7 @@
 """Streaming shard-export maintenance: the deterministic JSONL shard
 set (`operators/export.py`) kept live by a document stream, one
 micro-batch at a time — the export-side member of the streaming
-maintenance family (rollup / SCD / CDC / IVF).
+maintenance family (rollup / SCD / CDC).
 
 Fold law: each micro-batch runs `incremental_export_jsonl` — shard
 membership is content-addressed and the intra-shard order is a
@@ -9,15 +9,14 @@ deterministic re-sort of the touched shard, so ANY batching of the
 same rows yields the same shard files, byte for byte (parity-tested
 against a single full export).
 
-Restart contract — STRONGER than `streaming/ann.py`'s: the
-``_last_batch_id`` marker makes checkpoint redeliveries no-ops, and
-the crash window between the shard write and the marker write is
-SELF-HEALING because documents carry ids: the fold runs with
-``if_exists="verify-noop"``, so a replayed batch whose ids are all
-already exported returns a no-op instead of doubling rows, while a
-PARTIAL overlap (never a legitimate replay) still fails the query
-loudly.  This is the append-only analogue of the CDC fold's
-equal-seq idempotence.
+Restart contract: the ``_last_batch_id`` marker makes checkpoint
+redeliveries no-ops, and the crash window between the shard write
+and the marker write is SELF-HEALING because documents carry ids:
+the fold runs with ``if_exists="verify-noop"``, so a replayed batch
+whose ids are all already exported returns a no-op instead of
+doubling rows, while a PARTIAL overlap (never a legitimate replay)
+still fails the query loudly.  This is the append-only analogue of
+the CDC fold's equal-seq idempotence.
 
 Scale: per-trigger cost is O(batch + touched shards) — untouched
 shard files are never read or rewritten; at production shard counts a
@@ -54,8 +53,8 @@ def start_export_maintenance(
     on_batch: Callable[[int, dict], None] | None = None,
 ) -> StreamingQuery:
     """Maintain the shard set at ``out_dir`` from a document stream.
-    The shard set must exist (``export_jsonl_shards``) — bootstrap,
-    like the IVF index's, is a batch decision.  ``on_batch(batch_id,
+    The shard set must exist (``export_jsonl_shards``) — bootstrap
+    is a batch decision.  ``on_batch(batch_id,
     report)`` receives each fold's `incremental_export_jsonl` report
     (``appended``, ``touched_shards``, ``total_rows``, and
     ``replayed`` on a self-healed redelivery)."""

@@ -58,7 +58,7 @@ def _open_stream(
         from defenda_data_lake_spark.sources import FileLandingSource
 
         source = FileLandingSource(landing_path, max_files_per_trigger)
-    return source.load(spark).filter(F.length(F.trim(F.col("raw"))) > 0)
+    return source.load(spark).filter(F.trim(F.col("raw")) != "")
 
 
 def _start(

@@ -8,7 +8,7 @@ Nx-replicated sf0.1 parquet, same box, same hour, bench protocol
 (consecutive best-of-4 x 2 sweeps, untimed warm pass first).
 
 Usage: python scripts/scale_pairing_r10.py [factor] [keep_dir]
-Replication = scale_probe.py's key-offset mechanism PLUS a per-replica
+Replication = key-offset replicas (every key column shifted per replica) PLUS a per-replica
 word salt on documents.text: offsetting doc_id alone keeps the text
 identical, which turns every document into an N-copy near-dup cluster
 — the dedup queries (q31/q32) then grow QUADRATICALLY in N (measured:
@@ -127,7 +127,7 @@ def main() -> None:
         # replay full Lloyd/pagerank chains in SQL with quadratic
         # within-cluster pair joins — fine at the correctness SFs,
         # infeasible at Nx replica scale.  The heavy group's at-scale
-        # evidence is Spark-side noop probes (q73_32x_probe_r13 etc.).
+        # evidence is Spark-side noop probes (SCALING.md).
         names = (
             headline_queries_legacy12()
             if os.environ.get("SPARK_GRAFT_PAIR_SET") == "legacy12"

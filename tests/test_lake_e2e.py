@@ -268,3 +268,31 @@ def test_verbatim_partition_ddl_registers_external_hour(lake):
     # idempotent, like IF NOT EXISTS promises
     register_hour_partition(spark, str(base), parts)
     assert spark.table(EVENTS_TABLE).filter("eventid = 'ddl-registered-event'").count() == 1
+
+
+def test_registered_hour_check_submits_no_job(lake):
+    """Re-registering an hour is a catalog lookup: it submits no Spark
+    job and leaves the partition's LOCATION where it was."""
+    from defenda_data_lake_spark.lake import register_hour_partition
+
+    spark, tmp = lake["spark"], lake["tmp"]
+    parts = ("2032", "05", "06", "07")
+    spec = "year='2032', month='05', day='06', hour='07'"
+    register_hour_partition(spark, str(tmp / "first_base"), parts)
+
+    def location():
+        rows = spark.sql(
+            f"DESCRIBE FORMATTED {EVENTS_TABLE} PARTITION ({spec})"
+        ).collect()
+        return [r["data_type"] for r in rows if r["col_name"] == "Location"]
+
+    before = location()
+    assert before and before[0].endswith("first_base/2032/05/06/07")
+    sc = spark.sparkContext
+    sc.setJobGroup("register-again", "re-register a registered hour")
+    try:
+        register_hour_partition(spark, str(tmp / "second_base"), parts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("register-again") == []
+    assert location() == before

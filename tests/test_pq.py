@@ -70,3 +70,15 @@ def test_adc_recall_vs_brute(emb, books, spark):
 def test_rejects_bad_m(emb):
     with pytest.raises(ValueError):
         pq_train(emb, m=5, k=4, iterations=1, dim=64)
+
+
+def test_encode_id_col_named_like_an_intermediate(emb, books):
+    """A caller column named like pq_encode's bound distance arrays
+    must not be shadowed by them."""
+    want = {r["vec_id"]: tuple(r["pq_code"]) for r in pq_encode(emb, books).collect()}
+    renamed = emb.withColumnRenamed("vec_id", "__pq_da0")
+    got = {
+        r["__pq_da0"]: tuple(r["pq_code"])
+        for r in pq_encode(renamed, books, id_col="__pq_da0").collect()
+    }
+    assert got == want

@@ -33,9 +33,11 @@ def test_dlit_nonfinite_values_parse_and_roundtrip(spark, mod):
     assert math.isnan(_sql_scalar(spark, _dlit(float("nan"))))
     assert _sql_scalar(spark, _dlit(float("inf"))) == float("inf")
     assert _sql_scalar(spark, _dlit(float("-inf"))) == float("-inf")
-    # the finite path is unchanged: shortest-roundtrip repr
+    # finite values: D-suffixed shortest-roundtrip literals that parse
+    # back to the same double; -0.0 is spelled as +0.0
     for v in (0.0, -0.0, 1.5, 1e-300, -2.2250738585072014e-308, 3.141592653589793):
         assert _sql_scalar(spark, _dlit(v)) == v
+    assert _dlit(-0.0) == _dlit(0.0) == "0.0D"
 
 
 def test_kmeans_with_nonfinite_embedding_component(spark):
