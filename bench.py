@@ -24,17 +24,17 @@ time.tzset()
 
 
 def _bench_ingest(spark, n_events: int) -> float:
-    """Time the full normalization pipeline (intake -> six plugins ->
-    partitioned parquet write) over synthetic security events."""
+    """Time ``lake.ingest_batch`` (intake -> six plugins -> partitioned
+    append plus quarantine) over synthetic security events landed in a
+    fresh external events table."""
     import json
     import shutil
     import tempfile
 
-    from defenda_data_lake_spark.operators.intake import read_ndjson_events
-    from defenda_data_lake_spark.operators.pipeline import (
-        STATUS_OK,
-        add_partition_columns,
-        normalize_df,
+    from defenda_data_lake_spark.lake import (
+        EVENTS_TABLE,
+        create_events_table,
+        ingest_batch,
     )
 
     tmp = tempfile.mkdtemp(prefix="bench_ingest_")
@@ -63,16 +63,19 @@ def _bench_ingest(spark, n_events: int) -> float:
                     + "\n"
                 )
                 n += 1
-    out = os.path.join(tmp, "out")
-    t0 = time.perf_counter()
-    raw = read_ndjson_events(spark, landing)
-    normalized = normalize_df(raw, raw_col="raw", source_col="source")
-    good = add_partition_columns(
-        normalized.filter(normalized["_status"] == STATUS_OK)
-    ).drop("_status", "_raw")
-    good.write.mode("overwrite").partitionBy("year", "month", "day", "hour").parquet(out)
-    elapsed = time.perf_counter() - t0
-    shutil.rmtree(tmp, ignore_errors=True)
+    create_events_table(spark, location=os.path.join(tmp, "events"))
+    try:
+        t0 = time.perf_counter()
+        ingest_batch(
+            spark,
+            landing,
+            mode="ndjson",
+            quarantine_path=os.path.join(tmp, "quarantine"),
+        )
+        elapsed = time.perf_counter() - t0
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+        shutil.rmtree(tmp, ignore_errors=True)
     return elapsed
 
 

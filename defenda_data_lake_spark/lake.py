@@ -170,15 +170,6 @@ def register_hour_partition(
     return query
 
 
-def repair_events_table(spark: SparkSession) -> None:
-    """Re-register partitions for an externally-written events layout —
-    the Spark equivalent of the reference's 10-minute partition cron
-    (reference generate_partitions.py:14-52; ``MSCK REPAIR TABLE``).
-    Only needed when files were placed by an external writer; Spark's
-    own ``insertInto`` registers partitions at write time."""
-    spark.catalog.recoverPartitions(EVENTS_TABLE)
-
-
 def query_pandas(spark: SparkSession, sql: str):
     """Run SQL, return a pandas DataFrame — the reference's
     query-to-pandas hand-off (reference utils/athena.py:30-38,

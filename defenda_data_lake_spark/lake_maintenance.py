@@ -15,11 +15,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from defenda_data_lake_spark.lake import EVENTS_TABLE
 
@@ -111,72 +110,6 @@ def compact_partition(
     }
 
 
-def bucketize_facts(
-    spark: SparkSession,
-    sf_dir: str,
-    database: str = "bucketed",
-    buckets: int | None = None,
-    target_bucket_bytes: int = 200 << 20,
-) -> dict:
-    """Write the fact tables bucketed+sorted on their dominant join key
-    (``plans.bucketing.BUCKET_SPECS``) — the AT-REST layout twin of
-    ``warm_table_cache``'s co-partitioning, promoted into the lake
-    maintenance surface (VERDICT r10 item 3 / r11 item 4): a cluster
-    runs this once per snapshot refresh, and every subsequent
-    orderkey join is a zero-exchange sort-merge over co-located
-    buckets, cold, with no cache to warm.  The round-10 measurement
-    that set the policy: at 32x the bucketed layout removes the join
-    shuffle (1.73 -> 1.45 s) while the co-partitioned CACHE also
-    removes the parquet decode (0.32 s) — cache when the working set
-    fits memory, bucket on disk when it doesn't.
-
-    Bucket-count policy when ``buckets`` is None: one bucket per
-    ~``target_bucket_bytes`` of the LARGEST spec table (a bucket is a
-    task — ~200 MB compressed keeps tasks comfortable), rounded up to
-    a power of two (AQE coalescing stays clean), floor 8.  ONE shared
-    count for every spec table: co-located joins require equal bucket
-    counts, so sizing from the largest side and sharing is the only
-    layout that serves the join (the same rule ``_CO_GROUP`` applies
-    to the cache).  At 100 TB of lineitem this lands at ~2^19 buckets
-    of ~200 MB — the standard warehouse shape.
-
-    Returns ``{table: {"buckets": n, "bytes": b}}``."""
-    import math
-
-    from defenda_data_lake_spark.plans.bucketing import BUCKET_SPECS
-    from defenda_data_lake_spark.plans.catalog_shared import _path_bytes
-
-    sizes = {
-        t: _path_bytes(os.path.join(sf_dir, f"{t}.parquet")) or 0
-        for t in BUCKET_SPECS
-    }
-    if buckets is None:
-        need = max(1, math.ceil(max(sizes.values()) / target_bucket_bytes))
-        buckets = max(8, 1 << (need - 1).bit_length())
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    out: dict = {}
-    for table, key in BUCKET_SPECS.items():
-        # read through _t(), not raw parquet: _t coerces known
-        # timestamp encodings (epoch-long o_orderdate/l_shipdate
-        # variants) so the bucketed AT-REST layout carries the same
-        # column types as every other query surface — a raw read
-        # would freeze whatever physical encoding this snapshot
-        # generation used into the bucketed tables (review fix,
-        # round 12)
-        from defenda_data_lake_spark.plans.catalog_shared import _t
-
-        df = _t(spark, sf_dir, table)
-        (
-            df.write.mode("overwrite")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .format("parquet")
-            .saveAsTable(f"{database}.{table}")
-        )
-        out[table] = {"buckets": buckets, "bytes": sizes[table]}
-    return out
-
-
 def upsert_corpus_snapshot(
     spark: SparkSession,
     corpus_dir: str,
@@ -255,7 +188,6 @@ def _parquet_rows(directory: str) -> int:
 
 def expire_partitions(
     spark: SparkSession,
-    table_location: str,
     retention_days: int,
     now: "datetime.datetime | None" = None,
     table: str = EVENTS_TABLE,
@@ -266,27 +198,29 @@ def expire_partitions(
     (reference main.tf:31-42,62-73: input expires at 90 d, output at
     360 d; there the *bucket* ages data out, here the *table* must).
 
-    Every ``year=/month=/day=/hour=`` partition whose hour has fully
-    ended before ``now - retention_days`` is dropped from the catalog
-    (``ALTER TABLE … DROP IF EXISTS PARTITION``) and deleted from disk
-    — catalog first, so a crash between the two steps leaves an
-    unregistered directory (harmless, re-droppable) rather than a
-    registered partition with no data (every query over it would fail).
+    Every registered hour partition (``SHOW PARTITIONS``) whose hour
+    has fully ended before ``now - retention_days`` is dropped from the
+    catalog (``ALTER TABLE … DROP IF EXISTS PARTITION``) and its
+    directory deleted.  The directory is the partition's LOCATION in
+    the catalog, so both layouts expire: the hive ``year=…/hour=…``
+    directories ``insertInto`` writes and the bare ``Y/M/D/H`` ones
+    ``lake.register_hour_partition`` registers.  Catalog first, so a
+    crash between the two steps leaves an unregistered directory
+    (harmless, re-droppable) rather than a registered partition with
+    no data (every query over it would fail).
 
     ``now`` is an explicit parameter so retention runs are reproducible
     and testable; production callers pass their scheduler's tick time.
     Returns {"dropped": [partition dicts], "kept": n, "freed_bytes": n,
-    "delete_failures": [paths whose rmtree failed — catalog entry gone,
-    bytes not reclaimed]}.
+    "delete_failures": [locations whose delete failed — catalog entry
+    gone, bytes not reclaimed]}.
 
-    Scale notes: the scan is driver-side directory listing (4 levels,
-    bounded by calendar cardinality — 24*365 dirs/year, trivial); each
-    drop is one metastore call + one recursive delete.  At object-store
-    scale the listing maps to LIST calls of the same shape the
-    reference's lifecycle manager performs; no executor work at all."""
+    Scale notes: one catalog listing, then per expired hour one
+    location lookup, one drop and one recursive delete through the
+    table's Hadoop filesystem — metastore and LIST/DELETE calls of the
+    shape the reference's lifecycle manager performs; no executor work
+    at all."""
     import datetime
-    import glob as _glob
-    import re
 
     if retention_days < 0:
         raise ValueError(f"retention_days must be >= 0 (got {retention_days})")
@@ -295,25 +229,14 @@ def expire_partitions(
         now = now.replace(tzinfo=datetime.timezone.utc)
     cutoff = now - datetime.timedelta(days=retention_days)
 
-    pat = re.compile(
-        r"year=(\d{4})/month=(\d{2})/day=(\d{2})/hour=(\d{2})$"
-    )
+    conf = spark._jsc.hadoopConfiguration()
     dropped: list[dict] = []
     kept = 0
     freed = 0
     dropped_failed: list[str] = []
-    for part_dir in sorted(
-        _glob.glob(
-            os.path.join(
-                _glob.escape(table_location),
-                "year=*", "month=*", "day=*", "hour=*",
-            )
-        )
-    ):
-        m = pat.search(part_dir.replace(os.sep, "/"))
-        if not m:
-            continue
-        y, mo, d, h = m.groups()
+    for (name,) in sorted(spark.sql(f"SHOW PARTITIONS {table}").collect()):
+        values = dict(kv.split("=", 1) for kv in name.split("/"))
+        y, mo, d, h = (values[c] for c in ("year", "month", "day", "hour"))
         try:
             part_time = datetime.datetime(
                 int(y), int(mo), int(d), int(h), tzinfo=datetime.timezone.utc
@@ -327,22 +250,28 @@ def expire_partitions(
         if part_time + datetime.timedelta(hours=1) > cutoff:
             kept += 1
             continue
-        size = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(part_dir)
-            for f in files
+        spec = f"year='{y}', month='{mo}', day='{d}', hour='{h}'"
+        location = next(
+            r.data_type
+            for r in spark.sql(
+                f"DESCRIBE FORMATTED {table} PARTITION ({spec})"
+            ).collect()
+            if r.col_name == "Location"
         )
+        path = spark._jvm.org.apache.hadoop.fs.Path(location)
+        fs = path.getFileSystem(conf)
+        size = fs.getContentSummary(path).getLength() if fs.exists(path) else 0
         if not dry_run:
-            spark.sql(
-                f'ALTER TABLE {table} DROP IF EXISTS PARTITION '
-                f"(year='{y}', month='{mo}', day='{d}', hour='{h}')"
-            )
-            shutil.rmtree(part_dir, ignore_errors=True)
-            if os.path.exists(part_dir):
+            spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
+            try:
+                fs.delete(path, True)
+            except Py4JJavaError:
+                pass  # reported below: the directory is still there
+            if fs.exists(path):
                 # delete failed (permissions, busy mount): the catalog
                 # entry is already gone, but the bytes are NOT freed —
                 # report it instead of silently overstating reclaim
-                dropped_failed.append(part_dir)
+                dropped_failed.append(location)
                 continue
         dropped.append(
             {"year": y, "month": mo, "day": d, "hour": h, "bytes": size}

@@ -7,8 +7,8 @@ compaction rewrites, retention drops — this verifies): data-diff as an
 operator instead of an eyeballed count.
 
 Design (100 TB): ONE co-partitioned full-outer join on the key — the
-unavoidable shuffle; bucket both snapshots by the key
-(``plans/bucketing.py``) and even that exchange disappears.  Column
+unavoidable shuffle; bucket both snapshots by the key and even that
+exchange disappears.  Column
 comparison is null-safe struct equality (``<=>`` over a struct of the
 compared columns) evaluated inside the join's codegen stage — no
 row-serialization hash, no Python.  The per-type counts aggregate

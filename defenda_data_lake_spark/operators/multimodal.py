@@ -36,24 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("media_type", T.StringType(), True),
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("n_bytes", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

@@ -39,7 +39,6 @@ def scd2_history(
     attr_cols: Sequence[str],
     ts_col: str,
     order_cols: Sequence[str] = (),
-    include_last_obs: bool = False,
 ) -> DataFrame:
     """Compact an observation log into SCD-2 validity intervals.
 
@@ -55,12 +54,6 @@ def scd2_history(
     "unchanged"); ties on ``ts_col`` are broken by ``order_cols`` —
     pass a unique column there or version boundaries within a tied
     timestamp are undefined.
-
-    ``include_last_obs=True`` appends ``first_obs_us`` / ``last_obs_us``
-    (epoch MICROS of the version's first/final observation) — the
-    high-water marks the streaming fold (``streaming/scd.py``) needs
-    for late-arrival detection.  Off by default so the q99 oracle
-    schema stays fixed.
     """
     keys = list(key_cols)
     attrs = list(attr_cols)
@@ -82,7 +75,6 @@ def scd2_history(
         df.withColumn("_chg", flag)
         .withColumn("version", F.sum("_chg").over(run))
         .withColumn("_obs_s", sec)
-        .withColumn("_obs_us", F.unix_micros(F.col(ts_col)))
     )
 
     # per-version observation count: partitioning by (keys..., version)
@@ -93,29 +85,17 @@ def scd2_history(
     # row_number pass is needed to find it.
     wv = Window.partitionBy(*keys, "version")
     counted = versioned.withColumn("n_obs", F.count("*").over(wv))
-    extra: list = []
-    if include_last_obs:
-        counted = counted.withColumn("last_obs_us", F.max("_obs_us").over(wv))
-        # the version-start row IS the version's first observation, so
-        # its own _obs_us is first_obs_us
-        extra = [F.col("_obs_us").alias("first_obs_us"), F.col("last_obs_us")]
-
     starts = counted.filter(F.col("_chg") == 1).select(
         *keys,
         *attrs,
         F.col("version"),
         F.col("_obs_s").alias("valid_from_s"),
         F.col("n_obs"),
-        *extra,
     )
     wnext = Window.partitionBy(*keys).orderBy("version")
-    extra_names = ["first_obs_us", "last_obs_us"] if include_last_obs else []
     return starts.withColumn(
         "valid_to_s", F.lead("valid_from_s").over(wnext)
-    ).select(
-        *keys, *attrs, "version", "valid_from_s", "valid_to_s", "n_obs",
-        *extra_names,
-    )
+    ).select(*keys, *attrs, "version", "valid_from_s", "valid_to_s", "n_obs")
 
 
 def scd2_lookup(
@@ -128,11 +108,10 @@ def scd2_lookup(
 ) -> DataFrame:
     """Point-in-time enrichment: join each fact row to the dimension
     VERSION that was valid at the fact's event time — the consumer of
-    :func:`scd2_history` (and of ``streaming.scd``'s maintained
-    table).  ``valid_from_s`` is inclusive, ``valid_to_s`` exclusive,
-    NULL ``valid_to_s`` = the open current version, so every fact
-    matches at most one version; facts earlier than the key's first
-    version keep NULL attributes under ``how='left'``.
+    :func:`scd2_history`.  ``valid_from_s`` is inclusive, ``valid_to_s``
+    exclusive, NULL ``valid_to_s`` = the open current version, so every
+    fact matches at most one version; facts earlier than the key's
+    first version keep NULL attributes under ``how='left'``.
 
     Scale notes (100 TB): this is an EQUI-join on the keys with the
     interval test as a cheap join residual — never a range-only join

@@ -41,17 +41,6 @@ def token_count_col(text_col: str = "text") -> Column:
     return F.size(tokens_col(text_col))
 
 
-def bpe_ish_token_count_col(text_col: str = "text") -> Column:
-    """A BPE-flavored token estimate: count of maximal runs of word
-    characters plus standalone punctuation marks (regex, JVM-side)."""
-    return F.size(
-        F.filter(
-            F.split(F.col(text_col), r"(?<=[^\w])|(?=[^\w])"),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def marker_hits_col(text_col: str, markers: list[str]) -> Column:
     """How many tokens of the text are in the marker list."""
     return F.size(

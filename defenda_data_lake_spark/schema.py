@@ -41,8 +41,6 @@ SHELL_FIELDS = [
     "details",
 ]
 
-PARTITION_FIELDS = ["year", "month", "day", "hour"]
-
 EVENT_SHELL_SCHEMA = T.StructType(
     [
         T.StructField("eventid", T.StringType(), True),
@@ -55,9 +53,4 @@ EVENT_SHELL_SCHEMA = T.StructType(
         T.StructField("plugins", T.ArrayType(T.StringType()), True),
         T.StructField("details", T.StringType(), True),
     ]
-)
-
-EVENTS_TABLE_SCHEMA = T.StructType(
-    list(EVENT_SHELL_SCHEMA.fields)
-    + [T.StructField(c, T.StringType(), True) for c in PARTITION_FIELDS]
 )

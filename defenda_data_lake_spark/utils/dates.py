@@ -93,12 +93,6 @@ def to_utc(suspected: Any) -> datetime:
     return obj.astimezone(timezone.utc)
 
 
-def utc_now_iso() -> str:
-    """Current UTC time in the reference's ISO-8601 format
-    (``2019-09-04T17:54:59+00:00``)."""
-    return datetime.now(timezone.utc).isoformat(timespec="seconds")
-
-
 def iso_utc(dt: datetime) -> str:
     """Format an aware datetime the way the reference stores
     ``utctimestamp`` (ISO-8601 with ``+00:00`` offset)."""
