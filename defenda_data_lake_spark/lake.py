@@ -29,7 +29,7 @@ from defenda_data_lake_spark.operators.pipeline import (
     add_partition_columns,
     normalize_df,
 )
-from defenda_data_lake_spark.schema import SHELL_FIELDS
+from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA, SHELL_FIELDS
 
 DATABASE = "defenda_data_lake"
 EVENTS_TABLE = f"{DATABASE}.events"
@@ -48,19 +48,8 @@ def create_events_table(spark: SparkSession, location: str | None = None) -> Non
     spark.sql(
         f"""
         CREATE TABLE IF NOT EXISTS {EVENTS_TABLE} (
-            eventid STRING,
-            utctimestamp STRING,
-            severity STRING,
-            summary STRING,
-            category STRING,
-            source STRING,
-            tags ARRAY<STRING>,
-            plugins ARRAY<STRING>,
-            details STRING,
-            year STRING,
-            month STRING,
-            day STRING,
-            hour STRING
+            {EVENT_SHELL_SCHEMA.toDDL()},
+            year STRING, month STRING, day STRING, hour STRING
         )
         USING PARQUET
         PARTITIONED BY (year, month, day, hour)
@@ -108,10 +97,13 @@ def ingest_batch(
 
     ``mode='blob'`` uses the whole-file intake (concatenated JSON,
     CloudTrail bundles); ``mode='ndjson'`` uses the splittable
-    line-based scan.  Returns ``spark.table(EVENTS_TABLE)``, the whole
+    line-based scan; any other mode raises ``ValueError`` before
+    anything is read.  Returns ``spark.table(EVENTS_TABLE)``, the whole
     events table after the append."""
-    reader = read_blob_events if mode == "blob" else read_ndjson_events
-    raw = reader(spark, input_path)
+    readers = {"blob": read_blob_events, "ndjson": read_ndjson_events}
+    if mode not in readers:
+        raise ValueError(f"mode must be 'blob' or 'ndjson'; got {mode!r}")
+    raw = readers[mode](spark, input_path)
     land(spark, normalize_df(raw, raw_col="raw", source_col="source"), quarantine_path)
     return spark.table(EVENTS_TABLE)
 

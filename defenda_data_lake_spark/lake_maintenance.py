@@ -1,5 +1,5 @@
 """Lake maintenance: small-file compaction for streaming-written
-partitions.
+partitions, and retention for the hour-partitioned events table.
 
 The 60 s micro-batch ingest appends one-or-more parquet files per
 trigger per hour partition — a day of streaming at 60 s triggers is
@@ -9,6 +9,8 @@ and object-store LIST costs.  ``compact_partition`` rewrites one hive
 partition into ~``target_file_bytes`` files; run it per closed hour
 (the partition is processing-time, so an hour stops receiving appends
 once the trigger clock passes it — no concurrent-writer window).
+``expire_partitions`` drops the hours older than a retention window,
+the table-side twin of the reference's S3 lifecycle rules.
 """
 
 from __future__ import annotations
@@ -108,82 +110,6 @@ def compact_partition(
         "files_after": files_after,
         "bytes": total_bytes,
     }
-
-
-def upsert_corpus_snapshot(
-    spark: SparkSession,
-    corpus_dir: str,
-    updates,
-    key: str = "doc_id",
-) -> dict:
-    """MERGE-lite for a parquet corpus: rows in ``updates`` replace
-    same-key rows in the corpus, new keys append — the incremental
-    crawl-snapshot maintenance a training corpus needs without a table
-    format.  ``updates`` must be key-unique (like SQL MERGE, multiple
-    source matches are an error, not a silent double-insert).
-    Returns {rows_before, rows_updates, rows_after}.
-
-    Durability contract: the merged corpus is fully written to a
-    sibling temp dir first, so no reader ever sees a HALF-WRITTEN
-    corpus; the directory swap is two renames, so there is a brief
-    window where the canonical path does not exist (a concurrent read
-    can fail cleanly and retry) and a crash between them leaves the
-    complete old corpus at a ``.old-*`` sibling for manual recovery.
-    True atomic swap needs a table format's metadata pointer — this is
-    the honest parquet-directory approximation.
-
-    Scale notes (100 TB): the merge is one left-anti equi-join on the
-    key (hash-partitioned; the updates side of a snapshot delta is
-    usually small enough to broadcast, which AQE decides from its
-    size) plus a union — the corpus is scanned once for the write; the
-    before/after row counts come from parquet footers, not extra
-    scans.  At real scale the corpus would be hive-partitioned (e.g.
-    by crawl date or key bucket) and only partitions containing
-    updated keys rewritten; this single-directory form is the
-    per-partition primitive of that scheme."""
-    rows_before = _parquet_rows(corpus_dir)
-    rows_updates = updates.count()
-    distinct_keys = updates.select(key).distinct().count()
-    if distinct_keys != rows_updates:
-        raise ValueError(
-            f"updates are not key-unique on {key!r}: "
-            f"{rows_updates} rows, {distinct_keys} distinct keys"
-        )
-    old = spark.read.parquet(corpus_dir)
-    merged = updates.unionByName(
-        old.join(updates.select(key).distinct(), key, "left_anti")
-    )
-
-    parent = os.path.dirname(corpus_dir.rstrip("/"))
-    tmp_dir = os.path.join(parent, f".upsert-{uuid.uuid4().hex[:8]}")
-    try:
-        merged.write.mode("overwrite").parquet(tmp_dir)
-    except Exception:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        raise
-
-    old_dir = corpus_dir.rstrip("/") + f".old-{uuid.uuid4().hex[:8]}"
-    os.rename(corpus_dir, old_dir)
-    os.rename(tmp_dir, corpus_dir)
-    shutil.rmtree(old_dir)
-
-    return {
-        "rows_before": rows_before,
-        "rows_updates": rows_updates,
-        "rows_after": _parquet_rows(corpus_dir),
-    }
-
-
-def _parquet_rows(directory: str) -> int:
-    """Total row count of a parquet directory from file footers — no
-    data scan."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for name in os.listdir(directory):
-        if name.endswith(".parquet") and not name.startswith("."):
-            total += pq.read_metadata(os.path.join(directory, name)).num_rows
-    return total
 
 
 def expire_partitions(

@@ -1,9 +1,7 @@
 """CDC apply: fold a change-data-capture stream (Debezium/DMS-style
 insert/update/delete rows with a total order) into a snapshot table —
-the MERGE-with-deletes the lake's maintenance family was missing
-(``lake_maintenance.upsert_corpus_snapshot`` is SCD-1 upsert without
-deletes or sequence collapsing; ``operators/scd.py`` keeps full
-history instead of a current snapshot).
+a MERGE with deletes and sequence collapsing (``operators/scd.py``
+keeps full history instead of a current snapshot).
 
 Semantics: each change row is ``(op, seq, key..., payload...)`` with
 ``op ∈ {'I','U','D'}`` and ``seq`` a monotone change-log position
@@ -13,9 +11,8 @@ mean "the row now looks like this" (CDC upsert semantics: applying an
 'I' for an existing key or a 'U' for an absent one is routine after
 snapshot re-syncs), 'D' means the key is gone.  A tie at a key's
 WINNING seq has no defined order, so it raises instead of silently
-picking a winner (the ``upsert_corpus_snapshot`` key-uniqueness
-precedent); ties below the winner cannot change the net effect and
-are ignored.
+picking a winner (like SQL MERGE with multiple source matches);
+ties below the winner cannot change the net effect and are ignored.
 
 Scale notes (100 TB): collapsing is ONE window top-1 over the change
 batch keyed by the key columns — planned as WindowGroupLimit, i.e. a

@@ -83,8 +83,11 @@ def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:
     """Turn one raw file blob into ``(event_json, source)`` pairs with
     the reference's parse/unroll/tag semantics
     (reference s3_to_firehose.py:100-126).  A blob or concatenated block
-    that does not parse is yielded as-is, so the pipeline quarantines it
-    as ``ProcessingFailed`` with its payload instead of losing it."""
+    that does not parse is yielded as-is, and a value that parses but is
+    not an object (a bare ``42``, a scalar in a list or in ``Records``)
+    is yielded as its JSON text, so the pipeline quarantines either as
+    ``ProcessingFailed`` with its payload instead of losing it — as the
+    NDJSON path does."""
     source = "cloudtrail" if is_cloudtrail(filename) else DEFAULT_SOURCE
     try:
         chunks = [json.loads(blob)]
@@ -101,17 +104,15 @@ def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:
             records = parsed["Records"]
         elif isinstance(parsed, list):
             records = parsed
-        elif isinstance(parsed, dict):
-            records = [parsed]
         else:
-            continue
+            records = [parsed]
         for record in records:
             if isinstance(record, dict):
                 # the reference stamps the intake source onto every
                 # record, overwriting any existing value
                 # (s3_to_firehose.py:107,114,120,125)
                 record["source"] = source
-                yield json.dumps(record), source
+            yield json.dumps(record), source
 
 
 RAW_EVENT_SCHEMA = T.StructType(

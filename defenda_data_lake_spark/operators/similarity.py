@@ -24,9 +24,6 @@ Scale notes (100 TB / billions of vectors):
   nearest ``n_probe`` lists, score only those lists.
 * ``lsh_near_duplicates`` is the corpus-self-join near-dup path: an
   equi-join on the bucket signature instead of an O(n^2) cross join.
-
-The exact all-pairs near-dup (``exact_near_duplicates``) is retained as
-the small-scale reference implementation / oracle for tests.
 """
 
 from __future__ import annotations
@@ -661,25 +658,6 @@ def lsh_cosine_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def exact_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup (O(n^2) — the small-scale
-    reference implementation the bucketed path is validated against in
-    tests; not the registered catalog plan)."""
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    return (
-        with_cosine(pairs, "va", "vb", out="cosine")
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 

@@ -115,9 +115,8 @@ def q45_embedding_dedup(spark, sf_dir):
     pairs come from an equi-join on the bucket (shuffle keyed on the
     signature — never a cross join), exact cosine verifies.
 
-    This is the scale path registered as THE catalog plan; the exact
-    all-pairs version survives as ``similarity.exact_near_duplicates``
-    (test-only reference — its plan is a nested-loop cross join)."""
+    This is the scale path registered as THE catalog plan; its DuckDB
+    oracle replays the same buckets (``Q45_SQL``)."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = S.lsh_near_duplicates(emb, threshold=0.4, num_planes=6, dim=64)
     return pairs.select("id_a", "id_b", R("cosine", 6).alias("cosine"))

@@ -29,18 +29,6 @@ SHELL_DEFAULTS = {
     "source": "UNKNOWN",
 }
 
-SHELL_FIELDS = [
-    "eventid",
-    "utctimestamp",
-    "severity",
-    "summary",
-    "category",
-    "source",
-    "tags",
-    "plugins",
-    "details",
-]
-
 EVENT_SHELL_SCHEMA = T.StructType(
     [
         T.StructField("eventid", T.StringType(), True),
@@ -54,3 +42,5 @@ EVENT_SHELL_SCHEMA = T.StructType(
         T.StructField("details", T.StringType(), True),
     ]
 )
+
+SHELL_FIELDS = EVENT_SHELL_SCHEMA.fieldNames()

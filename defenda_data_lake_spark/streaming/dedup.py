@@ -110,9 +110,7 @@ class _ShardState:
     every entry per batch in Python; at horizon-scale tables (thousands
     of buckets per shard) the walk, not the state math, dominated — the
     r7 probe measured the sharded stage at 12.6k ev/s with SCALING.md
-    attributing the residual to exactly this loop.  Both kernels
-    (``lsh_candidates_stream`` and ``near_dedupe_stream``) share this
-    class so they cannot desynchronize on eviction timing.
+    attributing the residual to exactly this loop.
 
     ``dtypes`` is one numpy dtype per entry field ('object' for
     strings) and the LAST field must be the entry's expiry in epoch
@@ -234,365 +232,20 @@ def _json_roundtrips(dtype) -> bool:
     return False
 
 
-LSH_CANDIDATE_SCHEMA = "doc_id long, first_doc long, band int, band_sig string"
-# v2 state (round 6): added n_seen for the bucket cap.  State-store
-# schemas are versioned by the CHECKPOINT, not the code — a query
-# checkpointed under the 2-field v1 state cannot resume on this code
-# (Spark's state schema check rejects the widening).  Migration path:
-# restart with a FRESH checkpoint and rebuild the state by replaying
-# the watermark horizon's already-landed rows through the same stateful
-# kernel — :func:`seed_near_dedup_state` composes the replay (seed rows
+# Per-bucket state of ``near_dedupe_stream``.  State-store schemas are
+# versioned by the CHECKPOINT, not the code — a query checkpointed under
+# another state schema cannot resume on this code (Spark's state schema
+# check rejects the change).  Migration path: restart with a FRESH
+# checkpoint and rebuild the state by replaying the watermark horizon's
+# already-landed rows through the same stateful kernel —
+# :func:`seed_near_dedup_state` composes the replay (seed rows
 # are marked so the sink suppresses their re-emitted verdicts); without
 # a seed, a bare fresh checkpoint misses up to one horizon of dedup.
-_LSH_STATE_SCHEMA = "first_doc long, first_us long, n_seen long"
+_LSH_STATE_SCHEMA = "first_id string, first_us long, n_seen long, first_sig string"
 # Sharded-kernel state (round 8, v3): the whole shard table as one
 # opaque pickled-numpy blob — see ``_ShardState``.  Checkpoints taken
-# under the round-7 array-typed shard state need the same
-# fresh-checkpoint + ``seed_near_dedup_state`` migration as v1 -> v2.
+# under the round-7 array-typed shard state need that migration.
 _SHARD_STATE_SCHEMA = "blob binary"
-
-
-def lsh_candidates_stream(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    event_time_col: str = "event_time",
-    watermark_delay: str = "1 hour",
-    num_hashes: int = 8,
-    bands: int = 2,
-    shingle_n: int = 3,
-    max_bucket_docs: int | None = None,
-    timeout_mode: str = "processing",
-    shards: int | None = None,
-) -> DataFrame:
-    """Streaming NEAR-duplicate candidate generation — the streaming
-    twin of ``operators.dedup.minhash_lsh_candidates``: as documents
-    arrive, each is hashed into its MinHash LSH buckets, and a bucket
-    that already saw an earlier document emits a candidate row
-    ``(doc_id, first_doc, band, band_sig)`` mapping the newcomer to the
-    bucket's first claimant.  Downstream consumers verify (exact
-    Jaccard / cosine) or drop on sight — exactly how a continuous
-    crawl ingest discards near-re-posts without a nightly batch job.
-
-    Claimant re-sends (round 12): once a bucket PRE-EXISTS (claimed in
-    an earlier micro-batch), a re-delivered row carrying the
-    claimant's own id emits a SELF-candidate ``doc_id == first_doc``
-    — the marker that THIS ARRIVAL is a re-send of the claimant.
-    Consumers act on the arriving copy (suppress/divert the re-send);
-    a consumer that instead deletes by id would remove the landed
-    original — candidates name arrivals, not storage.  Within the
-    claiming batch the claimant never self-pairs, so the batch twin
-    ``minhash_lsh_candidates`` (one pass, unique ids) never produces
-    ``a == b`` rows and parity with it is unchanged.
-
-    Statefulness: ONE ``applyInPandasWithState`` keyed by (band,
-    band_sig).  State per bucket is three longs (first doc id, the
-    timeout anchor in the watermark's domain, cumulative count); the
-    timeout evicts a bucket once the watermark passes its last
-    activity + horizon, so state is bounded by buckets-per-horizon,
-    not all buckets ever — same contract as ``dedupe_stream``.  A doc with duplicate content in ``bands``
-    buckets emits up to ``bands`` candidate rows (band granularity is
-    preserved deliberately; `.distinct()` downstream if pairs are all
-    that matters).
-
-    Within one micro-batch, arrival order is by event time (ties by
-    id) — deterministic given the batch contents.  Works only on
-    streaming inputs; for batch use ``minhash_lsh_candidates``.
-
-    Malformed or missing event times: the cast is ``try_to_timestamp``
-    (one poison record must not wedge a continuous query on replay —
-    ANSI ``to_timestamp`` would fail the micro-batch forever), and
-    rows without a parseable event time are filtered out before
-    bucketing — a doc that can't be placed on the event timeline can
-    neither claim a bucket nor be judged against the horizon.
-
-    ``timeout_mode`` is the same contract knob as
-    ``near_dedupe_stream``: ``"processing"`` (default) rides the
-    watermark on ARRIVAL time so a late-timestamped doc still flows
-    through and gets candidates; ``"event"`` keeps the event-time
-    watermark (deterministic horizon under replay, engine drops rows
-    behind the watermark).
-
-    ``max_bucket_docs`` is the streaming twin of
-    ``minhash_lsh_candidates``'s cap: once a bucket has seen more than
-    the bound of documents (count persisted in state, so it spans
-    micro-batches within the bucket's lifetime), the bucket is treated
-    as degenerate boilerplate and stops emitting candidates.  The
-    kernel also stops *materializing* such a bucket: rows are consumed
-    chunk-by-chunk from Arrow and the in-memory buffer is bounded by
-    ``max_bucket_docs + chunk`` rows — a million-member bucket never
-    lives in one pandas frame.
-
-    ``shards``: the same throughput knob as ``near_dedupe_stream`` —
-    ``applyInPandasWithState`` calls the Python kernel once per GROUP
-    per micro-batch, and per-bucket grouping makes high-volume batches
-    group-call-bound (~0.19 ms/call measured, SCALING.md "Round 7").
-    With ``shards=N`` the stateful stage is keyed by
-    ``(band, hash(band_sig) % N)`` and each shard's state is a TABLE
-    of its buckets; one call serves thousands of buckets.  Candidate
-    rows, first-claimant choice, the cap, and eviction timing are
-    IDENTICAL to the per-bucket kernel (parity test pins them); sizing
-    guidance is in ``near_dedupe_stream``'s docstring.  The memory
-    contract differs in one documented way: the per-bucket kernel
-    bounds a capped degenerate bucket's buffer at O(cap + chunk) rows,
-    while a shard's kernel holds its partition of the micro-batch in
-    one frame (the engine already materialized it per-group either
-    way; per-SHARD the frame is bounded by the batch rows hashing to
-    the shard, which is what N controls).
-
-    Scale: the signature kernel is stateless and shuffle-free; the one
-    exchange is the state-store partitioning on (band, band_sig) —
-    identical key layout to the batch bucket join, so hot-bucket
-    behavior matches batch, and executors split state linearly."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from defenda_data_lake_spark.operators.dedup import banded_minhash_signatures
-
-    if timeout_mode not in ("processing", "event"):
-        raise ValueError(
-            f"timeout_mode must be 'processing' or 'event'; got {timeout_mode!r}"
-        )
-    horizon_ms = int(pd.Timedelta(watermark_delay).total_seconds() * 1000)
-
-    with_time = (
-        docs.withColumn(
-            "_lsh_event_time", F.try_to_timestamp(F.col(event_time_col))
-        )
-        .filter(F.col("_lsh_event_time").isNotNull())
-        # epoch microseconds computed JVM-SIDE from the timestamp value
-        # (timezone-exact by construction — supersedes the r5-advice
-        # session-tz localization: the kernel never interprets a naive
-        # wall time at all, so session timezone and DST folds/gaps
-        # cannot skew the eviction math, and the per-group
-        # pd.to_datetime that dominated kernel cost on tiny buckets is
-        # gone)
-        .withColumn("_lsh_us", F.unix_micros(F.col("_lsh_event_time")))
-    )
-    if timeout_mode == "event":
-        with_time = with_time.withWatermark("_lsh_event_time", watermark_delay)
-        with_time = with_time.withColumn("_lsh_wm_us", F.col("_lsh_us"))
-        wm_cols = ["_lsh_event_time", "_lsh_us", "_lsh_wm_us"]
-    else:
-        # arrival-time watermark: no row can be behind it (see
-        # near_dedupe_stream's timeout_mode docstring for the full
-        # rationale and the probe that motivated it)
-        with_time = with_time.withColumn("_lsh_arrival", F.current_timestamp())
-        with_time = with_time.withWatermark("_lsh_arrival", watermark_delay)
-        with_time = with_time.withColumn(
-            "_lsh_wm_us", F.unix_micros(F.col("_lsh_arrival"))
-        )
-        wm_cols = ["_lsh_event_time", "_lsh_us", "_lsh_arrival", "_lsh_wm_us"]
-    # the watermark column rides through the signature kernel as a
-    # passthrough column, so the watermark survives to the stateful
-    # operator without any stream-stream join-back
-    banded = banded_minhash_signatures(
-        with_time,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        passthrough=wm_cols,
-    ).withColumnRenamed("id", "doc_id")
-
-    def claim(key, batches, state):
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "first_doc": pd.Series([], dtype="int64"),
-                    "band": pd.Series([], dtype="int32"),
-                    "band_sig": pd.Series([], dtype="str"),
-                }
-            )
-            return
-        # Consume Arrow chunks incrementally, keeping only the
-        # (max_bucket_docs + 1) earliest rows buffered — when the cap
-        # is unset the buffer holds everything (same as the old
-        # concat), but a capped degenerate bucket stays O(cap + chunk)
-        # in memory while n_total keeps the true count.
-        # numpy arrays, not pandas frames: applyInPandasWithState runs
-        # this function once PER BUCKET, and real batches have many
-        # thousands of 1-2 member buckets — per-group pandas machinery
-        # (to_datetime, sort_values, concat) measured ~5 s/micro-batch
-        # of pure overhead before this rewrite
-        import numpy as np
-
-        ids_parts, us_parts = [], []
-        n_total = 0
-        batch_max_us = None
-        keep = None if max_bucket_docs is None else max_bucket_docs + 1
-        for chunk in batches:
-            if len(chunk) == 0:
-                continue
-            n_total += len(chunk)
-            chunk_us = chunk["_lsh_us"].to_numpy(dtype="int64")
-            # eviction anchor lives in the WATERMARK's domain (event
-            # time in event mode, arrival time in processing mode)
-            chunk_max = int(chunk["_lsh_wm_us"].to_numpy(dtype="int64").max())
-            if batch_max_us is None or chunk_max > batch_max_us:
-                batch_max_us = chunk_max
-            ids_parts.append(chunk["doc_id"].to_numpy(dtype="int64"))
-            us_parts.append(chunk_us)
-            if keep is not None and sum(len(a) for a in ids_parts) > keep:
-                ids_all = np.concatenate(ids_parts)
-                us_all = np.concatenate(us_parts)
-                order = np.lexsort((ids_all, us_all))[:keep]
-                ids_parts = [ids_all[order]]
-                us_parts = [us_all[order]]
-        if not ids_parts:
-            return
-        ids = np.concatenate(ids_parts)
-        us = np.concatenate(us_parts)
-        order = np.lexsort((ids, us))
-        ids, us = ids[order], us[order]
-        # anchor = the batch's TRUE max (recorded before the cap
-        # truncated the buffer to its earliest rows — a capped flood
-        # must keep pushing its timeout forward or the bucket evicts
-        # mid-flood and re-emits up to cap candidates per re-claim)
-        last_us = batch_max_us
-        pre_existing = state.exists
-        if pre_existing:
-            first_doc, first_us, n_seen = state.get
-        else:
-            first_doc = int(ids[0])
-            # the anchor lives in the WATERMARK's domain end to end —
-            # seeding it from the row's EVENT time (us[0]) let a
-            # future-skewed event timestamp pin the bucket's timeout at
-            # that future time + horizon in processing mode, so state
-            # was not bounded by the arrival horizon (ADVICE r7; the
-            # near_dedupe_stream kernel always seeded from wm_max).
-            # In event mode the domains coincide (batch_max_us >= every
-            # event time in the batch), so this changes nothing there.
-            first_us = batch_max_us
-            n_seen = 0
-        n_seen += n_total
-        last_us = max(last_us, first_us)
-        state.update((first_doc, last_us, n_seen))
-        watermark_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(last_us // 1000, watermark_ms + 1) + horizon_ms
-        )
-        if max_bucket_docs is not None and n_seen > max_bucket_docs:
-            # degenerate bucket: stop emitting (state still tracks it,
-            # so it stays suppressed until the watermark evicts it)
-            out_ids = ids[:0]
-        elif pre_existing:
-            # claimant-re-send rule (round 12): a bucket claimed in an
-            # EARLIER batch emits a SELF-candidate (doc_id ==
-            # first_doc) for a re-delivered claimant — downstream
-            # verification sees the re-send instead of silently
-            # passing it; within the claiming batch the claimant never
-            # self-pairs (below)
-            out_ids = ids
-        else:
-            out_ids = ids[ids != first_doc]
-        if len(out_ids) == 0:
-            return
-        yield pd.DataFrame(
-            {
-                "doc_id": out_ids,
-                "first_doc": np.full(len(out_ids), first_doc, dtype="int64"),
-                "band": np.full(len(out_ids), key[0], dtype="int32"),
-                "band_sig": pd.Series([key[1]] * len(out_ids), dtype="str"),
-            }
-        )
-
-    def claim_sharded(key, batches, state):
-        # one call serves EVERY bucket hashed to this shard, and every
-        # per-bucket step is a vectorized array op over the shard's
-        # columnar table (_ShardState, shared with near_dedupe_stream
-        # so the two sharded kernels cannot desynchronize on eviction
-        # timing); entry layout per band_sig:
-        # [first_doc, anchor_us, n_seen, expiry_ms]
-        import numpy as np
-
-        tbl = _ShardState(state, ("int64", "int64", "int64", "int64"))
-        if state.hasTimedOut:
-            tbl.persist()
-            return
-        chunks = [c for c in batches if len(c)]
-        if not chunks:
-            return
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(
-            chunks, ignore_index=True
-        )
-        ids = rows["doc_id"].to_numpy(dtype="int64")
-        us = rows["_lsh_us"].to_numpy(dtype="int64")
-        wm_us = rows["_lsh_wm_us"].to_numpy(dtype="int64")
-        bsigs = rows["band_sig"].to_numpy(dtype=object)
-        # one (band_sig, us, id) sort replaces the per-bucket python
-        # sorts; each bucket is then a contiguous run, and the run's
-        # first row is its would-be claimant
-        order = np.lexsort((ids, us, bsigs))
-        bs_s, ids_s, wm_s = bsigs[order], ids[order], wm_us[order]
-        n = len(bs_s)
-        starts = np.flatnonzero(np.r_[True, bs_s[1:] != bs_s[:-1]])
-        counts = np.diff(np.r_[starts, n])
-        uniq = bs_s[starts]
-        wm_max = np.maximum.reduceat(wm_s, starts)
-        # anchor seeded in the WATERMARK's domain, like the per-bucket
-        # kernel (event-time seeding would pin a future-skewed bucket
-        # past the arrival horizon in processing mode — ADVICE r7)
-        zeros = np.zeros(len(uniq), dtype="int64")
-        gidx, fresh = tbl.lookup_or_append(
-            uniq, (ids_s[starts], wm_max, zeros, zeros)
-        )
-        firsts, anchors, n_seens, expiries = tbl.cols
-        anchors[gidx] = np.maximum(anchors[gidx], wm_max)
-        n_seens[gidx] += counts
-        # same formula the per-bucket kernel feeds to
-        # setTimeoutTimestamp at each data batch
-        expiries[gidx] = (
-            np.maximum(anchors[gidx] // 1000, tbl.wm_ms + 1) + horizon_ms
-        )
-        capped = (
-            np.zeros(len(uniq), dtype=bool)
-            if max_bucket_docs is None
-            else n_seens[gidx] > max_bucket_docs
-        )
-        group_of_row = np.repeat(np.arange(len(uniq)), counts)
-        first_per_row = firsts[gidx][group_of_row]
-        # claimant-re-send rule (round 12, mirrors the per-bucket
-        # kernel): the claimant-id exemption holds only while the
-        # bucket is claimed THIS batch; a pre-existing bucket emits a
-        # SELF-candidate (doc_id == first_doc) for a re-delivered
-        # claimant so downstream consumers can suppress the re-send
-        emit = ~np.repeat(capped, counts) & (
-            (ids_s != first_per_row) | np.repeat(~fresh, counts)
-        )
-        tbl.persist(touched_idx=gidx)
-        if not emit.any():
-            return
-        yield pd.DataFrame(
-            {
-                "doc_id": ids_s[emit],
-                "first_doc": first_per_row[emit],
-                "band": np.full(int(emit.sum()), key[0], dtype="int32"),
-                "band_sig": pd.Series(bs_s[emit], dtype="str"),
-            }
-        )
-
-    if shards is None:
-        return banded.groupBy("band", "band_sig").applyInPandasWithState(
-            claim,
-            outputStructType=LSH_CANDIDATE_SCHEMA,
-            stateStructType=_LSH_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    sharded = banded.withColumn(
-        "_lsh_shard",
-        F.pmod(F.xxhash64(F.col("band_sig")), F.lit(shards)).cast("int"),
-    )
-    return sharded.groupBy("band", "_lsh_shard").applyInPandasWithState(
-        claim_sharded,
-        outputStructType=LSH_CANDIDATE_SCHEMA,
-        stateStructType=_SHARD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
 
 
 def _predrop_key_expr(id_col: str, text_col: str):
@@ -717,8 +370,8 @@ def near_dedupe_stream(
     needs both documents' contents, and the earlier document lives in
     a previous micro-batch — storing full texts in state is unbounded.
     The claimant's signature is ~``num_hashes``·8 hex chars, so state
-    stays two longs + two small strings per bucket, evicted by the
-    same event-time TTL as ``lsh_candidates_stream``.  Signature
+    stays two longs + two small strings per bucket, evicted by an
+    event-time timeout one horizon after its last activity.  Signature
     agreement IS the MinHash estimator of Jaccard similarity, so the
     verdict is principled, deterministic, and exactly replayable in
     batch SQL (the q77 oracle replays it).
@@ -1152,8 +805,7 @@ def near_dedupe_stream(
     def claim_sharded(key, batches, state):
         # one call serves EVERY bucket hashed to this shard, with every
         # per-bucket step vectorized over the shard's columnar table
-        # (_ShardState, shared with lsh_candidates_stream); entry
-        # layout per band_sig:
+        # (_ShardState); entry layout per band_sig:
         # [first_id, anchor_us, n_seen, first_sig, expiry_ms]
         import numpy as np
 
@@ -1248,7 +900,7 @@ def near_dedupe_stream(
         flagged = banded.groupBy("band", "band_sig").applyInPandasWithState(
             claim,
             outputStructType=out_schema,
-            stateStructType="first_id string, first_us long, n_seen long, first_sig string",
+            stateStructType=_LSH_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
@@ -1343,9 +995,9 @@ def seed_near_dedup_state(
     """Compose a near-dedup input stream whose stateful stage REBUILDS
     its per-bucket state from already-landed rows — the documented
     migration path when a checkpoint's state schema can no longer
-    resume on current code (``_LSH_STATE_SCHEMA`` v1 -> v2): start the
-    query on a FRESH checkpoint over this seeded stream instead of the
-    bare live stream, and the first micro-batches replay the last
+    resume on current code (e.g. the round-8 ``_SHARD_STATE_SCHEMA``):
+    start the query on a FRESH checkpoint over this seeded stream instead
+    of the bare live stream, and the first micro-batches replay the last
     watermark horizon's documents through the same kernel, re-claiming
     every bucket a plain restart would have forgotten.
 

@@ -99,42 +99,6 @@ def test_compact_with_sort_clusters_files(spark, tmp_path):
     assert back.select("source").distinct().count() == 4
 
 
-def test_upsert_corpus_snapshot(spark, tmp_path):
-    from defenda_data_lake_spark.lake_maintenance import upsert_corpus_snapshot
-
-    corpus = str(tmp_path / "corpus")
-    spark.createDataFrame(
-        [(1, "one v1"), (2, "two v1"), (3, "three v1")], ["doc_id", "text"]
-    ).write.parquet(corpus)
-
-    updates = spark.createDataFrame(
-        [(2, "two v2"), (9, "nine new")], ["doc_id", "text"]
-    )
-    stats = upsert_corpus_snapshot(spark, corpus, updates)
-    assert stats == {"rows_before": 3, "rows_updates": 2, "rows_after": 4}
-
-    rows = {
-        r["doc_id"]: r["text"] for r in spark.read.parquet(corpus).collect()
-    }
-    assert rows == {1: "one v1", 2: "two v2", 3: "three v1", 9: "nine new"}
-
-
-def test_upsert_rejects_duplicate_update_keys(spark, tmp_path):
-    import pytest as _pytest
-
-    from defenda_data_lake_spark.lake_maintenance import upsert_corpus_snapshot
-
-    corpus = str(tmp_path / "corpus2")
-    spark.createDataFrame([(1, "v1")], ["doc_id", "text"]).write.parquet(corpus)
-    dup_updates = spark.createDataFrame(
-        [(2, "a"), (2, "b")], ["doc_id", "text"]
-    )
-    with _pytest.raises(ValueError, match="not key-unique"):
-        upsert_corpus_snapshot(spark, corpus, dup_updates)
-    # corpus untouched
-    assert spark.read.parquet(corpus).count() == 1
-
-
 def test_expire_partitions_enforces_retention(spark, tmp_path):
     import datetime
     import os

@@ -93,29 +93,22 @@ def test_rejects_empty_keys(spark):
         snapshot_diff(old, old, [])
 
 
-def test_diff_audits_upsert_exactly(spark, tmp_path):
-    """Maintenance-loop integration: diffing the corpus before/after an
-    upsert must report exactly the upserted keys — modified for
-    replaced keys, added for new ones, unchanged for everything else
-    (and never a removed row: upsert deletes nothing)."""
-    from defenda_data_lake_spark.lake_maintenance import (
-        upsert_corpus_snapshot,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    before = spark.createDataFrame(
+def test_diff_audits_upsert_exactly(spark):
+    """Diffing a snapshot before/after an upsert must report exactly
+    the upserted keys — modified for replaced keys, added for new ones,
+    unchanged for everything else (and never a removed row: upsert
+    deletes nothing).  The after-snapshot is the upsert itself: the old
+    rows whose key the updates miss, plus the updates."""
+    old = spark.createDataFrame(
         [(i, f"text-{i}", "src") for i in range(50)],
         "doc_id long, text string, source string",
     )
-    before.write.parquet(corpus)
     updates = spark.createDataFrame(
         [(7, "text-7-v2", "src"), (13, "text-13-v2", "src"),
          (99, "text-99", "src")],
         "doc_id long, text string, source string",
     )
-    old = spark.read.parquet(corpus).localCheckpoint(eager=True)  # pin pre-upsert rows
-    upsert_corpus_snapshot(spark, corpus, updates)
-    new = spark.read.parquet(corpus)
+    new = updates.unionByName(old.join(updates, "doc_id", "left_anti"))
 
     got = {
         r["doc_id"]: r["diff_type"]

@@ -7,6 +7,8 @@ import gzip
 import json
 from collections import Counter
 
+import pytest
+
 from defenda_data_lake_spark import lake
 from defenda_data_lake_spark.lake import EVENTS_TABLE, create_events_table, ingest_batch
 from defenda_data_lake_spark.operators import pipeline
@@ -124,5 +126,49 @@ def test_create_events_table_creates_location(spark, tmp_path):
     try:
         create_events_table(spark, location=str(location))
         assert location.is_dir()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+
+
+def test_blob_intake_quarantines_non_object_values(spark, tmp_path):
+    """A blob value that parses but is not a JSON object is quarantined
+    as ``ProcessingFailed`` with its payload, as on the NDJSON path —
+    a bare scalar blob, a scalar in a list, a scalar in ``Records`` —
+    so landed plus quarantined rows still equal the records read."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "scalar.json").write_text("42")
+    (landing / "list.json").write_text(json.dumps([{"a": 1}, 7]))
+    (landing / "bundle.json").write_text(json.dumps({"Records": [{"b": 2}, "x"]}))
+    quarantine = str(tmp_path / "quarantine")
+
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    create_events_table(spark, location=str(tmp_path / "table"))
+    try:
+        ingest_batch(spark, str(landing), mode="blob", quarantine_path=quarantine)
+        assert spark.table(EVENTS_TABLE).count() == 2
+        quarantined = sorted(
+            (r["_raw"], r["_status"]) for r in spark.read.json(quarantine).collect()
+        )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    assert quarantined == [
+        ('"x"', "ProcessingFailed"),
+        ("42", "ProcessingFailed"),
+        ("7", "ProcessingFailed"),
+    ]
+
+
+def test_ingest_batch_rejects_unknown_mode(spark, tmp_path):
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "events.json").write_text(json.dumps({"a": 1}) + "\n")
+
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    create_events_table(spark, location=str(tmp_path / "table"))
+    try:
+        with pytest.raises(ValueError, match="mode"):
+            ingest_batch(spark, str(landing), mode="json")
+        assert spark.table(EVENTS_TABLE).count() == 0
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")

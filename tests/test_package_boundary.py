@@ -1,5 +1,5 @@
-"""The product boundary: the lake stands apart from the catalog, and
-every package module has a caller.
+"""The product boundary: the lake stands apart from the catalog, every
+package module has a caller, and so does every public function.
 
 Two closures of package imports.  The lake closure starts at the lake
 path (``LAKE_PATH`` plus every module of ``functions`` and ``utils``)
@@ -9,10 +9,16 @@ catalog entry point (``__spark_entry__.py``), both benchmark harnesses
 (``bench.py``, ``perfbench/``) and the catalog oracle check
 (``scripts/check_oracle.py``).  A module in neither closure is reached
 only by its own tests; it goes, or it gets a caller.
-``AWAITING_A_CALLER`` names the modules kept that way for now; the list
-must match the audit exactly, so a new orphan fails and so does an
-entry that got a caller or was deleted.  Static AST walk, no Spark
-needed.
+
+Per function: every public top-level ``def`` or ``class`` of the
+package must be referenced from the package or a root file — by a
+name, an attribute, a ``from … import`` alias, or a string constant
+equal to it (``perfbench`` looks detection rules up with ``getattr``).
+Docstrings, comments and a definition's references to itself do not
+count.  ``NO_CALLER_YET`` names the definitions kept without one, each
+with its reason; it must match the scan exactly, so a new caller-less
+name fails and so does an entry that got a caller or was deleted.
+Static AST walk, no Spark needed.
 """
 
 from __future__ import annotations
@@ -40,14 +46,49 @@ ROOT_PACKAGES = ["functions", "utils"]  # every module in them is a root
 ROOT_FILES = ["__spark_entry__.py", "bench.py", "scripts/check_oracle.py"]
 ROOT_DIRS = ["perfbench"]
 
-# The export and rollup streaming folds and the batch operators they
-# fold: tested, but no entry point starts them yet.
-AWAITING_A_CALLER = [
-    "operators.export",
-    "operators.rollup",
-    "streaming.export",
-    "streaming.rollup",
-]
+ENTRY_POINT = "lake API entry point a deployment calls"
+WAITS_FOR_ITEM_1 = "waits for ROADMAP item 1 (compaction on the lake path)"
+REFERENCE = "reference implementation a test compares against"
+NEXT_CUT = "test-only, next cut"
+
+# Public definitions nothing on a root path references, by
+# ``module.name`` under the package.
+NO_CALLER_YET = {
+    "lake.query_pandas": ENTRY_POINT,
+    "lake_maintenance.expire_partitions": ENTRY_POINT,
+    "operators.intake.decode_firehose_records": ENTRY_POINT,
+    "operators.pipeline.plugin_dir_factory": ENTRY_POINT,
+    "streaming.ingest.start_deduped_ingest": ENTRY_POINT,
+    "lake_maintenance.compact_partition": WAITS_FOR_ITEM_1,
+    "operators.bpe.full_token_accounting_py": REFERENCE,
+    "operators.classify.nb_calibration": REFERENCE,
+    "operators.classify.nb_evaluate": REFERENCE,
+    "operators.classify.nb_quality_scores": REFERENCE,
+    "operators.clustering.kmeans_train": REFERENCE,
+    "operators.dedup.exact_duplicate_groups": REFERENCE,
+    "operators.dedup.word_shingles": REFERENCE,
+    "operators.text.fingerprint": REFERENCE,
+    "operators.bpe.tokenizer_refresh": NEXT_CUT,
+    "operators.classify.load_nb_model": NEXT_CUT,
+    "operators.classify.save_nb_model": NEXT_CUT,
+    "operators.dedup.exact_dedup": NEXT_CUT,
+    "operators.linkage.fuzzy_dedupe": NEXT_CUT,
+    "operators.multimodal.sample_frames": NEXT_CUT,
+    "operators.sampling.hash_sample": NEXT_CUT,
+    "operators.scd.scd2_lookup": NEXT_CUT,
+    "operators.similarity.build_ivf_index": NEXT_CUT,
+    "operators.similarity.ivf_probe": NEXT_CUT,
+    "operators.sketches.hash_sample_estimate": NEXT_CUT,
+    "operators.sketches.hash_sample_merge": NEXT_CUT,
+    "streaming.dedup.content_dedupe_stream": NEXT_CUT,
+    "streaming.dedup.seed_near_dedup_state": NEXT_CUT,
+    "streaming.dedup.watermark_drop_counts": NEXT_CUT,
+    "utils.dates.iso_utc": NEXT_CUT,
+    "utils.json_tree.enum_values": NEXT_CUT,
+    "utils.json_tree.find_keys": NEXT_CUT,
+    "utils.json_tree.set_by_path": NEXT_CUT,
+    "utils.json_tree.sub_dict": NEXT_CUT,
+}
 
 
 def _package_modules() -> dict[str, Path]:
@@ -117,11 +158,71 @@ def _lake_closure() -> dict[str, str]:
     return _closure([], seeds)
 
 
-def _catalog_closure() -> dict[str, str]:
+def _root_files() -> list[Path]:
     roots = [REPO / f for f in ROOT_FILES]
     for d in ROOT_DIRS:
         roots += sorted((REPO / d).rglob("*.py"))
-    return _closure(roots, set())
+    return roots
+
+
+def _catalog_closure() -> dict[str, str]:
+    return _closure(_root_files(), set())
+
+
+def _references(node: ast.AST, docstrings: set[int]) -> set[str]:
+    """Names ``node`` uses: names, attributes, ``from … import``
+    aliases and string constants other than docstrings."""
+    found = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            found.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            found.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            found.update(alias.name for alias in n.names)
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docstrings
+        ):
+            found.add(n.value)
+    return found
+
+
+def _caller_less() -> set[str]:
+    """``module.name`` of every public top-level definition of the
+    package that no package module or root file references."""
+    defs = {}
+    referenced = set()
+    package_files = {path: name for name, path in _package_modules().items()}
+    for path in sorted(package_files) + _root_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+            and isinstance(node.body[0].value.value, str)
+        }
+        for stmt in tree.body:
+            used = _references(stmt, docstrings)
+            if (
+                path in package_files
+                and isinstance(
+                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                and not stmt.name.startswith("_")
+            ):
+                module = package_files[path].removeprefix(f"{PACKAGE}.")
+                defs[f"{module}.{stmt.name}"] = stmt.name
+                used.discard(stmt.name)  # recursion is not a caller
+            referenced |= used
+    return {qual for qual, name in defs.items() if name not in referenced}
 
 
 def test_roots_exist():
@@ -142,4 +243,17 @@ def test_lake_closure_holds_no_catalog_code():
 def test_every_package_module_is_reached_from_a_root():
     reached = _lake_closure().keys() | _catalog_closure().keys()
     unreached = sorted(set(_package_modules()) - reached)
-    assert unreached == sorted(f"{PACKAGE}.{m}" for m in AWAITING_A_CALLER)
+    assert unreached == []
+
+
+def test_every_public_definition_has_a_caller():
+    assert set(NO_CALLER_YET.values()) <= {
+        ENTRY_POINT,
+        WAITS_FOR_ITEM_1,
+        REFERENCE,
+        NEXT_CUT,
+    }
+    found = _caller_less()
+    no_caller = sorted(found - NO_CALLER_YET.keys())
+    stale = sorted(NO_CALLER_YET.keys() - found)  # got a caller, or is gone
+    assert (no_caller, stale) == ([], [])

@@ -127,133 +127,6 @@ def _doc_stream(spark, landing):
     )
 
 
-def test_lsh_candidates_stream_flags_near_dups(spark, tmp_path):
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    near = base + " tonight"  # near-dup: long shared prefix
-    other = "completely different words describing unrelated observations here"
-    with open(landing / "b1.ndjson", "w") as f:
-        f.write(_doc(1, "2026-01-01T00:01:00+00:00", base) + "\n")
-        f.write(_doc(9, "2026-01-01T00:02:00+00:00", other) + "\n")
-
-    query = (
-        lsh_candidates_stream(
-            _doc_stream(spark, landing), event_time_col="ts"
-        )
-        .writeStream.format("memory")
-        .queryName("lsh_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        # nothing is a dup of anything yet
-        assert spark.sql("SELECT * FROM lsh_out").count() == 0
-        # a near-dup of doc 1 and an exact re-post of doc 9 arrive later
-        with open(landing / "b2.ndjson", "w") as f:
-            f.write(_doc(2, "2026-01-01T00:05:00+00:00", near) + "\n")
-            f.write(_doc(8, "2026-01-01T00:06:00+00:00", other) + "\n")
-        query.processAllAvailable()
-        rows = spark.sql(
-            "SELECT DISTINCT doc_id, first_doc FROM lsh_out"
-        ).collect()
-        pairs = {(r["doc_id"], r["first_doc"]) for r in rows}
-        assert (8, 9) in pairs  # exact re-post maps to the first claimant
-        assert (2, 1) in pairs  # near-dup shares at least one band
-        assert all(d != f for d, f in pairs)
-    finally:
-        query.stop()
-
-
-def test_lsh_candidates_stream_batch_parity(spark, tmp_path):
-    """The pair set the batch operator finds equals the stream's
-    (doc -> first claimant) candidates, as unordered pairs, on the same
-    corpus."""
-    from defenda_data_lake_spark.operators.dedup import minhash_lsh_candidates
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
-
-    corpus = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "alpha beta gamma delta epsilon zeta eta theta"),
-        (3, "unrelated content entirely distinct tokens"),
-    ]
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    batch_pairs = {
-        (r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(docs).collect()
-    }
-    assert (1, 2) in batch_pairs and all(3 not in p for p in batch_pairs)
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    with open(landing / "b1.ndjson", "w") as f:
-        for i, (doc_id, text) in enumerate(corpus):
-            f.write(_doc(doc_id, f"2026-01-01T00:0{i + 1}:00+00:00", text) + "\n")
-    query = (
-        lsh_candidates_stream(_doc_stream(spark, landing), event_time_col="ts")
-        .writeStream.format("memory")
-        .queryName("lsh_parity_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        stream_pairs = {
-            (min(r["doc_id"], r["first_doc"]), max(r["doc_id"], r["first_doc"]))
-            for r in spark.sql(
-                "SELECT doc_id, first_doc FROM lsh_parity_out"
-            ).collect()
-        }
-    finally:
-        query.stop()
-    assert stream_pairs == batch_pairs
-
-
-def test_lsh_candidates_stream_bucket_cap(spark, tmp_path):
-    """max_bucket_docs: once a bucket's cumulative membership exceeds
-    the cap (count persisted in state across micro-batches), it stops
-    emitting candidates."""
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    text = "boilerplate legal footer text repeated verbatim every page"
-    with open(landing / "b1.ndjson", "w") as f:
-        for i in range(1, 3):  # docs 1,2 -> bucket size 2 (at cap)
-            f.write(_doc(i, f"2026-01-01T00:0{i}:00+00:00", text) + "\n")
-    query = (
-        lsh_candidates_stream(
-            _doc_stream(spark, landing), event_time_col="ts", max_bucket_docs=2
-        )
-        .writeStream.format("memory")
-        .queryName("lsh_cap_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        # at the cap: doc 2 still flagged against claimant 1
-        assert {
-            (r["doc_id"], r["first_doc"])
-            for r in spark.sql(
-                "SELECT doc_id, first_doc FROM lsh_cap_out"
-            ).collect()
-        } == {(2, 1)}
-        # a later micro-batch pushes the bucket over the cap -> silent
-        with open(landing / "b2.ndjson", "w") as f:
-            for i in range(3, 6):
-                f.write(_doc(i, f"2026-01-01T00:0{i}:00+00:00", text) + "\n")
-        query.processAllAvailable()
-        assert spark.sql("SELECT * FROM lsh_cap_out").count() == 2  # 2 bands of doc2, nothing new
-    finally:
-        query.stop()
-
-
 def test_near_dedupe_stream_batch_parity(spark, tmp_path):
     """End-to-end streaming near-dedup (candidates + claimant-signature
     verify + per-doc resolution) produces the same per-doc verdicts as
@@ -389,7 +262,7 @@ def test_near_dedupe_stream_out_of_order_content_set(spark, tmp_path):
     assert stream_survivors == batch_survivors == sorted([fam, other])
 
 def test_seed_near_dedup_state_migration_path(spark, tmp_path):
-    """The documented _LSH_STATE_SCHEMA v1->v2 migration: a query that
+    """The documented state-schema migration: a query that
     cannot resume its old checkpoint restarts on a FRESH checkpoint
     over seed_near_dedup_state's seeded stream, and (a) runs, (b) loses
     no live rows, (c) suppresses seed re-emission, and (d) still
@@ -635,184 +508,6 @@ def test_dedupe_stream_late_unique_rows_not_lost(spark, tmp_path):
         assert seen.count("e1") == 1, mode  # redelivery suppressed
         assert ("e2" in seen) == expect_late_unique, (mode, seen)
 
-def test_lsh_candidates_stream_late_rows(spark, tmp_path):
-    """Candidates twin of the late-row contract: default 'processing'
-    mode still emits a candidate for a doc whose event time is hours
-    behind the stream; 'event' mode engine-drops it."""
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
-
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    for mode, expect in (("processing", True), ("event", False)):
-        landing = tmp_path / f"landing_{mode}"
-        landing.mkdir()
-        query = (
-            lsh_candidates_stream(
-                _doc_stream(spark, landing),
-                event_time_col="ts",
-                timeout_mode=mode,
-            )
-            .writeStream.format("memory")
-            .queryName(f"lsh_late_{mode}")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{mode}"))
-            .start()
-        )
-        try:
-            with open(landing / "b1.ndjson", "w") as f:
-                f.write(_doc(1, "2026-01-01T10:00:00+00:00", text) + "\n")
-            query.processAllAvailable()
-            with open(landing / "b2.ndjson", "w") as f:
-                f.write(_doc(2, "2026-01-01T00:30:00+00:00", text) + "\n")
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        pairs = {
-            (r["doc_id"], r["first_doc"])
-            for r in spark.sql(f"SELECT doc_id, first_doc FROM lsh_late_{mode}").collect()
-        }
-        assert ((2, 1) in pairs) == expect, (mode, pairs)
-
-
-def test_lsh_candidates_stream_sharded_parity(spark, tmp_path):
-    """shards=N (bucket-table kernel) must emit candidate rows
-    IDENTICAL to the per-bucket reference kernel on the same corpus
-    delivered across the same micro-batches — near-dup family, exact
-    re-posts, a capped degenerate bucket, and a cross-batch claim all
-    covered."""
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
-
-    fam = "the quick brown fox jumps over the lazy dog tonight"
-    near = "the quick brown fox jumps over the lazy dog today instead"
-    xfam = "zebra quantum lattice harmonic oscillator drifts beyond the nebula rim"
-    boiler = "boilerplate legal footer text repeated verbatim every page"
-    batches = [
-        [
-            (1, "2026-01-01T00:01:00+00:00", fam),
-            (2, "2026-01-01T00:02:00+00:00", fam),
-            (3, "2026-01-01T00:03:00+00:00", near),
-            (4, "2026-01-01T00:04:00+00:00", "completely different words here"),
-            (11, "2026-01-01T00:06:00+00:00", xfam),
-        ],
-        [
-            (6, "2026-01-01T00:10:00+00:00", xfam),  # cross-batch claim
-            (7, "2026-01-01T00:11:00+00:00", boiler),
-            (8, "2026-01-01T00:12:00+00:00", boiler),
-        ],
-        [
-            (9, "2026-01-01T00:20:00+00:00", boiler),   # batch pushes the
-            (10, "2026-01-01T00:21:00+00:00", boiler),  # bucket over cap=3
-        ],
-    ]
-
-    results = {}
-    for label, shard_arg in (("pergroup", None), ("sharded", 4)):
-        landing = tmp_path / f"lsh_landing_{label}"
-        landing.mkdir()
-        query = (
-            lsh_candidates_stream(
-                _doc_stream(spark, landing),
-                event_time_col="ts",
-                max_bucket_docs=3,
-                shards=shard_arg,
-            )
-            .writeStream.format("memory")
-            .queryName(f"lsh_shard_{label}")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"lsh_ckpt_{label}"))
-            .start()
-        )
-        try:
-            for bi, docs in enumerate(batches):
-                with open(landing / f"b{bi}.ndjson", "w") as f:
-                    for d in docs:
-                        f.write(_doc(*d) + "\n")
-                query.processAllAvailable()
-        finally:
-            query.stop()
-        results[label] = sorted(
-            map(
-                tuple,
-                spark.sql(
-                    f"SELECT doc_id, first_doc, band, band_sig"
-                    f" FROM lsh_shard_{label}"
-                ).collect(),
-            )
-        )
-
-    assert results["sharded"] == results["pergroup"]
-    pairs = {(d, f) for d, f, _, _ in results["sharded"]}
-    assert (2, 1) in pairs            # exact re-post maps to claimant
-    assert (6, 11) in pairs           # cross-batch claim held
-    assert (8, 7) in pairs            # under cap: flagged
-    flagged_ids = {d for d, _ in pairs}
-    assert 9 not in flagged_ids and 10 not in flagged_ids  # capped batch silent
-    assert 4 not in flagged_ids
-
-
-def test_lsh_candidates_sharded_eviction_parity(spark, tmp_path):
-    """Drive the EVICTION path of the sharded kernel (hasTimedOut +
-    persist's prune) and pin it to the per-bucket kernel: after the
-    event-time watermark passes a bucket's horizon, the bucket must be
-    forgotten — a re-post of its text re-CLAIMS instead of emitting a
-    candidate — and post-eviction dups map to the NEW claimant.  Uses
-    timeout_mode='event' (deterministic watermark from the data) with
-    strictly increasing event times so no row is engine-dropped."""
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
-
-    fam = "the quick brown fox jumps over the lazy dog tonight"
-    other = "zebra quantum lattice harmonic oscillator drifts beyond the nebula rim"
-    batches = [
-        [(1, "2026-01-01T00:00:00+00:00", fam),
-         (2, "2026-01-01T00:05:00+00:00", fam)],      # candidate (2,1)
-        # advances the watermark hours past bucket expiry -> eviction
-        [(3, "2026-01-01T06:00:00+00:00", other)],
-        [(4, "2026-01-01T06:30:00+00:00", fam)],      # re-claims, no cand
-        [(5, "2026-01-01T06:40:00+00:00", fam)],      # candidate (5,4)
-    ]
-
-    results = {}
-    for label, shard_arg in (("pergroup", None), ("sharded", 4)):
-        landing = tmp_path / f"ev_landing_{label}"
-        landing.mkdir()
-        query = (
-            lsh_candidates_stream(
-                _doc_stream(spark, landing),
-                event_time_col="ts",
-                watermark_delay="1 hour",
-                timeout_mode="event",
-                shards=shard_arg,
-            )
-            .writeStream.format("memory")
-            .queryName(f"lsh_ev_{label}")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ev_ckpt_{label}"))
-            .start()
-        )
-        try:
-            for bi, docs in enumerate(batches):
-                with open(landing / f"b{bi}.ndjson", "w") as f:
-                    for d in docs:
-                        f.write(_doc(*d) + "\n")
-                query.processAllAvailable()
-        finally:
-            query.stop()
-        results[label] = sorted(
-            map(
-                tuple,
-                spark.sql(
-                    f"SELECT doc_id, first_doc, band, band_sig FROM lsh_ev_{label}"
-                ).collect(),
-            )
-        )
-
-    assert results["sharded"] == results["pergroup"]
-    pairs = {(d, f) for d, f, _, _ in results["sharded"]}
-    assert (2, 1) in pairs
-    assert (5, 4) in pairs            # post-eviction claimant is doc 4
-    assert (4, 1) not in pairs        # bucket was evicted, not remembered
-    assert (5, 1) not in pairs
-
-
 def test_near_dedupe_sharded_eviction_parity(spark, tmp_path):
     """Same eviction-path pin for near_dedupe_stream's sharded kernel:
     verdicts across an eviction boundary must match the per-bucket
@@ -875,18 +570,21 @@ def test_near_dedupe_sharded_eviction_parity(spark, tmp_path):
 
 def test_lsh_processing_mode_anchor_is_arrival_bounded(spark, tmp_path):
     """ADVICE r7 regression: in timeout_mode='processing' the eviction
-    anchor must live in the ARRIVAL domain.  The old kernels seeded it
-    from the row's EVENT time, so a future-skewed event timestamp (here:
-    year 2100) pinned the bucket's timeout at 2100 + horizon — state was
+    anchor of an LSH bucket must live in the ARRIVAL domain.  Seeding it
+    from the row's EVENT time let a future-skewed event timestamp (here:
+    year 2100) pin the bucket's timeout at 2100 + horizon — state was
     never bounded by the arrival horizon, and a re-post long after the
-    horizon still matched the fossilized claimant.  With the fix, the
-    bucket evicts one horizon of ARRIVAL time after its last activity
-    regardless of the event timestamp: the re-post re-claims and emits
-    no candidate.  Both kernels (per-bucket and sharded) are pinned to
-    the same behavior."""
+    horizon still matched the fossilized claimant.  The bucket must
+    evict one horizon of ARRIVAL time after its last activity
+    regardless of the event timestamp: the re-post re-claims and
+    resolves as a survivor.  Both kernels (per-bucket and sharded) are
+    pinned to the same behavior."""
     import time as _time
 
-    from defenda_data_lake_spark.streaming.dedup import lsh_candidates_stream
+    from defenda_data_lake_spark.streaming.dedup import (
+        near_dedupe_stream,
+        resolve_stream_flags,
+    )
 
     fam = "the quick brown fox jumps over the lazy dog tonight"
     other = "zebra quantum lattice harmonic oscillator drifts beyond the nebula rim"
@@ -895,16 +593,21 @@ def test_lsh_processing_mode_anchor_is_arrival_bounded(spark, tmp_path):
     for label, shard_arg in (("pergroup", None), ("sharded", 4)):
         landing = tmp_path / f"skew_landing_{label}"
         landing.mkdir()
+        resolved = {}
+
+        def sink(batch_df, batch_id):
+            for r in resolve_stream_flags(batch_df).collect():
+                resolved[int(r["_ndd_id"])] = r["dup_of"]
+
         query = (
-            lsh_candidates_stream(
+            near_dedupe_stream(
                 _doc_stream(spark, landing),
                 event_time_col="ts",
                 watermark_delay="2 seconds",
                 timeout_mode="processing",
                 shards=shard_arg,
             )
-            .writeStream.format("memory")
-            .queryName(f"lsh_skew_{label}")
+            .writeStream.foreachBatch(sink)
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / f"skew_ckpt_{label}"))
             .start()
@@ -929,17 +632,12 @@ def test_lsh_processing_mode_anchor_is_arrival_bounded(spark, tmp_path):
             query.processAllAvailable()
         finally:
             query.stop()
-        results[label] = {
-            (r["doc_id"], r["first_doc"])
-            for r in spark.sql(
-                f"SELECT doc_id, first_doc FROM lsh_skew_{label}"
-            ).collect()
-        }
+        results[label] = dict(resolved)
 
     assert results["sharded"] == results["pergroup"]
-    # no candidate rows at all: doc 3 re-claimed a fresh bucket
-    assert (3, 1) not in results["sharded"]
-    assert results["sharded"] == set()
+    # every doc survives: doc 3 re-claimed a fresh bucket instead of
+    # resolving against the year-2100 claimant
+    assert results["sharded"] == {1: None, 2: None, 3: None}
 
 
 def test_near_dedupe_exact_predrop_suppresses_claimant_redelivery(
