@@ -9,7 +9,7 @@ but in one Spark session:
   ``year/month/day/hour`` (partition pruning ≡ the reference's only
   query-cost lever, README.md:114,230);
 * ``land`` — the one landing path: normalized rows → partitioned
-  append plus quarantine.  ``ingest_batch`` and both stream starters in
+  append plus quarantine.  ``ingest_batch`` and ``start_ingest`` in
   ``streaming.ingest`` write through it (replaces the
   S3→lambda→Firehose→lambda→S3 hop chain);
 * ``spark.sql`` — the full Presto-surface replacement, including the
@@ -63,8 +63,7 @@ def land(
 ) -> None:
     """The one write of the lake: append ``normalized``'s ``_status =
     'Ok'`` rows to ``defenda_data_lake.events`` and every other row's
-    non-shell columns (``_status``, ``_raw``, plus ``dup_of`` on the
-    dedup path) to the quarantine as JSON (the reference's result
+    non-shell columns (``_status``, ``_raw``) to the quarantine as JSON (the reference's result
     envelope, processor.py:59-76).  ``normalized`` is persisted for the
     two writes, so the plugin kernel runs once per event."""
     normalized = normalized.persist()

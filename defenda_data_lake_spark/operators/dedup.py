@@ -231,30 +231,12 @@ def minhash_signatures(
     num_hashes: int = 8,
     shingle_n: int = 3,
     passthrough: Sequence[str] = (),
-    keep_unshingleable: bool = False,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """MinHash signature per document.  ``passthrough`` columns are
-    carried to the output unchanged (one value per doc) — the streaming
-    LSH dedup uses this to keep its watermark column alive through the
-    kernel without a stream-stream join-back.
-
-    ``kernel``: ``"pandas"`` = the fused Arrow-batched stage below
-    (default, the contract decider); ``"sql"`` = a pure-JVM
-    formulation of the SAME bit-for-bit signature scheme via
-    higher-order functions (``_minhash_signatures_sql``) — no Python
-    stage at all.  The two are parity-pinned by
-    ``tests/test_dedup_sql_kernel.py`` including the unicode
-    whitespace set; measured trade-off in SCALING.md "Round 10".
-
-    ``keep_unshingleable`` emits a row with NULL hash columns for
-    documents whose text yields no shingles (whitespace-only under
-    PYTHON's unicode whitespace rules — exactly Unicode
-    ``White_Space`` plus U+001C-U+001F, which the sql kernel's
-    ``(?U)[\\s\\x1c-\\x1f]+`` replays).  Default False preserves the
-    agg-form contract: no shingles, no row.  Pipelines that must not
-    lose rows (near_dedupe_stream) set True and route NULL-signature
-    rows around the dedup.
+    carried to the output unchanged (one value per doc) —
+    ``minhash_bucket_dedupe`` uses this to keep its ``ts_col`` without
+    a join-back.  A document whose text yields no shingles gets no row
+    (the agg-form contract).
 
     Hash family i is the i-th 32-bit hex chunk of ``md5(p || shingle)``
     where p cycles through ``'' , 'x', 'xx', …`` every 4 families: one
@@ -274,13 +256,6 @@ def minhash_signatures(
     hash-aggregate them) — measured ~2x slower end-to-end.  A doc's
     shingles never need to leave the task that read it, so the fused
     stage is shuffle-free and linearly scalable."""
-    if kernel not in ("pandas", "sql"):
-        raise ValueError(f"kernel must be pandas/sql (got {kernel!r})")
-    if kernel == "sql":
-        return _minhash_signatures_sql(
-            df, text_col, id_col, num_hashes, shingle_n, passthrough,
-            keep_unshingleable,
-        )
     import hashlib
 
     import numpy as np
@@ -346,12 +321,6 @@ def minhash_signatures(
                     uniq = {" ".join(words)}
                 uniq.discard("")
                 if not uniq:
-                    if keep_unshingleable:
-                        for i in range(num_hashes):
-                            cols[i].append(None)
-                        ids.append(doc_id)
-                        for c in passthrough:
-                            pt_vals[c].append(pt_cols[c][row_idx])
                     continue  # agg-form contract: no shingles, no row
                 # vectorized per-family min: fixed-width lowercase hex
                 # compares identically under lexicographic and numeric
@@ -378,8 +347,7 @@ def minhash_signatures(
             )
 
     # internal underscore names so a passthrough column named "id" or
-    # "text" (payload-carrying callers like near_dedupe_stream) can't
-    # collide with the kernel's working columns
+    # "text" can't collide with the kernel's working columns
     narrow = df.select(
         F.col(id_col).alias("_mh_id"),
         F.col(text_col).alias("_mh_text"),
@@ -398,121 +366,11 @@ def minhash_signatures(
     )
 
 
-def _minhash_signatures_sql(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    shingle_n: int,
-    passthrough: Sequence[str],
-    keep_unshingleable: bool,
-) -> DataFrame:
-    """Pure-JVM twin of the pandas minhash kernel (VERDICT r9 item 5's
-    "JVM signature kernel").  Same signature scheme bit-for-bit:
-
-    * words = Python ``str.lower().split()`` — replayed as ``lower``
-      then split on ``(?U)[\\s\\x1c-\\x1f]+`` with empty tokens
-      dropped.  Java's ``(?U)\\s`` is exactly the Unicode
-      ``White_Space`` set; Python's split set is White_Space plus the
-      four separator controls U+001C-U+001F, hence the explicit range.
-      NULL text replays the pandas kernel's ``str(None)`` as the
-      literal ``'None'``.
-    * shingles = the n-word windows (whole text when shorter),
-      de-duplicated; zero shingles → NULL signature row (kept or
-      filtered per ``keep_unshingleable``).
-    * family i = min over shingles of hex chunk i of
-      ``md5('x'*(i//4) || shingle)`` — digests are materialized ONCE
-      per shingle in their own projection (array of concatenated hex),
-      so the 8 family mins share the 2 md5 calls exactly like the
-      pandas kernel; CollapseProject keeps the stage split because the
-      digest array is referenced ``num_hashes`` times and is not cheap.
-
-    Everything is stateless projections over higher-order functions —
-    streaming-safe and with NO Python worker in the plan.  The hash
-    compute itself is shuffle-free; like the pandas kernel, the input
-    passes through ``ensure_min_parallelism`` so a single-file batch
-    corpus doesn't run the whole signature stage as one task
-    (streaming inputs pass through untouched — ADVICE r10 item 1).
-    Known non-parity corner (documented, test-pinned to agree
-    on the corpus): exotic locale-sensitive case mappings where JVM
-    and CPython lowercase tables disagree; both implement Unicode
-    default casing incl. final sigma, so realistic text is identical.
-    """
-    from pyspark.sql import types as T  # noqa: F401
-
-    n_digests = (num_hashes + 3) // 4
-    words = F.filter(
-        F.split(
-            F.lower(
-                F.coalesce(F.col("_mh_text").cast("string"), F.lit("None"))
-            ),
-            r"(?U)[\s\x1c-\x1f]+",
-        ),
-        lambda w: w != F.lit(""),
-    )
-    from defenda_data_lake_spark.utils.partitioning import (
-        ensure_min_parallelism,
-        kernel_parallelism,
-    )
-
-    base = ensure_min_parallelism(
-        df.select(
-            F.col(id_col).alias("_mh_id"),
-            F.col(text_col).alias("_mh_text"),
-            *[F.col(c) for c in passthrough],
-        ),
-        kernel_parallelism(df),
-    ).withColumn("_mh_words", words)
-
-    nw = F.size("_mh_words")
-    shingles = (
-        F.when(
-            nw >= shingle_n,
-            F.transform(
-                F.sequence(F.lit(1), nw - shingle_n + 1),
-                lambda i: F.array_join(F.slice("_mh_words", i, shingle_n), " "),
-            ),
-        )
-        .when(nw > 0, F.array(F.array_join("_mh_words", " ")))
-        .otherwise(F.array().cast("array<string>"))
-    )
-
-    def _digest_row(s: Column) -> Column:
-        return F.concat(
-            *[F.md5(F.concat(F.lit("x" * d), s)) for d in range(n_digests)]
-        )
-
-    with_dig = base.withColumn(
-        "_mh_dig", F.transform(F.array_distinct(shingles), _digest_row)
-    ).drop("_mh_words", "_mh_text")
-    if not keep_unshingleable:
-        with_dig = with_dig.filter(F.size("_mh_dig") > 0)
-    def _family(i: int):
-        # NOTE: must stay a ONE-argument callable — pyspark's
-        # ``transform`` dispatches on arity, and a second parameter
-        # (even a bound default like ``i=i``) selects the
-        # (element, index) form, silently replacing the family index
-        # with the array position
-        def chunk(d: Column) -> Column:
-            return F.substring(d, i * 8 + 1, 8)
-
-        return chunk
-
-    mins = [
-        F.array_min(F.transform("_mh_dig", _family(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return with_dig.select(
-        F.col("_mh_id").alias("id"), *mins, *[F.col(c) for c in passthrough]
-    )
-
-
 def band_structs_expr(hs: Sequence[str], bands: int) -> Column:
-    """The LSH banding expression shared by every batch/stream twin:
-    an array of (band, band_sig) structs where ``band_sig`` is the
-    '|'-joined hex minhashes of that band.  ONE definition — the q77
-    batch/stream/oracle parity depends on all three formulations
-    banding identically."""
+    """The LSH banding expression shared by the LSH operators: an array
+    of (band, band_sig) structs where ``band_sig`` is the '|'-joined hex
+    minhashes of that band.  ONE definition — the q31 and q77 oracles
+    depend on every formulation banding identically."""
     if len(hs) % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({len(hs)})")
     rows_per_band = len(hs) // bands
@@ -530,36 +388,6 @@ def band_structs_expr(hs: Sequence[str], bands: int) -> Column:
             )
             for b in range(bands)
         ]
-    )
-
-
-def banded_minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 2,
-    shingle_n: int = 3,
-    passthrough: Sequence[str] = (),
-) -> DataFrame:
-    """One row per (doc, band): ``(id, band, band_sig)`` where
-    ``band_sig`` is the '|'-joined hex minhashes of that band — the
-    shared front half of batch LSH candidates and the streaming LSH
-    dedup.  One row per (doc, band) via explode — NOT a union of
-    per-band selects, so the signature kernel runs once, not per
-    band.  Works on streaming DataFrames too (the signature kernel is
-    stateless)."""
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, passthrough=passthrough
-    )
-    band_structs = band_structs_expr([f"h{i}" for i in range(num_hashes)], bands)
-    return sigs.select(
-        "id", F.explode(band_structs).alias("bs"), *[F.col(c) for c in passthrough]
-    ).select(
-        "id",
-        F.col("bs.band").alias("band"),
-        F.col("bs.band_sig").alias("band_sig"),
-        *[F.col(c) for c in passthrough],
     )
 
 
@@ -589,8 +417,12 @@ def minhash_lsh_candidates(
     (band, band_sig) partitioning the bucket aggregation needs, so it
     adds no shuffle — and it runs BEFORE collect_list, so the giant
     array is never built."""
-    banded = banded_minhash_signatures(
-        df, text_col, id_col, num_hashes, bands, shingle_n
+    # one row per (doc, band) via explode — NOT a union of per-band
+    # selects, so the signature kernel runs once, not per band
+    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+    band_structs = band_structs_expr([f"h{i}" for i in range(num_hashes)], bands)
+    banded = sigs.select("id", F.explode(band_structs).alias("bs")).select(
+        "id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
     )
     # bucket-grouped pair expansion instead of a self-join: ONE hash
     # aggregation collects each LSH bucket's member list, then pairs
@@ -633,27 +465,18 @@ def minhash_bucket_dedupe(
     min_hash_agreement: float = 0.5,
     max_bucket_docs: int | None = None,
 ) -> DataFrame:
-    """Claimant-based near-dedup — the BATCH TWIN of
-    ``streaming.dedup.near_dedupe_stream`` (a pinned parity test keeps
-    them in lockstep for event-time-ordered arrival; the stream's
-    claimant is first-arrival across micro-batches, so out-of-order
-    delivery can flip WHICH member of a near-dup set survives — the
-    surviving content set is equivalent): per LSH bucket, the
-    earliest document (by
-    ``ts_col`` then id-as-string — string order deliberately, because
-    the streaming state store compares ids as strings) claims the
-    bucket; every other member whose FULL minhash signature agrees
-    with the claimant's on at least ``min_hash_agreement`` of the
-    ``num_hashes`` families (the MinHash estimate of Jaccard
-    similarity) is marked a duplicate of it.  A doc flagged in
+    """Claimant-based near-dedup: per LSH bucket, the earliest document
+    (by ``ts_col`` then id-as-string — string order deliberately, the
+    order Q77's oracle replays) claims the bucket; every other member
+    whose FULL minhash signature agrees with the claimant's on at least
+    ``min_hash_agreement`` of the ``num_hashes`` families (the MinHash
+    estimate of Jaccard similarity) is marked a duplicate of it.  A doc flagged in
     several bands resolves ``dup_of`` to the string-min claimant.
 
     Versus ``minhash_lsh_candidates`` + exact verify: candidate pairs
     compare all bucket members pairwise and need a second look at the
     documents; the claimant form compares each member against ONE
-    representative using only the signatures already in hand — state
-    bounded by one signature per bucket, which is what makes the
-    streaming twin possible at all.
+    representative using only the signatures already in hand.
 
     Returns the input rows plus ``dup_of`` (string claimant id, NULL
     for survivors/claimants).  Plan: signature kernel (shuffle-free)

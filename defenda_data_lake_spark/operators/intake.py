@@ -6,9 +6,10 @@ lambdas/s3_to_firehose.py:38-126, SURVEY.md A4-A10):
 
 * gzip handling — Spark's text source decompresses ``.gz`` by codec
   extension natively (A5);
-* concatenated-JSON splitting — brace-count scan, the one genuinely
-  custom reader (A6, reference utils/helpers.py:14-33); fresh
-  implementation here, hardened to ignore braces inside strings;
+* concatenated-JSON splitting (A6, reference utils/helpers.py:14-33) —
+  where the reference's brace count keeps only ``{...}`` blocks, this
+  reads successive top-level values of any type and passes text that
+  does not decode on raw, so every value lands or is quarantined;
 * CloudTrail ``Records`` unroll, top-level-list unroll, bare-dict wrap
   (A7-A9);
 * source tagging by filename (A10, reference s3_to_firehose.py:65-69).
@@ -26,7 +27,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Iterable, Iterator
+from typing import Any, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -45,17 +46,23 @@ def is_cloudtrail(filename: str) -> bool:
     return bool(_CLOUDTRAIL_RE.search(filename or ""))
 
 
-def split_concatenated_json(text: str) -> Iterator[str]:
-    """Yield each top-level ``{...}`` block from a text blob that may
-    hold multiple JSON objects with no separators (reference
-    utils/helpers.py:14-33).  Unlike the reference's bare brace count,
-    braces inside JSON strings are ignored, and an unterminated last
-    block is yielded too (it fails to parse, and is quarantined)."""
+# skipped between values: whitespace, and the byte-order mark a file may start with
+_WHITESPACE = re.compile(r"[\s\ufeff]*")
+_DECODER = json.JSONDecoder()
+
+# The value ``split_concatenated_json`` pairs with text that does not decode.
+UNPARSEABLE = object()
+
+
+def _block_end(text: str, start: int) -> int:
+    """Index just past the ``}`` that closes the ``{`` at ``start``,
+    ignoring braces inside JSON strings; ``len(text)`` when the block
+    never closes."""
     depth = 0
-    start = -1
     in_string = False
     escaped = False
-    for i, ch in enumerate(text):
+    for i in range(start, len(text)):
+        ch = text[i]
         if in_string:
             if escaped:
                 escaped = False
@@ -63,42 +70,60 @@ def split_concatenated_json(text: str) -> Iterator[str]:
                 escaped = True
             elif ch == '"':
                 in_string = False
-            continue
-        if ch == '"':
+        elif ch == '"':
             in_string = True
         elif ch == "{":
-            if depth == 0:
-                start = i
             depth += 1
         elif ch == "}":
-            if depth > 0:
-                depth -= 1
-                if depth == 0:
-                    yield text[start : i + 1]
-    if depth > 0:
-        yield text[start:]
+            depth -= 1
+            if depth == 0:
+                return i + 1
+    return len(text)
+
+
+def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
+    """Yield ``(slice, value)`` for each top-level JSON value of a text
+    blob that may hold several with or without whitespace between them
+    (reference utils/helpers.py:14-33, which keeps ``{...}`` blocks
+    only).  ``slice`` is the exact text of the value.  Text that does
+    not decode comes as its own slice paired with ``UNPARSEABLE``: a
+    malformed ``{...}`` block up to its closing brace (or the end, when
+    it never closes), any other text up to the next ``{``.  Every
+    character but the whitespace between values is in exactly one
+    slice."""
+    pos = _WHITESPACE.match(text).end()
+    while pos < len(text):
+        try:
+            value, end = _DECODER.raw_decode(text, pos)
+        # RecursionError: nesting deeper than the C scanner allows
+        except (json.JSONDecodeError, RecursionError):
+            value = UNPARSEABLE
+            if text[pos] == "{":
+                end = _block_end(text, pos)
+            else:
+                end = text.find("{", pos + 1)
+                if end == -1:
+                    end = len(text)
+        yield text[pos:end], value
+        pos = _WHITESPACE.match(text, end).end()
 
 
 def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:
     """Turn one raw file blob into ``(event_json, source)`` pairs with
     the reference's parse/unroll/tag semantics
-    (reference s3_to_firehose.py:100-126).  A blob or concatenated block
-    that does not parse is yielded as-is, and a value that parses but is
-    not an object (a bare ``42``, a scalar in a list or in ``Records``)
-    is yielded as its JSON text, so the pipeline quarantines either as
-    ``ProcessingFailed`` with its payload instead of losing it — as the
-    NDJSON path does."""
+    (reference s3_to_firehose.py:100-126).  Text that does not parse
+    is yielded as-is (before the parsed values), and a value that
+    parses but is not an object (a bare ``42``, a scalar in a list or
+    in ``Records``) is yielded as its JSON text, so the pipeline
+    quarantines either as ``ProcessingFailed`` with its payload instead
+    of losing it — as the NDJSON path does."""
     source = "cloudtrail" if is_cloudtrail(filename) else DEFAULT_SOURCE
-    try:
-        chunks = [json.loads(blob)]
-    except json.JSONDecodeError:
-        chunks = []
-        blocks = list(split_concatenated_json(blob))
-        for block in blocks or ([blob] if blob.strip() else []):
-            try:
-                chunks.append(json.loads(block))
-            except json.JSONDecodeError:
-                yield block, source
+    chunks = []
+    for text, value in split_concatenated_json(blob):
+        if value is UNPARSEABLE:
+            yield text, source
+        else:
+            chunks.append(value)
     for parsed in chunks:
         if isinstance(parsed, dict) and isinstance(parsed.get("Records"), list):
             records = parsed["Records"]

@@ -32,7 +32,7 @@ from __future__ import annotations
 import functools
 import json
 import os
-from typing import Any, Callable, Iterable, Iterator, Sequence
+from typing import Any, Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -414,7 +414,6 @@ STATUS_DROPPED = "Dropped"
 
 def _make_normalizer(
     plugin_factory: Callable[[], list[Plugin]],
-    passthrough: Sequence[str] = (),
 ) -> Callable[[Iterable[pd.DataFrame]], Iterator[pd.DataFrame]]:
     def normalize_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         plugins = order_plugins(plugin_factory())  # once per task, reused across batches
@@ -425,11 +424,6 @@ def _make_normalizer(
             # builds the frame from ready columns with no per-row dict
             # alignment pass (~15% off the kernel at 100k events)
             data: dict[str, list] = {c: [] for c in columns}
-            # passthrough columns ride verbatim (1 input row -> 1
-            # output row here; multi-event unroll happens at intake,
-            # not in this kernel), appended AFTER the frame so they
-            # can't collide with shell column names
-            pt_data = {c: batch[c] for c in passthrough}
             shell_appends = [(c, data[c].append) for c in shell_cols]
             st_append = data["_status"].append
             raw_append = data["_raw"].append
@@ -465,13 +459,7 @@ def _make_normalizer(
                     shell = _shell_row(result)
                     for c, append in shell_appends:
                         append(shell[c])
-            frame = pd.DataFrame(data, columns=columns)
-            for c in passthrough:
-                # positional copy (.to_numpy()), not Series assignment:
-                # the incoming batch's index need not be the default
-                # RangeIndex and index alignment would scramble rows
-                frame[c] = pt_data[c].to_numpy()
-            yield frame
+            yield pd.DataFrame(data, columns=columns)
 
     return normalize_batches
 
@@ -481,7 +469,6 @@ def normalize_df(
     raw_col: str = "raw",
     source_col: str | None = None,
     plugin_factory: Callable[[], list[Plugin]] = default_plugins,
-    passthrough: Sequence[str] = (),
 ) -> DataFrame:
     """Run the plugin pipeline over a DataFrame of raw JSON event
     strings.  Returns the shell columns plus ``_status``/``_raw``
@@ -489,28 +476,12 @@ def normalize_df(
     quarantine stream, reference processor.py:59-76).
 
     ``source_col``, when given, stamps each event's ``source`` before
-    the pipeline runs (the reference's intake tagging).
-
-    ``passthrough`` columns ride through the kernel verbatim, their
-    input ``StructField``s copied into the output schema unchanged —
-    METADATA INCLUDED, which is what lets a watermark-tagged arrival
-    column survive this ``mapInPandas`` (Spark's watermark tag lives
-    in attribute metadata; the raw-level exact pre-drop in
-    ``start_deduped_ingest`` depends on this, same pattern as
-    ``minhash_signatures``'s passthrough)."""
-    reserved = {f.name for f in NORMALIZED_SCHEMA.fields}
-    clash = [c for c in passthrough if c in reserved]
-    if clash:
-        raise ValueError(f"passthrough columns shadow output schema: {clash}")
+    the pipeline runs (the reference's intake tagging)."""
     cols = [F.col(raw_col).alias("raw")]
     if source_col is not None:
         cols.append(F.col(source_col).alias("source"))
-    cols += [F.col(c) for c in passthrough]
-    schema = T.StructType(
-        list(NORMALIZED_SCHEMA.fields) + [df.schema[c] for c in passthrough]
-    )
     return df.select(*cols).mapInPandas(
-        _make_normalizer(plugin_factory, passthrough), schema=schema
+        _make_normalizer(plugin_factory), schema=NORMALIZED_SCHEMA
     )
 
 

@@ -247,10 +247,10 @@ class Timestamps(Plugin):
 
     Semantics preserved exactly: candidate fields are searched in list
     order against the full recursive key set; all occurrences of a field
-    are collected (``find_keys``); the ``time`` field zips with ``date``
-    when both exist; the first *parseable* value wins and stops the
-    whole search; unparseable values are skipped silently; the plugin
-    always stamps ``details._utcprocessedtimestamp``."""
+    are collected (the reference's ``find_keys``); the ``time`` field
+    zips with ``date`` when both exist; the first *parseable* value wins
+    and stops the whole search; unparseable values are skipped silently;
+    the plugin always stamps ``details._utcprocessedtimestamp``."""
 
     name = "timestamps"
     registration = ["*"]
@@ -319,8 +319,8 @@ class IpAddresses(Plugin):
 
     @staticmethod
     def _put(event: dict, metadata: dict, key: str, value) -> None:
-        """``set_by_path(event, "details." + key, value)``, keeping the key
-        index exact."""
+        """Set ``event["details"][key] = value``, creating ``details``
+        when it is not a dict, and keep the key index exact."""
         details = event.get("details")
         if not isinstance(details, dict):
             metadata.pop(KEY_INDEX, None)  # the old details goes

@@ -72,14 +72,11 @@ FROM capped a JOIN capped b
 
 
 def q77_bucket_dedupe(spark, sf_dir):
-    """Claimant-based near-dedup (``dedup.minhash_bucket_dedupe``, the
-    batch twin of the streaming ``near_dedupe_stream`` — the parity
-    test in test_streaming_dedup.py pins them together for event-time-
-    ordered arrival): per LSH
-    bucket the string-min doc claims it, other members whose full
+    """Claimant-based near-dedup (``dedup.minhash_bucket_dedupe``): per
+    LSH bucket the string-min doc claims it, other members whose full
     minhash signature agrees on ≥ half the families are marked
-    ``dup_of`` that claimant.  State-bounded verification (one
-    signature per bucket) — the form a continuous ingest can run."""
+    ``dup_of`` that claimant.  State-bounded verification: one
+    signature per bucket."""
     docs = _t(spark, sf_dir, "documents")
     out = D.minhash_bucket_dedupe(docs, min_hash_agreement=0.5)
     return out.select("doc_id", "dup_of")

@@ -92,8 +92,3 @@ def to_utc(suspected: Any) -> datetime:
         obj = obj.replace(tzinfo=_local_tz())
     return obj.astimezone(timezone.utc)
 
-
-def iso_utc(dt: datetime) -> str:
-    """Format an aware datetime the way the reference stores
-    ``utctimestamp`` (ISO-8601 with ``+00:00`` offset)."""
-    return dt.astimezone(timezone.utc).isoformat()

@@ -60,19 +60,6 @@ def deep_merge(base: dict, override: dict) -> dict:
     return out
 
 
-def find_keys(node: Any, key: str) -> Iterator[Any]:
-    """Yield every value stored under ``key`` at any depth, descending
-    through dicts and lists (reference utils/dict_helpers.py:19-31)."""
-    if isinstance(node, dict):
-        for k, v in node.items():
-            if k == key:
-                yield v
-            yield from find_keys(v, key)
-    elif isinstance(node, list):
-        for item in node:
-            yield from find_keys(item, key)
-
-
 def enum_keys(node: Any) -> Iterator[str]:
     """Yield every dict key at every depth (reference
     utils/dict_helpers.py:49-60).  Iterative: every consumer builds a
@@ -99,11 +86,12 @@ def collect_fields(
     """One recursive walk returning (every key at every depth, values
     of the ``wanted`` fields in document order).
 
-    Fuses ``set(enum_keys(event))`` + one ``find_keys`` call per
-    candidate field — the pattern both the timestamp and IP plugins
-    need — into a single traversal.  Value order per field is exactly
-    ``find_keys`` order (match yielded at its key, then descent), so
-    first-match-wins semantics are unchanged."""
+    Fuses ``set(enum_keys(event))`` + one keyed search per candidate
+    field (the reference's ``find_keys``, utils/dict_helpers.py:19-31)
+    — the pattern both the timestamp and IP plugins need — into a
+    single traversal.  Value order per field is exactly that search's
+    order (match yielded at its key, then descent), so first-match-wins
+    semantics are unchanged."""
     keys: set = set()
     hits: dict[str, list] = {}
     keys_add = keys.add
@@ -154,19 +142,6 @@ def collect_fields(
     return keys, hits
 
 
-def enum_values(node: Any) -> Iterator[Any]:
-    """Yield every leaf value at every depth (reference
-    utils/dict_helpers.py:34-46)."""
-    if isinstance(node, dict):
-        for v in node.values():
-            yield from enum_values(v)
-    elif isinstance(node, list):
-        for item in node:
-            yield from enum_values(item)
-    else:
-        yield node
-
-
 def get_by_path(node: Any, dotted: str, default: Any = None) -> Any:
     """Dotted-path get, e.g. ``get_by_path(e, "details.actor.email")``
     (reference utils/dict_helpers.py:87-96, utils/dotdict.py:13-35).
@@ -184,19 +159,6 @@ def get_by_path(node: Any, dotted: str, default: Any = None) -> Any:
     return cur
 
 
-def set_by_path(node: dict, dotted: str, value: Any) -> None:
-    """Dotted-path set, creating intermediate dicts."""
-    segs = dotted.split(".")
-    cur = node
-    for seg in segs[:-1]:
-        nxt = cur.get(seg)
-        if not isinstance(nxt, dict):
-            nxt = {}
-            cur[seg] = nxt
-        cur = nxt
-    cur[segs[-1]] = value
-
-
 def dict_match(criteria: dict, candidate: Any) -> bool:
     """True when every (k, v) in ``criteria`` appears with equal value in
     ``candidate`` (reference utils/dict_helpers.py:69-76)."""
@@ -204,8 +166,3 @@ def dict_match(criteria: dict, candidate: Any) -> bool:
         return False
     return all(k in candidate and candidate[k] == v for k, v in criteria.items())
 
-
-def sub_dict(source: dict, keys: list[str], default: Any = None) -> dict:
-    """Projection of ``keys`` from ``source`` with a default (reference
-    utils/dict_helpers.py:63-66)."""
-    return {k: source.get(k, default) for k in keys}

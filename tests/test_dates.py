@@ -5,7 +5,7 @@ from datetime import datetime, timezone
 
 import pytest
 
-from defenda_data_lake_spark.utils.dates import iso_utc, to_utc
+from defenda_data_lake_spark.utils.dates import to_utc
 
 
 def test_iso_with_z_suffix():
@@ -58,13 +58,6 @@ def test_hopeless_input_raises():
         to_utc("nada")
     with pytest.raises(Exception):
         to_utc(None)
-
-
-def test_iso_utc_format():
-    assert (
-        iso_utc(datetime(2019, 9, 4, 17, 54, 59, tzinfo=timezone.utc))
-        == "2019-09-04T17:54:59+00:00"
-    )
 
 
 def test_naive_timestamps_follow_tzset(monkeypatch):

@@ -80,37 +80,3 @@ def test_decode_firehose_invalid_utf8_quarantined(spark):
     out = normalize_df(decode_firehose_records(df), raw_col="raw").collect()
     statuses = sorted(r["_status"] for r in out)
     assert statuses == [STATUS_OK, "ProcessingFailed"]
-
-
-def test_normalize_df_passthrough_preserves_values_and_metadata(spark):
-    """normalize_df passthrough (round 12): columns ride the kernel
-    verbatim — values aligned per input row even for failed records —
-    and the input StructField's METADATA survives into the output
-    schema (what lets a watermark-tagged arrival column reach the
-    stateful dedup stage through this mapInPandas)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    rows = [
-        (_json.dumps({"summary": "alpha", "utctimestamp": "2026-01-01T00:01:00+00:00"}), 11),
-        ("not json at all", 22),
-        (_json.dumps({"summary": "beta", "utctimestamp": "2026-01-01T00:02:00+00:00"}), 33),
-    ]
-    df = spark.createDataFrame(rows, "raw string, tag long").withMetadata(
-        "tag", {"probe": "kept"}
-    )
-    out = normalize_df(df, raw_col="raw", passthrough=["tag"])
-    assert out.schema["tag"].metadata.get("probe") == "kept"
-    got = {r["_raw"]: (r["_status"], r["tag"]) for r in out.collect()}
-    assert got[rows[0][0]] == (STATUS_OK, 11)
-    assert got["not json at all"] == ("ProcessingFailed", 22)
-    assert got[rows[2][0]] == (STATUS_OK, 33)
-
-
-def test_normalize_df_passthrough_rejects_schema_shadow(spark):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([("{}", "x")], "raw string, _status string")
-    with _pytest.raises(ValueError, match="shadow"):
-        normalize_df(df, raw_col="raw", passthrough=["_status"])

@@ -5,12 +5,8 @@ from defenda_data_lake_spark.utils.json_tree import (
     deep_merge,
     dict_match,
     enum_keys,
-    enum_values,
-    find_keys,
     get_by_path,
     lowercase_keys,
-    set_by_path,
-    sub_dict,
 )
 
 
@@ -35,15 +31,9 @@ def test_deep_merge_right_wins_on_leaves():
     assert base["b"] == {"x": 1, "y": 2}
 
 
-def test_find_keys_through_lists():
-    tree = {"a": {"ip": "1.1.1.1"}, "b": [{"ip": "2.2.2.2"}, {"c": {"ip": "3.3.3.3"}}]}
-    assert list(find_keys(tree, "ip")) == ["1.1.1.1", "2.2.2.2", "3.3.3.3"]
-
-
 def test_enum_keys_and_values():
     tree = {"a": 1, "b": {"c": [{"d": 2}]}}
     assert sorted(enum_keys(tree)) == ["a", "b", "c", "d"]
-    assert sorted(str(v) for v in enum_values(tree)) == ["1", "2"]
 
 
 def test_get_by_path_with_list_index():
@@ -52,12 +42,6 @@ def test_get_by_path_with_list_index():
     assert get_by_path(tree, "details.events.0.name") == "login_success"
     assert get_by_path(tree, "details.missing", "dflt") == "dflt"
     assert get_by_path(tree, "details.events.5.name") is None
-
-
-def test_set_by_path_creates_intermediates():
-    tree = {}
-    set_by_path(tree, "details.sourceipaddress", "1.2.3.4")
-    assert tree == {"details": {"sourceipaddress": "1.2.3.4"}}
 
 
 def test_dict_match_subset_equality():
@@ -70,7 +54,3 @@ def test_dict_match_subset_equality():
         {"name": "is_suspicious", "boolvalue": False},
     )
     assert not dict_match({"a": 1}, "not-a-dict")
-
-
-def test_sub_dict_projection_with_default():
-    assert sub_dict({"a": 1, "b": 2}, ["a", "c"], default=0) == {"a": 1, "c": 0}

@@ -10,6 +10,7 @@ import pytest
 
 from defenda_data_lake_spark.lake import EVENTS_TABLE, create_events_table, ingest_batch
 from defenda_data_lake_spark.operators.intake import (
+    UNPARSEABLE,
     extract_events,
     is_cloudtrail,
     split_concatenated_json,
@@ -186,17 +187,28 @@ def test_is_cloudtrail():
 def test_split_concatenated_json():
     blob = '{"a": 1}{"b": {"c": 2}} \n {"d": "te}xt"}'
     assert list(split_concatenated_json(blob)) == [
-        '{"a": 1}',
-        '{"b": {"c": 2}}',
-        '{"d": "te}xt"}',
+        ('{"a": 1}', {"a": 1}),
+        ('{"b": {"c": 2}}', {"b": {"c": 2}}),
+        ('{"d": "te}xt"}', {"d": "te}xt"}),
+    ]
+    # a malformed block ends at its own closing brace, not one in a string
+    blob = '{"d": "te}xt",}{"a": 1}'
+    assert list(split_concatenated_json(blob)) == [
+        ('{"d": "te}xt",}', UNPARSEABLE),
+        ('{"a": 1}', {"a": 1}),
     ]
 
 
 def test_split_handles_escaped_quotes():
     blob = '{"a": "he said \\"hi\\" {ok}"}{"b": 2}'
     assert list(split_concatenated_json(blob)) == [
-        '{"a": "he said \\"hi\\" {ok}"}',
-        '{"b": 2}',
+        ('{"a": "he said \\"hi\\" {ok}"}', {"a": 'he said "hi" {ok}'}),
+        ('{"b": 2}', {"b": 2}),
+    ]
+    blob = '{"a": "he said \\"hi\\" {ok}",}{"b": 2}'
+    assert list(split_concatenated_json(blob)) == [
+        ('{"a": "he said \\"hi\\" {ok}",}', UNPARSEABLE),
+        ('{"b": 2}', {"b": 2}),
     ]
 
 
@@ -224,6 +236,33 @@ def test_extract_events_list_and_dict():
         ('{"b": 2, "source": "s3json"}', "s3json"),
     ]
     assert list(extract_events(" \n", "x.json")) == []
+    assert list(extract_events('\ufeff{"a": 1}', "x.json")) == [
+        ('{"a": 1, "source": "s3json"}', "s3json")
+    ]
+    # values between and around objects are kept, whatever their type
+    assert list(extract_events('{"a": 1}\n42\n"x"\n', "x.json")) == [
+        ('{"a": 1, "source": "s3json"}', "s3json"),
+        ("42", "s3json"),
+        ('"x"', "s3json"),
+    ]
+    assert list(extract_events('{"a": 1} [1,2] {"b": 2}', "x.json")) == [
+        ('{"a": 1, "source": "s3json"}', "s3json"),
+        ("1", "s3json"),
+        ("2", "s3json"),
+        ('{"b": 2, "source": "s3json"}', "s3json"),
+    ]
+    # text that does not decode runs to the next "{", exactly as landed
+    assert list(extract_events('{"a": 1} garbage {"b": 2}', "x.json")) == [
+        ("garbage ", "s3json"),
+        ('{"a": 1, "source": "s3json"}', "s3json"),
+        ('{"b": 2, "source": "s3json"}', "s3json"),
+    ]
+    # nesting too deep for the decoder is quarantined raw, not raised
+    deep = "[" * 100_000
+    assert list(extract_events(deep + ' {"b": 2}', "x.json")) == [
+        (deep + " ", "s3json"),
+        ('{"b": 2, "source": "s3json"}', "s3json"),
+    ]
 
 
 def test_verbatim_partition_ddl_registers_external_hour(lake):

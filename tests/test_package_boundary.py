@@ -58,7 +58,6 @@ NO_CALLER_YET = {
     "lake_maintenance.expire_partitions": ENTRY_POINT,
     "operators.intake.decode_firehose_records": ENTRY_POINT,
     "operators.pipeline.plugin_dir_factory": ENTRY_POINT,
-    "streaming.ingest.start_deduped_ingest": ENTRY_POINT,
     "lake_maintenance.compact_partition": WAITS_FOR_ITEM_1,
     "operators.bpe.full_token_accounting_py": REFERENCE,
     "operators.classify.nb_calibration": REFERENCE,
@@ -80,14 +79,6 @@ NO_CALLER_YET = {
     "operators.similarity.ivf_probe": NEXT_CUT,
     "operators.sketches.hash_sample_estimate": NEXT_CUT,
     "operators.sketches.hash_sample_merge": NEXT_CUT,
-    "streaming.dedup.content_dedupe_stream": NEXT_CUT,
-    "streaming.dedup.seed_near_dedup_state": NEXT_CUT,
-    "streaming.dedup.watermark_drop_counts": NEXT_CUT,
-    "utils.dates.iso_utc": NEXT_CUT,
-    "utils.json_tree.enum_values": NEXT_CUT,
-    "utils.json_tree.find_keys": NEXT_CUT,
-    "utils.json_tree.set_by_path": NEXT_CUT,
-    "utils.json_tree.sub_dict": NEXT_CUT,
 }
 
 

@@ -58,8 +58,83 @@ def test_deep_merge_override_wins(base, override):
 @settings(max_examples=100, deadline=None)
 def test_split_concatenated_json_roundtrip(objs):
     blob = "".join(json.dumps(o) for o in objs)
-    parsed = [json.loads(b) for b in split_concatenated_json(blob)]
-    assert parsed == objs
+    pairs = list(split_concatenated_json(blob))
+    assert [value for _, value in pairs] == objs
+    assert [json.loads(text) for text, _ in pairs] == objs
+
+
+# Blob tokens for the extract_events accounting property.  Numbers and
+# literals need whitespace before the next value ("1" "2" reads "12"),
+# objects, arrays and strings do not.  Garbage starts with a character
+# no JSON value starts with and holds no "{" or whitespace; text that
+# does not decode runs to the next "{", so garbage is drawn only before
+# an object or at the end of the blob (test_lake_e2e pins what it
+# swallows otherwise).
+_GARBAGE_HEAD = "abcdeghijklmopqrsuvwxyz!#$%&()*+,./:;<=>?@\\^_`|~]}"
+_GARBAGE_TAIL = "".join(
+    c for c in string.printable if c != "{" and c not in string.whitespace
+)
+garbage = st.builds(
+    lambda head, tail: head + tail,
+    st.sampled_from(_GARBAGE_HEAD),
+    st.text(_GARBAGE_TAIL, max_size=8),
+)
+top_objects = st.dictionaries(
+    keys.filter(lambda k: k != "Records"), json_values, max_size=4
+)
+values = st.one_of(
+    top_objects,
+    st.lists(json_values, max_size=4),
+    scalars,
+    st.floats(allow_nan=False, allow_infinity=False),
+)
+separators = st.text(" \t\n\r", max_size=3)
+segments = st.one_of(
+    st.tuples(values).map(lambda t: [("value", t[0])]),
+    st.tuples(garbage, top_objects).map(
+        lambda t: [("garbage", t[0]), ("value", t[1])]
+    ),
+)
+
+
+@given(
+    st.lists(segments, max_size=6).map(lambda segs: [t for s in segs for t in s]),
+    st.one_of(st.none(), garbage),
+    st.data(),
+)
+@settings(max_examples=300, deadline=None)
+def test_extract_events_accounts_for_every_value(tokens, tail, data):
+    """Every value of a concatenated blob comes out exactly once: an
+    object (or an object in a list) as an event, any other value as its
+    JSON text, and garbage as its exact text — raw text first, then the
+    values in blob order."""
+    from defenda_data_lake_spark.operators.intake import extract_events
+
+    if tail is not None:
+        tokens = tokens + [("garbage", tail)]
+    filename = data.draw(st.sampled_from(["x.json", "7_cloudtrail_x.json.gz"]))
+    source = "cloudtrail" if filename.endswith(".gz") else "s3json"
+    blob = data.draw(separators)
+    raws, records = [], []
+    for i, (kind, token) in enumerate(tokens):
+        if kind == "garbage":
+            text = token
+        else:
+            text = json.dumps(token, indent=data.draw(st.sampled_from([None, 1])))
+            records += token if isinstance(token, list) else [token]
+        nxt = tokens[i + 1][1] if i + 1 < len(tokens) else None
+        delimited = isinstance(nxt, dict) or isinstance(token, (dict, list, str))
+        sep = data.draw(separators if delimited else st.text(" \n", min_size=1))
+        blob += text + sep
+        if kind == "garbage":
+            raws.append(text + sep)
+
+    out = list(extract_events(blob, filename))
+    assert all(src == source for _, src in out)
+    assert [text for text, _ in out[: len(raws)]] == raws
+    got = [json.loads(text) for text, _ in out[len(raws) :]]
+    want = [dict(r, source=source) if isinstance(r, dict) else r for r in records]
+    assert got == want
 
 
 @given(st.integers(1, 2**31))

@@ -45,175 +45,3 @@ def test_streaming_ingest(spark, tmp_path):
         query.stop()
         spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
 
-
-def test_streaming_deduped_ingest(spark, tmp_path):
-    """End-to-end: normalize -> in-stream MinHash near-dedup ->
-    three-way routing (events table / Dropped near-dup / failed)."""
-    from defenda_data_lake_spark.streaming.ingest import start_deduped_ingest
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
-
-    base = "suspicious login burst from external address range detected"
-    near = base + " again"
-    query = start_deduped_ingest(
-        spark,
-        landing_path=str(landing),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        quarantine_path=str(tmp_path / "quarantine"),
-        trigger_seconds=1,
-    )
-    try:
-        with open(landing / "batch1.ndjson", "w") as f:
-            f.write(json.dumps({"eventid": "aaa", "summary": base,
-                                "utctimestamp": "2026-01-01T00:01:00+00:00"}) + "\n")
-            f.write(json.dumps({"eventid": "zzz", "summary": "completely unrelated maintenance notice",
-                                "utctimestamp": "2026-01-01T00:02:00+00:00"}) + "\n")
-            f.write("not json at all\n")
-        query.processAllAvailable()
-        assert spark.table(EVENTS_TABLE).count() == 2
-
-        # a near-re-post in a LATER micro-batch, inside the horizon:
-        # dropped via state, not table lookback
-        with open(landing / "batch2.ndjson", "w") as f:
-            f.write(json.dumps({"eventid": "bbb", "summary": near,
-                                "utctimestamp": "2026-01-01T00:05:00+00:00"}) + "\n")
-        query.processAllAvailable()
-
-        table = spark.table(EVENTS_TABLE)
-        assert table.count() == 2
-        # eventids are MINTED by the pipeline (reference quirk: incoming
-        # eventid demotes into details), so identify rows by summary
-        summaries = {r["summary"] for r in table.select("summary").collect()}
-        assert summaries == {base, "completely unrelated maintenance notice"}
-
-        q = spark.read.json(str(tmp_path / "quarantine"))
-        near_dups = q.filter(q["_status"] == "Dropped").collect()
-        assert len(near_dups) == 1
-        # dup_of points at the surviving claimant's minted eventid
-        claimant_id = table.filter(table["summary"] == base).first()["eventid"]
-        assert near_dups[0]["dup_of"] == claimant_id
-        assert q.filter(q["_status"] == "ProcessingFailed").count() == 1
-    finally:
-        query.stop()
-        spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
-
-
-def test_deduped_ingest_default_claimant_resend_lands_once(spark, tmp_path):
-    """VERDICT r11 item 1's done criterion, ON THE DEFAULT PATH (no
-    flag): a byte-identical re-send of a bucket claimant in a later
-    micro-batch lands exactly ONCE in the events table, and the
-    re-send goes to the quarantine flagged ``dup_of`` — the
-    quarantine-preserving resolution.  Two mechanisms compose here:
-    the pipeline MINTS eventids (uuid4), so the re-send carries a
-    fresh id and is judged by signature agreement against the stored
-    claimant; and for payload-carried stable ids the stateful
-    kernel's claimant-re-send guard (streaming/dedup.py) flags
-    ``doc_id == first_id`` rows once the bucket pre-exists — the
-    operator-level test pins that arm."""
-    from defenda_data_lake_spark.streaming.ingest import start_deduped_ingest
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
-
-    claim = json.dumps({
-        "eventid": "orig-1",
-        "summary": "suspicious login burst from external range detected",
-        "utctimestamp": "2026-01-01T00:01:00+00:00",
-    })
-    query = start_deduped_ingest(
-        spark,
-        landing_path=str(landing),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        quarantine_path=str(tmp_path / "quarantine"),
-        trigger_seconds=1,
-    )
-    try:
-        with open(landing / "batch1.ndjson", "w") as f:
-            f.write(claim + "\n")
-        query.processAllAvailable()
-        assert spark.table(EVENTS_TABLE).count() == 1
-
-        with open(landing / "batch2.ndjson", "w") as f:
-            f.write(claim + "\n")  # byte-identical claimant re-send
-        query.processAllAvailable()
-
-        table = spark.table(EVENTS_TABLE)
-        assert table.count() == 1  # landed exactly once
-        claimant_id = table.first()["eventid"]
-        q = spark.read.json(str(tmp_path / "quarantine"))
-        dropped = q.filter(q["_status"] == "Dropped").collect()
-        assert len(dropped) == 1  # the re-send, WITH its audit record
-        assert dropped[0]["dup_of"] == claimant_id
-    finally:
-        query.stop()
-        spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
-
-
-def test_deduped_ingest_raw_predrop_covers_bypass_rows(spark, tmp_path):
-    """exact_predrop=True is a RAW-LINE drop before normalization
-    (round 12): byte-identical re-sends — including re-sends of
-    BYPASS rows (unshingleable text), which the default path cannot
-    catch because they survive the dedup stage unconditionally — are
-    suppressed in pure JVM with no quarantine record (the documented
-    contract change), while distinct events land exactly once."""
-    from defenda_data_lake_spark.streaming.ingest import start_deduped_ingest
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
-
-    claim = json.dumps({
-        "eventid": "orig-1",
-        "summary": "suspicious login burst from external range detected",
-        "utctimestamp": "2026-01-01T00:01:00+00:00",
-    })
-    bypass = json.dumps({
-        "eventid": "byp-1",
-        "summary": "\t \n",  # unshingleable: rides the band=-1 bypass
-        "utctimestamp": "2026-01-01T00:02:00+00:00",
-    })
-    query = start_deduped_ingest(
-        spark,
-        landing_path=str(landing),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        quarantine_path=str(tmp_path / "quarantine"),
-        trigger_seconds=1,
-        exact_predrop=True,
-    )
-    try:
-        with open(landing / "batch1.ndjson", "w") as f:
-            f.write(claim + "\n")
-            f.write(bypass + "\n")
-        query.processAllAvailable()
-        assert spark.table(EVENTS_TABLE).count() == 2
-
-        with open(landing / "batch2.ndjson", "w") as f:
-            f.write(claim + "\n")   # byte-identical claimant re-send
-            f.write(bypass + "\n")  # byte-identical BYPASS re-send
-            f.write(json.dumps({
-                "summary": "completely unrelated maintenance notice",
-                "utctimestamp": "2026-01-01T00:03:00+00:00",
-            }) + "\n")
-        query.processAllAvailable()
-
-        table = spark.table(EVENTS_TABLE)
-        assert table.count() == 3  # both re-sends suppressed, new row in
-        summaries = sorted(r["summary"] for r in table.select("summary").collect())
-        assert summaries == [
-            "\t \n",
-            "completely unrelated maintenance notice",
-            "suspicious login burst from external range detected",
-        ]
-        # suppressed re-sends leave NO quarantine record (the
-        # contract); the sink may have written empty part files, whose
-        # inferred schema has no columns at all
-        q = spark.read.json(str(tmp_path / "quarantine"))
-        assert "_status" not in q.columns or (
-            q.filter(q["_status"] == "Dropped").count() == 0
-        )
-    finally:
-        query.stop()
-        spark.sql("DROP TABLE IF EXISTS defenda_data_lake.events")
