@@ -186,39 +186,28 @@ PROFILE_FIELDS = (
 )
 
 
-def account_activity_profiles(
-    events: DataFrame, use_variant: bool = True
-) -> DataFrame:
+def account_activity_profiles(events: DataFrame) -> DataFrame:
     """Wide multi-field rule: per-user activity profile built from many
     ``details`` extractions at once (the detection shape that touches
     the most JSON paths per event).
 
-    ``use_variant=True`` parses ``details`` ONCE into a VARIANT and
-    extracts each path from the binary encoding; ``False`` runs one
-    ``get_json_object`` per field, re-parsing the JSON string per
-    extraction.  Same output either way (asserted in tests) — the
-    variant path is the scale choice: at 8 paths over a 100 k-row
-    nested corpus the extraction stage alone measures 2.3x faster
-    (0.91 s vs 2.10 s), 1.3x end-to-end once the rule's aggregation
-    is added; the gap widens with path count and document size
-    (SCALING.md §variant)."""
-    if use_variant:
-        from defenda_data_lake_spark.functions.variant import (
-            variant_get_string,
-            with_variant_details,
-        )
+    ``details`` is parsed ONCE into a VARIANT and each path is
+    extracted from the binary encoding, instead of one
+    ``get_json_object`` per field re-parsing the JSON string (the rows
+    are the same; a test pins them against that form).  At 8 paths
+    over a 100 k-row nested corpus the extraction stage alone measured
+    2.3x faster (0.91 s vs 2.10 s), 1.3x end-to-end once the rule's
+    aggregation is added; the gap widens with path count and document
+    size (SCALING.md §variant)."""
+    from defenda_data_lake_spark.functions.variant import (
+        variant_get_string,
+        with_variant_details,
+    )
 
-        src = with_variant_details(events)
-        cols = [
-            variant_get_string("details_v", f"$.{f}").alias(f)
-            for f in PROFILE_FIELDS
-        ]
-    else:
-        src = events
-        cols = [
-            F.get_json_object("details", f"$.{f}").alias(f)
-            for f in PROFILE_FIELDS
-        ]
+    src = with_variant_details(events)
+    cols = [
+        variant_get_string("details_v", f"$.{f}").alias(f) for f in PROFILE_FIELDS
+    ]
     wide = src.select("source", "category", *cols).filter(
         F.col("user").isNotNull()
     )

@@ -149,27 +149,6 @@ def learn_bpe(
     return merges
 
 
-def learn_bpe_from_counts(
-    wc: DataFrame,
-    n_merges: int = N_MERGES,
-    n_passes: int = N_PASSES,
-    learn_words: int = LEARN_WORDS,
-) -> list[str]:
-    """Learn from an existing :func:`word_counts` DataFrame: the
-    bounded top-``learn_words`` rows come to the driver (TakeOrdered,
-    ≤2000 rows at ANY corpus size) and :func:`learn_bpe` runs locally.
-    ONE definition of the selection/tie-break serves both
-    :func:`learn_bpe_spark` and :func:`tokenizer_refresh` (which
-    reuses a cached ``wc``) — two copies could silently drift the
-    keep-identical invariant the refresh policy depends on."""
-    top = (
-        wc.orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(learn_words)
-        .collect()
-    )
-    return learn_bpe([(r["w"], r["cnt"]) for r in top], n_merges, n_passes)
-
-
 def learn_bpe_spark(
     df: DataFrame,
     text_col: str = "text",
@@ -179,13 +158,16 @@ def learn_bpe_spark(
     max_word_len: int = MAX_WORD_LEN,
 ) -> list[str]:
     """Learn the merge table from a corpus DataFrame: Spark aggregates
-    word counts, then :func:`learn_bpe_from_counts`."""
-    return learn_bpe_from_counts(
-        word_counts(df, text_col, max_word_len),
-        n_merges,
-        n_passes,
-        learn_words,
+    :func:`word_counts`, the bounded top-``learn_words`` rows come to
+    the driver (TakeOrdered, ≤2000 rows at ANY corpus size) and
+    :func:`learn_bpe` runs locally."""
+    top = (
+        word_counts(df, text_col, max_word_len)
+        .orderBy(F.col("cnt").desc(), F.col("w"))
+        .limit(learn_words)
+        .collect()
     )
+    return learn_bpe([(r["w"], r["cnt"]) for r in top], n_merges, n_passes)
 
 
 def char_spaced(col: Column) -> Column:
@@ -526,15 +508,6 @@ def full_token_accounting_py(
     }
 
 
-# ------------------------------------------------------ persistence /
-# drift: the merge table as a versioned artifact.  A production
-# pipeline learns the tokenizer ONCE per corpus snapshot, persists it,
-# and meters every later job against the frozen table; re-learning on
-# a drifted corpus then needs a drift report before the new table is
-# adopted (retokenizing 100 TB is the single most expensive decision a
-# training-data pipeline makes).
-
-
 def merges_to_df(spark: SparkSession, merges: Sequence[str]) -> DataFrame:
     """The merge table as rows ``(rank, pair, token)`` — rank is
     1-based application order.  One partition from the start
@@ -545,59 +518,6 @@ def merges_to_df(spark: SparkSession, merges: Sequence[str]) -> DataFrame:
 
     rows = [(i + 1, p, p.replace(" ", "")) for i, p in enumerate(merges)]
     return bounded_local_df(spark, rows, "rank long, pair string, token string")
-
-
-def save_bpe_model(spark: SparkSession, merges: Sequence[str], path: str) -> None:
-    """Persist the learned merge table as ONE parquet dataset (the
-    table is bounded — ``n_merges`` rows — so a single file; the
-    ``save_nb_model`` precedent).  Application order is carried by the
-    explicit ``rank`` column, never by file order."""
-    merges_to_df(spark, merges).write.mode("overwrite").parquet(path)
-
-
-def load_bpe_model(spark: SparkSession, path: str) -> list[str]:
-    """Reload a persisted merge table in rank order.  A reloaded table
-    tokenizes bit-identically (the pairs are exact strings; tests pin
-    round-trip equality), so learn-once/apply-everywhere is safe."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    ranks = [r["rank"] for r in rows]
-    if ranks != list(range(1, len(ranks) + 1)):
-        raise ValueError(f"corrupt merge table at {path}: ranks {ranks}")
-    return [r["pair"] for r in rows]
-
-
-def bpe_drift(old: Sequence[str], new: Sequence[str]) -> dict:
-    """Drift report between two learned merge tables (both bounded, so
-    this is driver-side pure Python — the CDC-for-vocab check run
-    BEFORE adopting a re-learned tokenizer).
-
-    * ``common_prefix`` — merges agreeing in rank order from rank 1;
-      because BPE merges apply in order, tokenization is guaranteed
-      unchanged only for words whose rewrites use the common prefix.
-    * ``first_divergence`` — 1-based rank of the first disagreement
-      (None when one table is a prefix of the other or they're equal).
-    * ``added`` / ``removed`` — tokens (rank-insensitive) only in the
-      new / only in the old table, sorted.
-    * ``token_jaccard`` — |old ∩ new| / |old ∪ new| over token sets
-      (1.0 for identical sets; both-empty defined as 1.0).
-    * ``drifted`` — True unless the tables are IDENTICAL (same pairs,
-      same order): any difference can change token counts."""
-    old, new = list(old), list(new)
-    k = 0
-    while k < len(old) and k < len(new) and old[k] == new[k]:
-        k += 1
-    diverged = k < len(old) and k < len(new)
-    ot = {p.replace(" ", "") for p in old}
-    nt = {p.replace(" ", "") for p in new}
-    union = ot | nt
-    return {
-        "common_prefix": k,
-        "first_divergence": (k + 1) if diverged else None,
-        "added": sorted(nt - ot),
-        "removed": sorted(ot - nt),
-        "token_jaccard": (len(ot & nt) / len(union)) if union else 1.0,
-        "drifted": old != new,
-    }
 
 
 def fertility_by_group(
@@ -671,135 +591,3 @@ def learned_merges_cached(
         merges = learn_bpe_spark(df, text_col, n_merges=n_merges)
         _MERGES_CACHE[key] = merges
     return merges
-
-
-def corpus_fertility(
-    wc: DataFrame,
-    tables: dict[str, Sequence[str]],
-    n_passes: int = N_PASSES,
-) -> dict[str, float | None]:
-    """Corpus-level fertility (BPE tokens per qualifying word
-    instance) under one or more merge tables, from the distinct-word
-    counts ``wc`` (``word_counts`` output) — ONE projection carrying
-    one rewrite chain per table and ONE aggregate, so comparing an old
-    and a candidate tokenizer costs a single distinct-word-sized pass,
-    not a pass per table.  Returns ``{name: fertility}`` with ``None``
-    for a wordless corpus (no defined fertility)."""
-    names = list(tables)
-    proj = wc.select(
-        "cnt",
-        *[
-            token_count_expr(F.col("w"), tables[n], n_passes)
-            .cast("long")
-            .alias(f"_nt_{i}")
-            for i, n in enumerate(names)
-        ],
-    )
-    row = proj.agg(
-        F.sum("cnt").cast("long").alias("_nw"),
-        *[
-            F.sum(F.col(f"_nt_{i}") * F.col("cnt"))
-            .cast("long")
-            .alias(f"_ntt_{i}")
-            for i in range(len(names))
-        ],
-    ).first()
-    nw = row["_nw"]
-    if not nw:
-        return {n: None for n in names}
-    return {n: row[f"_ntt_{i}"] / nw for i, n in enumerate(names)}
-
-
-def tokenizer_refresh(
-    spark: SparkSession,
-    df: DataFrame,
-    model_path: str,
-    text_col: str = "text",
-    n_merges: int = N_MERGES,
-    n_passes: int = N_PASSES,
-    learn_words: int = LEARN_WORDS,
-    max_word_len: int = MAX_WORD_LEN,
-    min_fertility_gain: float = 0.002,
-    dry_run: bool = False,
-) -> dict:
-    """Drift-triggered auto-relearn policy — the decision loop a
-    production pipeline runs on a schedule: re-learn a candidate merge
-    table on the CURRENT corpus, compare it to the persisted model,
-    and adopt only when the measured improvement justifies the single
-    most expensive action a training-data pipeline can take
-    (retokenizing everything downstream).
-
-    Decisions (returned under ``"decision"``):
-
-    * ``"bootstrap"`` — no model at ``model_path``: learn, persist,
-      adopt (nothing downstream exists to invalidate).
-    * ``"keep-identical"`` — candidate == persisted table (same pairs,
-      same order): no-op, fertility not measured (identical tables
-      tokenize identically).
-    * ``"keep-no-words"`` — corpus has no qualifying words, so
-      fertility is undefined: keep the persisted table (a relearn on
-      nothing would be adopted blind).
-    * ``"adopt"`` — candidate differs AND improves corpus fertility by
-      at least ``min_fertility_gain`` (relative): persist candidate.
-    * ``"keep-insufficient-gain"`` — candidate differs but doesn't
-      clear the bar: keep the persisted table.  Drift without gain is
-      vocabulary churn, not fit improvement — the report carries the
-      full :func:`bpe_drift` output for a human to overrule.
-
-    ``dry_run=True`` evaluates the full policy but never writes; the
-    decision says what WOULD happen (``"would-bootstrap"`` /
-    ``"would-adopt"``).
-
-    Cost: ONE corpus-sized pass (``word_counts``, cached across its
-    two consumers) + one distinct-word-sized projection measuring BOTH
-    tables' fertility (:func:`corpus_fertility`) + the bounded top-2k
-    collect.  The corpus is never scanned twice.
-
-    Returns ``{"decision", "merges" (the ACTIVE table after the
-    decision), "candidate", "drift", "fertility_old",
-    "fertility_new", "relative_gain"}``."""
-    from pyspark.errors import AnalysisException
-
-    wc = word_counts(df, text_col, max_word_len).cache()
-    try:
-        candidate = learn_bpe_from_counts(wc, n_merges, n_passes, learn_words)
-        try:
-            old = load_bpe_model(spark, model_path)
-        except AnalysisException:
-            if not dry_run:
-                save_bpe_model(spark, candidate, model_path)
-            return {
-                "decision": "would-bootstrap" if dry_run else "bootstrap",
-                "merges": candidate,
-                "candidate": candidate,
-                "drift": None,
-                "fertility_old": None,
-                "fertility_new": None,
-                "relative_gain": None,
-            }
-        drift = bpe_drift(old, candidate)
-        report = {
-            "merges": old,
-            "candidate": candidate,
-            "drift": drift,
-            "fertility_old": None,
-            "fertility_new": None,
-            "relative_gain": None,
-        }
-        if not drift["drifted"]:
-            return {"decision": "keep-identical", **report}
-        fert = corpus_fertility(wc, {"old": old, "new": candidate}, n_passes)
-        report["fertility_old"] = fert["old"]
-        report["fertility_new"] = fert["new"]
-        if fert["old"] is None:
-            return {"decision": "keep-no-words", **report}
-        gain = (fert["old"] - fert["new"]) / fert["old"]
-        report["relative_gain"] = gain
-        if gain >= min_fertility_gain:
-            if dry_run:
-                return {"decision": "would-adopt", **report}
-            save_bpe_model(spark, candidate, model_path)
-            return {"decision": "adopt", **report, "merges": candidate}
-        return {"decision": "keep-insufficient-gain", **report}
-    finally:
-        wc.unpersist()

@@ -167,32 +167,6 @@ def nb_quality_scores(
     )
 
 
-def save_nb_model(model: DataFrame, totals: DataFrame, path: str) -> None:
-    """Persist a fitted model (``nb_train`` output) as two parquet
-    datasets under ``path`` (``model/`` word counts, ``totals/`` the
-    one scalar row).  The tables are integer-exact, so a reloaded
-    model scores bit-identically; training once and persisting is the
-    100 TB shape — refit only when the seed set changes.
-
-    ``model`` is cached around the two writes: ``totals`` derives
-    from ``model``'s lineage, so uncached the training aggregation
-    would run twice (once per write)."""
-    model.cache()
-    try:
-        model.write.mode("overwrite").parquet(f"{path}/model")
-        totals.write.mode("overwrite").parquet(f"{path}/totals")
-    finally:
-        model.unpersist()
-
-
-def load_nb_model(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load a persisted model for :func:`nb_score`."""
-    return (
-        spark.read.parquet(f"{path}/model"),
-        spark.read.parquet(f"{path}/totals"),
-    )
-
-
 def nb_evaluate(
     df: DataFrame,
     label_expr: Column,

@@ -211,19 +211,6 @@ def exact_duplicate_groups(
     )
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Return the deduplicated DataFrame: the min-id representative row
-    per distinct normalized content."""
-    w = F.row_number().over(
-        Window.partitionBy(F.md5(normalized_text(F.col(text_col)))).orderBy(
-            F.col(id_col)
-        )
-    )
-    return df.withColumn("_rn", w).filter(F.col("_rn") == 1).drop("_rn")
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

@@ -48,6 +48,12 @@ def is_cloudtrail(filename: str) -> bool:
 
 # skipped between values: whitespace, and the byte-order mark a file may start with
 _WHITESPACE = re.compile(r"[\s\ufeff]*")
+# What a JSON value can start with, so text that cannot start one is
+# skipped without a failed decode: a failed decode costs time linear in
+# its offset into the blob (the error counts the lines before it).
+_VALUE_START = r'[-0-9"\[{]|true|false|null|NaN|Infinity'
+_STARTS_VALUE = re.compile(_VALUE_START)
+_VALUE_AFTER_SPACE = re.compile(rf"(?<=\s)(?:{_VALUE_START})")
 _DECODER = json.JSONDecoder()
 
 # The value ``split_concatenated_json`` pairs with text that does not decode.
@@ -88,24 +94,38 @@ def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
     only).  ``slice`` is the exact text of the value.  Text that does
     not decode comes as its own slice paired with ``UNPARSEABLE``: a
     malformed ``{...}`` block up to its closing brace (or the end, when
-    it never closes), any other text up to the next ``{``.  Every
-    character but the whitespace between values is in exactly one
-    slice."""
+    it never closes), any other text up to the first later position
+    that follows whitespace and from which a value decodes, or up to
+    the next ``{``, whichever comes first.  Every character but the
+    whitespace between values is in exactly one slice."""
     pos = _WHITESPACE.match(text).end()
     while pos < len(text):
-        try:
-            value, end = _DECODER.raw_decode(text, pos)
-        # RecursionError: nesting deeper than the C scanner allows
-        except (json.JSONDecodeError, RecursionError):
-            value = UNPARSEABLE
+        value, end = _decode(text, pos)
+        if value is UNPARSEABLE:
             if text[pos] == "{":
                 end = _block_end(text, pos)
             else:
                 end = text.find("{", pos + 1)
                 if end == -1:
                     end = len(text)
+                for m in _VALUE_AFTER_SPACE.finditer(text, pos + 1, end):
+                    if _decode(text, m.start())[0] is not UNPARSEABLE:
+                        end = m.start()
+                        break
         yield text[pos:end], value
         pos = _WHITESPACE.match(text, end).end()
+
+
+def _decode(text: str, pos: int) -> tuple[Any, int]:
+    """``raw_decode`` at ``pos``, or ``(UNPARSEABLE, pos)`` when no
+    value decodes there."""
+    if not _STARTS_VALUE.match(text, pos):
+        return UNPARSEABLE, pos
+    try:
+        return _DECODER.raw_decode(text, pos)
+    # RecursionError: nesting deeper than the C scanner allows
+    except (json.JSONDecodeError, RecursionError):
+        return UNPARSEABLE, pos
 
 
 def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:

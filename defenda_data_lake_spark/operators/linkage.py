@@ -185,19 +185,3 @@ def edit_distance_pairs(
         .filter(F.col("distance") >= 0)
         .select("id_a", "id_b", F.col("distance").cast("int").alias("distance"))
     )
-
-
-def fuzzy_dedupe(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **pair_kwargs,
-) -> DataFrame:
-    """Survivor set under edit-distance linkage: every row not linked
-    to by a smaller-id row (the same min-id claimant semantics as
-    ``minhash_bucket_dedupe``).  The anti-join only tests membership of
-    the claimed-id set — no aggregate or pair-list materialization."""
-    pairs = edit_distance_pairs(df, id_col, text_col, **pair_kwargs)
-    return df.join(
-        pairs.select(F.col("id_b").alias(id_col)), id_col, "left_anti"
-    )

@@ -2,7 +2,7 @@
 
 Media travel as opaque ``binary`` columns plus a typed metadata struct
 (the lakehouse-standard pattern); decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` stages.
+chunk run as Arrow-batched ``mapInPandas`` stages.
 
 Decode paths, in order of preference at ``fake=False``:
 
@@ -10,9 +10,8 @@ Decode paths, in order of preference at ``fake=False``:
   inflate + scanline unfilter (all five PNG filter types), 8-bit
   gray/RGB/gray-alpha/RGBA.
 * **WAV** — real, dependency-free: stdlib ``wave`` PCM decode.
-* **Anything else** — Pillow when importable (images), ffmpeg when on
-  PATH (video frame sampling); otherwise ``NotImplementedError`` at
-  the exact point the codec would run.
+* **Anything else** — Pillow when importable (images); otherwise
+  ``NotImplementedError`` at the exact point the codec would run.
 
 ``fake=True`` (default, and the correctness-oracle path — q44)
 produces a deterministic fake decode (stable per content hash) that
@@ -406,133 +405,6 @@ def decode_media(
     image formats via Pillow when importable (see module docstring)."""
     return media.select("media_id", "content").mapInPandas(
         _make_decoder(fake, feature_dim), schema=DECODED_SCHEMA
-    )
-
-
-def _png_dims(png: bytes) -> tuple[int, int]:
-    """(width, height) from a PNG's IHDR without decoding pixels."""
-    import struct
-
-    if png[:8] != _PNG_SIG or png[12:16] != b"IHDR":
-        raise ValueError("not a PNG")
-    w, h = struct.unpack(">II", png[16:24])
-    return w, h
-
-
-def _iter_png_stream(blob: bytes):
-    """Split a concatenated-PNG stream (ffmpeg ``image2pipe`` output)
-    into individual payloads by WALKING CHUNK STRUCTURE to each IEND —
-    not by searching for the signature, which can occur inside
-    compressed IDAT data."""
-    import struct
-
-    pos = 0
-    n = len(blob)
-    while pos + 8 <= n:
-        if blob[pos : pos + 8] != _PNG_SIG:
-            raise ValueError(f"PNG stream desynchronized at byte {pos}")
-        start = pos
-        pos += 8
-        while pos + 8 <= n:
-            (length,) = struct.unpack(">I", blob[pos : pos + 4])
-            ctype = blob[pos + 4 : pos + 8]
-            pos += 12 + length
-            if ctype == b"IEND":
-                break
-        yield blob[start:pos]
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("frame_png", T.BinaryType()),
-    ]
-)
-
-
-def _make_frame_sampler(every_n: int):
-    def sampler(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import subprocess
-
-        cols = [f.name for f in FRAME_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                payload = bytes(content) if content is not None else b""
-                if not payload:
-                    continue
-                # one short-lived ffmpeg per payload: the parallelism
-                # unit is the Spark task (one payload decodes on one
-                # core either way), and a pipe keeps the payload off
-                # the local disk
-                proc = subprocess.run(
-                    [
-                        "ffmpeg", "-v", "error", "-i", "pipe:0",
-                        "-vf", f"select=not(mod(n\\,{every_n}))",
-                        "-vsync", "vfr",
-                        "-f", "image2pipe", "-vcodec", "png", "pipe:1",
-                    ],
-                    input=payload,
-                    capture_output=True,
-                )
-                if proc.returncode != 0:
-                    err = proc.stderr.decode("utf-8", "replace")[-300:]
-                    raise ValueError(
-                        f"ffmpeg failed for media_id={media_id}: {err}"
-                    )
-                for j, png in enumerate(_iter_png_stream(proc.stdout)):
-                    w, h = _png_dims(png)
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_index": j * every_n,
-                            "width": w,
-                            "height": h,
-                            "frame_png": png,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return sampler
-
-
-def sample_frames(
-    media: DataFrame, every_n: int = 10, fake: bool = True
-) -> DataFrame:
-    """Frame sampling for video payloads.
-
-    ``fake=True`` (the oracle path, q-catalog plumbing): one row per
-    sampled frame INDEX, frame count derived deterministically from
-    payload size — no decode.
-
-    ``fake=False`` really decodes: every ``every_n``-th frame is
-    extracted by a subprocess ffmpeg (`-vf select=not(mod(n,N))` →
-    ``image2pipe`` PNG stream, parsed chunk-structurally), returning
-    ``(media_id, frame_index, width, height, frame_png)`` with each
-    frame as a self-contained PNG the dependency-free codec can
-    decode.  Requires ffmpeg on PATH (the sandbox has none — the
-    integration test skips cleanly; same optional-dependency pattern
-    as Pillow for non-PNG images).  Arrow-batched; payloads stream
-    through pipes, never the local filesystem."""
-    if not fake:
-        import shutil
-
-        if shutil.which("ffmpeg") is None:
-            raise NotImplementedError(
-                "real frame sampling requires ffmpeg on PATH"
-            )
-        return media.select("media_id", "content").mapInPandas(
-            _make_frame_sampler(every_n), schema=FRAME_SCHEMA
-        )
-    n_frames = (F.col("meta.n_bytes") / 1024 + 1).cast("int")
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_index"),
     )
 
 

@@ -16,6 +16,7 @@ finds no index walks the event itself.
 
 from __future__ import annotations
 
+import html
 import ipaddress
 import os
 import re
@@ -25,7 +26,6 @@ from datetime import datetime, timezone
 from defenda_data_lake_spark.operators.pipeline import KEY_INDEX, Plugin
 from defenda_data_lake_spark.schema import SHELL_DEFAULTS
 from defenda_data_lake_spark.utils.dates import to_utc
-from defenda_data_lake_spark.utils.templating import render
 from defenda_data_lake_spark.utils.json_tree import (
     collect_fields,
     deep_merge,
@@ -366,6 +366,23 @@ class IpAddresses(Plugin):
         return event
 
 
+def _gsuite_summary(event: dict) -> str:
+    """The reference's mustache summary (gsuite_login.py:43),
+    ``{{details.user}} {{details.events.0.name}} from IP
+    {{details.sourceipaddress}}``: a missing path or ``None`` renders
+    empty, any other value as its HTML-escaped ``str`` (``False``
+    renders ``"False"``)."""
+
+    def field(path: str) -> str:
+        value = get_by_path(event, path)
+        return "" if value is None else html.escape(str(value), quote=False)
+
+    return (
+        f"{field('details.user')} {field('details.events.0.name')}"
+        f" from IP {field('details.sourceipaddress')}"
+    )
+
+
 class GsuiteLogin(Plugin):
     """Normalize a GSuite admin-reports login activity record (reference
     normalization_plugins/gsuite_login.py:16-62; priority 20,
@@ -397,13 +414,7 @@ class GsuiteLogin(Plugin):
         if get_by_path(event, "details.actor.email"):
             details["user"] = get_by_path(event, "details.actor.email")
 
-        # Mustache-template summary (reference gsuite_login.py:43);
-        # missing paths render empty, per mustache.
-        event["summary"] = render(
-            "{{details.user}} {{details.events.0.name}}"
-            " from IP {{details.sourceipaddress}}",
-            event,
-        )
+        event["summary"] = _gsuite_summary(event)
 
         event["category"] = "authentication"
 

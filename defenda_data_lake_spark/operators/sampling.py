@@ -40,13 +40,6 @@ def _threshold(fraction: float) -> int:
     return round(fraction * BUCKETS)
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows by id hash."""
-    return df.filter(hash_bucket(id_col, salt) < _threshold(fraction))
-
-
 def with_split(
     df: DataFrame,
     id_col: str,

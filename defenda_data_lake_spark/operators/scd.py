@@ -96,60 +96,3 @@ def scd2_history(
     return starts.withColumn(
         "valid_to_s", F.lead("valid_from_s").over(wnext)
     ).select(*keys, *attrs, "version", "valid_from_s", "valid_to_s", "n_obs")
-
-
-def scd2_lookup(
-    facts: DataFrame,
-    dim: DataFrame,
-    key_cols: Sequence[str],
-    fact_ts_col: str,
-    how: str = "left",
-    dim_prefix: str = "",
-) -> DataFrame:
-    """Point-in-time enrichment: join each fact row to the dimension
-    VERSION that was valid at the fact's event time — the consumer of
-    :func:`scd2_history`.  ``valid_from_s`` is inclusive, ``valid_to_s``
-    exclusive, NULL ``valid_to_s`` = the open current version, so every
-    fact matches at most one version; facts earlier than the key's
-    first version keep NULL attributes under ``how='left'``.
-
-    Scale notes (100 TB): this is an EQUI-join on the keys with the
-    interval test as a cheap join residual — never a range-only join
-    or a cross product; both sides hash/sort on the same key layout
-    and versions-per-key is small by construction, so the residual
-    scans a handful of rows per fact.  The fact timestamp is folded
-    to epoch seconds (accepts TIMESTAMP or epoch-seconds LONG — the
-    long→timestamp→long round trip is the identity).
-
-    Dimension columns are appended under ``dim_prefix + name``; a
-    collision with a fact column raises up front (an ambiguous
-    duplicate name would otherwise surface only at the first
-    downstream reference or parquet write)."""
-    keys = list(key_cols)
-    appended = {f"{dim_prefix}{c}" for c in dim.columns if c not in keys}
-    clash = sorted(appended & set(facts.columns))
-    if clash:
-        raise ValueError(
-            f"scd2_lookup output would duplicate fact column(s) {clash}; "
-            "pass dim_prefix= to disambiguate"
-        )
-    f = facts.alias("_f")
-    d = dim.alias("_d")
-    fact_s = F.col(f"_f.{fact_ts_col}").cast("timestamp").cast("long")
-    cond = None
-    for k in keys:
-        c = F.col(f"_f.{k}") == F.col(f"_d.{k}")
-        cond = c if cond is None else (cond & c)
-    cond = (
-        cond
-        & (fact_s >= F.col("_d.valid_from_s"))
-        & (
-            F.col("_d.valid_to_s").isNull()
-            | (fact_s < F.col("_d.valid_to_s"))
-        )
-    )
-    dim_cols = [c for c in dim.columns if c not in keys]
-    return f.join(d, cond, how).select(
-        "_f.*",
-        *[F.col(f"_d.{c}").alias(f"{dim_prefix}{c}") for c in dim_cols],
-    )

@@ -368,27 +368,9 @@ def ivf_topk(
         F.col(vec_col),
         F.col(partition_col).alias("__list_id"),
     )
-    return _ivf_score_and_rank(
-        corpus_sel, q_ids, Q, allowed, k, id_col, vec_col, id_t
-    )
-
-
-def _ivf_score_and_rank(
-    corpus_sel: DataFrame,
-    q_ids,
-    Q,
-    allowed: dict,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    id_t: str,
-) -> DataFrame:
-    """Shared IVF scoring tail (used by :func:`ivf_topk` and
-    :func:`ivf_probe`): partition-local exact cosine over the probed
-    lists' rows, partial top-k per task, global top-k window finish.
-    ``corpus_sel`` must expose ``id_col``, ``vec_col``, ``__list_id``."""
-    spark = corpus_sel.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, Q, allowed))
+    # partition-local exact cosine over the probed lists' rows, partial
+    # top-k per task, global top-k window finish
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, Q, allowed))
     out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
 
     def score(batches):
@@ -431,123 +413,6 @@ def _ivf_score_and_rank(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def centroid_table(
-    corpus: DataFrame, list_key, vec_col: str, dim: int
-) -> DataFrame:
-    """``(list_id, centroid, n)`` aggregated from a corpus and its
-    list-key column expression — per-component partial aggregation
-    (map-side combine, no vector explode)."""
-    return (
-        corpus.groupBy(list_key.alias("list_id"))
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            *[
-                F.avg(F.col(vec_col)[i].cast("double")).alias(f"m{i}")
-                for i in range(dim)
-            ],
-        )
-        .select(
-            "list_id",
-            F.array(*[F.col(f"m{i}") for i in range(dim)]).alias("centroid"),
-            "n",
-        )
-    )
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    partition_col: str = "label",
-) -> None:
-    """Persist an IVF index: the corpus REWRITTEN partitioned by its
-    inverted-list key plus a centroid table — the "build once, probe
-    many" layout :func:`ivf_topk` computes inline on every call.
-
-    Two parquet datasets under ``index_dir``:
-
-    * ``corpus/`` — (id, vec) partitioned BY LIST (``__ivf_list=...``
-      directories), so a probe's ``isin(probed_lists)`` filter becomes
-      PARTITION PRUNING: probing 1 of L lists reads ~1/L of the bytes.
-      This is the property that makes IVF an index rather than a scan
-      order — at 100 TB the probe never opens the unprobed files.
-    * ``centroids/`` — (list_id string, centroid array<double>),
-      |lists| rows; the probe reads + collects it like any broadcast
-      dim.
-
-    The list key is stored as STRING (directory-encoded partition
-    values round-trip through paths; probing compares strings
-    consistently on both sides).  Rebuild after significant corpus
-    churn — like any IVF deployment, centroid drift degrades recall,
-    not correctness."""
-    dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).head()
-    if dim_row is None:
-        raise ValueError("cannot build an IVF index from an empty corpus")
-    dim = dim_row["d"]
-    lk = F.col(partition_col).cast("string")
-    (
-        corpus.select(
-            F.col(id_col), F.col(vec_col), lk.alias("__ivf_list")
-        )
-        .repartition("__ivf_list")
-        .write.mode("overwrite")
-        .partitionBy("__ivf_list")
-        .parquet(f"{index_dir}/corpus")
-    )
-    centroid_table(corpus, lk, vec_col, dim).write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/centroids")
-
-
-def ivf_probe(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a persisted :func:`build_ivf_index` index: rank the
-    centroid table per query (driver-side — it is |lists| rows), then
-    scan ONLY the probed list partitions (partition-pruned read) and
-    score with the same kernel as :func:`ivf_topk`.  Identical
-    results to the inline form on the same corpus (parity-tested);
-    the difference is the read: inline scans the whole corpus to
-    filter it, the index scans ~n_probe/L of the files."""
-    cent_rows = spark.read.parquet(f"{index_dir}/centroids").collect()
-    corpus = spark.read.parquet(f"{index_dir}/corpus")
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
-    if len(q_ids) == 0 or not cent_rows:
-        return spark.createDataFrame(
-            [], f"query_id {id_t}, neighbor_id {id_t}, cosine double, rank int"
-        )
-    list_ids = [r["list_id"] for r in cent_rows]
-    Cent = np.array([list(r["centroid"]) for r in cent_rows])
-    sims = (Q @ Cent.T) / np.outer(
-        np.linalg.norm(Q, axis=1), np.linalg.norm(Cent, axis=1)
-    )
-    allowed: dict = {}
-    l_arr = np.array(list_ids)
-    for j, qid in enumerate(q_ids):
-        order = np.lexsort((l_arr, -sims[j]))[:n_probe]
-        allowed[qid] = set(l_arr[order].tolist())
-    probed_lists = sorted({l for s in allowed.values() for l in s})
-
-    corpus_sel = corpus.filter(
-        F.col("__ivf_list").isin(probed_lists)
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__ivf_list").cast("string").alias("__list_id"),
-    )
-    return _ivf_score_and_rank(
-        corpus_sel, q_ids, Q, allowed, k, id_col, vec_col, id_t
     )
 
 

@@ -471,7 +471,7 @@ def hash_sample_sketch(
     hash, so sketches of different datasets are COORDINATED samples of
     the same hash space and set algebra works directly on them:
 
-    * union      = distinct union of the samples (:func:`hash_sample_merge`)
+    * union      = distinct union of the samples
     * intersect  = hashes present in both samples
     * |S| ≈ ``16^prefix_hex · |sample|``  (unbiased; relative stderr
       ≈ ``sqrt(16^prefix_hex / |S|)`` — pick ``prefix_hex`` so the
@@ -507,34 +507,6 @@ def hash_sample_sketch(
             F.substring("_hs_hash", 1, prefix_hex) == F.lit("0" * prefix_hex)
         )
         .distinct()
-    )
-
-
-def hash_sample_merge(
-    a: DataFrame,
-    b: DataFrame,
-) -> DataFrame:
-    """Union of hash-sample sketches built with the SAME ``prefix_hex``
-    (and group columns): distinct union of the samples.  Exactly equal
-    — row-for-row, not approximately — to a direct
-    :func:`hash_sample_sketch` over the concatenated inputs, the same
-    merge law as :func:`hll_merge`."""
-    return a.unionByName(b).distinct()
-
-
-def hash_sample_estimate(
-    sketch: DataFrame,
-    group_by: Sequence[str] = (),
-    prefix_hex: int = 1,
-    out: str = "distinct_estimate",
-) -> DataFrame:
-    """Distinct-count estimate from a :func:`hash_sample_sketch`:
-    ``16^prefix_hex · count(*)`` per group — exact integer arithmetic,
-    BIGINT out (no float anywhere)."""
-    _hs_check(prefix_hex)
-    scale = 16 ** prefix_hex
-    return sketch.groupBy(*group_by).agg(
-        (F.count("*") * F.lit(scale)).cast("long").alias(out)
     )
 
 

@@ -36,8 +36,7 @@ def _nb_scored_view(spark, sf_dir):
     view; past it the view streams UNPINNED — same plan, fused into
     each consumer (``derived_view``'s documented 100 TB policy).  At
     100 TB the equivalent move is persisting scores as a table column
-    (``save_nb_model`` + a scoring backfill), refreshed when the seed
-    set changes."""
+    (a scoring backfill), refreshed when the seed set changes."""
     from defenda_data_lake_spark.operators import classify as CL
 
     def build(spark, sf_dir):

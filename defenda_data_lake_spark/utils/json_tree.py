@@ -15,20 +15,15 @@ from collections.abc import Iterator
 from typing import Any
 
 
-def lowercase_keys(node: Any) -> Any:
-    """Recursively lowercase every dict key (reference
-    normalization_plugins/lowercase_keys.py:12-25)."""
-    return lowercase_keys_into(node, set())
-
-
 def lowercase_keys_into(node: Any, keys: set) -> Any:
-    """``lowercase_keys`` that also adds every key of the result, at every
-    depth, to ``keys``.  When two keys of one dict lowercase alike it adds
-    ``None`` as well: the losing value's keys are then in ``keys`` though
-    no longer in the tree.  Scalar leaves are passed through inline
-    rather than through a recursive call — ~70% of nodes in a typical
-    event are leaves, and the call overhead was measurable at the ingest
-    kernel's row rate."""
+    """Recursively lowercase every dict key (reference
+    normalization_plugins/lowercase_keys.py:12-25), adding every key of
+    the result, at every depth, to ``keys``.  When two keys of one dict
+    lowercase alike it adds ``None`` as well: the losing value's keys
+    are then in ``keys`` though no longer in the tree.  Scalar leaves
+    are passed through inline rather than through a recursive call —
+    ~70% of nodes in a typical event are leaves, and the call overhead
+    was measurable at the ingest kernel's row rate."""
     if isinstance(node, dict):
         out = {
             (k if type(k) is str else str(k)).lower(): (

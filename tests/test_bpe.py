@@ -192,67 +192,6 @@ def test_full_accounting_consistent_with_tokenize_corpus(spark):
     assert bad == 0
 
 
-def test_bpe_model_save_load_roundtrip(spark, tmp_path):
-    """Persist + reload returns the identical rank-ordered merge list,
-    so a reloaded model tokenizes bit-identically (application is a
-    pure function of the pair list)."""
-    _docs, merges = _corpus_merges(spark)
-    path = str(tmp_path / "bpe_model")
-    B.save_bpe_model(spark, merges, path)
-    assert B.load_bpe_model(spark, path) == merges
-
-
-def test_load_bpe_model_rejects_corrupt_ranks(spark, tmp_path):
-    path = str(tmp_path / "bad_model")
-    spark.createDataFrame(
-        [(1, "a b", "ab"), (3, "c d", "cd")],
-        "rank long, pair string, token string",
-    ).write.parquet(path)
-    with pytest.raises(ValueError, match="corrupt merge table"):
-        B.load_bpe_model(spark, path)
-
-
-def test_bpe_drift_report_semantics():
-    m = ["a b", "c d", "ab c"]
-    same = B.bpe_drift(m, list(m))
-    assert same == {
-        "common_prefix": 3,
-        "first_divergence": None,
-        "added": [],
-        "removed": [],
-        "token_jaccard": 1.0,
-        "drifted": False,
-    }
-    mid = B.bpe_drift(m, ["a b", "x y", "ab c"])
-    assert mid["first_divergence"] == 2
-    assert mid["added"] == ["xy"] and mid["removed"] == ["cd"]
-    assert mid["drifted"] and mid["common_prefix"] == 1
-    # one table a PREFIX of the other: no rank disagrees, still drift
-    # (token counts change when later merges disappear)
-    pre = B.bpe_drift(m, m[:2])
-    assert pre["drifted"] and pre["first_divergence"] is None
-    assert pre["common_prefix"] == 2 and pre["removed"] == ["abc"]
-    assert B.bpe_drift([], [])["token_jaccard"] == 1.0
-    assert not B.bpe_drift([], [])["drifted"]
-
-
-def test_bpe_drift_detects_corpus_change(spark):
-    """The CDC-for-vocab loop: re-learning on a shifted corpus (a new
-    high-frequency word) produces a measurably drifted table, while
-    re-learning on the SAME corpus does not."""
-    docs, merges_a = _corpus_merges(spark)
-    extra = spark.createDataFrame(
-        [(100000 + i, "qzw qzw qzwqzw qzwqzwqzw") for i in range(2000)],
-        "doc_id long, text string",
-    )
-    shifted = docs.select("doc_id", "text").unionByName(extra)
-    merges_b = B.learn_bpe_spark(shifted)
-    rep = B.bpe_drift(merges_a, merges_b)
-    assert rep["drifted"] and rep["token_jaccard"] < 1.0
-    assert any("qz" in t or "zw" in t for t in rep["added"])
-    assert not B.bpe_drift(merges_a, B.learn_bpe_spark(docs))["drifted"]
-
-
 def test_fertility_by_group_matches_per_doc_accounting(spark):
     """The group report must be the exact per-doc accounting rolled
     up: cross-checked against full_token_accounting aggregated in

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from defenda_data_lake_spark.operators.dedup import (
-    exact_dedup,
     exact_duplicate_groups,
     minhash_lsh_candidates,
     minhash_signatures,
@@ -51,11 +50,6 @@ def test_exact_duplicate_groups(docs):
     assert groups[1] == 3  # docs 1,2,3 share normalized content
     assert groups[4] == 1
     assert groups[5] == 1
-
-
-def test_exact_dedup_keeps_min_id(docs):
-    kept = sorted(r["doc_id"] for r in exact_dedup(docs).collect())
-    assert kept == [1, 4, 5]
 
 
 def test_minhash_identical_docs_same_signature(docs):

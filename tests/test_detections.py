@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from defenda_data_lake_spark.detections import (
+    PROFILE_FIELDS,
     account_activity_profiles,
     failed_login_bursts,
     first_seen_ips,
@@ -105,13 +106,30 @@ def test_first_seen_ips(events):
 
 
 def test_account_activity_profiles_variant_parity(events):
-    """The variant path and the get_json_object path are the same rule:
-    identical rows, so callers can pick purely on performance."""
-    via_variant = sorted(
-        account_activity_profiles(events, use_variant=True).collect()
-    )
+    """The VARIANT extraction gives the rows the same rule gives with
+    one ``get_json_object`` per field over the JSON string."""
+    via_variant = sorted(account_activity_profiles(events).collect())
+    wide = events.select(
+        "source",
+        "category",
+        *[F.get_json_object("details", f"$.{f}").alias(f) for f in PROFILE_FIELDS],
+    ).filter(F.col("user").isNotNull())
     via_json = sorted(
-        account_activity_profiles(events, use_variant=False).collect()
+        wide.groupBy("user")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("success").eqNullSafe("false").cast("long")).alias(
+                "n_failures"
+            ),
+            F.sum(F.col("suspicious").eqNullSafe("true").cast("long")).alias(
+                "n_suspicious"
+            ),
+            F.countDistinct("sourceipaddress").alias("n_source_ips"),
+            F.countDistinct("useragent").alias("n_useragents"),
+            F.countDistinct("source").alias("n_sources"),
+            F.max("action").alias("last_action_name"),
+        )
+        .collect()
     )
     assert via_variant == via_json
     rows = {r["user"]: r for r in via_variant}

@@ -4,7 +4,6 @@ and the leakage-safe cluster split (q98 composition)."""
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -234,78 +233,3 @@ def test_q98_near_dup_pairs_never_straddle_splits(spark):
     # and the split is non-degenerate on this corpus
     splits = {r["split"] for r in assigned.select("split").distinct().collect()}
     assert splits == {"train", "test"}
-
-
-def test_scd2_lookup_point_in_time(spark):
-    from defenda_data_lake_spark.operators.scd import scd2_lookup
-
-    obs = spark.createDataFrame(
-        [
-            (1, "bronze", dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)),
-            (1, "silver", dt.datetime(2024, 2, 1, tzinfo=dt.timezone.utc)),
-            (1, "gold", dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)),
-            (2, "bronze", dt.datetime(2024, 2, 15, tzinfo=dt.timezone.utc)),
-        ],
-        ["user_id", "tier", "ts"],
-    )
-    dim = scd2_history(obs, ["user_id"], ["tier"], "ts")
-    facts = spark.createDataFrame(
-        [
-            # before user 1's first version -> NULL tier
-            (10, 1, dt.datetime(2023, 12, 31, tzinfo=dt.timezone.utc)),
-            # boundary: valid_from is INCLUSIVE
-            (11, 1, dt.datetime(2024, 2, 1, tzinfo=dt.timezone.utc)),
-            # one second before a version flip -> previous version
-            (12, 1, dt.datetime(2024, 2, 29, 23, 59, 59, tzinfo=dt.timezone.utc)),
-            # open current version
-            (13, 1, dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)),
-            (14, 2, dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)),
-        ],
-        ["fact_id", "user_id", "ts"],
-    )
-    got = {
-        r.fact_id: r.tier
-        for r in scd2_lookup(facts, dim, ["user_id"], "ts").collect()
-    }
-    assert got == {10: None, 11: "silver", 12: "silver", 13: "gold", 14: "bronze"}
-    # disjoint intervals -> exactly one output row per fact
-    assert scd2_lookup(facts, dim, ["user_id"], "ts").count() == facts.count()
-
-
-def test_scd2_lookup_plan_is_keyed_join_not_cartesian(spark):
-    from defenda_data_lake_spark.operators.scd import scd2_lookup
-
-    obs = spark.createDataFrame(
-        [(1, "a", dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc))],
-        ["user_id", "tier", "ts"],
-    )
-    dim = scd2_history(obs, ["user_id"], ["tier"], "ts")
-    facts = spark.createDataFrame(
-        [(1, 1, dt.datetime(2024, 6, 1, tzinfo=dt.timezone.utc))],
-        ["fact_id", "user_id", "ts"],
-    )
-    out = scd2_lookup(facts, dim, ["user_id"], "ts")
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString().split(
-        "== Initial Plan =="
-    )[0]
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_scd2_lookup_collision_guard_and_prefix(spark):
-    from defenda_data_lake_spark.operators.scd import scd2_lookup
-
-    obs = spark.createDataFrame(
-        [(1, "a", dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc))],
-        ["user_id", "tier", "ts"],
-    )
-    dim = scd2_history(obs, ["user_id"], ["tier"], "ts")
-    facts = spark.createDataFrame(
-        [(1, 1, "x", dt.datetime(2024, 6, 1, tzinfo=dt.timezone.utc))],
-        ["fact_id", "user_id", "tier", "ts"],  # 'tier' collides
-    )
-    with pytest.raises(ValueError, match="tier"):
-        scd2_lookup(facts, dim, ["user_id"], "ts")
-    row = scd2_lookup(facts, dim, ["user_id"], "ts", dim_prefix="dim_").collect()[0]
-    assert row.tier == "x" and row.dim_tier == "a"

@@ -6,13 +6,13 @@ from defenda_data_lake_spark.utils.json_tree import (
     dict_match,
     enum_keys,
     get_by_path,
-    lowercase_keys,
+    lowercase_keys_into,
 )
 
 
 def test_lowercase_keys_recursive():
     event = {"KEY1": "v", "Nested": {"SubKey": [{"DeepKey": 1}]}, "ok": 2}
-    assert lowercase_keys(event) == {
+    assert lowercase_keys_into(event, set()) == {
         "key1": "v",
         "nested": {"subkey": [{"deepkey": 1}]},
         "ok": 2,

@@ -251,10 +251,22 @@ def test_extract_events_list_and_dict():
         ("2", "s3json"),
         ('{"b": 2, "source": "s3json"}', "s3json"),
     ]
-    # text that does not decode runs to the next "{", exactly as landed
+    # text that does not decode runs, exactly as landed, to the first
+    # value that decodes after whitespace or to the next "{"
     assert list(extract_events('{"a": 1} garbage {"b": 2}', "x.json")) == [
         ("garbage ", "s3json"),
         ('{"a": 1, "source": "s3json"}', "s3json"),
+        ('{"b": 2, "source": "s3json"}', "s3json"),
+    ]
+    assert list(extract_events('x 42 [1] {"a": 1}', "f.json")) == [
+        ("x ", "s3json"),
+        ("42", "s3json"),
+        ("1", "s3json"),
+        ('{"a": 1, "source": "s3json"}', "s3json"),
+    ]
+    # a value not preceded by whitespace stays inside the garbage
+    assert list(extract_events('x42 y"z" {"b": 2}', "x.json")) == [
+        ('x42 y"z" ', "s3json"),
         ('{"b": 2, "source": "s3json"}', "s3json"),
     ]
     # nesting too deep for the decoder is quarantined raw, not raised

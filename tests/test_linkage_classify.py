@@ -11,10 +11,7 @@ from defenda_data_lake_spark.operators.classify import (
     nb_train,
     train_split_expr,
 )
-from defenda_data_lake_spark.operators.linkage import (
-    edit_distance_pairs,
-    fuzzy_dedupe,
-)
+from defenda_data_lake_spark.operators.linkage import edit_distance_pairs
 
 SF = "/root/testdata/sf0.001"
 
@@ -68,23 +65,6 @@ def test_degenerate_block_cap_drops_oversized_block(spark):
         df, "doc_id", "text", max_distance=3, max_block_rows=10
     ).collect()
     assert [(r.id_a, r.id_b) for r in got] == [(100, 101)]
-
-
-def test_fuzzy_dedupe_min_id_survivors(spark):
-    df = _docs(
-        spark,
-        [
-            (1, "near duplicate text body one"),
-            (2, "near duplicate text body one!"),
-            (3, "near duplicate text body one!!"),
-            (9, "something else entirely different"),
-        ],
-    )
-    survivors = sorted(
-        r.doc_id
-        for r in fuzzy_dedupe(df, "doc_id", "text", max_distance=4).collect()
-    )
-    assert survivors == [1, 9]
 
 
 def test_q102_plan_no_cartesian_one_exchange(spark):
@@ -146,27 +126,6 @@ def test_nb_null_label_treated_negative(spark):
         ).collect()
     }
     assert scored[2] < 0 < scored[1]
-
-
-def test_nb_model_save_load_scores_identically(spark, tmp_path):
-    from defenda_data_lake_spark.operators.classify import (
-        load_nb_model,
-        save_nb_model,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
-        "_y", (F.col("n_chars") >= 300).cast("long")
-    )
-    model, totals = nb_train(docs, "_y")
-    save_nb_model(model, totals, str(tmp_path / "nb"))
-    model2, totals2 = load_nb_model(spark, str(tmp_path / "nb"))
-    a = {r.doc_id: (r.n_words, r.score) for r in nb_score(docs, model, totals).collect()}
-    b = {r.doc_id: (r.n_words, r.score) for r in nb_score(docs, model2, totals2).collect()}
-    assert set(a) == set(b)
-    # integer-exact tables -> identical floats up to agg order (raw
-    # values within 1e-9; the catalog's 4dp rounding absorbs that)
-    for k in a:
-        assert a[k][0] == b[k][0] and abs(a[k][1] - b[k][1]) < 1e-9
 
 
 def test_train_split_shares_hash_with_sampling_split(spark):

@@ -1,5 +1,5 @@
 """The product boundary: the lake stands apart from the catalog, every
-package module has a caller, and so does every public function.
+package module has a caller, and so does every top-level function.
 
 Two closures of package imports.  The lake closure starts at the lake
 path (``LAKE_PATH`` plus every module of ``functions`` and ``utils``)
@@ -10,14 +10,15 @@ catalog entry point (``__spark_entry__.py``), both benchmark harnesses
 (``scripts/check_oracle.py``).  A module in neither closure is reached
 only by its own tests; it goes, or it gets a caller.
 
-Per function: every public top-level ``def`` or ``class`` of the
-package must be referenced from the package or a root file — by a
-name, an attribute, a ``from … import`` alias, or a string constant
-equal to it (``perfbench`` looks detection rules up with ``getattr``).
-Docstrings, comments and a definition's references to itself do not
-count.  ``NO_CALLER_YET`` names the definitions kept without one, each
-with its reason; it must match the scan exactly, so a new caller-less
-name fails and so does an entry that got a caller or was deleted.
+Per function: every top-level ``def`` or ``class`` of the package,
+public or ``_private`` (dunder names aside), must be referenced from
+the package or a root file — by a name, an attribute, a ``from …
+import`` alias, or a string constant equal to it (``perfbench`` looks
+detection rules up with ``getattr``).  Docstrings, comments and a
+definition's references to itself do not count.  ``NO_CALLER_YET``
+names the definitions kept without one, each with its reason; it must
+match the scan exactly, so a new caller-less name fails and so does an
+entry that got a caller or was deleted.
 Static AST walk, no Spark needed.
 """
 
@@ -49,9 +50,8 @@ ROOT_DIRS = ["perfbench"]
 ENTRY_POINT = "lake API entry point a deployment calls"
 WAITS_FOR_ITEM_1 = "waits for ROADMAP item 1 (compaction on the lake path)"
 REFERENCE = "reference implementation a test compares against"
-NEXT_CUT = "test-only, next cut"
 
-# Public definitions nothing on a root path references, by
+# Top-level definitions nothing on a root path references, by
 # ``module.name`` under the package.
 NO_CALLER_YET = {
     "lake.query_pandas": ENTRY_POINT,
@@ -67,18 +67,6 @@ NO_CALLER_YET = {
     "operators.dedup.exact_duplicate_groups": REFERENCE,
     "operators.dedup.word_shingles": REFERENCE,
     "operators.text.fingerprint": REFERENCE,
-    "operators.bpe.tokenizer_refresh": NEXT_CUT,
-    "operators.classify.load_nb_model": NEXT_CUT,
-    "operators.classify.save_nb_model": NEXT_CUT,
-    "operators.dedup.exact_dedup": NEXT_CUT,
-    "operators.linkage.fuzzy_dedupe": NEXT_CUT,
-    "operators.multimodal.sample_frames": NEXT_CUT,
-    "operators.sampling.hash_sample": NEXT_CUT,
-    "operators.scd.scd2_lookup": NEXT_CUT,
-    "operators.similarity.build_ivf_index": NEXT_CUT,
-    "operators.similarity.ivf_probe": NEXT_CUT,
-    "operators.sketches.hash_sample_estimate": NEXT_CUT,
-    "operators.sketches.hash_sample_merge": NEXT_CUT,
 }
 
 
@@ -181,8 +169,9 @@ def _references(node: ast.AST, docstrings: set[int]) -> set[str]:
 
 
 def _caller_less() -> set[str]:
-    """``module.name`` of every public top-level definition of the
-    package that no package module or root file references."""
+    """``module.name`` of every top-level definition of the package,
+    private ones too (only dunder names are skipped), that no package
+    module or root file references."""
     defs = {}
     referenced = set()
     package_files = {path: name for name, path in _package_modules().items()}
@@ -207,7 +196,7 @@ def _caller_less() -> set[str]:
                 and isinstance(
                     stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
                 )
-                and not stmt.name.startswith("_")
+                and not (stmt.name.startswith("__") and stmt.name.endswith("__"))
             ):
                 module = package_files[path].removeprefix(f"{PACKAGE}.")
                 defs[f"{module}.{stmt.name}"] = stmt.name
@@ -242,7 +231,6 @@ def test_every_public_definition_has_a_caller():
         ENTRY_POINT,
         WAITS_FOR_ITEM_1,
         REFERENCE,
-        NEXT_CUT,
     }
     found = _caller_less()
     no_caller = sorted(found - NO_CALLER_YET.keys())

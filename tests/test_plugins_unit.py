@@ -233,6 +233,52 @@ class TestGsuiteLogin:
         result = GsuiteLogin().on_event(event, {})
         assert result["details"]["suspicious"] is True
 
+    # The summary is the reference's mustache template
+    # "{{details.user}} {{details.events.0.name}} from IP
+    # {{details.sourceipaddress}}" (gsuite_login.py:43).
+    @staticmethod
+    def summary(**details):
+        event = {
+            "details": {
+                "kind": "admin#reports#activity",
+                "id": "x",
+                "etag": "e",
+                **details,
+            }
+        }
+        return GsuiteLogin().on_event(event, {})["summary"]
+
+    def test_summary_reference_template(self):
+        assert (
+            self.summary(
+                actor={"email": "alice@example.com"},
+                ipaddress="198.51.100.7",
+                events=[{"name": "login_success"}, {"name": "logout"}],
+            )
+            == "alice@example.com login_success from IP 198.51.100.7"
+        )
+
+    def test_summary_missing_paths_render_empty(self):
+        assert self.summary() == "  from IP "
+        assert self.summary(user=None, events=None) == "  from IP "
+        assert self.summary(events=[{}], user="u") == "u  from IP "
+        assert self.summary(events="login") == "  from IP "
+
+    def test_summary_list_index_out_of_range(self):
+        assert self.summary(events=[]) == "  from IP "
+        assert self.summary(events=[{"name": "a"}, {"name": "b"}]) == " a from IP "
+
+    def test_summary_html_escaping(self):
+        assert (
+            self.summary(user="a<b&c", sourceipaddress='"x">')
+            == 'a&lt;b&amp;c  from IP "x"&gt;'
+        )
+
+    def test_summary_numbers_and_booleans_stringify(self):
+        assert self.summary(user=0, events=[{"name": False}]) == "0 False from IP "
+        assert self.summary(sourceipaddress=True) == "  from IP True"
+        assert self.summary(user=[1, "<"]) == "[1, '&lt;']  from IP "
+
 
 # ---------------------------------------------------------------- router
 

@@ -14,7 +14,7 @@ from defenda_data_lake_spark.utils.json_tree import (
     deep_merge,
     enum_keys,
     get_by_path,
-    lowercase_keys,
+    lowercase_keys_into,
 )
 
 keys = st.text(string.ascii_letters + "_-@#", min_size=1, max_size=8)
@@ -38,8 +38,8 @@ json_objects = st.dictionaries(keys, json_values, max_size=6)
 @given(json_objects)
 @settings(max_examples=200, deadline=None)
 def test_lowercase_keys_idempotent_and_preserves_structure(obj):
-    once = lowercase_keys(obj)
-    assert lowercase_keys(once) == once
+    once = lowercase_keys_into(obj, set())
+    assert lowercase_keys_into(once, set()) == once
     assert all(k == k.lower() for k in enum_keys(once))
 
 
@@ -66,10 +66,11 @@ def test_split_concatenated_json_roundtrip(objs):
 # Blob tokens for the extract_events accounting property.  Numbers and
 # literals need whitespace before the next value ("1" "2" reads "12"),
 # objects, arrays and strings do not.  Garbage starts with a character
-# no JSON value starts with and holds no "{" or whitespace; text that
-# does not decode runs to the next "{", so garbage is drawn only before
-# an object or at the end of the blob (test_lake_e2e pins what it
-# swallows otherwise).
+# no JSON value starts with and holds no "{" or whitespace.  Text that
+# does not decode ends where a value decodes after whitespace, or at
+# the next "{", so garbage may precede any value: an object directly,
+# any other value after at least one whitespace character
+# (test_lake_e2e pins what garbage swallows without it).
 _GARBAGE_HEAD = "abcdeghijklmopqrsuvwxyz!#$%&()*+,./:;<=>?@\\^_`|~]}"
 _GARBAGE_TAIL = "".join(
     c for c in string.printable if c != "{" and c not in string.whitespace
@@ -91,7 +92,7 @@ values = st.one_of(
 separators = st.text(" \t\n\r", max_size=3)
 segments = st.one_of(
     st.tuples(values).map(lambda t: [("value", t[0])]),
-    st.tuples(garbage, top_objects).map(
+    st.tuples(garbage, values).map(
         lambda t: [("garbage", t[0]), ("value", t[1])]
     ),
 )
@@ -123,7 +124,10 @@ def test_extract_events_accounts_for_every_value(tokens, tail, data):
             text = json.dumps(token, indent=data.draw(st.sampled_from([None, 1])))
             records += token if isinstance(token, list) else [token]
         nxt = tokens[i + 1][1] if i + 1 < len(tokens) else None
-        delimited = isinstance(nxt, dict) or isinstance(token, (dict, list, str))
+        if kind == "garbage":
+            delimited = i + 1 == len(tokens) or isinstance(nxt, dict)
+        else:
+            delimited = isinstance(nxt, dict) or isinstance(token, (dict, list, str))
         sep = data.draw(separators if delimited else st.text(" \n", min_size=1))
         blob += text + sep
         if kind == "garbage":

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from defenda_data_lake_spark.operators.sampling import (
     BUCKETS,
-    hash_sample,
     stratified_hash_sample,
     with_split,
 )
@@ -17,10 +16,17 @@ def _docs(spark):
     )
 
 
+def _hash_sample(df, fraction, salt):
+    """One rate for every stratum: a plain id-hash sample."""
+    return stratified_hash_sample(
+        df, "doc_id", "src", {}, default_fraction=fraction, salt=salt
+    )
+
+
 def test_hash_sample_is_deterministic_and_sized(spark):
     df = _docs(spark)
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.2, salt="s").collect()}
-    b = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.2, salt="s").collect()}
+    a = {r["doc_id"] for r in _hash_sample(df, 0.2, "s").collect()}
+    b = {r["doc_id"] for r in _hash_sample(df, 0.2, "s").collect()}
     assert a == b  # same rows every run
     assert 0.15 < len(a) / 2000 < 0.25  # close to the asked fraction
 
@@ -29,15 +35,15 @@ def test_hash_sample_is_nested(spark):
     """A smaller fraction must be a subset of a larger one (same salt) —
     the property that makes hash sampling resumable/incremental."""
     df = _docs(spark)
-    small = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.1, salt="s").collect()}
-    big = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.3, salt="s").collect()}
+    small = {r["doc_id"] for r in _hash_sample(df, 0.1, "s").collect()}
+    big = {r["doc_id"] for r in _hash_sample(df, 0.3, "s").collect()}
     assert small <= big
 
 
 def test_salt_redraws_assignment(spark):
     df = _docs(spark)
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.2, salt="fold1").collect()}
-    b = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.2, salt="fold2").collect()}
+    a = {r["doc_id"] for r in _hash_sample(df, 0.2, "fold1").collect()}
+    b = {r["doc_id"] for r in _hash_sample(df, 0.2, "fold2").collect()}
     assert a != b
 
 

@@ -18,7 +18,6 @@ from defenda_data_lake_spark.operators.text import (
 from defenda_data_lake_spark.operators.multimodal import (
     as_media_table,
     decode_media,
-    sample_frames,
 )
 
 
@@ -174,9 +173,6 @@ def test_media_roundtrip(spark):
     assert decoded[1]["width"] == again[1]["width"]
     assert 16 <= decoded[1]["width"] < 80
     assert len(decoded[1]["feature"]) > 0
-
-    frames = sample_frames(media, every_n=1).groupBy("media_id").count().collect()
-    assert all(r["count"] >= 1 for r in frames)
 
 
 def test_decode_media_real_path_raises(spark):
@@ -399,125 +395,6 @@ def test_resize_images_fake_is_plumbing_only(spark):
 
     with pytest.raises(ValueError):
         resize_images(media, 0, 32)
-
-
-def test_png_stream_splitter_structural():
-    """_iter_png_stream walks chunk structure (not signature search —
-    the 8-byte signature can legitimately occur inside IDAT data)."""
-    from defenda_data_lake_spark.operators.multimodal import (
-        _encode_png,
-        _iter_png_stream,
-        _png_dims,
-    )
-
-    a = _encode_png(3, 2, 3, bytes(range(18)))
-    b = _encode_png(5, 4, 1, bytes(range(20)))
-    parts = list(_iter_png_stream(a + b + a))
-    assert [(len(p)) for p in parts] == [len(a), len(b), len(a)]
-    assert [_png_dims(p) for p in parts] == [(3, 2), (5, 4), (3, 2)]
-
-
-def _ffmpeg_missing():
-    import shutil
-
-    return shutil.which("ffmpeg") is None
-
-
-@pytest.mark.integration
-@pytest.mark.skipif(_ffmpeg_missing(), reason="ffmpeg not on PATH")
-def test_sample_frames_real_ffmpeg(spark):
-    """Real frame sampling end-to-end: synthesize a 10-frame test video
-    with ffmpeg, sample every 4th frame, decode dims from the PNGs."""
-    import subprocess
-
-    from defenda_data_lake_spark.operators.multimodal import (
-        _decode_png,
-        sample_frames,
-    )
-
-    gen = subprocess.run(
-        [
-            "ffmpeg", "-v", "error",
-            "-f", "lavfi", "-i", "testsrc=duration=1:size=64x48:rate=10",
-            "-f", "mpegts", "-vcodec", "mpeg2video", "pipe:1",
-        ],
-        capture_output=True,
-    )
-    assert gen.returncode == 0, gen.stderr[-300:]
-    media = spark.createDataFrame(
-        [(1, bytearray(gen.stdout))], "media_id long, content binary"
-    )
-    rows = sample_frames(media, every_n=4, fake=False).collect()
-    assert [r["frame_index"] for r in sorted(rows, key=lambda r: r["frame_index"])] == [0, 4, 8]
-    for r in rows:
-        assert (r["width"], r["height"]) == (64, 48)
-        w, h, ch, _px = _decode_png(bytes(r["frame_png"]))
-        assert (w, h) == (64, 48)
-
-
-def test_ivf_index_probe_matches_inline(spark, tmp_path, sf_dir):
-    """A persisted build_ivf_index + ivf_probe must return exactly the
-    rows the inline ivf_topk computes on the same corpus, and the probe
-    scan must be PARTITION-PRUNED to the probed lists (the index's
-    whole point: probing 1 of L lists reads ~1/L of the files)."""
-    from defenda_data_lake_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe,
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx)
-
-    inline = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cosine"], 9), r["rank"])
-        for r in ivf_topk(emb, queries, k=10, n_probe=1).collect()
-    )
-    probed = ivf_probe(spark, idx, queries, k=10, n_probe=1)
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cosine"], 9), r["rank"])
-        for r in probed.collect()
-    )
-    assert got == inline and len(got) > 0
-
-    # the probe's isin filter must reach the scan as a PARTITION
-    # filter (the index directories make it prune whole files)
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    scan = next(
-        l for l in plan.splitlines()
-        if "FileScan parquet" in l and "PartitionFilters" in l
-    )
-    assert "__ivf_list" in scan.split("PartitionFilters")[1].split("]")[0]
-    # and the pruning claim is non-vacuous: the index holds >1 list
-    all_lists = (
-        spark.read.parquet(f"{idx}/corpus")
-        .select("__ivf_list").distinct().count()
-    )
-    assert all_lists > 1
-
-
-def test_ivf_probe_empty_queries_and_n_probe(spark, tmp_path, sf_dir):
-    from defenda_data_lake_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe,
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx)
-    none = ivf_probe(
-        spark, idx, emb.filter(F.col("vec_id") < 0), k=5
-    )
-    assert none.collect() == []
-    # widening n_probe can only add candidates: every n_probe=1 hit
-    # set is a subset of the n_probe=2 candidate pool's coverage
-    q = emb.filter(F.col("vec_id") < 3)
-    r1 = ivf_probe(spark, idx, q, k=50, n_probe=1).count()
-    r2 = ivf_probe(spark, idx, q, k=50, n_probe=2).count()
-    assert r2 >= r1
 
 
 def test_semantic_contamination_matches_numpy(spark, sf_dir):

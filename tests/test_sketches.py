@@ -321,40 +321,6 @@ def test_hll_merge_register_identical(spark):
     )
 
 
-def test_hash_sample_estimate_accuracy(spark):
-    from defenda_data_lake_spark.operators.sketches import (
-        hash_sample_estimate,
-        hash_sample_sketch,
-    )
-
-    # 20k distinct at p=1/16 -> ~1250 sampled, stderr ~3%; assert 10%
-    df = spark.range(60000).select((F.col("id") % 20000).cast("string").alias("v"))
-    sk = hash_sample_sketch(df, "v", prefix_hex=1)
-    est = hash_sample_estimate(sk, prefix_hex=1).collect()[0]["distinct_estimate"]
-    assert abs(est - 20000) / 20000 < 0.10, est
-
-
-def test_hash_sample_merge_law_exact(spark):
-    from defenda_data_lake_spark.operators.sketches import (
-        hash_sample_merge,
-        hash_sample_sketch,
-    )
-
-    # merged per-part sketches must equal the direct sketch of the
-    # union ROW-FOR-ROW (not approximately) — the property that makes
-    # the sample a persistable incremental structure
-    a = spark.range(0, 8000).select(F.col("id").cast("string").alias("v"))
-    b = spark.range(4000, 12000).select(F.col("id").cast("string").alias("v"))
-    direct = hash_sample_sketch(a.unionByName(b), "v", prefix_hex=1)
-    merged = hash_sample_merge(
-        hash_sample_sketch(a, "v", prefix_hex=1),
-        hash_sample_sketch(b, "v", prefix_hex=1),
-    )
-    assert sorted(r["_hs_hash"] for r in direct.collect()) == sorted(
-        r["_hs_hash"] for r in merged.collect()
-    )
-
-
 def test_hash_sample_overlap_estimates(spark):
     from defenda_data_lake_spark.operators.sketches import (
         hash_sample_overlap,
@@ -381,7 +347,6 @@ def test_hash_sample_overlap_estimates(spark):
 
 def test_hash_sample_empty_and_nulls(spark):
     from defenda_data_lake_spark.operators.sketches import (
-        hash_sample_estimate,
         hash_sample_overlap,
         hash_sample_sketch,
     )
@@ -389,11 +354,7 @@ def test_hash_sample_empty_and_nulls(spark):
     empty = spark.range(0).select(F.col("id").cast("string").alias("v"))
     nulls = spark.range(100).select(F.lit(None).cast("string").alias("v"))
     for df in (empty, nulls):
-        sk = hash_sample_sketch(df, "v", prefix_hex=1)
-        assert (
-            hash_sample_estimate(sk, prefix_hex=1).collect()[0]["distinct_estimate"]
-            == 0
-        )
+        assert hash_sample_sketch(df, "v", prefix_hex=1).count() == 0
     row = hash_sample_overlap(
         hash_sample_sketch(empty, "v", prefix_hex=1),
         hash_sample_sketch(nulls, "v", prefix_hex=1),
