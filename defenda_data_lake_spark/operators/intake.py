@@ -49,12 +49,21 @@ def is_cloudtrail(filename: str) -> bool:
 # skipped between values: whitespace, and the byte-order mark a file may start with
 _WHITESPACE = re.compile(r"[\s\ufeff]*")
 # What a JSON value can start with, so text that cannot start one is
-# skipped without a failed decode: a failed decode costs time linear in
-# its offset into the blob (the error counts the lines before it).
+# skipped without a failed decode.
 _VALUE_START = r'[-0-9"\[{]|true|false|null|NaN|Infinity'
 _STARTS_VALUE = re.compile(_VALUE_START)
 _VALUE_AFTER_SPACE = re.compile(rf"(?<=\s)(?:{_VALUE_START})")
 _DECODER = json.JSONDecoder()
+# A failed ``raw_decode`` costs time linear in its offset into the string
+# it reads (the error counts the lines before it).  So a value further
+# into the blob than the window's length decodes in a copy of the window
+# that starts where the value does.  The window starts at ``_WINDOW``
+# characters and grows eightfold while the decode may have stopped for
+# want of the text past it: an unterminated string, or an error or a
+# top-level number within ``_MARGIN`` characters of its end (the longest
+# token, ``-Infinity``, and a ``\uXXXX`` escape are shorter).
+_WINDOW = 4096
+_MARGIN = 16
 
 # The value ``split_concatenated_json`` pairs with text that does not decode.
 UNPARSEABLE = object()
@@ -118,14 +127,31 @@ def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
 
 def _decode(text: str, pos: int) -> tuple[Any, int]:
     """``raw_decode`` at ``pos``, or ``(UNPARSEABLE, pos)`` when no
-    value decodes there."""
+    value decodes there.  A failure costs time linear in the text the
+    decoder read (see ``_WINDOW``), not in ``pos``."""
     if not _STARTS_VALUE.match(text, pos):
         return UNPARSEABLE, pos
-    try:
-        return _DECODER.raw_decode(text, pos)
-    # RecursionError: nesting deeper than the C scanner allows
-    except (json.JSONDecodeError, RecursionError):
-        return UNPARSEABLE, pos
+    size = _WINDOW
+    while True:
+        if pos < size:
+            window, base, whole = text, 0, True
+        else:
+            window, base = text[pos : pos + size], pos
+            whole = pos + size >= len(text)
+        try:
+            value, end = _DECODER.raw_decode(window, pos - base)
+        except json.JSONDecodeError as e:
+            if whole or (
+                e.pos < size - _MARGIN and not e.msg.startswith("Unterminated string")
+            ):
+                return UNPARSEABLE, pos
+        # nesting deeper than the C scanner allows
+        except RecursionError:
+            return UNPARSEABLE, pos
+        else:
+            if whole or end < size - _MARGIN or not isinstance(value, (int, float)):
+                return value, base + end
+        size *= 8
 
 
 def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:

@@ -28,6 +28,14 @@ overridden down for local testing):
   JVM's own ``PYTHONPATH``).  Other masters keep ``pyspark.daemon``: the
   daemon starts before any ``--py-files`` entry reaches ``sys.path``, so
   it would need the package installed on every executor.
+* Spark caches the classes it compiles for each plan's generated code;
+  ``spark.sql.codegen.cache.maxEntries`` caps that cache at 100 by
+  default.  The README queries, the lookups and the six ``detections``
+  rules of one long-lived session need about 136, and an LRU cycled
+  over more keys than it holds keeps none: at 100 every rule
+  recompiled its 12-13 classes (and the JIT recompiled them) on each
+  run.  ``get_spark`` sets the cap to 1000; a repeated query then
+  compiles nothing (``tests/test_codegen_reuse.py``).
 """
 
 from __future__ import annotations
@@ -112,6 +120,13 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # the compiled-class cache (a static conf; Spark's default is 100
+        # entries).  The README queries, the lookups and the six
+        # detections need about 136 entries; the cache is an LRU split
+        # into 4 segments, and a cyclic access pattern over more keys
+        # than an LRU holds evicts every key before its next use, so at
+        # 100 each rule recompiled its 12-13 classes on every run
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master.startswith("local"):
         # workers on this host: they can import the package from here.

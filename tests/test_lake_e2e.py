@@ -5,6 +5,7 @@ verbatim (reference README.md:89-136)."""
 import gzip
 import json
 import os
+import time
 
 import pytest
 
@@ -182,6 +183,25 @@ def test_is_cloudtrail():
     assert is_cloudtrail("path/to/999_CloudTrail_x.JSON.GZ")
     assert not is_cloudtrail("cloudtrail.json")
     assert not is_cloudtrail("")
+
+
+@pytest.mark.parametrize("line", ['{"a": }\n', 'log line "unterminated\n'])
+def test_extract_events_time_is_linear_in_malformed_lines(line):
+    """A value that does not decode costs what it spans, not its offset
+    into the blob: 4x the lines take under 8x the time (13-20x when the
+    failed decode counted the lines before it)."""
+
+    def best_of_3(n: int) -> float:
+        blob = line * n
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            list(extract_events(blob))
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    small, large = best_of_3(5000), best_of_3(20000)
+    assert large < 8 * small, (small, large)
 
 
 def test_split_concatenated_json():

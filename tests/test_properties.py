@@ -141,6 +141,35 @@ def test_extract_events_accounts_for_every_value(tokens, tail, data):
     assert got == want
 
 
+# Pieces of a blob for the windowed decode: values (escaped non-ASCII
+# text becomes ``\uXXXX``), strings longer than a window, values cut
+# short, garbage, and tokens whose end a window can cut.
+blob_pieces = st.one_of(
+    values.map(json.dumps),
+    values.map(lambda v: json.dumps(v, indent=1)),
+    st.text(max_size=120).map(lambda text: json.dumps({"s": text})),
+    st.tuples(values, st.integers(1, 40)).map(lambda t: json.dumps(t[0])[: t[1]]),
+    garbage,
+    st.sampled_from(["-Infinity", "NaN", "1.5e3", '"\\u00e9', '"a\\', "[[["]),
+)
+
+
+@given(st.lists(st.tuples(blob_pieces, separators), max_size=8), st.integers(17, 80))
+@settings(max_examples=300, deadline=None)
+def test_split_concatenated_json_windows_change_nothing(pieces, window):
+    """Decoding each value in a window of the blob splits the blob as
+    decoding it in the whole blob does, wherever the window ends."""
+    from unittest import mock
+
+    from defenda_data_lake_spark.operators import intake
+
+    blob = "".join(piece + sep for piece, sep in pieces)
+    with mock.patch.object(intake, "_WINDOW", len(blob) + 1):
+        whole = list(split_concatenated_json(blob))
+    with mock.patch.object(intake, "_WINDOW", window):
+        assert list(split_concatenated_json(blob)) == whole
+
+
 @given(st.integers(1, 2**31))
 @settings(max_examples=200, deadline=None)
 def test_to_utc_epoch_seconds(epoch):

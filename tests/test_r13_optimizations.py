@@ -161,21 +161,22 @@ def test_semdedup_max_group_bytes_parity(spark):
 # --------------------------------------------- symmetrize (explode form)
 
 
-def _exchange_nodes(df) -> int:
-    import io
-    from contextlib import redirect_stdout
+def _plan_nodes(plan) -> list:
+    """Every node of a Catalyst plan tree (a py4j handle), root first."""
+    nodes = [plan]
+    children = plan.children()
+    for i in range(children.size()):
+        nodes += _plan_nodes(children.apply(i))
+    return nodes
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    # after an action, AQE's formatted output appends the initial plan
-    # as a second section — count the current plan's nodes only
-    txt = buf.getvalue().split("== Initial Plan ==")[0]
-    return sum(
-        1
-        for line in txt.splitlines()
-        if line.strip().startswith("(") and "Exchange" in line
-    )
+
+def _exchange_nodes(df) -> int:
+    """Exchanges in ``df``'s physical plan as first planned, before
+    adaptive execution turns them into query stages."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    return sum(node.nodeName() == "Exchange" for node in _plan_nodes(plan))
 
 
 def test_symmetrize_explode_form(spark):
@@ -192,22 +193,13 @@ def test_symmetrize_explode_form(spark):
     rows = [(1, 2), (2, 1), (1, 2), (3, 3), (4, 1), (2, 5), (5, 2)]
     df = spark.createDataFrame(rows, ["a", "b"])
 
-    # plan shape on un-executed frames (an executed AQE plan rewrites
-    # Exchange into ShuffleQueryStage nodes)
     plain = symmetrize(df, src="a", dst="b")
     assert _exchange_nodes(plain) == 1
-    # one Generate (explode) node, and the source scan appears once —
-    # the union form scanned the input subtree twice
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        plain.explain("formatted")
-    txt = buf.getvalue().split("== Initial Plan ==")[0]
-    details = [line for line in txt.splitlines() if line.strip().startswith("(")]
-    assert sum(1 for line in details if "Generate" in line) == 1
-    assert sum(1 for line in details if "Scan ExistingRDD" in line) == 1
+    # one Generate (explode) node, and the source appears once as the
+    # plan's only leaf — the union form scanned the input subtree twice
+    optimized = plain._jdf.queryExecution().optimizedPlan()
+    assert optimized.collectLeaves().size() == 1
+    assert sum(n.nodeName() == "Generate" for n in _plan_nodes(optimized)) == 1
 
     expect = set()
     for a, b in rows:
