@@ -20,10 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from defenda_data_lake_spark.operators.intake import (
-    read_blob_events,
-    read_ndjson_events,
-)
+from defenda_data_lake_spark.operators.intake import ndjson_intake
 from defenda_data_lake_spark.operators.pipeline import (
     STATUS_OK,
     add_partition_columns,
@@ -94,15 +91,16 @@ def ingest_batch(
     """Batch-ingest landed files into ``defenda_data_lake.events``
     through :func:`land`.
 
-    ``mode='blob'`` uses the whole-file intake (concatenated JSON,
-    CloudTrail bundles); ``mode='ndjson'`` uses the splittable
-    line-based scan; any other mode raises ``ValueError`` before
+    Every mode lands the records ``intake.records`` finds in each text
+    read; ``mode`` only chooses the text: ``'blob'`` reads whole files
+    (one task per file; for values that span lines, such as
+    pretty-printed CloudTrail bundles), ``'ndjson'`` reads lines (the
+    splittable scan).  Any other mode raises ``ValueError`` before
     anything is read.  Returns ``spark.table(EVENTS_TABLE)``, the whole
     events table after the append."""
-    readers = {"blob": read_blob_events, "ndjson": read_ndjson_events}
-    if mode not in readers:
+    if mode not in ("blob", "ndjson"):
         raise ValueError(f"mode must be 'blob' or 'ndjson'; got {mode!r}")
-    raw = readers[mode](spark, input_path)
+    raw = ndjson_intake(spark.read.text(input_path, wholetext=(mode == "blob")))
     land(spark, normalize_df(raw, raw_col="raw", source_col="source"), quarantine_path)
     return spark.table(EVENTS_TABLE)
 

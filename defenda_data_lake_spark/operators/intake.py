@@ -1,26 +1,30 @@
 """Intake operators: turn raw landed files into a DataFrame of
-one-JSON-string-per-event records, ready for the plugin pipeline.
+``(raw, source)`` text rows, and each text into the records the plugin
+pipeline runs on.
 
 Re-expresses the reference's S3-relay lambda dataflow (reference
 lambdas/s3_to_firehose.py:38-126, SURVEY.md A4-A10):
 
 * gzip handling — Spark's text source decompresses ``.gz`` by codec
   extension natively (A5);
-* concatenated-JSON splitting (A6, reference utils/helpers.py:14-33) —
-  where the reference's brace count keeps only ``{...}`` blocks, this
-  reads successive top-level values of any type and passes text that
-  does not decode on raw, so every value lands or is quarantined;
-* CloudTrail ``Records`` unroll, top-level-list unroll, bare-dict wrap
-  (A7-A9);
-* source tagging by filename (A10, reference s3_to_firehose.py:65-69).
+* source tagging by filename, JVM-side (A10, reference
+  s3_to_firehose.py:65-69);
+* text → records (``records``), which the normalizer runs on every
+  input row whatever the intake: concatenated-JSON splitting (A6,
+  reference utils/helpers.py:14-33) — where the reference's brace count
+  keeps only ``{...}`` blocks, this reads successive top-level values
+  of any type and passes text that does not decode on raw, so every
+  value lands or is quarantined — then CloudTrail ``Records`` unroll,
+  top-level-list unroll, bare-dict wrap (A7-A9).
 
-Scale notes: ``read_ndjson_events`` is the 100 TB path — a line-based
-text scan is splittable (many tasks per large file; gzip is the
-exception, one stream per file, same as the reference's storage).
-``read_blob_events`` (wholetext) is the compatibility fallback for
-non-NDJSON blobs; each file is one task, so it should only ever see the
-small malformed-upload tail, not the main firehose output.  Both are
-narrow (shuffle-free) scans.
+Scale notes: the text scan is the only intake stage; splitting runs in
+the normalizer's one Python stage.  A line scan (``ingest_batch``'s
+``mode="ndjson"``, the stream) is the 100 TB path — it is splittable
+(many tasks per large file; gzip is the exception, one stream per file,
+same as the reference's storage).  A whole-file scan (``mode="blob"``)
+is for values that span lines; each file is one task, so it should only
+ever see the small malformed-upload tail, not the main firehose output.
+Both are narrow (shuffle-free) scans.
 """
 
 from __future__ import annotations
@@ -29,10 +33,13 @@ import json
 import re
 from typing import Any, Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+try:  # optional fast path: ~4x stdlib json parse
+    import orjson as _orjson
+except Exception:  # pragma: no cover - environment without orjson
+    _orjson = None
 
 # Reference filename convention for CloudTrail drops
 # (reference utils/helpers.py:10-12), shared by the Python and JVM taggers.
@@ -71,12 +78,18 @@ UNPARSEABLE = object()
 
 def _block_end(text: str, start: int) -> int:
     """Index just past the ``}`` that closes the ``{`` at ``start``,
-    ignoring braces inside JSON strings; ``len(text)`` when the block
-    never closes."""
+    ignoring braces inside JSON strings.  A block still open at the next
+    line that begins with ``{`` ends just before that line (or at the
+    end of the text): a record cut short in NDJSON does not swallow the
+    records after it.  Inner lines of a pretty-printed document are
+    indented, so a cut one stays one block."""
+    limit = text.find("\n{", start)
+    if limit == -1:
+        limit = len(text)
     depth = 0
     in_string = False
     escaped = False
-    for i in range(start, len(text)):
+    for i in range(start, limit):
         ch = text[i]
         if in_string:
             if escaped:
@@ -93,7 +106,7 @@ def _block_end(text: str, start: int) -> int:
             depth -= 1
             if depth == 0:
                 return i + 1
-    return len(text)
+    return limit
 
 
 def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
@@ -102,10 +115,11 @@ def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
     (reference utils/helpers.py:14-33, which keeps ``{...}`` blocks
     only).  ``slice`` is the exact text of the value.  Text that does
     not decode comes as its own slice paired with ``UNPARSEABLE``: a
-    malformed ``{...}`` block up to its closing brace (or the end, when
-    it never closes), any other text up to the first later position
-    that follows whitespace and from which a value decodes, or up to
-    the next ``{``, whichever comes first.  Every character but the
+    malformed ``{...}`` block up to its closing brace (or, when it never
+    closes, up to the next line that begins with ``{``), any other text
+    up to the first later position that follows whitespace and from
+    which a value decodes, or up to the next ``{``, whichever comes
+    first.  Every character but the
     whitespace between values is in exactly one slice."""
     pos = _WHITESPACE.match(text).end()
     while pos < len(text):
@@ -154,66 +168,53 @@ def _decode(text: str, pos: int) -> tuple[Any, int]:
         size *= 8
 
 
-def extract_events(blob: str, filename: str = "") -> Iterator[tuple[str, str]]:
-    """Turn one raw file blob into ``(event_json, source)`` pairs with
-    the reference's parse/unroll/tag semantics
-    (reference s3_to_firehose.py:100-126).  Text that does not parse
-    is yielded as-is (before the parsed values), and a value that
-    parses but is not an object (a bare ``42``, a scalar in a list or
-    in ``Records``) is yielded as its JSON text, so the pipeline
-    quarantines either as ``ProcessingFailed`` with its payload instead
-    of losing it — as the NDJSON path does."""
-    source = "cloudtrail" if is_cloudtrail(filename) else DEFAULT_SOURCE
-    chunks = []
-    for text, value in split_concatenated_json(blob):
-        if value is UNPARSEABLE:
-            yield text, source
-        else:
-            chunks.append(value)
-    for parsed in chunks:
-        if isinstance(parsed, dict) and isinstance(parsed.get("Records"), list):
-            records = parsed["Records"]
-        elif isinstance(parsed, list):
-            records = parsed
-        else:
-            records = [parsed]
-        for record in records:
-            if isinstance(record, dict):
-                # the reference stamps the intake source onto every
-                # record, overwriting any existing value
-                # (s3_to_firehose.py:107,114,120,125)
-                record["source"] = source
-            yield json.dumps(record), source
+def _loads(raw) -> Any:
+    """Parse with orjson when available, falling back to stdlib json for
+    inputs orjson rejects but the reference accepts (NaN/Infinity)."""
+    if _orjson is not None:
+        try:
+            return _orjson.loads(raw)
+        except Exception:
+            pass
+    return json.loads(raw)
 
 
-RAW_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("raw", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-    ]
-)
+def _unroll(raw: str, value: Any) -> Iterable[tuple[str, Any]]:
+    """The records of one value (reference s3_to_firehose.py:100-126):
+    a dict's ``Records`` list and a list unroll, each record with
+    ``json.dumps(record)`` as its raw; any other value, ``UNPARSEABLE``
+    too, is one record with ``raw`` as its raw."""
+    if isinstance(value, dict):
+        bundle = value.get("Records")
+        if not isinstance(bundle, list):
+            return ((raw, value),)
+    elif isinstance(value, list):
+        bundle = value
+    else:
+        return ((raw, value),)
+    return [(json.dumps(record), record) for record in bundle]
 
 
-def _blob_batches(
-    batches: Iterable[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for batch in batches:
-        rows = []
-        for blob, fname in zip(batch["value"], batch["file"]):
-            rows.extend(extract_events(blob, fname))
-        yield pd.DataFrame(rows, columns=["raw", "source"])
-
-
-def read_blob_events(spark: SparkSession, path: str) -> DataFrame:
-    """Whole-file intake for arbitrary blobs (concatenated JSON,
-    CloudTrail bundles, multi-line JSON).  One task per file — use for
-    the malformed tail, not the main NDJSON stream."""
-    df = (
-        spark.read.text(path, wholetext=True)
-        .withColumn("file", F.input_file_name())
-        .select("value", "file")
-    )
-    return df.mapInPandas(_blob_batches, schema=RAW_EVENT_SCHEMA)
+def records(text: str | None) -> Iterable[tuple[str | None, Any]]:
+    """``(raw, value)`` for each record of one input text (a line, a
+    whole file, a stream record), in text order: the one text → records
+    rule of every intake.  Text that parses as one value is that value,
+    with the whole text as its raw; other text is read value by value
+    (``split_concatenated_json``).  A ``Records`` bundle or a list
+    unrolls.  A NULL text is ``(None, UNPARSEABLE)``, which the pipeline
+    quarantines as ``ProcessingFailed`` like text that does not decode;
+    whitespace-only text has no records."""
+    if text is None:
+        return ((None, UNPARSEABLE),)
+    try:
+        value = _loads(text)
+    except (ValueError, RecursionError):
+        return (
+            record
+            for raw, value in split_concatenated_json(text)
+            for record in _unroll(raw, value)
+        )
+    return _unroll(text, value)
 
 
 def decode_firehose_records(
@@ -226,9 +227,12 @@ def decode_firehose_records(
     NULL per record, and ``try_validate_utf8`` (not ``decode``, which
     raises MALFORMED_CHARACTER_CODING under ANSI) so valid base64 of
     invalid UTF-8 also decodes to NULL per record — either way the
-    downstream pipeline quarantines NULL raw as ProcessingFailed,
-    matching the reference's per-record failure handling
-    (processor.py:58-66) instead of aborting the whole batch."""
+    normalizer still quarantines a NULL raw as one ProcessingFailed row
+    (``records(None)``), matching the reference's per-record failure
+    handling (processor.py:58-66) instead of aborting the whole batch.
+    A decoded payload is split like any other intake text: a list or a
+    ``Records`` bundle unrolls, where the reference's processor fails
+    the whole record."""
     cols = [
         F.try_validate_utf8(
             F.try_to_binary(F.col(data_col), F.lit("base64")).cast("string")
@@ -240,10 +244,10 @@ def decode_firehose_records(
 
 
 def ndjson_intake(lines: DataFrame) -> DataFrame:
-    """A text scan's ``value`` lines → ``(raw, source)`` rows: blank
-    lines dropped, ``source`` tagged from the file name JVM-side.  The
-    one NDJSON intake expression, shared by the batch scan and the
-    streaming ``FileLandingSource``."""
+    """A text scan's ``value`` rows (lines, or whole files) →
+    ``(raw, source)`` rows: blank rows dropped, ``source`` tagged from
+    the file name JVM-side.  The one file intake expression, shared by
+    both batch modes and the streaming ``FileLandingSource``."""
     is_cloudtrail_file = F.input_file_name().rlike("(?i)" + _CLOUDTRAIL_PATTERN)
     return lines.filter(F.trim(F.col("value")) != "").select(
         F.col("value").alias("raw"),

@@ -39,24 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from defenda_data_lake_spark.operators.intake import records
 from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA, SHELL_FIELDS
 from defenda_data_lake_spark.utils.json_tree import enum_keys
-
-try:  # optional fast path: ~4x stdlib json for parse/serialize
-    import orjson as _orjson
-except Exception:  # pragma: no cover - environment without orjson
-    _orjson = None
-
-
-def _loads(raw) -> Any:
-    """Parse with orjson when available, falling back to stdlib json for
-    inputs orjson rejects but the reference accepts (NaN/Infinity)."""
-    if _orjson is not None:
-        try:
-            return _orjson.loads(raw)
-        except Exception:
-            pass
-    return json.loads(raw)
 
 
 #: one pre-built encoder: ``json.dumps(..., separators=...)`` constructs
@@ -72,8 +57,8 @@ def _dumps(value: Any) -> str:
     of raising, so the fallback never fires and detail values the
     reference preserves (stdlib emits ``NaN``) would be corrupted; one
     serializer also keeps the details encoding byte-identical across
-    hosts with and without orjson.  Parsing (``_loads``) is where the
-    orjson win is anyway."""
+    hosts with and without orjson.  Parsing (``intake._loads``) is where
+    the orjson win is anyway."""
     return _JSON_ENCODE(value)
 
 
@@ -434,31 +419,31 @@ def _make_normalizer(
                 if "source" in batch.columns
                 else [None] * len(batch)
             )
-            for raw, source in zip(batch["raw"].tolist(), sources):
-                raw_append(raw)
-                try:
-                    parsed = _loads(raw)
-                    if not isinstance(parsed, dict):
-                        raise ValueError("event is not a JSON object")
-                    if source:
-                        # intake source tag wins (reference
-                        # s3_to_firehose.py:107,114,120,125)
-                        parsed["source"] = source
-                    result = run_pipeline(parsed, plugins, presorted=True)
-                except Exception:
-                    st_append(STATUS_FAILED)
-                    for _, append in shell_appends:
-                        append(None)
-                    continue
-                if result is None:
-                    st_append(STATUS_DROPPED)
-                    for _, append in shell_appends:
-                        append(None)
-                else:
-                    st_append(STATUS_OK)
-                    shell = _shell_row(result)
-                    for c, append in shell_appends:
-                        append(shell[c])
+            for text, source in zip(batch["raw"].tolist(), sources):
+                for raw, parsed in records(text):
+                    raw_append(raw)
+                    try:
+                        if not isinstance(parsed, dict):
+                            raise ValueError("event is not a JSON object")
+                        if source:
+                            # intake source tag wins (reference
+                            # s3_to_firehose.py:107,114,120,125)
+                            parsed["source"] = source
+                        result = run_pipeline(parsed, plugins, presorted=True)
+                    except Exception:
+                        st_append(STATUS_FAILED)
+                        for _, append in shell_appends:
+                            append(None)
+                        continue
+                    if result is None:
+                        st_append(STATUS_DROPPED)
+                        for _, append in shell_appends:
+                            append(None)
+                    else:
+                        st_append(STATUS_OK)
+                        shell = _shell_row(result)
+                        for c, append in shell_appends:
+                            append(shell[c])
             yield pd.DataFrame(data, columns=columns)
 
     return normalize_batches
@@ -470,10 +455,11 @@ def normalize_df(
     source_col: str | None = None,
     plugin_factory: Callable[[], list[Plugin]] = default_plugins,
 ) -> DataFrame:
-    """Run the plugin pipeline over a DataFrame of raw JSON event
-    strings.  Returns the shell columns plus ``_status``/``_raw``
-    (filter ``_status = 'Ok'`` for the good stream; the rest is the
-    quarantine stream, reference processor.py:59-76).
+    """Run the plugin pipeline over a DataFrame of raw JSON texts, each
+    split into records by ``intake.records`` (one row per record).
+    Returns the shell columns plus ``_status``/``_raw`` (filter
+    ``_status = 'Ok'`` for the good stream; the rest is the quarantine
+    stream, reference processor.py:59-76).
 
     ``source_col``, when given, stamps each event's ``source`` before
     the pipeline runs (the reference's intake tagging)."""

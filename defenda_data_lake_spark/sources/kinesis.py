@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from defenda_data_lake_spark.sources._errors import is_missing_connector
+from defenda_data_lake_spark.sources._errors import load_connector
 
 _CONNECTOR_HINT = (
     "the Kinesis connector is not on the classpath; add the "
@@ -69,18 +69,5 @@ class KinesisSource:
         return opts
 
     def load(self, spark: SparkSession) -> DataFrame:
-        reader = spark.readStream.format("aws-kinesis")
-        for key, value in self.options().items():
-            reader = reader.option(key, value)
-        try:
-            records = reader.load()
-        except Exception as exc:
-            # substitute the actionable hint ONLY for the missing-JAR
-            # signature; any other failure (bad option value, malformed
-            # offsets, auth) is a real config error whose own message is
-            # the actionable one — mislabeling it "add the connector"
-            # sends the user down the wrong path
-            if is_missing_connector(exc):
-                raise RuntimeError(_CONNECTOR_HINT) from exc
-            raise
+        records = load_connector(spark, "aws-kinesis", self.options(), _CONNECTOR_HINT)
         return records.select(F.col("data").cast("string").alias("raw"))

@@ -3,10 +3,12 @@
 The reference's stream is Kinesis Firehose with a 60 s / 1 MB delivery
 buffer and a transform lambda per batch (reference main.tf:616-631,
 processor.py:17-84).  Here a file-landing prefix stands in for the
-delivery stream (SURVEY.md §3.1 re-trace): producers drop NDJSON (or
-arbitrary JSON blobs) into the landing path; a 60 s processing-time
-trigger micro-batch matches the Firehose buffer-latency floor
-(BASELINE.md).
+delivery stream (SURVEY.md §3.1 re-trace): producers drop NDJSON into
+the landing path; a 60 s processing-time trigger micro-batch matches
+the Firehose buffer-latency floor (BASELINE.md).  The stream reads
+lines, and each line lands the records batch intake finds in it
+(``intake.records``: several values, a list, a ``Records`` bundle); a
+value that spans lines needs batch ``ingest_batch(mode="blob")``.
 
 Semantics preserved:
 

@@ -16,10 +16,14 @@ from defenda_data_lake_spark.operators.pipeline import STATUS_OK, normalize_df
 
 def test_decode_firehose_records(spark):
     """The Firehose transform path: base64 payloads -> plugin pipeline
-    (reference processor.py:25-28)."""
+    (reference processor.py:25-28).  A payload goes through the same
+    splitter as a landed file: a list or a ``Records`` bundle unrolls,
+    where the reference's processor fails the whole record."""
     events = [
         {"srcaddr": "198.51.100.1", "start": "2014-12-14T04:06:50"},
         {"kind": "not-gsuite", "x": 1},
+        [{"summary": "a"}, {"summary": "b"}],
+        {"Records": [{"summary": "c"}, {"summary": "d"}]},
     ]
     rows = [(base64.b64encode(json.dumps(e).encode()).decode(),) for e in events]
     rows.append(("bm90IGpzb24=",))  # base64("not json") -> quarantine
@@ -28,7 +32,8 @@ def test_decode_firehose_records(spark):
     by_status = {}
     for r in out:
         by_status.setdefault(r["_status"], []).append(r)
-    assert len(by_status[STATUS_OK]) == 2
+    assert len(by_status[STATUS_OK]) == 6
+    assert {r["summary"] for r in by_status[STATUS_OK]} >= set("abcd")
     assert len(by_status["ProcessingFailed"]) == 1
     good = by_status[STATUS_OK][0]
     assert good["utctimestamp"] == "2014-12-14T04:06:50+00:00"

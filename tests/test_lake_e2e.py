@@ -12,8 +12,8 @@ import pytest
 from defenda_data_lake_spark.lake import EVENTS_TABLE, create_events_table, ingest_batch
 from defenda_data_lake_spark.operators.intake import (
     UNPARSEABLE,
-    extract_events,
     is_cloudtrail,
+    records,
     split_concatenated_json,
 )
 from tests.fixtures.events import ALL_FIXTURES, deep_copy
@@ -185,7 +185,13 @@ def test_is_cloudtrail():
     assert not is_cloudtrail("")
 
 
-@pytest.mark.parametrize("line", ['{"a": }\n', 'log line "unterminated\n'])
+# Event extraction, text -> records: ``intake.records``, which every
+# intake runs inside the normalizer.
+
+
+@pytest.mark.parametrize(
+    "line", ['{"a": }\n', 'log line "unterminated\n', '{"a": 1, "b\n']
+)
 def test_extract_events_time_is_linear_in_malformed_lines(line):
     """A value that does not decode costs what it spans, not its offset
     into the blob: 4x the lines take under 8x the time (13-20x when the
@@ -196,7 +202,7 @@ def test_extract_events_time_is_linear_in_malformed_lines(line):
         times = []
         for _ in range(3):
             t0 = time.perf_counter()
-            list(extract_events(blob))
+            list(records(blob))
             times.append(time.perf_counter() - t0)
         return min(times)
 
@@ -234,67 +240,83 @@ def test_split_handles_escaped_quotes():
 
 def test_extract_events_unrolls_records():
     blob = json.dumps({"Records": [{"a": 1}, {"b": 2}]})
-    events = list(extract_events(blob, "7_cloudtrail_x.json.gz"))
-    assert len(events) == 2
-    assert all(src == "cloudtrail" for _, src in events)
-    assert json.loads(events[0][0])["source"] == "cloudtrail"
+    assert list(records(blob)) == [('{"a": 1}', {"a": 1}), ('{"b": 2}', {"b": 2})]
 
 
 def test_extract_events_list_and_dict():
-    assert len(list(extract_events(json.dumps([{"a": 1}, {"b": 2}]), "x.json"))) == 2
-    assert len(list(extract_events(json.dumps({"a": 1}), "x.json"))) == 1
-    # an unparseable blob comes back raw, for the pipeline to quarantine
-    assert list(extract_events("not json at all", "x.json")) == [
-        ("not json at all", "s3json")
+    assert len(list(records(json.dumps([{"a": 1}, {"b": 2}])))) == 2
+    assert list(records(json.dumps({"a": 1}))) == [('{"a": 1}', {"a": 1})]
+    # text that parses as one value is that value, with the whole text as
+    # its raw
+    assert list(records('{"a": 1}\n')) == [('{"a": 1}\n', {"a": 1})]
+    # an unparseable text comes back raw, for the pipeline to quarantine
+    assert list(records("not json at all")) == [("not json at all", UNPARSEABLE)]
+    assert list(records(None)) == [(None, UNPARSEABLE)]
+    assert list(records('{"a": 1}{"b": ')) == [
+        ('{"a": 1}', {"a": 1}),
+        ('{"b": ', UNPARSEABLE),
     ]
-    assert list(extract_events('{"a": 1}{"b": ', "x.json")) == [
-        ('{"b": ', "s3json"),
-        ('{"a": 1, "source": "s3json"}', "s3json"),
+    assert list(records('{"a": }{"b": 2}')) == [
+        ('{"a": }', UNPARSEABLE),
+        ('{"b": 2}', {"b": 2}),
     ]
-    assert list(extract_events('{"a": }{"b": 2}', "x.json")) == [
-        ('{"a": }', "s3json"),
-        ('{"b": 2, "source": "s3json"}', "s3json"),
-    ]
-    assert list(extract_events(" \n", "x.json")) == []
-    assert list(extract_events('\ufeff{"a": 1}', "x.json")) == [
-        ('{"a": 1, "source": "s3json"}', "s3json")
-    ]
+    assert list(records(" \n")) == []
+    assert list(records("\t")) == []
+    assert list(records('\ufeff{"a": 1}')) == [('{"a": 1}', {"a": 1})]
     # values between and around objects are kept, whatever their type
-    assert list(extract_events('{"a": 1}\n42\n"x"\n', "x.json")) == [
-        ('{"a": 1, "source": "s3json"}', "s3json"),
-        ("42", "s3json"),
-        ('"x"', "s3json"),
+    assert list(records('{"a": 1}\n42\n"x"\n')) == [
+        ('{"a": 1}', {"a": 1}),
+        ("42", 42),
+        ('"x"', "x"),
     ]
-    assert list(extract_events('{"a": 1} [1,2] {"b": 2}', "x.json")) == [
-        ('{"a": 1, "source": "s3json"}', "s3json"),
-        ("1", "s3json"),
-        ("2", "s3json"),
-        ('{"b": 2, "source": "s3json"}', "s3json"),
+    assert list(records('{"a": 1} [1,2] {"b": 2}')) == [
+        ('{"a": 1}', {"a": 1}),
+        ("1", 1),
+        ("2", 2),
+        ('{"b": 2}', {"b": 2}),
     ]
     # text that does not decode runs, exactly as landed, to the first
     # value that decodes after whitespace or to the next "{"
-    assert list(extract_events('{"a": 1} garbage {"b": 2}', "x.json")) == [
-        ("garbage ", "s3json"),
-        ('{"a": 1, "source": "s3json"}', "s3json"),
-        ('{"b": 2, "source": "s3json"}', "s3json"),
+    assert list(records('{"a": 1} garbage {"b": 2}')) == [
+        ('{"a": 1}', {"a": 1}),
+        ("garbage ", UNPARSEABLE),
+        ('{"b": 2}', {"b": 2}),
     ]
-    assert list(extract_events('x 42 [1] {"a": 1}', "f.json")) == [
-        ("x ", "s3json"),
-        ("42", "s3json"),
-        ("1", "s3json"),
-        ('{"a": 1, "source": "s3json"}', "s3json"),
+    assert list(records('x 42 [1] {"a": 1}')) == [
+        ("x ", UNPARSEABLE),
+        ("42", 42),
+        ("1", 1),
+        ('{"a": 1}', {"a": 1}),
     ]
     # a value not preceded by whitespace stays inside the garbage
-    assert list(extract_events('x42 y"z" {"b": 2}', "x.json")) == [
-        ('x42 y"z" ', "s3json"),
-        ('{"b": 2, "source": "s3json"}', "s3json"),
+    assert list(records('x42 y"z" {"b": 2}')) == [
+        ('x42 y"z" ', UNPARSEABLE),
+        ('{"b": 2}', {"b": 2}),
     ]
     # nesting too deep for the decoder is quarantined raw, not raised
     deep = "[" * 100_000
-    assert list(extract_events(deep + ' {"b": 2}', "x.json")) == [
-        (deep + " ", "s3json"),
-        ('{"b": 2, "source": "s3json"}', "s3json"),
+    assert list(records(deep + ' {"b": 2}')) == [
+        (deep + " ", UNPARSEABLE),
+        ('{"b": 2}', {"b": 2}),
     ]
+
+
+def test_records_cut_record_ends_at_next_line():
+    """A record cut short ends before the next line that begins with
+    "{", so the records after it still land; a cut pretty-printed
+    document, whose inner lines are indented, stays one slice."""
+    text = '{"a": 1}\n{"b": 2, "c\n{"d": 3}\n{"e\n{"f": 4}\n'
+    assert list(records(text)) == [
+        ('{"a": 1}', {"a": 1}),
+        ('{"b": 2, "c', UNPARSEABLE),
+        ('{"d": 3}', {"d": 3}),
+        ('{"e', UNPARSEABLE),
+        ('{"f": 4}', {"f": 4}),
+    ]
+    bundle = {"Records": [{"a": {"b": [1, 2]}, "c": {"d": 3}}, {"e": {"f": 4}}]}
+    pretty = json.dumps(bundle, indent=2)
+    cut = pretty[: len(pretty) // 2]
+    assert list(records(cut)) == [(cut, UNPARSEABLE)]
 
 
 def test_verbatim_partition_ddl_registers_external_hour(lake):

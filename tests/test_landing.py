@@ -55,7 +55,17 @@ def test_ingest_batch_runs_kernel_once_per_event(spark, tmp_path, monkeypatch):
         spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
 
 
+def _cut(event: dict) -> str:
+    """A record cut mid-delivery: never a whole value."""
+    text = json.dumps(event)
+    return text[: len(text) // 2]
+
+
 def _write_landing(landing):
+    """Landing files in which no record spans lines, so line and
+    whole-file splitting find the same records.  A cut record is
+    followed by a line that begins with "{", where a whole-file read
+    resyncs."""
     landing.mkdir()
     # a raw CloudTrail record (no ``source`` of its own) under the
     # CloudTrail filename convention
@@ -63,13 +73,23 @@ def _write_landing(landing):
         f.write(json.dumps(deep_copy("cloudtrail")["details"]) + "\n")
     with open(landing / "flows.json", "w") as f:
         f.write(json.dumps(ALL_FIXTURES["vpc_flow"]()) + "\n")
+        f.write(_cut(ALL_FIXTURES["syslog"]()) + "\n")
         f.write(json.dumps(ALL_FIXTURES["cloudfront"]()) + "\n")
+        f.write(json.dumps([{"summary": "listed 1"}, {"summary": "listed 2"}]) + "\n")
+        f.write("not json at all\n")
+        f.write(json.dumps({"Records": [{"summary": "bundled 1"}, {"summary": "bundled 2"}]}) + "\n")
+        f.write(json.dumps({"summary": "inline 1"}) + json.dumps({"summary": "inline 2"}) + "\n")
         f.write("\n")
         f.write("   \n")
-        # Spark's trim strips spaces only: a tab-only line is not blank,
-        # so it reaches the kernel and fails to parse on both paths
+        # whitespace only: no record on any path
         f.write("\t\n")
         f.write("{not json\n")
+        f.write(_cut(ALL_FIXTURES["vpc_flow"]()) + "\n")
+        f.write(json.dumps(ALL_FIXTURES["syslog"]()) + "\n")
+
+
+#: what ``_write_landing`` holds: landed events and quarantined records
+LANDED, QUARANTINED = 10, 4
 
 
 def _landed(spark, quarantine):
@@ -83,19 +103,24 @@ def _landed(spark, quarantine):
 
 
 def test_batch_and_stream_land_the_same_rows(spark, tmp_path):
+    """Line splitting (``mode="ndjson"``), whole-file splitting
+    (``mode="blob"``) and the stream land the same records from the same
+    files: one splitter, ``intake.records``, runs on every text."""
     from defenda_data_lake_spark.streaming.ingest import start_ingest
 
     landing = tmp_path / "landing"
     _write_landing(landing)
 
+    landed = {}
     spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
     try:
-        create_events_table(spark, location=str(tmp_path / "batch_table"))
-        batch_quarantine = str(tmp_path / "batch_quarantine")
-        ingest_batch(spark, str(landing), mode="ndjson", quarantine_path=batch_quarantine)
-        batch = _landed(spark, batch_quarantine)
+        for mode in ("ndjson", "blob"):
+            create_events_table(spark, location=str(tmp_path / f"{mode}_table"))
+            quarantine = str(tmp_path / f"{mode}_quarantine")
+            ingest_batch(spark, str(landing), mode=mode, quarantine_path=quarantine)
+            landed[mode] = _landed(spark, quarantine)
+            spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
 
-        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
         create_events_table(spark, location=str(tmp_path / "stream_table"))
         stream_quarantine = str(tmp_path / "stream_quarantine")
         query = start_ingest(
@@ -109,15 +134,39 @@ def test_batch_and_stream_land_the_same_rows(spark, tmp_path):
             query.processAllAvailable()
         finally:
             query.stop()
-        stream = _landed(spark, stream_quarantine)
+        landed["stream"] = _landed(spark, stream_quarantine)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
 
-    assert stream == batch
-    rows, statuses = batch
-    sources = sorted(source for source, *_ in rows.elements())
-    assert sources == ["cloudtrail", "s3json", "s3json"]
-    assert statuses == Counter({"ProcessingFailed": 2})
+    assert landed["blob"] == landed["ndjson"]
+    assert landed["stream"] == landed["ndjson"]
+    rows, statuses = landed["ndjson"]
+    sources = Counter(source for source, *_ in rows.elements())
+    assert sources == Counter({"cloudtrail": 1, "s3json": LANDED - 1})
+    summaries = {summary for _, summary, *_ in rows}
+    assert {"listed 1", "listed 2", "bundled 1", "bundled 2", "inline 1", "inline 2"} <= summaries
+    assert statuses == Counter({"ProcessingFailed": QUARANTINED})
+
+
+def test_blob_ingest_is_one_python_stage(spark, tmp_path, monkeypatch):
+    """Whole-file splitting runs inside the normalizer: the normalized
+    frame of a blob ingest holds exactly one ``MapInPandas``."""
+    from tests.test_r13_optimizations import _plan_nodes
+
+    landing = tmp_path / "landing"
+    _write_landing(landing)
+    frames = []
+    monkeypatch.setattr(lake, "land", lambda spark, normalized, q: frames.append(normalized))
+
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    create_events_table(spark, location=str(tmp_path / "table"))
+    try:
+        ingest_batch(spark, str(landing), mode="blob")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    (normalized,) = frames
+    plan = normalized._jdf.queryExecution().optimizedPlan()
+    assert sum(n.nodeName() == "MapInPandas" for n in _plan_nodes(plan)) == 1
 
 
 def test_create_events_table_creates_location(spark, tmp_path):

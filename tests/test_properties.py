@@ -63,7 +63,7 @@ def test_split_concatenated_json_roundtrip(objs):
     assert [json.loads(text) for text, _ in pairs] == objs
 
 
-# Blob tokens for the extract_events accounting property.  Numbers and
+# Blob tokens for the records accounting property.  Numbers and
 # literals need whitespace before the next value ("1" "2" reads "12"),
 # objects, arrays and strings do not.  Garbage starts with a character
 # no JSON value starts with and holds no "{" or whitespace.  Text that
@@ -105,24 +105,22 @@ segments = st.one_of(
 )
 @settings(max_examples=300, deadline=None)
 def test_extract_events_accounts_for_every_value(tokens, tail, data):
-    """Every value of a concatenated blob comes out exactly once: an
-    object (or an object in a list) as an event, any other value as its
-    JSON text, and garbage as its exact text — raw text first, then the
-    values in blob order."""
-    from defenda_data_lake_spark.operators.intake import extract_events
+    """Event extraction (``intake.records``): every value of a
+    concatenated blob comes out exactly once, in blob order: a value
+    (each element of a list) as itself with a raw that decodes to it,
+    and garbage as its exact text."""
+    from defenda_data_lake_spark.operators.intake import UNPARSEABLE, records
 
     if tail is not None:
         tokens = tokens + [("garbage", tail)]
-    filename = data.draw(st.sampled_from(["x.json", "7_cloudtrail_x.json.gz"]))
-    source = "cloudtrail" if filename.endswith(".gz") else "s3json"
     blob = data.draw(separators)
-    raws, records = [], []
+    want = []
     for i, (kind, token) in enumerate(tokens):
         if kind == "garbage":
             text = token
         else:
             text = json.dumps(token, indent=data.draw(st.sampled_from([None, 1])))
-            records += token if isinstance(token, list) else [token]
+            want += [("value", r) for r in (token if isinstance(token, list) else [token])]
         nxt = tokens[i + 1][1] if i + 1 < len(tokens) else None
         if kind == "garbage":
             delimited = i + 1 == len(tokens) or isinstance(nxt, dict)
@@ -131,14 +129,12 @@ def test_extract_events_accounts_for_every_value(tokens, tail, data):
         sep = data.draw(separators if delimited else st.text(" \n", min_size=1))
         blob += text + sep
         if kind == "garbage":
-            raws.append(text + sep)
+            want.append(("garbage", text + sep))
 
-    out = list(extract_events(blob, filename))
-    assert all(src == source for _, src in out)
-    assert [text for text, _ in out[: len(raws)]] == raws
-    got = [json.loads(text) for text, _ in out[len(raws) :]]
-    want = [dict(r, source=source) if isinstance(r, dict) else r for r in records]
+    out = list(records(blob))
+    got = [("garbage", raw) if value is UNPARSEABLE else ("value", value) for raw, value in out]
     assert got == want
+    assert all(json.loads(raw) == value for raw, value in out if value is not UNPARSEABLE)
 
 
 # Pieces of a blob for the windowed decode: values (escaped non-ASCII

@@ -98,5 +98,6 @@ def test_kafka_source_without_connector_raises_actionable(spark):
     except RuntimeError as exc:
         assert "spark-sql-kafka" in str(exc)
     else:
-        # connector present in this build: the contract column exists
-        assert df.columns == ["raw", "source"]
+        # connector present in this build: the contract column exists (a
+        # direct producer supplies no ``source`` column)
+        assert df.columns == ["raw"]
