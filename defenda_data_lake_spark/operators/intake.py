@@ -61,6 +61,11 @@ _VALUE_START = r'[-0-9"\[{]|true|false|null|NaN|Infinity'
 _STARTS_VALUE = re.compile(_VALUE_START)
 _VALUE_AFTER_SPACE = re.compile(rf"(?<=\s)(?:{_VALUE_START})")
 _DECODER = json.JSONDecoder()
+# A line start: the first character of a line that does not continue a
+# value spanning lines, as the indented inner lines and the closing line
+# of a pretty-printed document do.  Text that does not decode ends there.
+_LINE_HEAD = re.compile(r"[^\s}\]]")
+_GARBAGE_END = re.compile(r"\{|(?<=\n)[^\s}\]]")  # the next "{" or line start
 # A failed ``raw_decode`` costs time linear in its offset into the string
 # it reads (the error counts the lines before it).  So a value further
 # into the blob than the window's length decodes in a copy of the window
@@ -78,19 +83,17 @@ UNPARSEABLE = object()
 
 def _block_end(text: str, start: int) -> int:
     """Index just past the ``}`` that closes the ``{`` at ``start``,
-    ignoring braces inside JSON strings.  A block still open at the next
-    line that begins with ``{`` ends just before that line (or at the
-    end of the text): a record cut short in NDJSON does not swallow the
-    records after it.  Inner lines of a pretty-printed document are
-    indented, so a cut one stays one block."""
-    limit = text.find("\n{", start)
-    if limit == -1:
-        limit = len(text)
+    ignoring braces inside JSON strings, or of the newline before the
+    next line start (or the end of the text) for a block still open
+    there: a record cut short does not swallow the lines after it."""
     depth = 0
     in_string = False
     escaped = False
-    for i in range(start, limit):
+    for i in range(start, len(text)):
         ch = text[i]
+        # before the string state: a raw newline ends a cut string too
+        if ch == "\n" and _LINE_HEAD.match(text, i + 1):
+            return i
         if in_string:
             if escaped:
                 escaped = False
@@ -106,7 +109,7 @@ def _block_end(text: str, start: int) -> int:
             depth -= 1
             if depth == 0:
                 return i + 1
-    return limit
+    return len(text)
 
 
 def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
@@ -116,11 +119,11 @@ def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
     only).  ``slice`` is the exact text of the value.  Text that does
     not decode comes as its own slice paired with ``UNPARSEABLE``: a
     malformed ``{...}`` block up to its closing brace (or, when it never
-    closes, up to the next line that begins with ``{``), any other text
+    closes, up to the next line start, ``_LINE_HEAD``), any other text
     up to the first later position that follows whitespace and from
-    which a value decodes, or up to the next ``{``, whichever comes
-    first.  Every character but the
-    whitespace between values is in exactly one slice."""
+    which a value decodes, or up to the next ``{`` or line start,
+    whichever comes first.  Every character but the whitespace between
+    values is in exactly one slice."""
     pos = _WHITESPACE.match(text).end()
     while pos < len(text):
         value, end = _decode(text, pos)
@@ -128,9 +131,8 @@ def split_concatenated_json(text: str) -> Iterator[tuple[str, Any]]:
             if text[pos] == "{":
                 end = _block_end(text, pos)
             else:
-                end = text.find("{", pos + 1)
-                if end == -1:
-                    end = len(text)
+                m = _GARBAGE_END.search(text, pos + 1)
+                end = m.start() if m else len(text)
                 for m in _VALUE_AFTER_SPACE.finditer(text, pos + 1, end):
                     if _decode(text, m.start())[0] is not UNPARSEABLE:
                         end = m.start()
@@ -159,8 +161,9 @@ def _decode(text: str, pos: int) -> tuple[Any, int]:
                 e.pos < size - _MARGIN and not e.msg.startswith("Unterminated string")
             ):
                 return UNPARSEABLE, pos
-        # nesting deeper than the C scanner allows
-        except RecursionError:
+        # nesting deeper than the C scanner allows, or an integer longer
+        # than int() converts (``sys.get_int_max_str_digits``)
+        except (RecursionError, ValueError):
             return UNPARSEABLE, pos
         else:
             if whole or end < size - _MARGIN or not isinstance(value, (int, float)):
@@ -184,15 +187,11 @@ def _unroll(raw: str, value: Any) -> Iterable[tuple[str, Any]]:
     a dict's ``Records`` list and a list unroll, each record with
     ``json.dumps(record)`` as its raw; any other value, ``UNPARSEABLE``
     too, is one record with ``raw`` as its raw."""
-    if isinstance(value, dict):
-        bundle = value.get("Records")
-        if not isinstance(bundle, list):
-            return ((raw, value),)
-    elif isinstance(value, list):
-        bundle = value
-    else:
+    if isinstance(value, dict) and isinstance(value.get("Records"), list):
+        value = value["Records"]
+    elif not isinstance(value, list):
         return ((raw, value),)
-    return [(json.dumps(record), record) for record in bundle]
+    return [(json.dumps(record), record) for record in value]
 
 
 def records(text: str | None) -> Iterable[tuple[str | None, Any]]:
@@ -203,18 +202,23 @@ def records(text: str | None) -> Iterable[tuple[str | None, Any]]:
     (``split_concatenated_json``).  A ``Records`` bundle or a list
     unrolls.  A NULL text is ``(None, UNPARSEABLE)``, which the pipeline
     quarantines as ``ProcessingFailed`` like text that does not decode;
-    whitespace-only text has no records."""
+    whitespace-only text has no records.  Text whose records cannot be
+    serialized again (nested too deep) is one ``(text, UNPARSEABLE)``:
+    no text fails the task that reads it."""
     if text is None:
         return ((None, UNPARSEABLE),)
     try:
-        value = _loads(text)
+        try:
+            value = _loads(text)
+        except (ValueError, RecursionError):  # a list: all records or none
+            return [
+                record
+                for raw, value in split_concatenated_json(text)
+                for record in _unroll(raw, value)
+            ]
+        return _unroll(text, value)
     except (ValueError, RecursionError):
-        return (
-            record
-            for raw, value in split_concatenated_json(text)
-            for record in _unroll(raw, value)
-        )
-    return _unroll(text, value)
+        return ((text, UNPARSEABLE),)
 
 
 def decode_firehose_records(

@@ -397,6 +397,12 @@ STATUS_FAILED = "ProcessingFailed"
 STATUS_DROPPED = "Dropped"
 
 
+#: most rows per yielded frame, as the Arrow batches read
+#: (``spark.sql.execution.arrow.maxRecordsPerBatch``) hold: a batch of
+#: whole files can hold far more records than rows
+_FRAME_ROWS = 10_000
+
+
 def _make_normalizer(
     plugin_factory: Callable[[], list[Plugin]],
 ) -> Callable[[Iterable[pd.DataFrame]], Iterator[pd.DataFrame]]:
@@ -421,6 +427,10 @@ def _make_normalizer(
             )
             for text, source in zip(batch["raw"].tolist(), sources):
                 for raw, parsed in records(text):
+                    if len(data["_raw"]) == _FRAME_ROWS:
+                        yield pd.DataFrame(data, columns=columns)
+                        for c in columns:
+                            data[c].clear()
                     raw_append(raw)
                     try:
                         if not isinstance(parsed, dict):
@@ -430,21 +440,19 @@ def _make_normalizer(
                             # s3_to_firehose.py:107,114,120,125)
                             parsed["source"] = source
                         result = run_pipeline(parsed, plugins, presorted=True)
+                        st_append(STATUS_DROPPED if result is None else STATUS_OK)
                     except Exception:
+                        result = None
                         st_append(STATUS_FAILED)
-                        for _, append in shell_appends:
-                            append(None)
-                        continue
                     if result is None:
-                        st_append(STATUS_DROPPED)
                         for _, append in shell_appends:
                             append(None)
                     else:
-                        st_append(STATUS_OK)
                         shell = _shell_row(result)
                         for c, append in shell_appends:
                             append(shell[c])
-            yield pd.DataFrame(data, columns=columns)
+            if data["_raw"]:
+                yield pd.DataFrame(data, columns=columns)
 
     return normalize_batches
 

@@ -11,6 +11,7 @@ from defenda_data_lake_spark.functions.variant import (
 )
 from defenda_data_lake_spark.lake import query_pandas
 from defenda_data_lake_spark.operators.intake import decode_firehose_records
+from defenda_data_lake_spark.operators import pipeline
 from defenda_data_lake_spark.operators.pipeline import STATUS_OK, normalize_df
 
 
@@ -85,3 +86,24 @@ def test_decode_firehose_invalid_utf8_quarantined(spark):
     out = normalize_df(decode_firehose_records(df), raw_col="raw").collect()
     statuses = sorted(r["_status"] for r in out)
     assert statuses == [STATUS_OK, "ProcessingFailed"]
+
+
+def test_normalizer_frames_hold_at_most_a_batch_of_rows(monkeypatch):
+    """A batch of whole files can hold many more records than rows; the
+    normalizer yields them in frames of at most ``_FRAME_ROWS`` rows, in
+    text order, and no empty frame."""
+    import pandas as pd
+
+    monkeypatch.setattr(pipeline, "_FRAME_ROWS", 4)
+    texts = [
+        json.dumps([{"summary": f"a{i}"} for i in range(9)]),
+        "7",
+        "\n".join(json.dumps({"summary": f"b{i}"}) for i in range(2)),
+    ]
+    normalize = pipeline._make_normalizer(pipeline.default_plugins)
+    frames = list(normalize([pd.DataFrame({"raw": texts})]))
+    assert [len(frame) for frame in frames] == [4, 4, 4]
+    summaries = [s for frame in frames for s in frame["summary"]]
+    assert summaries[:9] == [f"a{i}" for i in range(9)]
+    assert summaries[9] is None
+    assert summaries[10:] == ["b0", "b1"]

@@ -5,6 +5,7 @@ verbatim (reference README.md:89-136)."""
 import gzip
 import json
 import os
+import sys
 import time
 
 import pytest
@@ -190,7 +191,8 @@ def test_is_cloudtrail():
 
 
 @pytest.mark.parametrize(
-    "line", ['{"a": }\n', 'log line "unterminated\n', '{"a": 1, "b\n']
+    "line",
+    ['{"a": }\n', 'log line "unterminated\n', '{"a": 1, "b\n', '{"a": } ', 'x\n'],
 )
 def test_extract_events_time_is_linear_in_malformed_lines(line):
     """A value that does not decode costs what it spans, not its offset
@@ -299,12 +301,29 @@ def test_extract_events_list_and_dict():
         (deep + " ", UNPARSEABLE),
         ('{"b": 2}', {"b": 2}),
     ]
+    # so is an integer longer than int() converts
+    long_number = "1" * 5000
+    assert list(records('{"a": 1} ' + long_number)) == [
+        ('{"a": 1}', {"a": 1}),
+        (long_number, UNPARSEABLE),
+    ]
+    # a list that parses but whose records nest too deep to serialize
+    # again (at Python's default recursion limit) is one record, not an
+    # error
+    nested = "[" * 1023 + "]" * 1023
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        assert list(records(nested)) == [(nested, UNPARSEABLE)]
+    finally:
+        sys.setrecursionlimit(limit)
 
 
 def test_records_cut_record_ends_at_next_line():
-    """A record cut short ends before the next line that begins with
-    "{", so the records after it still land; a cut pretty-printed
-    document, whose inner lines are indented, stays one slice."""
+    """Text that does not decode ends at the next line that begins with
+    anything but whitespace, "}" or "]", so the lines after a cut
+    record split as they do one by one; a cut pretty-printed document,
+    whose inner lines are indented, stays one slice."""
     text = '{"a": 1}\n{"b": 2, "c\n{"d": 3}\n{"e\n{"f": 4}\n'
     assert list(records(text)) == [
         ('{"a": 1}', {"a": 1}),
@@ -312,6 +331,18 @@ def test_records_cut_record_ends_at_next_line():
         ('{"d": 3}', {"d": 3}),
         ('{"e', UNPARSEABLE),
         ('{"f": 4}', {"f": 4}),
+    ]
+    text = '{"a": 1, "b\n[{"c": 2}]\n"x"\n{"d\nnot json\nxyz 5\n{"e": 4}\n'
+    by_line = [r for line in text.splitlines() for r in records(line)]
+    assert [value for _, value in records(text)] == [value for _, value in by_line] == [
+        UNPARSEABLE,
+        {"c": 2},
+        "x",
+        UNPARSEABLE,
+        UNPARSEABLE,
+        UNPARSEABLE,
+        5,
+        {"e": 4},
     ]
     bundle = {"Records": [{"a": {"b": [1, 2]}, "c": {"d": 3}}, {"e": {"f": 4}}]}
     pretty = json.dumps(bundle, indent=2)

@@ -64,8 +64,8 @@ def _cut(event: dict) -> str:
 def _write_landing(landing):
     """Landing files in which no record spans lines, so line and
     whole-file splitting find the same records.  A cut record is
-    followed by a line that begins with "{", where a whole-file read
-    resyncs."""
+    followed by a list line, a garbage line or a whole record, and a
+    garbage line by a scalar line: a whole-file read resyncs at each."""
     landing.mkdir()
     # a raw CloudTrail record (no ``source`` of its own) under the
     # CloudTrail filename convention
@@ -74,8 +74,9 @@ def _write_landing(landing):
     with open(landing / "flows.json", "w") as f:
         f.write(json.dumps(ALL_FIXTURES["vpc_flow"]()) + "\n")
         f.write(_cut(ALL_FIXTURES["syslog"]()) + "\n")
-        f.write(json.dumps(ALL_FIXTURES["cloudfront"]()) + "\n")
         f.write(json.dumps([{"summary": "listed 1"}, {"summary": "listed 2"}]) + "\n")
+        f.write(json.dumps(ALL_FIXTURES["cloudfront"]()) + "\n")
+        f.write(_cut(ALL_FIXTURES["cloudfront"]()) + "\n")
         f.write("not json at all\n")
         f.write(json.dumps({"Records": [{"summary": "bundled 1"}, {"summary": "bundled 2"}]}) + "\n")
         f.write(json.dumps({"summary": "inline 1"}) + json.dumps({"summary": "inline 2"}) + "\n")
@@ -84,12 +85,15 @@ def _write_landing(landing):
         # whitespace only: no record on any path
         f.write("\t\n")
         f.write("{not json\n")
+        f.write("7\n")
+        # an integer longer than int() converts: quarantined, not raised
+        f.write(json.dumps({"summary": "before a long number"}) + " " + "1" * 5000 + "\n")
         f.write(_cut(ALL_FIXTURES["vpc_flow"]()) + "\n")
         f.write(json.dumps(ALL_FIXTURES["syslog"]()) + "\n")
 
 
 #: what ``_write_landing`` holds: landed events and quarantined records
-LANDED, QUARANTINED = 10, 4
+LANDED, QUARANTINED = 11, 7
 
 
 def _landed(spark, quarantine):
@@ -144,7 +148,10 @@ def test_batch_and_stream_land_the_same_rows(spark, tmp_path):
     sources = Counter(source for source, *_ in rows.elements())
     assert sources == Counter({"cloudtrail": 1, "s3json": LANDED - 1})
     summaries = {summary for _, summary, *_ in rows}
-    assert {"listed 1", "listed 2", "bundled 1", "bundled 2", "inline 1", "inline 2"} <= summaries
+    assert {
+        "listed 1", "listed 2", "bundled 1", "bundled 2", "inline 1", "inline 2",
+        "before a long number",
+    } <= summaries
     assert statuses == Counter({"ProcessingFailed": QUARANTINED})
 
 
