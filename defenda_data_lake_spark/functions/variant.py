@@ -25,11 +25,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_variant_details(
-    df: DataFrame, details_col: str = "details", out: str = "details_v"
-) -> DataFrame:
-    """Append a VARIANT-typed parse of the JSON details column."""
-    return df.withColumn(out, F.parse_json(F.col(details_col)))
+def with_variant_details(df: DataFrame) -> DataFrame:
+    """Append ``details_v``, a VARIANT-typed parse of the JSON
+    ``details`` column."""
+    return df.withColumn("details_v", F.parse_json(F.col("details")))
 
 
 def variant_get_string(col: str | Column, path: str) -> Column:

@@ -116,10 +116,9 @@ def expire_partitions(
     spark: SparkSession,
     retention_days: int,
     now: "datetime.datetime | None" = None,
-    table: str = EVENTS_TABLE,
     dry_run: bool = False,
 ) -> dict:
-    """Retention enforcement for the hour-partitioned events layout —
+    """Retention enforcement for the hour-partitioned events table —
     the engine-side equivalent of the reference's S3 lifecycle rules
     (reference main.tf:31-42,62-73: input expires at 90 d, output at
     360 d; there the *bucket* ages data out, here the *table* must).
@@ -160,7 +159,7 @@ def expire_partitions(
     kept = 0
     freed = 0
     dropped_failed: list[str] = []
-    for (name,) in sorted(spark.sql(f"SHOW PARTITIONS {table}").collect()):
+    for (name,) in sorted(spark.sql(f"SHOW PARTITIONS {EVENTS_TABLE}").collect()):
         values = dict(kv.split("=", 1) for kv in name.split("/"))
         y, mo, d, h = (values[c] for c in ("year", "month", "day", "hour"))
         try:
@@ -180,7 +179,7 @@ def expire_partitions(
         location = next(
             r.data_type
             for r in spark.sql(
-                f"DESCRIBE FORMATTED {table} PARTITION ({spec})"
+                f"DESCRIBE FORMATTED {EVENTS_TABLE} PARTITION ({spec})"
             ).collect()
             if r.col_name == "Location"
         )
@@ -188,7 +187,7 @@ def expire_partitions(
         fs = path.getFileSystem(conf)
         size = fs.getContentSummary(path).getLength() if fs.exists(path) else 0
         if not dry_run:
-            spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
+            spark.sql(f"ALTER TABLE {EVENTS_TABLE} DROP IF EXISTS PARTITION ({spec})")
             try:
                 fs.delete(path, True)
             except Py4JJavaError:

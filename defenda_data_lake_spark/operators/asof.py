@@ -42,14 +42,13 @@ def asof_join(
     keys: Sequence[str],
     time_col: str,
     payload_cols: Sequence[str],
-    payload_prefix: str = "asof_",
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Left as-of join: every ``left`` row plus ``payload_cols`` from
     the latest ``right`` row with the same ``keys`` and
     ``right.time_col <= left.time_col`` (NULL payload when no such row
     exists).  Output columns: all of ``left``'s, then one
-    ``payload_prefix + name`` per payload column.
+    ``asof_<name>`` per payload column.
 
     ``tiebreak_col`` makes the result deterministic when several right
     rows share a key's max matching time: the one with the greatest
@@ -103,7 +102,7 @@ def asof_join(
     return carried.filter(F.col("_is_left") == 1).select(
         *[c for c in left.columns],
         *[
-            F.col(f"_asof_match.{name}").alias(f"{payload_prefix}{name}")
+            F.col(f"_asof_match.{name}").alias(f"asof_{name}")
             for name in payload_cols
         ],
     )

@@ -10,7 +10,7 @@ pinned to an exactly-reproducible form so a SQL oracle can replay
 every step:
 
 * **Words**: ``lower(text)`` split on ``[^a-z]+``; empty strings and
-  words longer than ``max_word_len`` (32) are excluded everywhere
+  words longer than ``MAX_WORD_LEN`` (32) are excluded everywhere
   (learning AND accounting) — documented scope, identical in both
   engines.
 * **Symbol state**: a word is its symbols joined by single spaces with
@@ -19,15 +19,15 @@ every step:
   LITERAL string replace ``' l r ' -> ' lr '``, and ``replace`` has
   identical left-to-right non-overlapping semantics in Python, Spark
   (``F.replace``) and DuckDB.
-* **One merge application = exactly ``n_passes`` (5) replace passes.**
+* **One merge application = exactly ``N_PASSES`` (5) replace passes.**
   A single pass can miss adjacent occurrences (the match consumes the
   shared boundary space: ``' a a a a '`` -> ``' aa a a '``), so passes
   repeat; 5 passes reach a true fixpoint for any word up to 32 chars
   (occurrences at most halve+1 per pass).  Both engines run the same
   fixed pass count, so the result is deterministic even where the
   bound is loose.
-* **Learning**: from the top ``learn_words`` (2000) distinct words by
-  ``(count DESC, word ASC)``, repeat ``n_merges`` (24) times: count
+* **Learning**: from the top ``LEARN_WORDS`` (2000) distinct words by
+  ``(count DESC, word ASC)``, repeat ``N_MERGES`` (24) times: count
   adjacent symbol pairs weighted by word frequency, pick the max by
   ``(count DESC, pair-string ASC)`` (the space sorts below ``a-z``, so
   pair-string order equals (l, r) tuple order), apply it.  Ties and
@@ -41,7 +41,7 @@ Scale design (100 TB): learning aggregates word counts in Spark (one
 hash agg over the corpus — the only corpus-sized step), then collects
 the BOUNDED top-2000 rows and learns driver-side in pure Python
 (milliseconds; the k-means-centroid pattern, not a driver loop over
-data).  Application is a single projection of ``n_merges × n_passes``
+data).  Application is a single projection of ``N_MERGES × N_PASSES``
 chained literal ``replace`` calls — all JVM codegen, no Python
 workers — run over DISTINCT words only (Heaps-law: orders of magnitude
 smaller than the corpus), then hash-joined back to per-document word
@@ -52,9 +52,9 @@ joins.  What the operator never does is FORCE a broadcast of this
 Heaps-unbounded table (the q111 chunk-frequency lesson; pinned by
 test).
 
-Merge-table size is configurable end to end (``n_merges`` /
-``learn_words`` on every function).  The replace-CHAIN application
-has a measured ceiling — 445 nested calls (an 89-merge saturated
+The learned table has ``N_MERGES`` merges; application takes a table
+of any size.  The replace-CHAIN application has a measured ceiling —
+445 nested calls (an 89-merge saturated
 table) overflows the JVM stack in Column conversion; 256 is the
 deliberately conservative cap — so past :data:`MAX_EXPR_REPLACES`
 the application auto-switches to an Arrow kernel (same
@@ -83,41 +83,28 @@ MAX_WORD_LEN = 32
 WORD_SPLIT_RE = "[^a-z]+"
 
 
-def corpus_words(
-    df: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = MAX_WORD_LEN,
-    keep: Sequence[str] = (),
-) -> DataFrame:
-    """Explode ``text_col`` into the BPE word stream ``w`` (lowercased
-    ``[a-z]+`` runs, 1..max_word_len chars), carrying ``keep`` columns
+def corpus_words(df: DataFrame, keep: Sequence[str] = ()) -> DataFrame:
+    """Explode ``text`` into the BPE word stream ``w`` (lowercased
+    ``[a-z]+`` runs, 1..MAX_WORD_LEN chars), carrying ``keep`` columns
     through for per-document accounting."""
     return (
         df.select(
             *keep,
-            F.explode(
-                F.split(F.lower(F.col(text_col)), WORD_SPLIT_RE)
-            ).alias("w"),
+            F.explode(F.split(F.lower(F.col("text")), WORD_SPLIT_RE)).alias("w"),
         )
-        .filter((F.col("w") != "") & (F.length("w") <= max_word_len))
+        .filter((F.col("w") != "") & (F.length("w") <= MAX_WORD_LEN))
     )
 
 
-def word_counts(
-    df: DataFrame, text_col: str = "text", max_word_len: int = MAX_WORD_LEN
-) -> DataFrame:
+def word_counts(df: DataFrame) -> DataFrame:
     """Distinct-word frequencies ``(w, cnt)`` — the corpus-sized
     aggregation that feeds learning (map-side combine; one shuffle on
     the word)."""
-    return corpus_words(df, text_col, max_word_len).groupBy("w").agg(
-        F.count("*").alias("cnt")
-    )
+    return corpus_words(df).groupBy("w").agg(F.count("*").alias("cnt"))
 
 
 def learn_bpe(
-    top_words: Sequence[tuple[str, int]],
-    n_merges: int = N_MERGES,
-    n_passes: int = N_PASSES,
+    top_words: Sequence[tuple[str, int]], n_merges: int = N_MERGES
 ) -> list[str]:
     """Pure-Python merge learning over a bounded ``(word, count)``
     list — deterministic, and replayed verbatim by the SQL oracle
@@ -142,32 +129,25 @@ def learn_bpe(
         pat, rep = " " + best + " ", " " + best.replace(" ", "") + " "
         for w in states:
             s = states[w]
-            for _ in range(n_passes):
+            for _ in range(N_PASSES):
                 s = s.replace(pat, rep)
             states[w] = s
         merges.append(best)
     return merges
 
 
-def learn_bpe_spark(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = N_MERGES,
-    n_passes: int = N_PASSES,
-    learn_words: int = LEARN_WORDS,
-    max_word_len: int = MAX_WORD_LEN,
-) -> list[str]:
+def learn_bpe_spark(df: DataFrame) -> list[str]:
     """Learn the merge table from a corpus DataFrame: Spark aggregates
-    :func:`word_counts`, the bounded top-``learn_words`` rows come to
+    :func:`word_counts`, the bounded top-``LEARN_WORDS`` rows come to
     the driver (TakeOrdered, ≤2000 rows at ANY corpus size) and
     :func:`learn_bpe` runs locally."""
     top = (
-        word_counts(df, text_col, max_word_len)
+        word_counts(df)
         .orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(learn_words)
+        .limit(LEARN_WORDS)
         .collect()
     )
-    return learn_bpe([(r["w"], r["cnt"]) for r in top], n_merges, n_passes)
+    return learn_bpe([(r["w"], r["cnt"]) for r in top])
 
 
 def char_spaced(col: Column) -> Column:
@@ -175,35 +155,31 @@ def char_spaced(col: Column) -> Column:
     return F.concat(F.lit(" "), F.regexp_replace(col, "(.)", "$1 "))
 
 
-def apply_merges_expr(
-    col: Column, merges: Sequence[str], n_passes: int = N_PASSES
-) -> Column:
+def apply_merges_expr(col: Column, merges: Sequence[str]) -> Column:
     """Final symbol state of a word column under the merge table: one
-    chained-literal-``replace`` projection (n_merges × n_passes calls,
+    chained-literal-``replace`` projection (n_merges × N_PASSES calls,
     all JVM codegen — no Python workers, no shuffle)."""
     st = char_spaced(col)
     for pair in merges:
         pat = F.lit(" " + pair + " ")
         rep = F.lit(" " + pair.replace(" ", "") + " ")
-        for _ in range(n_passes):
+        for _ in range(N_PASSES):
             st = F.replace(st, pat, rep)
     return st
 
 
-def token_count_expr(
-    col: Column, merges: Sequence[str], n_passes: int = N_PASSES
-) -> Column:
+def token_count_expr(col: Column, merges: Sequence[str]) -> Column:
     """Token count of a word column under the merge table."""
-    return F.size(F.split(F.trim(apply_merges_expr(col, merges, n_passes)), " "))
+    return F.size(F.split(F.trim(apply_merges_expr(col, merges)), " "))
 
 
-def tokenize_py(word: str, merges: Sequence[str], n_passes: int = N_PASSES) -> list[str]:
+def tokenize_py(word: str, merges: Sequence[str]) -> list[str]:
     """Reference Python tokenizer (tests pin it against the Spark
     expression row-for-row)."""
     s = " " + " ".join(word) + " "
     for pair in merges:
         pat, rep = " " + pair + " ", " " + pair.replace(" ", "") + " "
-        for _ in range(n_passes):
+        for _ in range(N_PASSES):
             s = s.replace(pat, rep)
     return s.strip().split(" ")
 
@@ -217,7 +193,7 @@ def tokenize_py(word: str, merges: Sequence[str], n_passes: int = N_PASSES) -> l
 MAX_EXPR_REPLACES = 256
 
 
-def _token_count_arrow(merges: Sequence[str], n_passes: int = N_PASSES):
+def _token_count_arrow(merges: Sequence[str]):
     """Arrow-kernel token counter for merge tables too large for the
     codegen replace chain: a ``pandas_udf`` whose body runs the SAME
     state-space rewrite (``' w o r d '`` + literal replaces, identical
@@ -241,7 +217,7 @@ def _token_count_arrow(merges: Sequence[str], n_passes: int = N_PASSES):
         for pair in frozen:
             pat = " " + pair + " "
             rep = " " + pair.replace(" ", "") + " "
-            for _ in range(n_passes):
+            for _ in range(N_PASSES):
                 st = st.str.replace(pat, rep, regex=False)
         return st.str.strip().str.split(" ").str.len().astype("int64")
 
@@ -249,12 +225,7 @@ def _token_count_arrow(merges: Sequence[str], n_passes: int = N_PASSES):
 
 
 def word_token_counts(
-    df: DataFrame,
-    merges: Sequence[str],
-    text_col: str = "text",
-    n_passes: int = N_PASSES,
-    max_word_len: int = MAX_WORD_LEN,
-    kernel: str = "auto",
+    df: DataFrame, merges: Sequence[str], kernel: str = "auto"
 ) -> DataFrame:
     """``(w, n_tok)`` over the corpus's DISTINCT words — the expensive
     rewrite runs once per distinct word, never once per instance.
@@ -270,58 +241,36 @@ def word_token_counts(
         raise ValueError(f"kernel must be auto/expr/arrow (got {kernel!r})")
     if kernel == "auto":
         kernel = (
-            "expr" if len(merges) * n_passes <= MAX_EXPR_REPLACES else "arrow"
+            "expr" if len(merges) * N_PASSES <= MAX_EXPR_REPLACES else "arrow"
         )
-    distinct = corpus_words(df, text_col, max_word_len).select("w").distinct()
+    distinct = corpus_words(df).select("w").distinct()
     if kernel == "expr":
         return distinct.select(
-            "w",
-            token_count_expr(F.col("w"), merges, n_passes)
-            .cast("long")
-            .alias("n_tok"),
+            "w", token_count_expr(F.col("w"), merges).cast("long").alias("n_tok")
         )
     return distinct.select(
-        "w", _token_count_arrow(merges, n_passes)(F.col("w")).alias("n_tok")
+        "w", _token_count_arrow(merges)(F.col("w")).alias("n_tok")
     )
 
 
-def _doc_word_token_join(
-    df: DataFrame,
-    merges: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_passes: int = N_PASSES,
-    max_word_len: int = MAX_WORD_LEN,
-    kernel: str = "auto",
-) -> DataFrame:
+def _doc_word_token_join(df: DataFrame, merges: Sequence[str]) -> DataFrame:
     """Shared accounting core: per-doc word instance counts
-    ``(id, w, n_occ)`` equi-joined to the distinct-word token counts
+    ``(doc_id, w, n_occ)`` equi-joined to the distinct-word token counts
     ``(w, n_tok)``.  ONE place owns the plan (shuffle on ``(id, w)``;
     join strategy size-decided by Catalyst, never a forced broadcast
     of the Heaps-unbounded word side) so :func:`tokenize_corpus` and
     :func:`full_token_accounting` cannot silently diverge."""
     per_doc_word = (
-        corpus_words(df, text_col, max_word_len, keep=[id_col])
-        .groupBy(id_col, "w")
+        corpus_words(df, keep=["doc_id"])
+        .groupBy("doc_id", "w")
         .agg(F.count("*").alias("n_occ"))
     )
-    wtok = word_token_counts(
-        df, merges, text_col, n_passes, max_word_len, kernel
-    )
-    return per_doc_word.join(wtok, "w")
+    return per_doc_word.join(word_token_counts(df, merges), "w")
 
 
-def tokenize_corpus(
-    df: DataFrame,
-    merges: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_passes: int = N_PASSES,
-    max_word_len: int = MAX_WORD_LEN,
-    kernel: str = "auto",
-) -> DataFrame:
+def tokenize_corpus(df: DataFrame, merges: Sequence[str]) -> DataFrame:
     """Per-document token accounting under the learned merge table:
-    ``(id_col, n_words, n_chars_az, n_tokens)`` — word instances,
+    ``(doc_id, n_words, n_chars_az, n_tokens)`` — word instances,
     their a-z char total, and their BPE token total.  Documents with
     no qualifying words are absent (no defined token count).
 
@@ -330,10 +279,8 @@ def tokenize_corpus(
     (strategy size-decided by Catalyst — never a forced broadcast of
     the Heaps-unbounded side), final agg on the id."""
     return (
-        _doc_word_token_join(
-            df, merges, id_col, text_col, n_passes, max_word_len, kernel
-        )
-        .groupBy(id_col)
+        _doc_word_token_join(df, merges)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_occ").cast("long").alias("n_words"),
             F.sum(F.col("n_occ") * F.length("w")).cast("long").alias("n_chars_az"),
@@ -348,9 +295,7 @@ def tokenize_corpus(
 FALLBACK_STRIP_RE = "[a-z \\t\\n\\r\\f]"
 
 
-def fallback_count_cols(
-    lowered: Column, max_word_len: int = MAX_WORD_LEN
-) -> tuple[Column, Column]:
+def fallback_count_cols(lowered: Column) -> tuple[Column, Column]:
     """The two byte-fallback columns ``(long_chars, other_bytes)``
     over an already-lowered text column — ONE definition serving both
     the batch accountant and the stream meter (their parity is
@@ -365,7 +310,7 @@ def fallback_count_cols(
     long_chars = F.length(
         F.array_join(
             F.regexp_extract_all(
-                lowered, F.lit("[a-z]{" + str(max_word_len + 1) + ",}"), F.lit(0)
+                lowered, F.lit("[a-z]{" + str(MAX_WORD_LEN + 1) + ",}"), F.lit(0)
             ),
             "",
         )
@@ -377,28 +322,23 @@ def fallback_count_cols(
 
 
 def full_token_accounting(
-    df: DataFrame,
-    merges: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_passes: int = N_PASSES,
-    max_word_len: int = MAX_WORD_LEN,
-    carry_cols: Sequence[str] = (),
+    df: DataFrame, merges: Sequence[str], carry_cols: Sequence[str] = ()
 ) -> DataFrame:
     """Full-coverage token accounting with BYTE FALLBACK — the
     production-tokenizer contract (GPT-2-style byte fallback, public
     knowledge) where no input char is unaccounted, instead of
-    :func:`tokenize_corpus`'s documented a-z-words-only scope:
+    :func:`tokenize_corpus`'s documented a-z-words-only scope, over
+    each ``text``:
 
-    * qualifying words (lowercased ``[a-z]+`` runs, ≤``max_word_len``
+    * qualifying words (lowercased ``[a-z]+`` runs, ≤``MAX_WORD_LEN``
       chars) cost their BPE token count under ``merges``;
-    * oversized a-z runs (>``max_word_len``) fall back to one token
+    * oversized a-z runs (>``MAX_WORD_LEN``) fall back to one token
       per char (they are a-z, so char == UTF-8 byte);
     * everything else except ASCII whitespace (space/tab/newline/CR/FF
       — an explicit class, see ``FALLBACK_STRIP_RE``) falls back to
       one token per UTF-8 BYTE of the lowercased text.
 
-    Returns one row per input row: ``(id_col, n_words, n_vocab_words,
+    Returns one row per input row: ``(doc_id, n_words, n_vocab_words,
     n_tokens_bpe, n_long_chars, n_bytes_other, n_tokens_total)`` where
     ``n_vocab_words`` counts word INSTANCES the merge table collapses
     to a single token (the in-vocab hit rate — ``1 -
@@ -407,7 +347,7 @@ def full_token_accounting(
     ``tokenize_corpus``, documents with no qualifying words still
     appear (zero BPE columns) — fallback bytes alone can be nonzero.
 
-    PRECONDITION: ``id_col`` must be unique (one row per document).
+    PRECONDITION: ``doc_id`` must be unique (one row per document).
     Under duplicate ids the BPE side aggregates per ID while the
     fallback side stays per row, so the left join would attach the
     MERGED token totals to each duplicate row — inflated counts, and
@@ -427,7 +367,7 @@ def full_token_accounting(
     the stitch is a left join on the id.  Nothing here forces a
     broadcast of a Heaps-unbounded table."""
     reserved = {
-        id_col, "n_words", "n_vocab_words", "n_tokens_bpe",
+        "doc_id", "n_words", "n_vocab_words", "n_tokens_bpe",
         "n_long_chars", "n_bytes_other", "n_tokens_total",
     }
     clash = [c for c in carry_cols if c in reserved]
@@ -435,18 +375,18 @@ def full_token_accounting(
         raise ValueError(
             f"carry_cols {clash} collide with accounting output columns"
         )
-    lowered = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    lowered = F.lower(F.coalesce(F.col("text"), F.lit("")))
     zero = F.lit(0).cast("long")
-    long_chars, other_bytes = fallback_count_cols(lowered, max_word_len)
+    long_chars, other_bytes = fallback_count_cols(lowered)
     fb = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in carry_cols],
         long_chars.alias("n_long_chars"),
         other_bytes.alias("n_bytes_other"),
     )
     bpe = (
-        _doc_word_token_join(df, merges, id_col, text_col, n_passes, max_word_len)
-        .groupBy(id_col)
+        _doc_word_token_join(df, merges)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_occ").cast("long").alias("n_words"),
             F.sum(
@@ -459,8 +399,8 @@ def full_token_accounting(
             .alias("n_tokens_bpe"),
         )
     )
-    return fb.join(bpe, id_col, "left").select(
-        id_col,
+    return fb.join(bpe, "doc_id", "left").select(
+        "doc_id",
         *carry_cols,
         F.coalesce(F.col("n_words"), zero).alias("n_words"),
         F.coalesce(F.col("n_vocab_words"), zero).alias("n_vocab_words"),
@@ -475,16 +415,11 @@ def full_token_accounting(
     )
 
 
-def full_token_accounting_py(
-    text: str,
-    merges: Sequence[str],
-    max_word_len: int = MAX_WORD_LEN,
-    n_passes: int = N_PASSES,
-) -> dict[str, int]:
+def full_token_accounting_py(text: str, merges: Sequence[str]) -> dict[str, int]:
     """Pure-Python reference for :func:`full_token_accounting` on one
     document (tests pin Spark row == this on adversarial unicode/
-    whitespace/oversized-word inputs) — mirrors every tunable of the
-    Spark twin, including ``n_passes``."""
+    whitespace/oversized-word inputs), with the same ``MAX_WORD_LEN``
+    and ``N_PASSES``."""
     import re
 
     # the same pattern constants as the Spark expressions: Python `re`
@@ -492,11 +427,11 @@ def full_token_accounting_py(
     # one definition serves all three engines' contracts
     lowered = (text or "").lower()
     words = [w for w in re.split(WORD_SPLIT_RE, lowered) if w]
-    qual = [w for w in words if len(w) <= max_word_len]
-    long_chars = sum(len(w) for w in words if len(w) > max_word_len)
+    qual = [w for w in words if len(w) <= MAX_WORD_LEN]
+    long_chars = sum(len(w) for w in words if len(w) > MAX_WORD_LEN)
     other = re.sub(FALLBACK_STRIP_RE, "", lowered)
     n_bytes_other = len(other.encode("utf-8"))
-    n_tok = [len(tokenize_py(w, merges, n_passes)) for w in qual]
+    n_tok = [len(tokenize_py(w, merges)) for w in qual]
     n_bpe = sum(n_tok)
     return {
         "n_words": len(qual),
@@ -521,13 +456,7 @@ def merges_to_df(spark: SparkSession, merges: Sequence[str]) -> DataFrame:
 
 
 def fertility_by_group(
-    df: DataFrame,
-    merges: Sequence[str],
-    group_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_passes: int = N_PASSES,
-    max_word_len: int = MAX_WORD_LEN,
+    df: DataFrame, merges: Sequence[str], group_col: str
 ) -> DataFrame:
     """Per-group tokenizer-fit report — how well the learned merge
     table serves each language/source/domain: ``(group, n_docs,
@@ -545,10 +474,9 @@ def fertility_by_group(
     the group — nothing new shuffles the corpus (the group key rides
     the accounting scan via ``carry_cols``; a join-back formulation
     measured an extra exchange round at the 32x probe)."""
-    acc = full_token_accounting(
-        df, merges, id_col, text_col, n_passes, max_word_len,
-        carry_cols=[group_col],
-    ).withColumnRenamed(group_col, "grp")
+    acc = full_token_accounting(df, merges, carry_cols=[group_col]).withColumnRenamed(
+        group_col, "grp"
+    )
     words = F.sum("n_words").cast("long")
     toks = F.sum("n_tokens_bpe").cast("long")
     hits = F.sum("n_vocab_words").cast("long")
@@ -570,24 +498,18 @@ _MERGES_CACHE: dict[tuple, list[str]] = {}
 
 
 def learned_merges_cached(
-    spark: SparkSession,
-    df: DataFrame,
-    cache_key: tuple,
-    text_col: str = "text",
-    n_merges: int = N_MERGES,
+    spark: SparkSession, df: DataFrame, cache_key: tuple
 ) -> list[str]:
     """Session-memoized merge table (the catalog's BPE queries all
     share one learned table per (session, sf_dir)).  Invalidation:
     ``plans.catalog_shared.clear_table_cache`` clears this memo too —
     after regenerating parquet under a cached sf_dir, a stale table
     would diverge from the oracle's from-scratch re-learning."""
-    # every learning-relevant tunable is in the key: omitting text_col
-    # would hand the 'text'-learned table to a 'title' caller
-    key = (id(spark), *cache_key, text_col, n_merges)
+    key = (id(spark), *cache_key)
     for stale in [k for k in _MERGES_CACHE if k[0] != id(spark)]:
         del _MERGES_CACHE[stale]
     merges = _MERGES_CACHE.get(key)
     if merges is None:
-        merges = learn_bpe_spark(df, text_col, n_merges=n_merges)
+        merges = learn_bpe_spark(df)
         _MERGES_CACHE[key] = merges
     return merges

@@ -36,24 +36,19 @@ from pyspark.sql.window import Window
 CDC_OPS = ("I", "U", "D")
 
 
-def cdc_collapse(
-    changes: DataFrame,
-    key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
+def cdc_collapse(changes: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Net effect of a change batch: one row per key — the change with
     the highest ``seq`` — schema unchanged.  Raises at execution time
     on a tie at a key's winning ``seq`` (no defined order) or an
     unknown op code (a corrupt log should fail the batch, not silently
     drop rows)."""
     checked = changes.withColumn(
-        op_col,
-        F.when(F.col(op_col).isin(*CDC_OPS), F.col(op_col)).otherwise(
+        "op",
+        F.when(F.col("op").isin(*CDC_OPS), F.col("op")).otherwise(
             F.expr(
-                f"raise_error(concat('cdc_collapse: unknown op ', "
-                f"coalesce(cast({op_col} as string), 'NULL'), "
-                f"' (expected I/U/D)'))"
+                "raise_error(concat('cdc_collapse: unknown op ', "
+                "coalesce(cast(op as string), 'NULL'), "
+                "' (expected I/U/D)'))"
             )
         ),
     ).withColumn(
@@ -61,9 +56,9 @@ def cdc_collapse(
         # would lose every desc comparison and silently "win" alone,
         # and downstream a NULL _last_seq permanently disables the
         # late-arrival guard for its key — fail loudly instead
-        seq_col,
-        F.when(F.col(seq_col).isNotNull(), F.col(seq_col)).otherwise(
-            F.expr(f"raise_error('cdc_collapse: NULL {seq_col}')")
+        "seq",
+        F.when(F.col("seq").isNotNull(), F.col("seq")).otherwise(
+            F.expr("raise_error('cdc_collapse: NULL seq')")
         ),
     )
     # rank(), not row_number(): ties at the winning seq all get rank 1
@@ -72,7 +67,7 @@ def cdc_collapse(
     # Catalyst plans it as WindowGroupLimit — the winner is selected
     # partition-locally BEFORE the key exchange and a hot key's
     # million-change backlog never materializes in one sort buffer.
-    w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
+    w = Window.partitionBy(*key_cols).orderBy(F.col("seq").desc())
     winners = checked.select(
         "*", F.rank().over(w).alias("_cdc_rnk")
     ).filter(F.col("_cdc_rnk") == 1)
@@ -88,8 +83,8 @@ def cdc_collapse(
     keep = F.when(
         F.col("_cdc_nwin") > 1,
         F.expr(
-            f"raise_error(concat('cdc_collapse: duplicate (key, {seq_col}) "
-            f"— tie at winning seq ', cast({seq_col} as string)))"
+            "raise_error(concat('cdc_collapse: duplicate (key, seq) "
+            "— tie at winning seq ', cast(seq as string)))"
         ).cast("boolean"),
     ).otherwise(F.lit(True))
     return guarded.filter(keep).drop("_cdc_rnk", "_cdc_nwin")
@@ -99,10 +94,9 @@ def cdc_apply(
     snapshot: DataFrame,
     changes: DataFrame,
     key_cols: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
-    """Apply a change batch to a snapshot: net-'D' keys are removed,
+    """Apply a change batch (ordered by ``seq``, operation in ``op``)
+    to a snapshot: net-'D' keys are removed,
     net-'I'/'U' rows replace or insert their key's row.  Returns the
     new snapshot with exactly the snapshot's columns.
 
@@ -119,8 +113,8 @@ def cdc_apply(
         raise ValueError(
             f"cdc_apply: changes are missing snapshot columns {missing}"
         )
-    net = cdc_collapse(changes, key_cols, seq_col=seq_col, op_col=op_col)
+    net = cdc_collapse(changes, key_cols)
     touched = net.select(*key_cols)
     survivors = snapshot.join(touched, list(key_cols), "left_anti")
-    upserts = net.filter(F.col(op_col) != "D").select(*payload_cols)
+    upserts = net.filter(F.col("op") != "D").select(*payload_cols)
     return survivors.unionByName(upserts)

@@ -138,16 +138,11 @@ def train_split_expr(id_col: str, salt: str = "nbsplit", train_pct: int = 8000) 
 
 
 def nb_quality_scores(
-    df: DataFrame,
-    label_expr: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "nbsplit",
-    train_pct: int = 8000,
+    df: DataFrame, label_expr: Column, train_pct: int = 8000
 ) -> DataFrame:
-    """End-to-end pipeline: deterministic train split -> NB fit on the
-    train rows under ``label_expr`` -> score the corpus.  Returns
-    ``(id, n_words, score, predicted)``.
+    """End-to-end pipeline: deterministic train split of ``doc_id`` ->
+    NB fit on the train rows' ``text`` under ``label_expr`` -> score
+    the corpus.  Returns ``(doc_id, n_words, score, predicted)``.
 
     Contract edges: a NULL ``label_expr`` (e.g. a NULL feature column)
     labels the row NEGATIVE — the same coalesce the SQL oracle's
@@ -159,22 +154,15 @@ def nb_quality_scores(
     labeled = df.withColumn(
         "_nb_label", F.coalesce(label_expr.cast("long"), F.lit(0))
     )
-    train = labeled.filter(train_split_expr(id_col, salt, train_pct))
-    model, totals = nb_train(train, "_nb_label", id_col, text_col)
-    scored = nb_score(df, model, totals, id_col, text_col)
+    train = labeled.filter(train_split_expr("doc_id", train_pct=train_pct))
+    model, totals = nb_train(train, "_nb_label")
+    scored = nb_score(df, model, totals)
     return scored.withColumn(
         "predicted", (F.col("score") > 0).cast("int")
     )
 
 
-def nb_evaluate(
-    df: DataFrame,
-    label_expr: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "nbsplit",
-    train_pct: int = 8000,
-) -> DataFrame:
+def nb_evaluate(df: DataFrame, label_expr: Column) -> DataFrame:
     """Held-out evaluation of the :func:`nb_quality_scores` pipeline:
     fit on the train split, score the TEST split, and reduce its
     predictions against the labels to ONE row of confusion counts and
@@ -188,7 +176,7 @@ def nb_evaluate(
     identical on any engine.  Zero denominators yield NULL.
 
     Scale: only the TEST split is ever scored (the train split's
-    scores would be discarded — at the default 80/20 split that is 5x
+    scores would be discarded — at the 80/20 split that is 5x
     less scoring work than scoring the corpus); evaluation then adds
     one broadcast-sized join and a global 1-row aggregation.
 
@@ -200,13 +188,11 @@ def nb_evaluate(
     labeled = df.withColumn(
         "_nb_y", F.coalesce(label_expr.cast("long"), F.lit(0))
     )
-    train = labeled.filter(train_split_expr(id_col, salt, train_pct))
-    model, totals = nb_train(train, "_nb_y", id_col, text_col)
-    test = labeled.filter(~train_split_expr(id_col, salt, train_pct))
-    scored = nb_score(test, model, totals, id_col, text_col)
-    return nb_evaluate_scored(
-        scored.join(test.select(id_col, "_nb_y"), id_col)
-    )
+    train = labeled.filter(train_split_expr("doc_id"))
+    model, totals = nb_train(train, "_nb_y")
+    test = labeled.filter(~train_split_expr("doc_id"))
+    scored = nb_score(test, model, totals)
+    return nb_evaluate_scored(scored.join(test.select("doc_id", "_nb_y"), "doc_id"))
 
 
 def nb_evaluate_scored(scored: DataFrame) -> DataFrame:
@@ -237,15 +223,7 @@ def nb_evaluate_scored(scored: DataFrame) -> DataFrame:
     )
 
 
-def nb_calibration(
-    df: DataFrame,
-    label_expr: Column,
-    bins: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "nbsplit",
-    train_pct: int = 8000,
-) -> DataFrame:
+def nb_calibration(df: DataFrame, label_expr: Column, bins: int = 10) -> DataFrame:
     """Reliability diagram of the :func:`nb_quality_scores` classifier
     on the held-out split: equal-frequency score bins vs observed
     positive rate — "are the classifier's probabilities honest", the
@@ -273,22 +251,18 @@ def nb_calibration(
     labeled = df.withColumn(
         "_nb_y", F.coalesce(label_expr.cast("long"), F.lit(0))
     )
-    train = labeled.filter(train_split_expr(id_col, salt, train_pct))
-    model, totals = nb_train(train, "_nb_y", id_col, text_col)
-    test = labeled.filter(~train_split_expr(id_col, salt, train_pct))
-    scored = nb_score(test, model, totals, id_col, text_col)
+    train = labeled.filter(train_split_expr("doc_id"))
+    model, totals = nb_train(train, "_nb_y")
+    test = labeled.filter(~train_split_expr("doc_id"))
+    scored = nb_score(test, model, totals)
     return nb_calibration_scored(
-        scored.join(test.select(id_col, "_nb_y"), id_col),
-        bins=bins,
-        id_col=id_col,
+        scored.join(test.select("doc_id", "_nb_y"), "doc_id"), bins=bins
     )
 
 
-def nb_calibration_scored(
-    scored: DataFrame, bins: int = 10, id_col: str = "doc_id"
-) -> DataFrame:
+def nb_calibration_scored(scored: DataFrame, bins: int = 10) -> DataFrame:
     """:func:`nb_calibration`'s binning on an ALREADY-scored labeled
-    frame (``score`` raw log-odds, ``_nb_y`` 0/1, ``id_col``):
+    frame (``score`` raw log-odds, ``_nb_y`` 0/1, ``doc_id``):
     round-first, clamp at +-30, ntile over (rounded score, id), means
     at 4dp, gap from the rounded pair.  Factored out (review fix,
     round 12) so the shared-view entry (q123) and the standalone
@@ -305,7 +279,7 @@ def nb_calibration_scored(
         F.lit(1.0)
         + F.exp(-F.greatest(F.least(score_r, F.lit(30.0)), F.lit(-30.0)))
     )
-    w = Window.orderBy(score_r.asc(), F.col(id_col).asc())
+    w = Window.orderBy(score_r.asc(), F.col("doc_id").asc())
     binned = scored.select(
         F.ntile(bins).over(w).alias("bin"),
         prob.alias("_prob"),

@@ -148,20 +148,16 @@ def _lloyd(
 
 
 def kmeans_train(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: int | None = 9,
+    df: DataFrame, k: int = 8, iterations: int = 5, quantize: int | None = 9
 ) -> list[list[float]]:
-    """Train-only entry: the final centroids after ``iterations`` Lloyd
-    updates (the deterministic loop :func:`kmeans_assign` uses),
+    """Train-only entry: the final centroids of the ``embedding``
+    column after ``iterations`` Lloyd updates (the deterministic loop
+    :func:`kmeans_assign` uses),
     returned as plain driver-side lists — the building block for
     consumers that need the CODEBOOK rather than the assignment
     (``operators/pq.py`` trains one per subspace)."""
     base = ensure_min_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
         kernel_parallelism(df),
     ).cache()
     try:
@@ -171,24 +167,19 @@ def kmeans_train(
 
 
 def kmeans_assign(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: int | None = 9,
-    keep_vec: bool = False,
+    df: DataFrame, k: int = 8, iterations: int = 5, keep_vec: bool = False
 ) -> DataFrame:
-    """Assign every vector to one of ``k`` clusters after a fixed
-    number of Lloyd iterations.  Returns (id, cluster, sq_dist), plus
+    """Assign every ``embedding`` to one of ``k`` clusters after a fixed
+    number of Lloyd iterations with 1e-9 centroid quantization.
+    Returns (id, cluster, sq_dist), ``id`` the ``vec_id``, plus
     the vector itself as ``vec`` when ``keep_vec`` (for consumers like
     :func:`semdedup` that pair vectors within a cluster)."""
     base = ensure_min_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
         kernel_parallelism(df),
     ).cache()
     try:
-        centroids = _lloyd(base, k, iterations, quantize)
+        centroids = _lloyd(base, k, iterations, 9)
         cols = ["id", "cluster", "sq_dist"] + (["vec"] if keep_vec else [])
         return _assignment_plan(base, centroids).select(*cols)
     finally:
@@ -217,20 +208,19 @@ def semdedup(
     k: int = 8,
     iterations: int = 3,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_group_rows: int | None = None,
     max_group_bytes: int | None = None,
 ) -> DataFrame:
-    """SemDedup-style semantic deduplication: cluster the embedding
-    space (fixed-iteration Lloyd, deterministic init), then mark as
-    duplicates the vectors that have a higher-priority (lower-id)
-    near-identical neighbor *within their own cluster* (cosine ≥
-    ``threshold``).  The cluster step is what makes this scale: pair
-    comparison is confined to same-cluster vectors, so the pair volume
-    is Σ n_c² instead of N² — at 100 TB you raise ``k`` with corpus
-    size (k ∝ N/target_cluster_size) and the per-cluster work stays
-    bounded, while the cluster equi-join shuffles on a single int key.
+    """SemDedup-style semantic deduplication of ``(vec_id, embedding)``
+    rows: cluster the embedding space (fixed-iteration Lloyd,
+    deterministic init), then mark as duplicates the vectors that have a
+    higher-priority (lower-id) near-identical neighbor *within their own
+    cluster* (cosine ≥ ``threshold``).  The cluster step is what makes
+    this scale: pair comparison is confined to same-cluster vectors, so
+    the pair volume is Σ n_c² instead of N² — at 100 TB you raise ``k``
+    with corpus size (k ∝ N/target_cluster_size) and the per-cluster
+    work stays bounded, while the cluster equi-join shuffles on a single
+    int key.
 
     The drop rule is the non-greedy form (drop if ANY lower-id
     same-cluster neighbor is ≥ threshold, retained or not) — the
@@ -281,9 +271,7 @@ def semdedup(
     # expressions and the source scan would execute twice per action —
     # localCheckpoint pins the one copy (same precedent as connected
     # components in operators/dedup.py)
-    assigned = kmeans_assign(
-        df, k, iterations, id_col, vec_col, keep_vec=True
-    ).localCheckpoint()
+    assigned = kmeans_assign(df, k, iterations, keep_vec=True).localCheckpoint()
 
     if max_group_bytes is not None:
         if max_group_bytes < 1:

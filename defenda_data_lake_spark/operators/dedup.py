@@ -77,11 +77,10 @@ def first_occurrence_key(op_name: str) -> Column:
     )
 
 
-def word_shingle_postings(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingles per document with the document's
-    shingle-set size carried on every row: (id, shingle, set_size).
+def word_shingle_postings(df: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles of each ``text`` with the document's
+    shingle-set size carried on every row: (id, shingle, set_size),
+    ``id`` the ``doc_id``.
 
     ``shingle`` is a 64-bit hash of the n-gram, not the string: the
     little-endian value of the first 8 md5 digest bytes — exactly
@@ -166,9 +165,7 @@ def word_shingle_postings(
         kernel_parallelism,
     )
 
-    narrow = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("text")
-    )
+    narrow = df.select(F.col("doc_id").cast("long").alias("id"), "text")
     # single-file inputs would run this stage (and everything fed by
     # it) on one task — spread first, but only in proportion to the
     # bytes of work (kernel_parallelism): exchanging a sub-MB corpus to
@@ -185,23 +182,19 @@ def word_shingle_postings(
     )
 
 
-def word_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingle hashes per document: (id, shingle)."""
-    return word_shingle_postings(df, text_col, id_col, n).select("id", "shingle")
+    return word_shingle_postings(df, n).select("id", "shingle")
 
 
-def exact_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup via content digest: one row per distinct content with
-    its cardinality and canonical (min-id) representative.  Filter
-    ``dup_count > 1`` for the duplicate groups."""
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
+    """Exact dedup via content digest: one row per distinct ``text``
+    with its cardinality and canonical (min ``doc_id``) representative.
+    Filter ``dup_count > 1`` for the duplicate groups."""
     return (
         df.select(
-            F.md5(normalized_text(F.col(text_col))).alias("content_hash"),
-            F.col(id_col).alias("id"),
+            F.md5(normalized_text(F.col("text"))).alias("content_hash"),
+            F.col("doc_id").alias("id"),
         )
         .groupBy("content_hash")
         .agg(
@@ -212,17 +205,10 @@ def exact_duplicate_groups(
 
 
 def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-    passthrough: Sequence[str] = (),
+    df: DataFrame, num_hashes: int = 8, shingle_n: int = 3
 ) -> DataFrame:
-    """MinHash signature per document.  ``passthrough`` columns are
-    carried to the output unchanged (one value per doc) —
-    ``minhash_bucket_dedupe`` uses this to keep its ``ts_col`` without
-    a join-back.  A document whose text yields no shingles gets no row
+    """MinHash signature of each document's ``text``, keyed by its
+    ``doc_id``.  A document whose text yields no shingles gets no row
     (the agg-form contract).
 
     Hash family i is the i-th 32-bit hex chunk of ``md5(p || shingle)``
@@ -287,13 +273,7 @@ def minhash_signatures(
         for batch in batches:
             ids: list = []
             cols: list[list[str]] = [[] for _ in range(num_hashes)]
-            pt_vals: dict[str, list] = {c: [] for c in passthrough}
-            # hoisted out of the doc loop: scalar Series.iloc per row
-            # would cost ~20-40x a plain list index in this hot kernel
-            pt_cols = {c: batch[c].to_list() for c in passthrough}
-            for row_idx, (doc_id, text) in enumerate(
-                zip(batch["_mh_id"], batch["_mh_text"])
-            ):
+            for doc_id, text in zip(batch["id"], batch["text"]):
                 # .split() with no argument already collapses/trims all
                 # whitespace runs, so tokens equal normalized_text's
                 words = str(text).lower().split()
@@ -323,32 +303,18 @@ def minhash_signatures(
                 for i in range(num_hashes):
                     cols[i].append(mins[i * 8 : (i + 1) * 8].decode("ascii"))
                 ids.append(doc_id)
-                for c in passthrough:
-                    pt_vals[c].append(pt_cols[c][row_idx])
             yield pd.DataFrame(
-                {
-                    "id": ids,
-                    **{f"h{i}": cols[i] for i in range(num_hashes)},
-                    **{c: pt_vals[c] for c in passthrough},
-                }
+                {"id": ids, **{f"h{i}": cols[i] for i in range(num_hashes)}}
             )
 
-    # internal underscore names so a passthrough column named "id" or
-    # "text" can't collide with the kernel's working columns
-    narrow = df.select(
-        F.col(id_col).alias("_mh_id"),
-        F.col(text_col).alias("_mh_text"),
-        *[F.col(c) for c in passthrough],
-    )
-    pt_fields = [df.schema[c] for c in passthrough]
+    narrow = df.select(F.col("doc_id").alias("id"), "text")
     # the id keeps its input type (long doc ids and string event ids
     # both work); consumers that need a specific type cast at their end
     return ensure_min_parallelism(narrow, kernel_parallelism(df)).mapInPandas(
         gen,
         schema=T.StructType(
-            [T.StructField("id", df.schema[id_col].dataType)]
+            [T.StructField("id", df.schema["doc_id"].dataType)]
             + [T.StructField(f"h{i}", T.StringType()) for i in range(num_hashes)]
-            + pt_fields
         ),
     )
 
@@ -380,15 +346,13 @@ def band_structs_expr(hs: Sequence[str], bands: int) -> Column:
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 2,
     shingle_n: int = 3,
     max_bucket_docs: int | None = None,
 ) -> DataFrame:
     """LSH banding over MinHash signatures: docs agreeing on all hashes
-    of any band become a candidate pair (id_a < id_b).  Equi-join on the
+    of any band become a candidate ``doc_id`` pair (id_a < id_b).  Equi-join on the
     band signature — no cross product.
 
     ``max_bucket_docs`` skips buckets whose membership exceeds the
@@ -406,7 +370,7 @@ def minhash_lsh_candidates(
     array is never built."""
     # one row per (doc, band) via explode — NOT a union of per-band
     # selects, so the signature kernel runs once, not per band
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+    sigs = minhash_signatures(df, num_hashes, shingle_n)
     band_structs = band_structs_expr([f"h{i}" for i in range(num_hashes)], bands)
     banded = sigs.select("id", F.explode(band_structs).alias("bs")).select(
         "id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
@@ -442,22 +406,15 @@ def minhash_lsh_candidates(
 
 
 def minhash_bucket_dedupe(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str | None = None,
-    num_hashes: int = 8,
-    bands: int = 2,
-    shingle_n: int = 3,
-    min_hash_agreement: float = 0.5,
-    max_bucket_docs: int | None = None,
+    df: DataFrame, min_hash_agreement: float = 0.5
 ) -> DataFrame:
-    """Claimant-based near-dedup: per LSH bucket, the earliest document
-    (by ``ts_col`` then id-as-string — string order deliberately, the
-    order Q77's oracle replays) claims the bucket; every other member
-    whose FULL minhash signature agrees with the claimant's on at least
-    ``min_hash_agreement`` of the ``num_hashes`` families (the MinHash
-    estimate of Jaccard similarity) is marked a duplicate of it.  A doc flagged in
+    """Claimant-based near-dedup over 8 MinHash families of word
+    trigrams in 2 bands: per LSH bucket, the first document by
+    ``doc_id``-as-string (string order deliberately, the order Q77's
+    oracle replays) claims the bucket; every other member whose FULL
+    minhash signature agrees with the claimant's on at least
+    ``min_hash_agreement`` of the families (the MinHash estimate of
+    Jaccard similarity) is marked a duplicate of it.  A doc flagged in
     several bands resolves ``dup_of`` to the string-min claimant.
 
     Versus ``minhash_lsh_candidates`` + exact verify: candidate pairs
@@ -467,60 +424,47 @@ def minhash_bucket_dedupe(
 
     Returns the input rows plus ``dup_of`` (string claimant id, NULL
     for survivors/claimants).  Plan: signature kernel (shuffle-free)
-    → one exchange on (band, band_sig) where two window passes pick
-    claimant and bucket size → per-doc min aggregation → one join
-    back to the input.  ``max_bucket_docs`` skips oversized buckets,
-    same contract as ``minhash_lsh_candidates``."""
-    passthrough = [ts_col] if ts_col else []
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, passthrough=passthrough
-    )
-    hs = [f"h{i}" for i in range(num_hashes)]
-    band_structs = band_structs_expr(hs, bands)
+    → one exchange on (band, band_sig) where a window pass picks the
+    claimant → per-doc min aggregation → one join back to the input."""
+    sigs = minhash_signatures(df)
+    hs = [f"h{i}" for i in range(8)]
     banded = sigs.select(
         F.col("id").cast("string").alias("id_s"),
         *hs,
-        *passthrough,
-        F.explode(band_structs).alias("bs"),
-    ).select("id_s", *hs, *passthrough, "bs.band", "bs.band_sig")
+        F.explode(band_structs_expr(hs, 2)).alias("bs"),
+    ).select("id_s", *hs, "bs.band", "bs.band_sig")
 
-    order_cols = ([F.col(ts_col)] if ts_col else []) + [F.col("id_s")]
-    w_claim = Window.partitionBy("band", "band_sig").orderBy(*order_cols)
-    w_all = Window.partitionBy("band", "band_sig")
+    w_claim = Window.partitionBy("band", "band_sig").orderBy("id_s")
     claimed = banded.select(
         "id_s",
         *hs,
         F.first("id_s").over(w_claim).alias("first_id"),
         *[F.first(h).over(w_claim).alias(f"c_{h}") for h in hs],
-        F.count("*").over(w_all).alias("n_bucket"),
     )
     agreement = sum(
         F.when(F.col(h) == F.col(f"c_{h}"), 1).otherwise(0) for h in hs
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(len(hs)))
     flagged = claimed.filter(
         (F.col("id_s") != F.col("first_id"))
         & (agreement >= F.lit(min_hash_agreement))
     )
-    if max_bucket_docs is not None:
-        flagged = flagged.filter(F.col("n_bucket") <= max_bucket_docs)
     dup_map = flagged.groupBy("id_s").agg(F.min("first_id").alias("dup_of"))
     return df.join(
-        dup_map, F.col(id_col).cast("string") == dup_map["id_s"], "left"
+        dup_map, F.col("doc_id").cast("string") == dup_map["id_s"], "left"
     ).drop("id_s")
 
 
-def _word_chunks(
-    df: DataFrame, text_col: str, id_col: str, chunk_words: int
-) -> DataFrame:
+def _word_chunks(df: DataFrame, chunk_words: int) -> DataFrame:
     """Non-overlapping word-chunk explode shared by the chunk-granularity
     operators: ``(id, start, chunk)`` rows, one per ``chunk_words``-word
-    window of the normalized text (empty docs yield one empty chunk).
+    window of the normalized ``text`` (empty docs yield one empty
+    chunk), ``id`` the ``doc_id``.
     Pure JVM — split + sequence + explode + slice, no interpreted HOF
     over O(L²) substrings."""
-    norm = normalized_text(F.col(text_col))
+    norm = normalized_text(F.col("text"))
     w = F.split(norm, " ")
     t = df.select(
-        F.col(id_col).alias("id"), w.alias("_w"), F.size(w).alias("_n")
+        F.col("doc_id").alias("id"), w.alias("_w"), F.size(w).alias("_n")
     )
     starts = F.sequence(F.lit(1), F.greatest(F.col("_n"), F.lit(1)), F.lit(chunk_words))
     return t.select(
@@ -536,15 +480,10 @@ def _word_chunks(
     )
 
 
-def chunk_level_dedupe(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_words: int = 50,
-) -> DataFrame:
+def chunk_level_dedupe(df: DataFrame, chunk_words: int = 50) -> DataFrame:
     """Paragraph-granularity dedup (the Dolma/CCNet pipeline step,
     adapted to word-chunks since this corpus has no newlines): split
-    each document into NON-overlapping ``chunk_words``-word chunks,
+    each document's ``text`` into NON-overlapping ``chunk_words``-word chunks,
     drop every chunk whose exact normalized content already occurred
     EARLIER in the corpus (first occurrence = min (doc, position) —
     encoded as one zero-padded sortable string so any engine's plain
@@ -561,7 +500,7 @@ def chunk_level_dedupe(
     free); reassembly is one groupBy(doc) with a sorted collect_list
     bounded by the document's own chunk count.  Two exchanges total,
     both on high-cardinality keys."""
-    ex = _word_chunks(df, text_col, id_col, chunk_words)
+    ex = _word_chunks(df, chunk_words)
     occ = first_occurrence_key("chunk_level_dedupe")
     hashed = ex.select("id", "start", "chunk", occ.alias("occ"), F.md5("chunk").alias("h"))
     first_occ = F.min("occ").over(Window.partitionBy("h"))
@@ -588,14 +527,10 @@ def chunk_level_dedupe(
 
 
 def boilerplate_chunk_removal(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_words: int = 20,
-    min_doc_freq: int = 3,
+    df: DataFrame, chunk_words: int = 20, min_doc_freq: int = 3
 ) -> DataFrame:
     """C4/CCNet boilerplate-line removal, adapted to word-chunks (this
-    corpus has no newlines): a chunk whose exact normalized content
+    corpus has no newlines): a ``text`` chunk whose exact normalized content
     occurs in at least ``min_doc_freq`` DISTINCT documents is
     boilerplate (headers, nav bars, license blurbs) and is removed from
     EVERY document — including the first occurrence, which is what
@@ -621,9 +556,7 @@ def boilerplate_chunk_removal(
     violating the no-row-lost contract every other operator here
     honors."""
     ex = _word_chunks(
-        df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit(""))),
-        text_col,
-        id_col,
+        df.withColumn("text", F.coalesce(F.col("text"), F.lit(""))),
         chunk_words,
     )
     hashed = ex.select("id", "start", "chunk", F.md5("chunk").alias("h"))
@@ -654,11 +587,7 @@ def boilerplate_chunk_removal(
 
 
 def _sharded_postings(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    max_shingle_docs: int | None,
+    df: DataFrame, shingle_n: int, max_shingle_docs: int | None
 ) -> DataFrame:
     """Shingle postings repartitioned by shingle with the optional
     hot-shingle guard applied — the shared front half of every
@@ -683,7 +612,7 @@ def _sharded_postings(
     sort saves.)"""
     from defenda_data_lake_spark.utils.partitioning import scaled_keyed_partitions
 
-    postings = word_shingle_postings(df, text_col, id_col, shingle_n)
+    postings = word_shingle_postings(df, shingle_n)
     postings = postings.repartition(scaled_keyed_partitions(df), "shingle")
     if max_shingle_docs is not None:
         postings = postings.withColumn(
@@ -694,8 +623,6 @@ def _sharded_postings(
 
 def _postings_pair_counts(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     shingle_n: int,
     max_shingle_docs: int | None,
     extra_on: Column | None = None,
@@ -709,9 +636,9 @@ def _postings_pair_counts(
     Returns ``(id_a, id_b, inter_size, size_a, size_b)``."""
     from defenda_data_lake_spark.utils.partitioning import pair_join_hint
 
-    postings = _sharded_postings(
-        df, text_col, id_col, shingle_n, max_shingle_docs
-    ).hint(pair_join_hint(df))
+    postings = _sharded_postings(df, shingle_n, max_shingle_docs).hint(
+        pair_join_hint(df)
+    )
     a = postings.alias("a")
     b = postings.alias("b")
     on = [
@@ -733,15 +660,13 @@ def _postings_pair_counts(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_shingle_docs: int | None = None,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard similarity for all candidate pairs
-    sharing at least one shingle (inverted-index join), keeping pairs
-    with ``jaccard >= threshold``.
+    """Exact word-n-gram Jaccard similarity of ``text`` for all
+    candidate ``doc_id`` pairs sharing at least one shingle
+    (inverted-index join), keeping pairs with ``jaccard >= threshold``.
 
     ``max_shingle_docs`` drops shingles whose posting list exceeds the
     bound — the standard guard against quadratic blowup on ubiquitous
@@ -772,7 +697,7 @@ def ngram_jaccard_pairs(
         F.col("a.set_size"), F.col("b.set_size")
     ) >= F.lit(threshold) * F.greatest(F.col("a.set_size"), F.col("b.set_size"))
     pairs = _postings_pair_counts(
-        df, text_col, id_col, shingle_n, max_shingle_docs, extra_on=size_bound
+        df, shingle_n, max_shingle_docs, extra_on=size_bound
     )
     return (
         pairs.select(
@@ -789,14 +714,12 @@ def ngram_jaccard_pairs(
 
 def ngram_containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.8,
     max_shingle_docs: int | None = None,
 ) -> DataFrame:
-    """Near-containment pairs: ``containment = |A ∩ B| / min(|A|, |B|)``
-    over word-n-gram shingle sets, keeping pairs at or above
+    """Near-containment ``doc_id`` pairs: ``containment = |A ∩ B| /
+    min(|A|, |B|)`` over word-n-gram shingle sets of ``text``, keeping pairs at or above
     ``threshold``.  Catches a document embedded inside a larger one
     (quotes, concatenated crawls, page-plus-boilerplate) that Jaccard
     misses — a small doc fully contained in a big one has high
@@ -808,9 +731,7 @@ def ngram_containment_pairs(
     bucket-grouped form loses at scale).  There is no size-ratio prune
     here — containment is size-asymmetric by design, so no pair can be
     excluded by sizes alone."""
-    pairs = _postings_pair_counts(
-        df, text_col, id_col, shingle_n, max_shingle_docs
-    )
+    pairs = _postings_pair_counts(df, shingle_n, max_shingle_docs)
     return pairs.select(
         "id_a",
         "id_b",
@@ -821,13 +742,8 @@ def ngram_containment_pairs(
     ).filter(F.col("containment") >= threshold)
 
 
-def ngram_novelty(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Per-document n-gram novelty: of a document's distinct shingles,
+def ngram_novelty(df: DataFrame, shingle_n: int = 3) -> DataFrame:
+    """Per-document n-gram novelty: of a ``text``'s distinct shingles,
     how many appear in NO document with a smaller id — the standard
     incremental-dedup signal for ordered corpora (crawl snapshots,
     dated dumps): a document whose shingles are all already claimed by
@@ -845,7 +761,7 @@ def ngram_novelty(
     long-keyed shuffles total; every intermediate row is fixed-width."""
     from defenda_data_lake_spark.utils.partitioning import pair_join_hint
 
-    postings = _sharded_postings(df, text_col, id_col, shingle_n, None).hint(
+    postings = _sharded_postings(df, shingle_n, None).hint(
         pair_join_hint(df)
     )
     claims = postings.groupBy("shingle").agg(F.min("id").alias("first_doc"))
@@ -875,13 +791,12 @@ def ngram_novelty(
 def ngram_contamination(
     train: DataFrame,
     test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     max_shingle_docs: int | None = None,
 ) -> DataFrame:
     """Train/test contamination report: for every (train doc, test doc)
-    pair sharing at least one word ``n``-gram, the count of shared
+    pair sharing at least one word ``n``-gram of ``text`` (documents
+    keyed by ``doc_id``), the count of shared
     distinct n-grams and the fraction of the TEST doc's n-gram set they
     cover — the standard eval-decontamination primitive (long n-grams,
     n≈8-13, so incidental phrase reuse doesn't flag).
@@ -896,14 +811,14 @@ def ngram_contamination(
     shingle.  Long n-grams make ubiquitous shingles rare, but
     ``max_shingle_docs`` (applied to the TRAIN posting lists, document
     frequency within train) is available for degenerate boilerplate."""
-    tp = word_shingle_postings(train, text_col, id_col, n).select(
+    tp = word_shingle_postings(train, n).select(
         F.col("id").alias("train_doc"), "shingle"
     )
     if max_shingle_docs is not None:
         tp = tp.withColumn(
             "df_", F.count("*").over(Window.partitionBy("shingle"))
         ).filter(F.col("df_") <= max_shingle_docs).drop("df_")
-    sp = word_shingle_postings(test, text_col, id_col, n).select(
+    sp = word_shingle_postings(test, n).select(
         F.col("id").alias("test_doc"),
         "shingle",
         F.col("set_size").alias("test_size"),
@@ -928,13 +843,9 @@ def ngram_contamination(
 
 
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    all_ids: DataFrame | None = None,
-    max_iterations: int = 50,
+    pairs: DataFrame, all_ids: DataFrame | None = None
 ) -> DataFrame:
-    """Connected components over a pair list: every node gets the
+    """Connected components over an ``(id_a, id_b)`` pair list: every node gets the
     MINIMUM id reachable from it as its component label — the step that
     turns near-duplicate *pairs* (MinHash/SimHash/Jaccard output) into
     duplicate *clusters* a corpus dedup can act on.
@@ -962,7 +873,7 @@ def connected_components(
     ``localCheckpoint``-ed: without truncation the lineage doubles per
     round and Catalyst re-analysis dominates.  Near-dup clusters in
     real corpora have tiny diameters (most are cliques), so typical
-    round counts are 2-4.
+    round counts are 2-4; the loop stops after 50 rounds at most.
 
     Round 13 (the r13 CC/NB decomposition, guide §1.1/§7): the
     checkpoints are LAZY (``eager=False``) and the convergence
@@ -979,7 +890,8 @@ def connected_components(
     the label values are untouched — pinned by the components suite
     and the four consumers' 3-SF oracle runs."""
     e = pairs.select(
-        F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
+        F.col("id_a").cast("long").alias("src"),
+        F.col("id_b").cast("long").alias("dst"),
     )
     edges = (
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -1003,7 +915,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     prev_sum = None
-    for _ in range(max_iterations):
+    for _ in range(50):
         lab = labels.alias("lab")
         nbr_min = (
             edges.alias("e")
@@ -1045,29 +957,22 @@ def connected_components(
     return labels
 
 
-def duplicate_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Per-document duplicate-cluster assignment from a near-dup pair
-    list: ``(doc_id, cluster_id, cluster_size, is_canonical)`` where
+def duplicate_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Per-document duplicate-cluster assignment from an ``(id_a,
+    id_b)`` near-dup pair list: ``(doc_id, cluster_id, cluster_size,
+    is_canonical)`` where
     ``cluster_id`` is the component's min doc id and the canonical row
     (``is_canonical = 1``) is the one a dedup keeps.  Documents in no
     pair are their own singleton cluster.
 
     ``anti-join df against (is_canonical = 0)`` — or equivalently
     filter this mapping — materializes the deduplicated corpus."""
-    labels = connected_components(
-        pairs, id_a=id_a, id_b=id_b, all_ids=df.select(id_col)
-    )
+    labels = connected_components(pairs, all_ids=df.select("doc_id"))
     sized = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sized, "label")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("label").alias("cluster_id"),
             F.col("cluster_size"),
             (F.col("id") == F.col("label")).cast("int").alias("is_canonical"),
@@ -1076,16 +981,12 @@ def duplicate_clusters(
 
 
 def quality_survivor_dedupe(
-    df: DataFrame,
-    pairs: DataFrame,
-    quality_col: str,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
+    df: DataFrame, pairs: DataFrame, quality_col: str
 ) -> DataFrame:
     """Quality-aware near-dedup: keep, from every duplicate CLUSTER
-    (connected component of the pair graph), the row with the HIGHEST
-    ``quality_col`` (ties broken by ascending id) — the curation form
+    (connected component of the ``(id_a, id_b)`` pair graph), the row
+    with the HIGHEST ``quality_col`` (ties broken by ascending
+    ``doc_id``) — the curation form
     of dedup.  Every claimant-style operator here keeps the MIN-id
     member, which is arbitrary; when a near-dup family mixes a clean
     original with truncated/noisy copies, the corpus should keep the
@@ -1101,12 +1002,12 @@ def quality_survivor_dedupe(
     partition prunes to one candidate row per cluster BEFORE the
     exchange; ``quality_col`` should be deterministic (an integer
     signal or an ``R()``-rounded score) for cross-engine stability."""
-    clusters = duplicate_clusters(df, pairs, id_col, id_a, id_b).select(
-        id_col, "cluster_id", "cluster_size"
+    clusters = duplicate_clusters(df, pairs).select(
+        "doc_id", "cluster_id", "cluster_size"
     )
-    joined = df.join(clusters, id_col)
+    joined = df.join(clusters, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(quality_col).desc(), F.col(id_col).asc()
+        F.col(quality_col).desc(), F.col("doc_id").asc()
     )
     return (
         joined.withColumn("_qs_rk", F.row_number().over(w))
@@ -1174,11 +1075,10 @@ def _simhash_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per document over word bigrams (Arrow-batched
-    pandas host; md5-derived bit mixing, deterministic)."""
+def simhash_signatures(df: DataFrame) -> DataFrame:
+    """64-bit SimHash per ``doc_id`` over the word bigrams of its
+    ``text`` (Arrow-batched pandas host; md5-derived bit mixing,
+    deterministic)."""
     from pyspark.sql import types as T
 
     from defenda_data_lake_spark.utils.partitioning import (
@@ -1186,7 +1086,7 @@ def simhash_signatures(
         kernel_parallelism,
     )
 
-    narrow = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    narrow = df.select(F.col("doc_id").alias("id"), "text")
     return ensure_min_parallelism(narrow, kernel_parallelism(df)).mapInPandas(
         _simhash_batches,
         schema=T.StructType(
@@ -1292,34 +1192,20 @@ def hamming_block_pairs(
     )
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash: 64-bit text signature +
-    :func:`hamming_block_pairs` (pigeonhole block join, complete recall
-    for ``max_hamming < blocks``)."""
-    sigs = simhash_signatures(df, text_col, id_col)
+def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-duplicate ``doc_id`` pairs by SimHash: 64-bit ``text``
+    signature + :func:`hamming_block_pairs` (pigeonhole join over 4
+    blocks, complete recall for ``max_hamming < 4``)."""
     return hamming_block_pairs(
-        sigs,
-        id_col="id",
+        simhash_signatures(df),
         sig_col="simhash",
         max_hamming=max_hamming,
-        blocks=blocks,
         size_hint_df=df,
     )
 
 
-def duplicate_span_coverage(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    gram_words: int = 5,
-) -> DataFrame:
-    """Per-document fraction of tokens covered by corpus-REPEATED word
+def duplicate_span_coverage(df: DataFrame, gram_words: int = 5) -> DataFrame:
+    """Per-document fraction of ``text`` tokens covered by corpus-REPEATED word
     n-grams — the span-granular duplication signal behind
     suffix-array substring dedup (mark text that appears more than
     once anywhere in the corpus), computed at word-gram resolution so
@@ -1334,7 +1220,8 @@ def duplicate_span_coverage(
     paying for span REMOVAL.
 
     Returns ``(id, n_words, covered_words, dup_coverage)`` for every
-    input document (docs too short for one gram: coverage 0.0).
+    input document, ``id`` its ``doc_id`` (docs too short for one
+    gram: coverage 0.0).
 
     Plan shape (scale): positional grams are pure JVM (split + slice
     transform + explode); the occurrence count is ONE window over the
@@ -1342,10 +1229,10 @@ def duplicate_span_coverage(
     ONE window over the doc-keyed exchange, bounded per doc by its own
     gram count.  No pair expansion anywhere — corpus-hot grams cost
     their occurrence ROWS, never occurrence PAIRS."""
-    norm = normalized_text(F.col(text_col))
+    norm = normalized_text(F.col("text"))
     w = F.split(norm, " ")
     t = df.select(
-        F.col(id_col).alias("id"), w.alias("_w"), F.size(w).alias("n_words")
+        F.col("doc_id").alias("id"), w.alias("_w"), F.size(w).alias("n_words")
     )
     n = gram_words
     # q78's chunking pattern (explode a start sequence, slice per row —
@@ -1411,13 +1298,8 @@ def duplicate_span_coverage(
     return out.withColumn("dup_coverage", cov)
 
 
-def duplicate_span_removal(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    gram_words: int = 5,
-) -> DataFrame:
-    """REMOVE corpus-repeated spans instead of just measuring them
+def duplicate_span_removal(df: DataFrame, gram_words: int = 5) -> DataFrame:
+    """REMOVE corpus-repeated ``text`` spans instead of just measuring them
     (:func:`duplicate_span_coverage`): every token covered by a
     NON-FIRST occurrence of a corpus-repeated ``gram_words``-gram is
     dropped; the corpus-first occurrence (zero-padded (doc, start)
@@ -1427,7 +1309,7 @@ def duplicate_span_removal(
     paragraph loses just the quote, and the quoted original keeps it.
 
     Returns ``(id, n_words, n_removed, clean_text)`` for every input
-    document.
+    document, ``id`` its ``doc_id``.
 
     Plan shape (scale): positional grams explode+slice (codegen);
     corpus occurrence count AND first-occurrence choice share ONE
@@ -1435,10 +1317,10 @@ def duplicate_span_removal(
     positions (bounded by each doc's own length, never pair-expanded)
     and anti-join the token stream on (id, pos); reassembly is one
     doc-keyed sorted collect bounded by the doc's own token count."""
-    norm = normalized_text(F.col(text_col))
+    norm = normalized_text(F.col("text"))
     w = F.split(norm, " ")
     t = df.select(
-        F.col(id_col).alias("id"), w.alias("_w"), F.size(w).alias("n_words")
+        F.col("doc_id").alias("id"), w.alias("_w"), F.size(w).alias("n_words")
     )
     n = gram_words
     starts = F.sequence(

@@ -34,11 +34,10 @@ def snapshot_diff(
     new: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    out: str = "diff_type",
     null_safe_keys: bool = True,
 ) -> DataFrame:
     """Per-key diff of two snapshots: returns one row per key present
-    in either side with ``out`` ∈ ``added`` (new only) / ``removed``
+    in either side with ``diff_type`` ∈ ``added`` (new only) / ``removed``
     (old only) / ``modified`` (both, any compared column distinct) /
     ``unchanged`` — plus the key columns and, for modified/unchanged
     rows, the NEW side's compared columns (the current truth).
@@ -100,7 +99,7 @@ def snapshot_diff(
             *[F.col(k).alias(f"_dn_{k}") for k in keys],
             F.struct(F.lit(1).alias("_present")).alias("_dn_vals"),
         )
-        return _diff_tail(o, n, keys, [], out, null_safe_keys, set())
+        return _diff_tail(o, n, keys, [], null_safe_keys, set())
     o = old.select(
         *[F.col(k).alias(f"_do_{k}") for k in keys],
         F.struct(*[cmp_field(c) for c in cmps]).alias("_do_vals"),
@@ -110,7 +109,7 @@ def snapshot_diff(
         F.struct(*[cmp_field(c) for c in cmps]).alias("_dn_vals"),
         *[F.col(c).alias(f"_dnv_{c}") for c in cmps if c in map_cols],
     )
-    return _diff_tail(o, n, keys, cmps, out, null_safe_keys, map_cols)
+    return _diff_tail(o, n, keys, cmps, null_safe_keys, map_cols)
 
 
 def _diff_tail(
@@ -118,7 +117,6 @@ def _diff_tail(
     n: DataFrame,
     keys: list,
     cmps: list,
-    out: str,
     null_safe_keys: bool,
     map_cols: set,
 ) -> DataFrame:
@@ -144,7 +142,7 @@ def _diff_tail(
             F.coalesce(F.col(f"_dn_{k}"), F.col(f"_do_{k}")).alias(k)
             for k in keys
         ],
-        diff_type.alias(out),
+        diff_type.alias("diff_type"),
         *[
             (
                 F.col(f"_dnv_{c}")
@@ -162,7 +160,6 @@ def sampled_snapshot_diff_summary(
     key_cols: Sequence[str],
     compare_cols: Sequence[str] | None = None,
     prefix_hex: int = 1,
-    null_safe_keys: bool = True,
 ) -> DataFrame:
     """Reconciliation ESTIMATE from a coordinated key sample — "how
     much drifted?" before paying for the full join: both snapshots are
@@ -191,13 +188,7 @@ def sampled_snapshot_diff_summary(
         F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
     )
     keep = F.substring(khash, 1, prefix_hex) == F.lit("0" * prefix_hex)
-    d = snapshot_diff(
-        old.filter(keep),
-        new.filter(keep),
-        keys,
-        compare_cols,
-        null_safe_keys=null_safe_keys,
-    )
+    d = snapshot_diff(old.filter(keep), new.filter(keep), keys, compare_cols)
     return d.groupBy("diff_type").agg(
         F.count("*").alias("sample_rows"),
         (F.count("*") * F.lit(scale)).cast("long").alias("est_rows"),
@@ -209,13 +200,12 @@ def snapshot_diff_summary(
     new: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    null_safe_keys: bool = True,
 ) -> DataFrame:
     """The four-row reconciliation report: per diff type, row count and
     the min/max key (the first/last affected row — where to start
     looking).  Counts aggregate map-side; only four rows survive."""
     keys = list(key_cols)
-    d = snapshot_diff(old, new, keys, compare_cols, null_safe_keys=null_safe_keys)
+    d = snapshot_diff(old, new, keys, compare_cols)
     return d.groupBy("diff_type").agg(
         F.count("*").alias("n_rows"),
         F.min(keys[0]).alias("min_key"),

@@ -34,6 +34,9 @@ from pyspark.sql import functions as F
 
 #: fixed-point scale: ranks are integers in units of 1e-12
 SCALE = 10**12
+#: PageRank damping factor in integer percent (85 → 0.85) — integral
+#: so the update stays exact
+DAMPING_PCT = 85
 
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -74,15 +77,13 @@ def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
-    damping_pct: int = 85,
     materialize: bool = True,
     symmetric_input: bool = False,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
-    """Fixed-point PageRank over a directed simple edge list.
+    """Fixed-point PageRank over a directed simple ``(src, dst)`` edge
+    list, damping ``DAMPING_PCT``.
 
     ``symmetric_input``: pass True when the edge list is undirected
     (both orientations present — :func:`symmetrize` output).  Every
@@ -95,8 +96,7 @@ def pagerank(
 
     Returns ``(node_id, rank_e12, rank)`` where ``rank_e12`` is the
     exact BIGINT fixed-point rank (units of 1e-12) and ``rank`` its
-    6-dp double rendering.  ``damping_pct`` is the damping factor in
-    integer percent (85 → 0.85) — integral so the update stays exact.
+    6-dp double rendering.
 
     Contract: a *simple* graph (weight-1 edges; callers dedupe or
     :func:`symmetrize` first).  Nodes are whatever appears in the edge
@@ -157,11 +157,9 @@ def pagerank(
     on asymmetric data with dangling nodes)."""
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be an integer percent in [0, 100]")
     from pyspark.sql.window import Window
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     # the loop-invariant join side: |E| rows with outdeg attached.
     # count() over a src-partitioned full frame == the old
     # groupBy("src").count() joined back, row for row.
@@ -225,7 +223,7 @@ def pagerank(
             F.lit(0).cast("long").alias("rank_e12"),
             F.lit(0.0).alias("rank"),
         )
-    base = ((100 - damping_pct) * SCALE) // (100 * n)
+    base = ((100 - DAMPING_PCT) * SCALE) // (100 * n)
 
     ranks = nodes.withColumn("rank_e12", F.lit(SCALE // n).cast("long"))
     for _ in range(iterations):
@@ -252,7 +250,7 @@ def pagerank(
                 (
                     F.lit(base).cast("long")
                     + F.expr(
-                        f"({damping_pct} * coalesce(insum, 0L)) div 100"
+                        f"({DAMPING_PCT} * coalesce(insum, 0L)) div 100"
                     )
                 ).alias("rank_e12"),
             )
@@ -270,14 +268,9 @@ def pagerank(
     )
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    materialize: bool = True,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
-    UNDIRECTED simple graph (pass :func:`symmetrize` output: both
+    UNDIRECTED simple ``(src, dst)`` graph (pass :func:`symmetrize` output: both
     orientations present, no self-loops, no duplicates).
 
     Returns ``(node_id, degree, triangles, clustering)`` where
@@ -305,7 +298,7 @@ def triangle_counts(
     False for a fully lazy single-plan form.  Same non-reliable-
     storage caveat as :func:`pagerank`: an executor loss fails the
     downstream action rather than recomputing lineage."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     if materialize:
         # computed once; feeds the degree agg and the orientation join
         e = e.localCheckpoint(eager=True)

@@ -221,10 +221,8 @@ def records(text: str | None) -> Iterable[tuple[str | None, Any]]:
         return ((text, UNPARSEABLE),)
 
 
-def decode_firehose_records(
-    df: DataFrame, data_col: str = "data", source_col: str | None = None
-) -> DataFrame:
-    """Decode a Firehose-style record batch: base64 payload column →
+def decode_firehose_records(df: DataFrame) -> DataFrame:
+    """Decode a Firehose-style record batch: base64 ``data`` column →
     raw JSON event strings (reference processor.py:25-28 does exactly
     this per record; here it's one vectorized JVM expression).
     ``try_to_binary`` (not ``unbase64``) so malformed base64 decodes to
@@ -237,14 +235,11 @@ def decode_firehose_records(
     A decoded payload is split like any other intake text: a list or a
     ``Records`` bundle unrolls, where the reference's processor fails
     the whole record."""
-    cols = [
+    return df.select(
         F.try_validate_utf8(
-            F.try_to_binary(F.col(data_col), F.lit("base64")).cast("string")
+            F.try_to_binary(F.col("data"), F.lit("base64")).cast("string")
         ).alias("raw")
-    ]
-    if source_col is not None:
-        cols.append(F.col(source_col).alias("source"))
-    return df.select(*cols)
+    )
 
 
 def ndjson_intake(lines: DataFrame) -> DataFrame:

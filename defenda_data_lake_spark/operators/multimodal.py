@@ -44,6 +44,8 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType()), True),
     ]
 )
+#: length of the decoded ``feature`` vector
+FEATURE_DIM = 8
 
 
 def as_media_table(
@@ -291,24 +293,25 @@ def resize_images(
     return media.select("media_id", "content").mapInPandas(kernel, out_schema)
 
 
-def _mean_feature(values, n_slices: int) -> list[float]:
+def _mean_feature(values) -> list[float]:
     """Deterministic real-decode feature: per-slice mean of the decoded
-    samples, normalized to [0, 1] — a decode-verifying signature (any
-    pixel/sample change moves it), not a learned embedding."""
+    samples over ``FEATURE_DIM`` slices, normalized to [0, 1] — a
+    decode-verifying signature (any pixel/sample change moves it), not
+    a learned embedding."""
     import numpy as np
 
     arr = np.asarray(values, dtype=np.float64)
     if arr.size == 0:
-        return [0.0] * n_slices
-    bounds = np.linspace(0, arr.size, n_slices + 1, dtype=int)
+        return [0.0] * FEATURE_DIM
+    bounds = np.linspace(0, arr.size, FEATURE_DIM + 1, dtype=int)
     out = []
-    for i in range(n_slices):
+    for i in range(FEATURE_DIM):
         lo, hi = bounds[i], bounds[i + 1]
         out.append(float(arr[lo:hi].mean()) if hi > lo else 0.0)
     return out
 
 
-def _decode_real(payload: bytes, feature_dim: int) -> dict:
+def _decode_real(payload: bytes) -> dict:
     """Dispatch one payload on its magic bytes to a real decoder.
 
     Image rows report (width, height, n_channels); audio rows map
@@ -319,9 +322,7 @@ def _decode_real(payload: bytes, feature_dim: int) -> dict:
 
     if payload[:8] == _PNG_SIG:
         width, height, channels, pixels = _decode_png(payload)
-        feature = _mean_feature(
-            np.frombuffer(bytes(pixels), dtype=np.uint8) / 255.0, feature_dim
-        )
+        feature = _mean_feature(np.frombuffer(bytes(pixels), dtype=np.uint8) / 255.0)
         return {
             "width": width,
             "height": height,
@@ -331,7 +332,7 @@ def _decode_real(payload: bytes, feature_dim: int) -> dict:
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         n_frames, rate, channels, pcm = _decode_wav(payload)
         samples = np.frombuffer(pcm, dtype="<i2").astype(np.float64)
-        feature = _mean_feature((samples / 32768.0 + 1.0) / 2.0, feature_dim)
+        feature = _mean_feature((samples / 32768.0 + 1.0) / 2.0)
         return {
             "width": n_frames,
             "height": rate,
@@ -349,7 +350,7 @@ def _decode_real(payload: bytes, feature_dim: int) -> dict:
             "width": img.width,
             "height": img.height,
             "n_channels": arr.shape[2] if arr.ndim == 3 else 1,
-            "feature": _mean_feature(arr / 255.0, feature_dim),
+            "feature": _mean_feature(arr / 255.0),
         }
     except ImportError:
         raise NotImplementedError(
@@ -358,14 +359,14 @@ def _decode_real(payload: bytes, feature_dim: int) -> dict:
         )
 
 
-def _make_decoder(fake: bool, feature_dim: int):
+def _make_decoder(fake: bool):
     def decode_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             if not fake:
                 rows = []
                 for media_id, content in zip(batch["media_id"], batch["content"]):
                     payload = bytes(content) if content is not None else b""
-                    decoded = _decode_real(payload, feature_dim)
+                    decoded = _decode_real(payload)
                     rows.append({"media_id": media_id, **decoded})
                 yield pd.DataFrame(
                     rows, columns=[f.name for f in DECODED_SCHEMA.fields]
@@ -380,7 +381,7 @@ def _make_decoder(fake: bool, feature_dim: int):
                 height = 16 + digest[1] % 64
                 feature = [
                     (int.from_bytes(digest[i : i + 2], "big") % 1000) / 1000.0
-                    for i in range(0, min(len(digest) - 1, feature_dim * 2), 2)
+                    for i in range(0, min(len(digest) - 1, FEATURE_DIM * 2), 2)
                 ]
                 rows.append(
                     {
@@ -396,29 +397,26 @@ def _make_decoder(fake: bool, feature_dim: int):
     return decode_batches
 
 
-def decode_media(
-    media: DataFrame, fake: bool = True, feature_dim: int = 8
-) -> DataFrame:
+def decode_media(media: DataFrame, fake: bool = True) -> DataFrame:
     """Decode + feature-extract each media row.  ``fake=True`` is the
     deterministic content-hash stub (the oracle path, q44);
     ``fake=False`` really decodes — PNG and WAV dependency-free, other
     image formats via Pillow when importable (see module docstring)."""
     return media.select("media_id", "content").mapInPandas(
-        _make_decoder(fake, feature_dim), schema=DECODED_SCHEMA
+        _make_decoder(fake), schema=DECODED_SCHEMA
     )
 
 
-def chunk_audio(
-    media: DataFrame,
-    chunk_ms: int = 1000,
-    stride_ms: int = 500,
-    bytes_per_ms: int = 16,
-) -> DataFrame:
+#: audio analysis window length and stride
+_CHUNK_MS, _STRIDE_MS = 1000, 500
+
+
+def chunk_audio(media: DataFrame) -> DataFrame:
     """Audio chunking plumbing: one row per overlapping analysis window
-    (``chunk_index``, ``start_ms``, ``end_ms``) per payload — the
-    standard pre-segmentation for ASR/feature pipelines.  Duration is
-    derived from payload size at ``bytes_per_ms`` (exact for fixed-rate
-    PCM, e.g. 8 kHz 16-bit mono = 16 bytes/ms; a real implementation
+    (``chunk_index``, ``start_ms``, ``end_ms``), 1000 ms long every
+    500 ms, per payload — the standard pre-segmentation for
+    ASR/feature pipelines.  Duration is derived from payload size at 16
+    bytes/ms (exact for 8 kHz 16-bit mono PCM; a real implementation
     reads the container header instead).
 
     Pure JVM expression (``sequence`` + ``explode``) over the metadata
@@ -426,23 +424,23 @@ def chunk_audio(
     metadata-scan speed and the chunk fan-out never touches payload
     bytes.
 
-    Tail coverage: when ``duration - chunk`` is not a multiple of
-    ``stride`` the strided sequence alone would leave up to
+    Tail coverage: when ``duration - chunk`` is not a multiple of the
+    stride the strided sequence alone would leave up to
     ``stride - 1`` ms of trailing audio in no chunk, so a final start
     at ``greatest(0, duration - chunk)`` is appended (``array_distinct``
     collapses it when it coincides with the last strided start) — same
     tail rule as doc chunking (q68)."""
-    duration_ms = (F.col("meta.n_bytes") / bytes_per_ms).cast("long")
+    duration_ms = (F.col("meta.n_bytes") / 16).cast("long")
     last_start = F.greatest(
         F.lit(0).cast("long"),
-        ((duration_ms - chunk_ms) / stride_ms).cast("long") * stride_ms,
+        ((duration_ms - _CHUNK_MS) / _STRIDE_MS).cast("long") * _STRIDE_MS,
     )
-    tail_start = F.greatest(F.lit(0).cast("long"), duration_ms - chunk_ms)
+    tail_start = F.greatest(F.lit(0).cast("long"), duration_ms - _CHUNK_MS)
     # tail_start >= last_start >= every strided start, so the concat is
     # already ascending and posexplode indexes chunks in time order
     starts = F.array_distinct(
         F.concat(
-            F.sequence(F.lit(0).cast("long"), last_start, F.lit(stride_ms)),
+            F.sequence(F.lit(0).cast("long"), last_start, F.lit(_STRIDE_MS)),
             F.array(tail_start),
         )
     )
@@ -455,7 +453,7 @@ def chunk_audio(
         "media_id",
         "chunk_index",
         "start_ms",
-        F.least(F.col("start_ms") + chunk_ms, F.col("_duration_ms")).alias(
+        F.least(F.col("start_ms") + _CHUNK_MS, F.col("_duration_ms")).alias(
             "end_ms"
         ),
     )
@@ -507,11 +505,7 @@ def _dhash64(payload: bytes) -> int | None:
     return sig - (1 << 64) if sig >= (1 << 63) else sig
 
 
-def image_dhash(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """Per-image 64-bit perceptual difference hash over the standard
     media layout: ``(media_id, dhash)``.  Real dependency-free PNG
     decode (``_decode_png``); empty/NULL payloads hash to NULL, and a
@@ -532,56 +526,42 @@ def image_dhash(
         for batch in batches:
             yield pd.DataFrame(
                 {
-                    "media_id": batch[id_col],
+                    "media_id": batch["media_id"],
                     "dhash": pd.Series(
-                        [_dhash64(c) for c in batch[content_col]],
+                        [_dhash64(c) for c in batch["content"]],
                         dtype="object",
                     ),
                 }
             )
 
     return media.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(content_col).alias(content_col),
+        F.col("media_id").cast("long").alias("media_id"), "content"
     ).mapInPandas(kernel, out)
 
 
-def dhash_near_duplicates(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
+def dhash_near_duplicates(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate IMAGE pairs ``(id_a, id_b, hamming)``: dHash per
-    image, then the pigeonhole Hamming block join shared with SimHash
-    text dedup (``hamming_block_pairs`` — complete recall for
-    ``max_hamming < blocks``, one keyed exchange, no cartesian).
+    image, then the pigeonhole Hamming block join over 4 blocks shared
+    with SimHash text dedup (``hamming_block_pairs`` — complete recall
+    for ``max_hamming < 4``, one keyed exchange, no cartesian).
     NULL-hash rows (empty payloads) cannot pair and are dropped
     first."""
     from defenda_data_lake_spark.operators.dedup import hamming_block_pairs
 
-    sigs = image_dhash(media, id_col, content_col).filter(
-        F.col("dhash").isNotNull()
-    )
+    sigs = image_dhash(media).filter(F.col("dhash").isNotNull())
     return hamming_block_pairs(
         sigs,
         id_col="media_id",
         sig_col="dhash",
         max_hamming=max_hamming,
-        blocks=blocks,
         size_hint_df=media,
     )
 
 
 def synthetic_gray_png(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    width: int = _DHASH_W,
-    height: int = _DHASH_H,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Manufacture a REAL grayscale PNG per row from a text column:
+    """Manufacture a REAL 9x8 grayscale PNG per row from a text column:
     pixel ``i`` (row-major) is the code point of character ``i`` of the
     text modulo 256, zero past the end.  This is the container's image
     CORPUS GENERATOR — no image dataset or codec library ships in the
@@ -598,7 +578,7 @@ def synthetic_gray_png(
             T.StructField("content", T.BinaryType()),
         ]
     )
-    n_px = width * height
+    n_px = _DHASH_W * _DHASH_H
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -609,7 +589,7 @@ def synthetic_gray_png(
                     (ord(s[i]) % 256) if i < len(s) else 0
                     for i in range(n_px)
                 )
-                payloads.append(_encode_png(width, height, 1, px))
+                payloads.append(_encode_png(_DHASH_W, _DHASH_H, 1, px))
             yield pd.DataFrame(
                 {
                     "media_id": batch[id_col],
@@ -682,11 +662,7 @@ def _audio_fp64(payload: bytes) -> int | None:
     return sig - (1 << 64) if sig >= (1 << 63) else sig
 
 
-def audio_fingerprint(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def audio_fingerprint(media: DataFrame) -> DataFrame:
     """Per-clip 64-bit perceptual fingerprint over the standard media
     layout: ``(media_id, afp)``.  Real stdlib WAV decode; empty/NULL
     and sub-65-sample payloads fingerprint to NULL; non-WAV payloads
@@ -706,54 +682,41 @@ def audio_fingerprint(
         for batch in batches:
             yield pd.DataFrame(
                 {
-                    "media_id": batch[id_col],
+                    "media_id": batch["media_id"],
                     "afp": pd.Series(
-                        [_audio_fp64(c) for c in batch[content_col]],
+                        [_audio_fp64(c) for c in batch["content"]],
                         dtype="object",
                     ),
                 }
             )
 
     return media.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(content_col).alias(content_col),
+        F.col("media_id").cast("long").alias("media_id"), "content"
     ).mapInPandas(kernel, out)
 
 
-def audio_near_duplicates(
-    media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
+def audio_near_duplicates(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate AUDIO pairs ``(id_a, id_b, hamming)`` via the
-    envelope fingerprint + the pigeonhole Hamming block join shared
-    with SimHash/dHash (complete recall for ``max_hamming < blocks``,
-    one keyed exchange, no cartesian).  NULL-fingerprint rows cannot
-    pair and are dropped first."""
+    envelope fingerprint + the pigeonhole Hamming block join over 4
+    blocks shared with SimHash/dHash (complete recall for
+    ``max_hamming < 4``, one keyed exchange, no cartesian).
+    NULL-fingerprint rows cannot pair and are dropped first."""
     from defenda_data_lake_spark.operators.dedup import hamming_block_pairs
 
-    sigs = audio_fingerprint(media, id_col, content_col).filter(
-        F.col("afp").isNotNull()
-    )
+    sigs = audio_fingerprint(media).filter(F.col("afp").isNotNull())
     return hamming_block_pairs(
         sigs,
         id_col="media_id",
         sig_col="afp",
         max_hamming=max_hamming,
-        blocks=blocks,
         size_hint_df=media,
     )
 
 
 def synthetic_pcm_wav(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sample_rate: int = 8000,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Manufacture a REAL mono 16-bit WAV per row from a text column:
+    """Manufacture a REAL mono 16-bit 8 kHz WAV per row from a text column:
     sample ``i`` is ``((codepoint(text[i]) % 256) - 128) * 256`` — one
     sample per character.  The audio analog of
     :func:`synthetic_gray_png`: no audio dataset ships in the test
@@ -786,7 +749,7 @@ def synthetic_pcm_wav(
             with wave.open(buf, "wb") as w:
                 w.setnchannels(1)
                 w.setsampwidth(2)
-                w.setframerate(sample_rate)
+                w.setframerate(8000)
                 w.writeframes(samples.tobytes())
             return buf.getvalue()
 

@@ -338,21 +338,17 @@ def register_plugins(directory_name: str) -> list[Plugin]:
     return order_plugins(plugins)
 
 
-def plugin_dir_factory(
-    directory_name: str, include_defaults: bool = True
-) -> Callable[[], list[Plugin]]:
-    """A ``plugin_factory`` for :func:`normalize_df` that re-scans
-    ``directory_name`` on each worker — dropping a file into the
+def plugin_dir_factory(directory_name: str) -> Callable[[], list[Plugin]]:
+    """A ``plugin_factory`` for :func:`normalize_df` that runs the
+    default plugins plus those found by re-scanning ``directory_name``
+    on each worker — dropping a file into the
     directory extends the pipeline with no engine-code change, exactly
     the reference's deployment story.  The scan runs once per task (the
     factory is invoked inside the Arrow host), so per-event cost is
     zero."""
 
     def factory() -> list[Plugin]:
-        discovered = register_plugins(directory_name)
-        if include_defaults:
-            return default_plugins() + discovered
-        return discovered
+        return default_plugins() + register_plugins(directory_name)
 
     return factory
 
@@ -493,15 +489,15 @@ def add_partition_columns(df: DataFrame) -> DataFrame:
     )
 
 
-def write_events(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Write normalized events to the hive-layout partitioned store.
+def write_events(df: DataFrame, path: str) -> None:
+    """Append normalized events to the hive-layout partitioned store.
 
     Parquet+zstd instead of the reference's gzip NDJSON (main.tf:615):
     same pruning behavior on ``year/month/day/hour`` predicates, plus
     column pruning and row-group skipping the reference cannot do."""
     (
         df.drop("_status", "_raw")
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("year", "month", "day", "hour")
         .parquet(path)
     )

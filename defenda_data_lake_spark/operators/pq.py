@@ -86,18 +86,16 @@ def pq_train(
     m: int = 4,
     k: int = 16,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
-    quantize: int | None = 9,
 ) -> Codebooks:
     """Train ``m`` per-subspace codebooks of ``k`` centroids each over
-    contiguous subvector slices — one deterministic Lloyd run per
-    subspace.  Returns driver-side plain lists (the whole codebook is
+    contiguous ``embedding`` slices — one deterministic Lloyd run per
+    subspace, centroids quantized at 1e-9 like :func:`kmeans_assign`.
+    Returns driver-side plain lists (the whole codebook is
     ``m·k·dim/m`` floats — broadcast-literal sized by construction)."""
     if dim is None:
         dim = len(
-            df.select(F.col(vec_col).alias("v")).first()["v"]
+            df.select(F.col("embedding").alias("v")).first()["v"]
         )
     _check_pq(dim, m)
     dsub = dim // m
@@ -132,9 +130,9 @@ def pq_train(
 
     base = ensure_min_parallelism(
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("vec_id").alias("id"),
             *[
-                F.slice(F.col(vec_col), s * dsub + 1, dsub).alias(f"v{s}")
+                F.slice(F.col("embedding"), s * dsub + 1, dsub).alias(f"v{s}")
                 for s in range(m)
             ],
         ),
@@ -146,7 +144,6 @@ def pq_train(
             [[float(x) for x in r[f"v{s}"]] for r in init_rows]
             for s in range(m)
         ]
-        scale = 10 ** quantize if quantize is not None else None
         for _ in range(iterations):
             branches = []
             for s in range(m):
@@ -161,9 +158,7 @@ def pq_train(
                     )
                 )
             fused = reduce(_DF.unionAll, branches)
-            mean_col = F.avg(F.col("c").cast("double"))
-            if scale is not None:
-                mean_col = F.round(mean_col * scale, 0) / scale
+            mean_col = F.round(F.avg(F.col("c").cast("double")) * 10**9, 0) / 10**9
             rows = (
                 fused.groupBy("sub", "cluster", "pos")
                 .agg(mean_col.alias("m"))
@@ -192,13 +187,10 @@ def pq_train(
 
 
 def pq_encode(
-    df: DataFrame,
-    codebooks: Codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out: str = "pq_code",
+    df: DataFrame, codebooks: Codebooks, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Encode every vector as ``m`` nearest-centroid ids (array<int>) —
+    """Encode every ``embedding`` as ``m`` nearest-centroid ids
+    (``pq_code``, array<int>) —
     a shuffle-free pure-JVM projection over literal codebooks.  Two
     projection steps: the per-subspace distance arrays are computed
     (and their literal trees parsed) ONCE under a name, then the
@@ -214,7 +206,7 @@ def pq_encode(
     da_cols = []
     for s in range(m):
         sub = (
-            f"transform(slice(`{vec_col}`, {s * dsub + 1}, {dsub}), "
+            f"transform(slice(`embedding`, {s * dsub + 1}, {dsub}), "
             "v -> CAST(v AS DOUBLE))"
         )
         da_cols.append(
@@ -224,7 +216,7 @@ def pq_encode(
         _argmin_from_dists_sql(f"`{prefix}{s}`") for s in range(m)
     )
     return df.selectExpr(f"`{id_col}`", *da_cols).selectExpr(
-        f"`{id_col}`", f"array({argmins}) AS `{out}`"
+        f"`{id_col}`", f"array({argmins}) AS `pq_code`"
     )
 
 
@@ -233,8 +225,6 @@ def pq_topk(
     queries: Sequence[tuple],
     codebooks: Codebooks,
     k_top: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
 ) -> DataFrame:
     """ADC top-``k_top`` per query over a :func:`pq_encode` output.
     ``queries`` = [(query_id, vector)] — a small driver-side block,
@@ -261,7 +251,7 @@ def pq_topk(
             )
             terms.append(
                 f"element_at(array({lut}), "
-                f"element_at(`{code_col}`, {s + 1}) + 1)"
+                f"element_at(`pq_code`, {s + 1}) + 1)"
             )
         dist_sql = " + ".join(terms)
         per_query.append(
@@ -269,14 +259,14 @@ def pq_topk(
             f"({dist_sql}) AS adc_dist)"
         )
     exploded = codes.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.expr(f"explode(array({', '.join(per_query)}))").alias("q"),
-    ).select(id_col, "q.query_id", "q.adc_dist")
+    ).select("vec_id", "q.query_id", "q.adc_dist")
     w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
+        F.col("adc_dist").asc(), F.col("vec_id").asc()
     )
     return (
         exploded.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k_top)
-        .select("query_id", id_col, "adc_dist", "rank")
+        .select("query_id", "vec_id", "adc_dist", "rank")
     )

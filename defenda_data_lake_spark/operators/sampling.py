@@ -41,16 +41,12 @@ def _threshold(fraction: float) -> int:
 
 
 def with_split(
-    df: DataFrame,
-    id_col: str,
-    test_fraction: float = 0.1,
-    salt: str = "split",
-    out: str = "split",
+    df: DataFrame, id_col: str, test_fraction: float = 0.1, salt: str = "split"
 ) -> DataFrame:
-    """Append a stable ``'train'``/``'test'`` column: rows whose bucket
-    falls below ``test_fraction`` of the space are test."""
+    """Append a stable ``'train'``/``'test'`` ``split`` column: rows
+    whose bucket falls below ``test_fraction`` of the space are test."""
     return df.withColumn(
-        out,
+        "split",
         F.when(
             hash_bucket(id_col, salt) < _threshold(test_fraction),
             F.lit("test"),
@@ -257,8 +253,6 @@ def token_budget_select(
     budget_tokens: int | None = None,
     budget_ratio: tuple[int, int] | None = None,
     buckets: int = 64,
-    materialize: bool = True,
-    out: str = "cum_tokens",
 ) -> DataFrame:
     """Greedy token-budget selection: order rows by ``key_col``
     (``descending`` = best-first), take the maximal prefix whose
@@ -293,17 +287,15 @@ def token_budget_select(
     degenerate key (one value everywhere) degrades to the single-task
     window this exists to avoid.
 
-    ``materialize`` (default on): the operator consumes its input
-    THREE times — the quantile probe, the bucket totals, and the cumsum
-    itself — so an expensive upstream (e.g. a tokenizing projection
-    over raw text) would otherwise evaluate three times.
-    ``localCheckpoint`` pins the input once; pass a NARROW projection
-    (key, tokens, id) and join wide payloads back by id afterwards if
-    the row is heavy, or ``materialize=False`` if the input is already
-    a cached/cheap scan.
+    The operator consumes its input THREE times — the quantile probe,
+    the bucket totals, and the cumsum itself — so an expensive upstream
+    (e.g. a tokenizing projection over raw text) would otherwise
+    evaluate three times.  ``localCheckpoint`` pins the input once;
+    pass a NARROW projection (key, tokens, id) and join wide payloads
+    back by id afterwards if the row is heavy.
 
-    Returns the selected rows (original columns) + ``out`` = the global
-    cumulative token count, BIGINT."""
+    Returns the selected rows (original columns) + ``cum_tokens`` = the
+    global cumulative token count, BIGINT."""
     if (budget_tokens is None) == (budget_ratio is None):
         raise ValueError("pass exactly one of budget_tokens / budget_ratio")
     if budget_tokens is not None and budget_tokens < 0:
@@ -317,9 +309,7 @@ def token_budget_select(
     cols = df.columns
     t = df.filter(
         F.col(token_col).isNotNull() & F.col(key_col).isNotNull()
-    )
-    if materialize:
-        t = t.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     # quantile boundaries: load balance only — the cumulative sum below
     # is exact regardless of where the bucket cuts land.  buckets=1 is
     # the degenerate single-bucket (single-task) form: no probe pass
@@ -357,17 +347,17 @@ def token_budget_select(
     )
 
     w_cum = Window.partitionBy("_tb_bucket").orderBy(*row_order)
-    cum = (F.col("_tb_off") + F.sum(tok).over(w_cum)).alias(out)
+    cum = (F.col("_tb_off") + F.sum(tok).over(w_cum)).alias("cum_tokens")
     sel = tb.join(F.broadcast(offs), "_tb_bucket").select(
         *cols, F.col("_tb_total"), cum
     )
     if budget_tokens is not None:
-        keep = F.col(out) <= F.lit(int(budget_tokens)).cast("long")
+        keep = F.col("cum_tokens") <= F.lit(int(budget_tokens)).cast("long")
     else:
-        keep = F.col(out) * F.lit(int(den)) <= F.col("_tb_total") * F.lit(
-            int(num)
+        keep = F.col("cum_tokens") * F.lit(int(den)) <= (
+            F.col("_tb_total") * F.lit(int(num))
         )
-    return sel.filter(keep).select(*cols, out)
+    return sel.filter(keep).select(*cols, "cum_tokens")
 
 
 def group_token_budget_select(
@@ -379,7 +369,6 @@ def group_token_budget_select(
     descending: bool = True,
     budgets: dict[str, int] | None = None,
     budget_ratio: tuple[int, int] | None = None,
-    out: str = "cum_tokens",
 ) -> DataFrame:
     """Per-group token-budget selection — the MIX-SPEC operator: fill
     each group (language, source, domain) to its own token target with
@@ -400,8 +389,8 @@ def group_token_budget_select(
     excluded; ``key_col ++ tie_cols`` must totally order rows WITHIN a
     group for a deterministic, engine-replayable selection.
 
-    Returns the selected rows + ``out`` = within-group cumulative
-    token count, BIGINT."""
+    Returns the selected rows + ``cum_tokens`` = within-group
+    cumulative token count, BIGINT."""
     if (budgets is None) == (budget_ratio is None):
         raise ValueError("pass exactly one of budgets / budget_ratio")
     if budgets is not None and any(v < 0 for v in budgets.values()):
@@ -421,7 +410,7 @@ def group_token_budget_select(
     w_cum = Window.partitionBy(group_col).orderBy(
         key_order, *[F.col(c) for c in tie_cols]
     )
-    cum = F.sum(tok).over(w_cum).alias(out)
+    cum = F.sum(tok).over(w_cum).alias("cum_tokens")
     if budgets is not None:
         # literal spec map: element_at yields NULL for unlisted groups,
         # and NULL <= n is NULL -> filtered out (strict mix)
@@ -434,29 +423,28 @@ def group_token_budget_select(
             F.create_map(*entries), F.col(group_col).cast("string")
         )
         sel = t.select(*cols, cum)
-        keep = F.col(out) <= budget
+        keep = F.col("cum_tokens") <= budget
     else:
         # the group total rides the SAME exchange as the cumsum window
         # (both partition by group_col); filter on the materialized
         # column — a window expression can't sit in a WHERE
         w_all = Window.partitionBy(group_col)
         sel = t.select(*cols, cum, F.sum(tok).over(w_all).alias("_gtb_total"))
-        keep = F.col(out) * F.lit(int(den)) <= F.col("_gtb_total") * F.lit(
-            int(num)
+        keep = F.col("cum_tokens") * F.lit(int(den)) <= (
+            F.col("_gtb_total") * F.lit(int(num))
         )
-    return sel.filter(keep).select(*cols, out)
+    return sel.filter(keep).select(*cols, "cum_tokens")
 
-def dsir_feature_array(text_col):
-    """Array of DSIR features for one document: normalized unigrams +
-    bigrams.  NULL text scores as empty text (one \'\'-unigram): a NULL
+def dsir_feature_array():
+    """Array of DSIR features for one document: normalized ``text``
+    unigrams + bigrams.  NULL text scores as empty text (one \'\'-unigram): a NULL
     feature array would vanish under explode/aggregate and silently
     drop the document from the scored output — every document must
     receive a weight.  Bigrams via slice+zip_with so one-word docs
     yield an empty bigram array, never a descending ``sequence``."""
     from defenda_data_lake_spark.operators.dedup import normalized_text
 
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
-    norm = normalized_text(F.coalesce(col, F.lit("")))
+    norm = normalized_text(F.coalesce(F.col("text"), F.lit("")))
     w = F.split(norm, " ")
     bigrams = F.zip_with(
         F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))),
@@ -475,18 +463,14 @@ def dsir_bucket_of(feat, buckets: int):
 
 
 def dsir_bucket_counts(
-    df: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    buckets: int = 1024,
-    materialize: bool = True,
+    df: DataFrame, target: Column, buckets: int = 1024
 ) -> DataFrame:
     """The fitted DSIR "model": per-bucket raw and target feature
     counts from ONE corpus pass — ``(bucket, raw_c, tgt_c)``,
     <= ``buckets`` rows, consumed by :func:`dsir_importance_weights`."""
     feats = df.select(
         target.alias("_is_target"),
-        F.explode(dsir_feature_array(text_col)).alias("feat"),
+        F.explode(dsir_feature_array()).alias("feat"),
     ).select(
         "_is_target", dsir_bucket_of(F.col("feat"), buckets).alias("bucket")
     )
@@ -494,13 +478,11 @@ def dsir_bucket_counts(
         F.count("*").alias("raw_c"),
         F.sum(F.when(F.col("_is_target"), 1).otherwise(0)).alias("tgt_c"),
     )
-    if materialize:
-        # the counts table is <= `buckets` rows but sits on a full
-        # corpus pass; without pinning it, the totals row and the
-        # ratio broadcast would each recompute the feature explode —
-        # THREE corpus passes instead of two (the q92 precedent)
-        counts = counts.localCheckpoint(eager=True)
-    return counts
+    # the counts table is <= `buckets` rows but sits on a full corpus
+    # pass; without pinning it, the totals row and the ratio broadcast
+    # would each recompute the feature explode — THREE corpus passes
+    # instead of two (the q92 precedent)
+    return counts.localCheckpoint(eager=True)
 
 def dsir_bucket_ratios(
     counts: DataFrame, buckets: int = 1024, alpha: float = 0.5
@@ -541,13 +523,7 @@ def dsir_bucket_ratios(
 
 
 def dsir_importance_weights(
-    df: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-    alpha: float = 0.5,
-    materialize: bool = True,
+    df: DataFrame, target: Column, buckets: int = 1024, alpha: float = 0.5
 ) -> DataFrame:
     """DSIR — Data Selection via Importance Resampling (Xie et al.
     2023, arXiv:2302.03169): score every document by how much more
@@ -562,7 +538,7 @@ def dsir_importance_weights(
     model is the whole corpus, so every scored feature bucket is
     guaranteed a nonzero raw count.
 
-    Features are unigrams + bigrams of the normalized text, hashed
+    Features are unigrams + bigrams of the normalized ``text``, hashed
     into ``buckets`` buckets via the first 8 hex chars of md5 — the
     same engine-portable scheme as :func:`hash_bucket`, so a SQL
     oracle replays the bucketing bit-for-bit.  Bucket probabilities
@@ -571,7 +547,8 @@ def dsir_importance_weights(
     OCCURRENCES (length-normalized log importance weight — the paper's
     sum-form ranks long documents first regardless of fit).
 
-    Returns ``(id, n_feats, avg_logw)`` (un-rounded; callers round).
+    Returns ``(id, n_feats, avg_logw)``, ``id`` the ``doc_id``
+    (un-rounded; callers round).
 
     Plan shape (scale): feature explode is pure JVM (split + zip_with
     bigrams — slice-based, so one-word docs yield an empty bigram
@@ -583,17 +560,15 @@ def dsir_importance_weights(
     only corpus-sized exchange is the final per-doc mean.  Nothing
     here is skew-prone: bucket ids are md5-uniform by construction."""
     feats = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         target.alias("_is_target"),
-        F.explode(dsir_feature_array(text_col)).alias("feat"),
+        F.explode(dsir_feature_array()).alias("feat"),
     ).select(
         "id",
         "_is_target",
         dsir_bucket_of(F.col("feat"), buckets).alias("bucket"),
     )
-    counts = dsir_bucket_counts(
-        df, target, text_col=text_col, buckets=buckets, materialize=materialize
-    )
+    counts = dsir_bucket_counts(df, target, buckets=buckets)
     ratios = dsir_bucket_ratios(counts, buckets=buckets, alpha=alpha)
     return (
         feats.join(F.broadcast(ratios), "bucket")

@@ -64,16 +64,11 @@ def with_cosine(df: DataFrame, a_col: str, b_col: str, out: str = "cosine") -> D
     return df.withColumn(out, cosine_col(a_col, b_col))
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    out_vec: str = "q_embedding",
-    out_scale: str = "q_scale",
-) -> DataFrame:
-    """Per-vector symmetric int8 quantization: ``q_i = floor(v_i * 127
-    / maxabs(v) + 0.5)`` (zero vectors quantize to zeros with scale
-    1/127), plus the per-vector ``scale = maxabs/127`` needed to
-    dequantize.
+def quantize_embeddings(df: DataFrame) -> DataFrame:
+    """Per-vector symmetric int8 quantization of ``embedding`` into
+    ``q_embedding``: ``q_i = floor(v_i * 127 / maxabs(v) + 0.5)`` (zero
+    vectors quantize to zeros with scale 1/127), plus the per-vector
+    ``q_scale = maxabs/127`` needed to dequantize.
 
     This is the 100 TB lever for the ANN family: int8 vectors are 4x
     smaller than float32 on disk, in shuffle, and in memory, and
@@ -90,7 +85,7 @@ def quantize_embeddings(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _stack(pdf[vec_col])
+            V = _stack(pdf["embedding"])
             maxabs = np.abs(V).max(axis=1)
             safe = np.where(maxabs == 0.0, 1.0, maxabs)
             Qm = (
@@ -99,8 +94,8 @@ def quantize_embeddings(
                 .astype(np.int8)
             )
             out = pdf.copy()
-            out[out_vec] = list(Qm)
-            out[out_scale] = safe / 127.0
+            out["q_embedding"] = list(Qm)
+            out["q_scale"] = safe / 127.0
             yield out
 
     from pyspark.sql import types as T
@@ -108,19 +103,15 @@ def quantize_embeddings(
     schema = T.StructType(
         df.schema.fields
         + [
-            T.StructField(out_vec, T.ArrayType(T.ByteType())),
-            T.StructField(out_scale, T.DoubleType()),
+            T.StructField("q_embedding", T.ArrayType(T.ByteType())),
+            T.StructField("q_scale", T.DoubleType()),
         ]
     )
     return df.mapInPandas(kernel, schema=schema)
 
 
 def quantized_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Brute-force cosine top-k over int8-quantized vectors: quantize
     both sides, then run the standard matmul kernel on the int8 arrays
@@ -128,22 +119,23 @@ def quantized_cosine_topk(
     float64 matmul (|q| <= 127, so dims into the thousands stay within
     exact-integer range), making the approximate scoring fully
     deterministic and oracle-checkable."""
-    q_corpus = quantize_embeddings(corpus, vec_col).select(
-        id_col, F.col("q_embedding").alias(vec_col)
+    q_corpus = quantize_embeddings(corpus).select(
+        "vec_id", F.col("q_embedding").alias("embedding")
     )
-    q_queries = quantize_embeddings(queries, vec_col).select(
-        id_col, F.col("q_embedding").alias(vec_col)
+    q_queries = quantize_embeddings(queries).select(
+        "vec_id", F.col("q_embedding").alias("embedding")
     )
-    return cosine_topk(q_corpus, q_queries, k=k, id_col=id_col, vec_col=vec_col)
+    return cosine_topk(q_corpus, q_queries, k=k)
 
 
-def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
-    """Materialize the query block driver-side for broadcast.  Queries
-    are small by contract (an ANN batch, not a table); this is the
-    broadcast pattern, not a driver-side loop over the corpus."""
-    pdf = queries.select(id_col, vec_col).toPandas()
-    q_ids = pdf[id_col].to_numpy()
-    Q = np.array(pdf[vec_col].to_list(), dtype=np.float64)
+def _collect_queries(queries: DataFrame):
+    """Materialize the ``(vec_id, embedding)`` query block driver-side
+    for broadcast.  Queries are small by contract (an ANN batch, not a
+    table); this is the broadcast pattern, not a driver-side loop over
+    the corpus."""
+    pdf = queries.select("vec_id", "embedding").toPandas()
+    q_ids = pdf["vec_id"].to_numpy()
+    Q = np.array(pdf["embedding"].to_list(), dtype=np.float64)
     return q_ids, Q
 
 
@@ -158,15 +150,9 @@ def _partial_topk_rows(cand_cos, cand_ids, k):
     return order
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k: for every query vector, the k nearest
-    corpus vectors (excluding itself).  Returns
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Brute-force cosine top-k: for every query ``embedding``, the k
+    nearest corpus vectors (excluding the same ``vec_id``).  Returns
     (query_id, neighbor_id, cosine, rank).
 
     One matmul per (corpus partition x query block); each partition
@@ -180,10 +166,10 @@ def cosine_topk(
     one task per ~bytes_per_task as before; ``coalesce`` merges
     without a shuffle, so the scan stays cache/file-local either
     way."""
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, Q))
-    id_t = corpus.schema[id_col].dataType.simpleString()
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
     out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
 
     def score(batches):
@@ -192,8 +178,8 @@ def cosine_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = _stack(pdf[vec_col])
-            ids = pdf[id_col].to_numpy()
+            C = _stack(pdf["embedding"])
+            ids = pdf["vec_id"].to_numpy()
             nc = np.linalg.norm(C, axis=1)
             S = (C @ b_Q.T) / np.outer(nc, nq)
             outs = []
@@ -219,7 +205,7 @@ def cosine_topk(
     from defenda_data_lake_spark.utils.partitioning import kernel_parallelism
 
     scored = (
-        corpus.select(id_col, vec_col)
+        corpus.select("vec_id", "embedding")
         .coalesce(kernel_parallelism(corpus))
         .mapInPandas(score, schema=out_schema)
     )
@@ -233,11 +219,7 @@ def cosine_topk(
 
 
 def semantic_contamination(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, eval_set: DataFrame, threshold: float = 0.35
 ) -> DataFrame:
     """Embedding-level decontamination — flag corpus documents whose
     embedding is suspiciously close to ANY benchmark/eval item
@@ -245,7 +227,7 @@ def semantic_contamination(
     decontamination (q51): paraphrased or translated eval contamination
     shares no 8-gram but lands next to the eval item in embedding
     space.  Returns flagged rows only:
-    ``(id, nearest_eval_id, max_eval_cosine)`` with ties on the max
+    ``(vec_id, nearest_eval_id, max_eval_cosine)`` with ties on the max
     broken to the LOWEST eval id.
 
     Scale (100 TB): eval sets are bounded by contract (benchmarks, not
@@ -254,12 +236,10 @@ def semantic_contamination(
     (partition x eval block), no shuffle, no join, and only flagged
     rows leave the executors.  This is the production shape: the big
     side streams, the small side rides the closure."""
-    e_ids, E = _collect_queries(eval_set, id_col, vec_col)
+    e_ids, E = _collect_queries(eval_set)
     spark = corpus.sparkSession
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_t}, nearest_eval_id {id_t}, max_eval_cosine double"
-    )
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
+    out_schema = f"vec_id {id_t}, nearest_eval_id {id_t}, max_eval_cosine double"
     if len(e_ids) == 0:
         # an empty eval set can contaminate nothing (and an empty
         # matrix has no axis-1 for the kernel's norms)
@@ -274,7 +254,7 @@ def semantic_contamination(
         for pdf in batches:
             if len(pdf) == 0 or len(b_ids) == 0:
                 continue
-            C = _stack(pdf[vec_col])
+            C = _stack(pdf["embedding"])
             nc = np.linalg.norm(C, axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 S = (C @ b_E.T) / np.outer(nc, ne)
@@ -285,7 +265,7 @@ def semantic_contamination(
                 continue
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy()[keep],
+                    "vec_id": pdf["vec_id"].to_numpy()[keep],
                     "nearest_eval_id": b_ids[np.argmax(S[keep], axis=1)],
                     "max_eval_cosine": mx[keep],
                 }
@@ -294,7 +274,7 @@ def semantic_contamination(
     from defenda_data_lake_spark.utils.partitioning import kernel_parallelism
 
     return (
-        corpus.select(id_col, vec_col)
+        corpus.select("vec_id", "embedding")
         .coalesce(kernel_parallelism(corpus))
         .mapInPandas(score, schema=out_schema)
     )
@@ -304,16 +284,15 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     partition_col: str = "label",
     n_probe: int = 1,
 ) -> DataFrame:
-    """IVF-style approximate top-k: the corpus is partitioned into
-    inverted lists (here: an existing ``partition_col``; in a full
-    pipeline, a k-means assignment), a centroid is computed per list
-    as the element-wise mean vector, and each query probes only the
-    ``n_probe`` lists whose centroids are nearest.
+    """IVF-style approximate top-k over ``(vec_id, embedding)`` rows:
+    the corpus is partitioned into inverted lists (here: an existing
+    ``partition_col``; in a full pipeline, a k-means assignment), a
+    centroid is computed per list as the element-wise mean vector, and
+    each query probes only the ``n_probe`` lists whose centroids are
+    nearest.
 
     Deterministic end-to-end (mean centroids, fixed tie-breaks), so the
     approximate result is still oracle-checkable.
@@ -324,8 +303,8 @@ def ivf_topk(
     broadcast dim).  Scoring touches only the probed lists and emits
     partition-local top-k.  This is the standard billion-vector layout
     (FAISS IVF) expressed relationally."""
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
-    id_t = corpus.schema[id_col].dataType.simpleString()
+    q_ids, Q = _collect_queries(queries)
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
     if len(q_ids) == 0:
         return corpus.sparkSession.createDataFrame(
             [], f"query_id {id_t}, neighbor_id {id_t}, cosine double, rank int"
@@ -339,7 +318,7 @@ def ivf_topk(
         corpus.groupBy(F.col(partition_col).alias("list_id"))
         .agg(
             *[
-                F.avg(F.col(vec_col)[i].cast("double")).alias(f"m{i}")
+                F.avg(F.col("embedding")[i].cast("double")).alias(f"m{i}")
                 for i in range(dim)
             ]
         )
@@ -364,8 +343,8 @@ def ivf_topk(
     probed_lists = sorted({l for s in allowed.values() for l in s})
 
     corpus_sel = corpus.filter(F.col(partition_col).isin(probed_lists)).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.col(partition_col).alias("__list_id"),
     )
     # partition-local exact cosine over the probed lists' rows, partial
@@ -379,8 +358,8 @@ def ivf_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = _stack(pdf[vec_col])
-            ids = pdf[id_col].to_numpy()
+            C = _stack(pdf["embedding"])
+            ids = pdf["vec_id"].to_numpy()
             lists = pdf["__list_id"].to_numpy()
             nc = np.linalg.norm(C, axis=1)
             outs = []
@@ -416,15 +395,15 @@ def ivf_topk(
     )
 
 
-def _hyperplanes(dim: int, num_planes: int, seed: str = "lsh") -> list[list[float]]:
+def _hyperplanes(dim: int, num_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes: component (p, d) is a
-    zero-centered value derived from md5(seed|p|d).  Reproducible
+    zero-centered value derived from md5(lsh|p|d).  Reproducible
     everywhere, no RNG state."""
     planes = []
     for p in range(num_planes):
         plane = []
         for d in range(dim):
-            digest = hashlib.md5(f"{seed}|{p}|{d}".encode()).digest()
+            digest = hashlib.md5(f"lsh|{p}|{d}".encode()).digest()
             value = int.from_bytes(digest[:8], "big") / float(1 << 64) - 0.5
             plane.append(value)
         planes.append(plane)
@@ -455,12 +434,11 @@ def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 8,
     dim: int = 64,
 ) -> DataFrame:
-    """LSH-bucketed approximate top-k: corpus and queries are hashed
+    """LSH-bucketed approximate top-k over ``(vec_id, embedding)``
+    rows: corpus and queries are hashed
     with the same deterministic hyperplanes; candidates come only from
     the query's bucket, then exact cosine ranks them.
 
@@ -471,12 +449,12 @@ def lsh_cosine_topk(
     the scoring kernel itself (a per-row bucket compare) — no join, no
     second pass over the corpus."""
     planes = np.array(_hyperplanes(dim, num_planes), dtype=np.float64)
-    q_ids, Q = _collect_queries(queries, id_col, vec_col)
+    q_ids, Q = _collect_queries(queries)
     q_buckets = [_bits_to_str(row) for row in (Q @ planes.T) >= 0.0]
 
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, Q, q_buckets, planes))
-    id_t = corpus.schema[id_col].dataType.simpleString()
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
     out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
 
     def score(batches):
@@ -485,8 +463,8 @@ def lsh_cosine_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = _stack(pdf[vec_col])
-            ids = pdf[id_col].to_numpy()
+            C = _stack(pdf["embedding"])
+            ids = pdf["vec_id"].to_numpy()
             nc = np.linalg.norm(C, axis=1)
             c_bits = (C @ b_planes.T) >= 0.0
             c_buckets = np.array([_bits_to_str(row) for row in c_bits])
@@ -513,7 +491,7 @@ def lsh_cosine_topk(
     from defenda_data_lake_spark.utils.partitioning import kernel_parallelism
 
     scored = (
-        corpus.select(id_col, vec_col)
+        corpus.select("vec_id", "embedding")
         .coalesce(kernel_parallelism(corpus))
         .mapInPandas(score, schema=out_schema)
     )
@@ -529,12 +507,10 @@ def lsh_cosine_topk(
 def lsh_near_duplicates(
     corpus: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 6,
     dim: int = 64,
 ) -> DataFrame:
-    """LSH-bucketed embedding near-dup pairs: the corpus is hashed once
+    """LSH-bucketed embedding near-dup ``vec_id`` pairs: the corpus is hashed once
     with deterministic hyperplanes, pairs come from an *equi-join on the
     bucket signature* (shuffle keyed on bucket — never a cross join),
     then exact cosine verifies the threshold.
@@ -544,9 +520,9 @@ def lsh_near_duplicates(
     by replaying the same hyperplanes in SQL."""
     planes = _hyperplanes(dim, num_planes)
     hashed = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_bucket_col(vec_col, planes).alias("bucket"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("vec"),
+        lsh_bucket_col("embedding", planes).alias("bucket"),
     )
     a = hashed.select(
         F.col("vid").alias("id_a"), F.col("vec").alias("va"), "bucket"

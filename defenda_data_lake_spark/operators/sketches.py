@@ -129,15 +129,12 @@ def hll_merge(
 
 
 def hll_estimate_from_registers(
-    regs: DataFrame,
-    group_by: Sequence[str] = (),
-    p: int = 8,
-    out: str = "hll_estimate",
+    regs: DataFrame, group_by: Sequence[str] = (), p: int = 8
 ) -> DataFrame:
     """The standard HLL estimator (with linear-counting small-range
-    correction) over a register table — see :func:`hll_distinct` for
-    the determinism discipline (integer-exact register sum, one final
-    correctly-rounded division)."""
+    correction) over a register table, as ``hll_estimate`` — see
+    :func:`hll_distinct` for the determinism discipline (integer-exact
+    register sum, one final correctly-rounded division)."""
     _hll_check(p)
     m = 1 << p
     alpha = _hll_alpha(m)
@@ -171,25 +168,21 @@ def hll_estimate_from_registers(
         .when((raw <= F.lit(2.5 * m)) & (zeros > 0), small)
         .otherwise(raw)
     )
-    return per_group.select(*gcols, est.alias(out))
+    return per_group.select(*gcols, est.alias("hll_estimate"))
 
 
 def hll_distinct(
-    df: DataFrame,
-    col: str,
-    group_by: Sequence[str] = (),
-    p: int = 8,
-    out: str = "hll_estimate",
+    df: DataFrame, col: str, group_by: Sequence[str] = (), p: int = 8
 ) -> DataFrame:
     """HyperLogLog distinct estimate of ``col`` per ``group_by`` group:
     :func:`hll_register_table` (one hash aggregation, ≤ ``2^p`` rows
     per group) composed with :func:`hll_estimate_from_registers` (the
     standard estimator with linear-counting small-range correction).
 
-    Returns ``group_by + [out]`` with the estimate as DOUBLE (round it
-    at the query boundary; q79 uses the house ``R``)."""
+    Returns ``group_by + [hll_estimate]`` with the estimate as DOUBLE
+    (round it at the query boundary; q79 uses the house ``R``)."""
     regs = hll_register_table(df, col, group_by=group_by, p=p)
-    return hll_estimate_from_registers(regs, group_by=group_by, p=p, out=out)
+    return hll_estimate_from_registers(regs, group_by=group_by, p=p)
 
 
 def histogram_quantiles(
@@ -200,7 +193,6 @@ def histogram_quantiles(
     quantiles: Sequence[float] = (0.5, 0.9, 0.99),
     lo: float | None = None,
     hi: float | None = None,
-    out: str = "quantile_estimate",
 ) -> DataFrame:
     """Equi-width histogram quantile sketch of ``col`` per ``group_by``
     group — the QUANTILE member of this module's sketch family (HLL =
@@ -235,7 +227,7 @@ def histogram_quantiles(
 
     NULLs are ignored (``percentile_cont`` semantics); a group with no
     non-NULL values is absent from the output.  Returns ``group_by +
-    ["quantile", out]`` — one row per group per requested quantile,
+    ["quantile", "quantile_estimate"]`` — one row per group per requested quantile,
     ``quantile`` as DOUBLE.
 
     Scale (100 TB): two exchanges, BOTH over the bounded bin table
@@ -248,7 +240,7 @@ def histogram_quantiles(
         df, col, group_by=group_by, width=width, lo=lo, hi=hi
     )
     return histogram_quantiles_from_bins(
-        bins, group_by=group_by, width=width, quantiles=quantiles, out=out
+        bins, group_by=group_by, width=width, quantiles=quantiles
     )
 
 
@@ -293,7 +285,6 @@ def histogram_quantiles_from_bins(
     group_by: Sequence[str] = (),
     width: float = 1.0,
     quantiles: Sequence[float] = (0.5, 0.9, 0.99),
-    out: str = "quantile_estimate",
 ) -> DataFrame:
     """The estimator tail of :func:`histogram_quantiles`, over any
     :func:`histogram_bin_table`-shaped input (merged or direct — sum
@@ -336,7 +327,7 @@ def histogram_quantiles_from_bins(
         )
         / F.col("_hq_cnt").cast("double")
     )
-    return probed.select(*gcols, "quantile", est.alias(out))
+    return probed.select(*gcols, "quantile", est.alias("quantile_estimate"))
 
 
 def _cm_probe(col: Column, d: int, w_hex_digits: int) -> Column:
@@ -411,9 +402,8 @@ def count_min_lookup(
     group_by: Sequence[str] = (),
     d: int = 3,
     w_hex_digits: int = 3,
-    out: str = "cm_estimate",
 ) -> DataFrame:
-    """Estimated frequency of each row of ``items`` (unique per
+    """Estimated frequency ``cm_estimate`` of each row of ``items`` (unique per
     ``group_by + [col]``) from a :func:`count_min_table` built with the
     SAME ``(d, w_hex_digits)``: probe the ``d`` cells a value hashes
     to, take the minimum count (absent cell = 0).
@@ -444,7 +434,7 @@ def count_min_lookup(
     )
     return joined.groupBy(*[F.col(x) for x in item_cols]).agg(
         F.min(F.coalesce(F.col("_cm_count"), F.lit(0).cast("long"))).alias(
-            out
+            "cm_estimate"
         )
     )
 
@@ -567,9 +557,8 @@ def bloom_cardinality(
     group_by: Sequence[str] = (),
     m_hex_digits: int = 4,
     k: int = 2,
-    out: str = "bloom_estimate",
 ) -> DataFrame:
-    """Bloom-filter fill-rate distinct estimate of ``col`` per
+    """Bloom-filter fill-rate distinct estimate ``bloom_estimate`` of ``col`` per
     ``group_by`` group — the sketch complement to :func:`hll_distinct`
     (a Bloom filter built for MEMBERSHIP yields a cardinality estimate
     for free from its fill rate: n ≈ -(m/k)·ln(1 - X/m) with X set
@@ -623,4 +612,4 @@ def bloom_cardinality(
             F.lit(-(float(m) / k)) * F.log(F.lit(1.0) - x / F.lit(float(m)))
         )
     )
-    return filled.select(*gcols, est.alias(out))
+    return filled.select(*gcols, est.alias("bloom_estimate"))

@@ -51,13 +51,13 @@ def marker_hits_col(text_col: str, markers: list[str]) -> Column:
     )
 
 
-def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stopword-marker language ID: score each language by marker-token
+def detect_language(df: DataFrame) -> DataFrame:
+    """Stopword-marker language ID over ``text``: score each language by marker-token
     hits; highest score wins (ties broken by language code order);
     'und' (undetermined) when no marker hits at all."""
     scored = df
     for lang, markers in sorted(LANGUAGE_MARKERS.items()):
-        scored = scored.withColumn(f"_score_{lang}", marker_hits_col(text_col, markers))
+        scored = scored.withColumn(f"_score_{lang}", marker_hits_col("text", markers))
     langs = sorted(LANGUAGE_MARKERS)
     best = F.greatest(*[F.col(f"_score_{lang}") for lang in langs])
     pick = F.lit("und")
@@ -71,8 +71,8 @@ def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Quality-scoring features: length, token count, mean token
+def quality_features(df: DataFrame) -> DataFrame:
+    """Quality-scoring features of ``text``: length, token count, mean token
     length, stopword ratio, punctuation ratio, and a composite
     ``quality_score`` in [0, 1].
 
@@ -81,11 +81,10 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             + 0.3 * min(1, stopword_ratio * 5)     -- natural language
             + 0.3 * (1 - min(1, punct_ratio * 10)) -- not symbol soup
     """
-    all_markers = ALL_MARKERS
-    n_chars = F.length(F.col(text_col))
-    n_tokens = token_count_col(text_col)
-    stop_hits = marker_hits_col(text_col, all_markers)
-    n_punct = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
+    n_chars = F.length(F.col("text"))
+    n_tokens = token_count_col()
+    stop_hits = marker_hits_col("text", ALL_MARKERS)
+    n_punct = n_chars - F.length(F.regexp_replace(F.col("text"), r"[^\w\s]", ""))
     stopword_ratio = stop_hits / n_tokens
     punct_ratio = n_punct / n_chars
     score = (
@@ -103,14 +102,14 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-insensitive document fingerprint: md5 over the sorted
-    distinct token set of the normalized text.  Two documents with the
+    distinct token set of the normalized ``text``.  Two documents with the
     same bag of words (any order) collide — the classic shuffle-robust
     near-dup key."""
     sorted_tokens = F.array_join(
         F.array_sort(F.array_distinct(F.split(
-            F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
+            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
         ))),
         " ",
     )
@@ -132,34 +131,29 @@ REDACTION_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def redact(
-    df: DataFrame,
-    text_col: str = "text",
-    out: str = "text_redacted",
-    patterns: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """PII scrubbing for training corpora: replace every match of each
-    pattern with ``<LABEL>``, and count replacements per label
-    (``n_redactions`` total, ``redaction_counts`` map) so curation can
-    filter documents that are mostly PII.
+def redact(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """PII scrubbing for training corpora: ``text_redacted`` replaces
+    every match of each of ``REDACTION_PATTERNS`` with ``<LABEL>``,
+    and replacements are counted per label (``n_redactions`` total,
+    ``redaction_counts`` map) so curation can filter documents that
+    are mostly PII.
 
     Pure codegen projection — a chain of ``regexp_replace`` /
     ``regexp_count`` over the scan, no shuffle, no Python."""
-    patterns = REDACTION_PATTERNS if patterns is None else patterns
     redacted = F.col(text_col)
     counts = []
-    for label, pattern in patterns:
+    for label, pattern in REDACTION_PATTERNS:
         counts.append(
             (label, F.regexp_count(redacted, F.lit(pattern)).cast("long"))
         )
         redacted = F.regexp_replace(redacted, pattern, f"<{label.upper()}>")
-    total = None
-    for _, c in counts:
-        total = c if total is None else total + c
+    total = counts[0][1]
+    for _, c in counts[1:]:
+        total = total + c
     return df.withColumns(
         {
-            out: redacted,
-            "n_redactions": total if total is not None else F.lit(0).cast("long"),
+            "text_redacted": redacted,
+            "n_redactions": total,
             "redaction_counts": F.map_from_arrays(
                 F.array(*[F.lit(label) for label, _ in counts]),
                 F.array(*[c for _, c in counts]),
@@ -171,8 +165,8 @@ def redact(
 # --------------------------------------------- repetition / LM quality
 
 
-def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Repetition-based quality signals in the style of the Gopher
+def repetition_signals(df: DataFrame) -> DataFrame:
+    """Repetition-based quality signals of ``text`` in the style of the Gopher
     corpus filters: the fraction of repeated words and repeated word
     bigrams per document (0 = all distinct, →1 = pure repetition).
     High values flag boilerplate, keyword stuffing, and generation
@@ -187,7 +181,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     slice-based shingle HOF rejected in operators/dedup.py — linear
     HOFs over short arrays are fine; quadratic ones are not.)
     """
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     tmp = df.withColumn("_w", w).withColumn("_nw", F.size(F.col("_w")))
     bigrams = F.when(
         F.col("_nw") >= 2,
@@ -218,34 +212,26 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def unigram_logprob_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
-    """Mean log probability of a document's words under the corpus's
+def unigram_logprob_scores(df: DataFrame) -> DataFrame:
+    """Mean log probability of a document's ``text`` words under the corpus's
     own unigram language model — the CCNet-style LM quality signal
     (documents far below the corpus mean are gibberish / OCR noise;
     far above are boilerplate).  Returns (id, n_words, avg_logp)
     with ``avg_logp`` UNROUNDED (callers round for cross-engine
-    comparison).
+    comparison), keyed by ``doc_id``.
 
     Scale notes (100 TB): the corpus pass is one explode + one
     hash-aggregation on ``word`` (map-side partial combine absorbs
     the Zipf head — every task pre-aggregates its own 'the').  The
     score pass joins word occurrences back to the vocabulary: the
     vocabulary is Zipf-bounded (~10⁷ entries for web-scale corpora,
-    ~hundreds of MB), millions of times smaller than the corpus, so
-    ``broadcast_vocab=True`` makes it a map-side join with NO shuffle
-    of the corpus and no hot-key skew ('the' never converges on one
-    task).  If the vocabulary outgrows executor memory, pass False:
-    the join becomes hash-partitioned on word, where AQE's skew-join
-    splitting handles the stopword keys."""
+    ~hundreds of MB), millions of times smaller than the corpus, so it
+    broadcasts: a map-side join with NO shuffle of the corpus and no
+    hot-key skew ('the' never converges on one task)."""
     words = df.select(
-        F.col(id_col).alias(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
         ).alias("word"),
     )
     counts = words.groupBy("word").agg(F.count("*").alias("wc"))
@@ -253,12 +239,10 @@ def unigram_logprob_scores(
     # row; the underlying groupBy(word) shuffle is shared with the
     # vocabulary join via exchange reuse
     totals = F.broadcast(counts.agg(F.sum("wc").alias("total_words")))
-    if broadcast_vocab:
-        counts = F.broadcast(counts)
     return (
-        words.join(counts, "word")
+        words.join(F.broadcast(counts), "word")
         .crossJoin(totals)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
             F.avg(
@@ -268,21 +252,12 @@ def unigram_logprob_scores(
     )
 
 
-def gopher_quality_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 30,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_stop_frac: float = 0.02,
-    max_word_rep_frac: float = 0.6,
-) -> DataFrame:
-    """Gopher/C4-style rule-based document filter: each rule becomes an
-    explicit 0/1 flag plus a combined ``keep``, so a curation pipeline
-    can both filter and audit rejection reasons (the standard
-    pre-training corpus recipe: length band, mean-word-length band,
-    stopword floor, repetition ceiling).
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
+    """Gopher/C4-style rule-based filter of ``text`` documents: each
+    rule becomes an explicit 0/1 flag plus a combined ``keep``, so a
+    curation pipeline can both filter and audit rejection reasons (the
+    standard pre-training corpus recipe: 30-100,000 words, mean word
+    length 3-10, at least 2% stopwords, at most 60% repeated words).
 
     Flags are integers, not booleans, so every engine's client surface
     (pandas, Arrow, JDBC) agrees on the column type.
@@ -291,15 +266,14 @@ def gopher_quality_flags(
     column — runs at parquet-scan speed, prunes every other column,
     and composes with any downstream filter pushdown.  All arithmetic
     is reproducible in ANSI SQL (the DuckDB oracle replays it)."""
-    stop_markers = ALL_MARKERS
-    w = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
+    w = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     tmp = df.withColumn("_w", w).withColumn(
         "_nw", F.size(F.col("_w")).cast("long")
     )
     norm_len = F.length(F.array_join(F.col("_w"), " "))
     mean_word_len = (norm_len - (F.col("_nw") - 1)) / F.col("_nw")
     stop_frac = (
-        F.size(F.filter(F.col("_w"), lambda t: t.isin(stop_markers)))
+        F.size(F.filter(F.col("_w"), lambda t: t.isin(ALL_MARKERS)))
         / F.col("_nw").cast("double")
     )
     word_rep_frac = (
@@ -307,11 +281,10 @@ def gopher_quality_flags(
         - F.size(F.array_distinct(F.col("_w"))) / F.col("_nw").cast("double")
     )
     flags = {
-        "ok_n_words": (F.col("_nw") >= min_words) & (F.col("_nw") <= max_words),
-        "ok_mean_word_len": (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len),
-        "ok_stop_frac": stop_frac >= min_stop_frac,
-        "ok_word_rep": word_rep_frac <= max_word_rep_frac,
+        "ok_n_words": (F.col("_nw") >= 30) & (F.col("_nw") <= 100_000),
+        "ok_mean_word_len": (mean_word_len >= 3.0) & (mean_word_len <= 10.0),
+        "ok_stop_frac": stop_frac >= 0.02,
+        "ok_word_rep": word_rep_frac <= 0.6,
     }
     out = tmp.withColumn("n_words", F.col("_nw"))
     out = out.withColumn("mean_word_len", mean_word_len)
@@ -324,16 +297,14 @@ def gopher_quality_flags(
     return out.withColumn("keep", keep.cast("int")).drop("_w", "_nw")
 
 
-def bigram_logprob_scores(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Mean conditional log probability of each document's word bigrams
+def bigram_logprob_scores(df: DataFrame) -> DataFrame:
+    """Mean conditional log probability of each document's ``text`` word bigrams
     under the corpus's own bigram MLE model — ln(c(w1 w2) / c(w1 ·)) —
     the next step up from the unigram CCNet signal: it penalizes
     documents whose word ORDER is improbable (shuffled text, keyword
     stuffing) that a unigram model scores as normal.
 
-    Returns ``(id, n_bigrams, avg_logp2)`` for documents with >= 2
+    Returns ``(doc_id, n_bigrams, avg_logp2)`` for documents with >= 2
     words, ``avg_logp2`` unrounded.
 
     Scale notes (100 TB): bigram positions are a linear interpreted
@@ -347,12 +318,10 @@ def bigram_logprob_scores(
     unigram-bounded, so they do broadcast.  A production deployment
     persists the bigram-count table between the model and scoring
     passes; unpersisted, the count subtree is recomputed once."""
-    w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    tmp = df.select(F.col(id_col).alias(id_col), w.alias("_w")).filter(
-        F.size("_w") >= 2
-    )
+    w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    tmp = df.select(F.col("doc_id"), w.alias("_w")).filter(F.size("_w") >= 2)
     bg = tmp.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.expr(
                 "transform(sequence(1, size(_w) - 1),"
@@ -361,7 +330,7 @@ def bigram_logprob_scores(
                 "                    element_at(_w, i + 1)) AS bigram))"
             )
         ).alias("b"),
-    ).select(id_col, F.col("b.head").alias("head"), F.col("b.bigram").alias("bigram"))
+    ).select("doc_id", F.col("b.head").alias("head"), F.col("b.bigram").alias("bigram"))
     bc = bg.groupBy("bigram").agg(F.count("*").alias("c"))
     # head totals from the (vocab-sized) bigram counts, not a second
     # corpus aggregation: c(w1 ·) = sum of c(w1 w2) over w2
@@ -373,7 +342,7 @@ def bigram_logprob_scores(
     return (
         bg.join(bc, "bigram")
         .join(ht, "head")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
             F.avg(F.log(F.col("c").cast("double") / F.col("h"))).alias(
@@ -383,27 +352,22 @@ def bigram_logprob_scores(
     )
 
 
-def oov_rate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 1000,
-) -> DataFrame:
-    """Per-document out-of-vocabulary rate against the corpus's own
+def oov_rate(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
+    """Per-document out-of-vocabulary rate of ``text`` against the corpus's own
     top-``vocab_size`` word vocabulary (count desc, word asc
     tie-break — fully deterministic).  High OOV flags gibberish, OCR
     noise, and wrong-language content relative to the corpus; it is
     also the standard tokenizer-coverage diagnostic.
 
-    Returns ``(id, n_words, n_oov, oov_frac)``.
+    Returns ``(doc_id, n_words, n_oov, oov_frac)``.
 
     Scale notes (100 TB): the vocabulary is top-k of a hash-aggregated
     word count (map-side combine absorbs the Zipf head) and broadcasts;
     the corpus joins map-side — one shuffle total for the word counts,
     one for the per-doc aggregation."""
     words = df.select(
-        F.col(id_col).alias(id_col),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias(
+        F.col("doc_id"),
+        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
             "word"
         ),
     )
@@ -416,7 +380,7 @@ def oov_rate(
     )
     return (
         words.join(F.broadcast(vocab), "word", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
             F.sum(
@@ -424,7 +388,7 @@ def oov_rate(
             ).alias("n_oov"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_words",
             "n_oov",
             (F.col("n_oov") / F.col("n_words").cast("double")).alias(
@@ -487,15 +451,9 @@ def normalize_unicode(
     return df.withColumn(out_col or text_col, kernel(F.col(text_col)))
 
 
-def source_unigram_js(
-    df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-    materialize: bool = True,
-) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between the unigram word
-    distributions of every unordered pair of corpus sources — the
+def source_unigram_js(df: DataFrame) -> DataFrame:
+    """Pairwise Jensen-Shannon divergence between the unigram ``text``
+    word distributions of every unordered pair of corpus ``source``s — the
     "how different are my sources really" diagnostic behind dataset
     mixing decisions (a temperature-mix like q59 reweights sources;
     this measures whether reweighting can matter at all: JS ≈ 0 means
@@ -525,36 +483,25 @@ def source_unigram_js(
     of corpus size: the distribution table is |sources|·V rows, the
     pair expansion is the word self-join (a word shared by k sources
     emits k(k-1)/2 rows — bounded by |sources|²·V), and the final agg
-    key space is |sources|².  ``broadcast_vocab=True`` (default, the
-    q54 convention) makes the self-join a broadcast hash join — the
-    build side is the vocabulary-bounded distribution table, so the
-    join needs NO exchange and no sort (at 32x-replicated sf0.1 this
-    removed ~1.3 s of small-stage sort-merge overhead on a 20k-row
-    table).  If the vocabulary outgrows executor memory, pass False:
-    the join becomes a sort-merge on ``word`` with the two sides
-    sharing one reused exchange (the q32 postings-join property), and
-    single-source words — which can never match the intersection join
-    and whose JS mass is exactly the closed-form (1 - C)·ln 2
-    remainder — are pruned BEFORE it (under Heaps' law hapax words
-    are roughly half a web vocabulary, so the prune halves the join
-    input; its count-over-word window slots into the word exchange
-    the join needs anyway).
+    key space is |sources|².  The self-join is a broadcast hash join
+    (the q54 convention) — the build side is the vocabulary-bounded
+    distribution table, so the join needs NO exchange and no sort (at
+    32x-replicated sf0.1 this removed ~1.3 s of small-stage sort-merge
+    overhead on a 20k-row table).
 
-    ``materialize`` (default on, the ``histogram_quantiles``/q112
-    convention): the counts table feeds five downstream branches, so
-    it is pinned once with an EAGER ``localCheckpoint`` — measured at
+    The counts table feeds five downstream branches, so it is pinned
+    once with an EAGER ``localCheckpoint`` (the
+    ``histogram_quantiles``/q112 convention) — measured at
     128x-replicated sf0.1 as the difference between 5.27 s and 1.80 s
     per call.  The side effects to know about: plan CONSTRUCTION runs
     one Spark job, and the checkpoint's blocks live until the
-    returned DataFrame is garbage-collected.  Pass False for a fully
-    lazy plan (each branch then re-aggregates over the shared
-    exchange)."""
+    returned DataFrame is garbage-collected."""
     import math
 
     words = df.select(
-        F.col(source_col).alias("src"),
+        F.col("source").alias("src"),
         F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
         ).alias("word"),
     )
     counts = words.groupBy("src", "word").agg(F.count("*").alias("wc"))
@@ -566,27 +513,12 @@ def source_unigram_js(
     # overhead on a 79k-row table, SCALING.md round 12).
     # localCheckpoint pins the VOCABULARY-bounded table once — the
     # exact q112 (dsir_importance_weights) move for the same shape.
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
+    counts = counts.localCheckpoint(eager=True)
     totals = counts.groupBy("src").agg(F.sum("wc").alias("tw"))
     dist = counts.join(F.broadcast(totals), "src").select(
         "src", "word", (F.col("wc").cast("double") / F.col("tw")).alias("p")
     )
-    if not broadcast_vocab:
-        # big-vocab path: prune single-source words before the
-        # sort-merge self-join (see the docstring's Heaps'-law note)
-        from pyspark.sql.window import Window as _W
-
-        dist = (
-            dist.withColumn(
-                "_nsrc", F.count(F.lit(1)).over(_W.partitionBy("word"))
-            )
-            .filter(F.col("_nsrc") > 1)
-            .drop("_nsrc")
-        )
-    a, b = dist.alias("a"), dist.alias("b")
-    if broadcast_vocab:
-        b = F.broadcast(b)
+    a, b = dist.alias("a"), F.broadcast(dist.alias("b"))
     inter = (
         a.join(
             b,

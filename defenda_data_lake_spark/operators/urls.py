@@ -31,15 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def extract_domain(
-    df: DataFrame,
-    url_col: str = "url",
-    out_col: str = "domain",
-    strip_www: bool = True,
-) -> DataFrame:
-    """Add ``out_col``: the URL's host, normalized — lowercased,
-    trailing dot stripped, and (by default) one leading ``www.`` label
-    dropped, the conventional display form C4-style pipelines key on.
+def extract_domain(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Add ``domain``: the URL's host, normalized — lowercased,
+    trailing dot stripped, and one leading ``www.`` label dropped, the
+    conventional display form C4-style pipelines key on.
     Unparseable / relative URLs yield NULL (``try_parse_url`` — the
     ANSI ``parse_url`` THROWS on the first malformed URL, and one bad
     record must not fail a corpus-wide curation job); the port never
@@ -49,9 +44,8 @@ def extract_domain(
     same stage as the parquet scan at any corpus size."""
     host = F.lower(F.try_parse_url(F.col(url_col), F.lit("HOST")))
     host = F.regexp_replace(host, r"\.$", "")
-    if strip_www:
-        host = F.regexp_replace(host, r"^www\.", "")
-    return df.withColumn(out_col, host)
+    host = F.regexp_replace(host, r"^www\.", "")
+    return df.withColumn("domain", host)
 
 
 def domain_suffixes(domain_col) -> "F.Column":
@@ -71,14 +65,13 @@ def blocklist_filter(
     df: DataFrame,
     blocklist: DataFrame,
     domain_col: str = "domain",
-    blocked_col: str = "blocked_domain",
     include_subdomains: bool = True,
 ) -> DataFrame:
     """Drop rows whose domain is on the blocklist — including rows on
     any SUBDOMAIN of a blocked entry when ``include_subdomains``
     (Dolma's contract: blocking ``tracker.biz`` blocks
     ``cdn.tracker.biz``).  ``blocklist`` is a DataFrame with the
-    blocked domains in ``blocked_col`` (already normalized the same
+    blocked domains in ``blocked_domain`` (already normalized the same
     way as ``domain_col``).  NULL domains survive (no URL is not
     evidence of a blocked URL — filter those separately if unwanted).
 
@@ -88,7 +81,7 @@ def blocklist_filter(
     no cartesian; the corpus is exchanged zero times (both joins
     broadcast)."""
     bl = F.broadcast(
-        blocklist.select(F.col(blocked_col).alias("_bl_domain")).distinct()
+        blocklist.select(F.col("blocked_domain").alias("_bl_domain")).distinct()
     )
     if include_subdomains:
         probe = df.select(
@@ -115,15 +108,13 @@ def domain_caps(
     df: DataFrame,
     max_per_domain: int,
     domain_col: str = "domain",
-    order_cols: list[str] | None = None,
     id_col: str = "doc_id",
-    rank_col: str = "domain_rank",
 ) -> DataFrame:
     """Keep at most ``max_per_domain`` rows per domain — the C4-style
     anti-dominance cap on a training mix.  Survivors are the first
-    ``max_per_domain`` under ``order_cols`` (default: ``id_col``
-    ascending, a deterministic arrival-order proxy); the kept rank
-    rides along in ``rank_col`` (1-based).  NULL domains are all kept
+    ``max_per_domain`` by ``id_col`` ascending (a deterministic
+    arrival-order proxy); the kept rank rides along in
+    ``domain_rank`` (1-based).  NULL domains are all kept
     (they form no site, so no site dominates).
 
     Plan: ONE hash exchange on the partition key; the rank + filter
@@ -139,17 +130,16 @@ def domain_caps(
         raise ValueError(f"max_per_domain must be >= 1; got {max_per_domain}")
     from pyspark.sql import Window
 
-    order = [F.col(c) for c in (order_cols or [id_col])]
     part_key = F.coalesce(
         F.col(domain_col),
         F.concat(F.lit(" null "), F.col(id_col).cast("string")),
     )
-    w = Window.partitionBy(part_key).orderBy(*order)
+    w = Window.partitionBy(part_key).orderBy(id_col)
     ranked = df.withColumn("_dc_rank", F.row_number().over(w))
     return (
         ranked.filter(F.col("_dc_rank") <= max_per_domain)
         .withColumn(
-            rank_col,
+            "domain_rank",
             F.when(
                 F.col(domain_col).isNotNull(), F.col("_dc_rank")
             ).cast("int"),

@@ -15,6 +15,13 @@ from defenda_data_lake_spark.plans.catalog_text import (
     _BM25_TOP20_SELECT,
 )
 
+#: the oracles' embedding width, k-means Lloyd iterations (q47, and
+#: the clustering q73/q105/q126 build on), and PQ subspaces and
+#: iterations (q96)
+_DIM = 64
+_KMEANS_ITERATIONS = 3
+_PQ_M, _PQ_ITERATIONS = 4, 2
+
 
 def q89_ann_recall(spark, sf_dir):
     """ANN quality harness: recall@10 of the LSH-bucketed approximate
@@ -122,10 +129,10 @@ def q45_embedding_dedup(spark, sf_dir):
     return pairs.select("id_a", "id_b", R("cosine", 6).alias("cosine"))
 
 
-def _embedding_dedup_sql(num_planes: int = 6, dim: int = 64) -> str:
+def _embedding_dedup_sql() -> str:
     """Replay q45's deterministic hyperplane buckets in DuckDB (same
-    md5-derived planes as Q41_SQL), then the same equi-join + verify."""
-    planes = S._hyperplanes(dim, num_planes)
+    6 md5-derived planes as Q41_SQL), then the same equi-join + verify."""
+    planes = S._hyperplanes(_DIM, 6)
     bits = ",\n         ".join(
         "CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), [{}]) >= 0 "
         "THEN '1' ELSE '0' END".format(", ".join(repr(v) for v in plane))
@@ -338,27 +345,28 @@ def q47_kmeans_clusters(spark, sf_dir):
     )
 
 
-def _kmeans_sql(k: int = 8, iterations: int = 3, dim: int = 64, quantize: int = 9) -> str:
-    """Unrolled Lloyd-loop replay of ``kmeans_assign`` in DuckDB.
+def _kmeans_sql() -> str:
+    """Unrolled Lloyd-loop replay of ``kmeans_assign(k=8, iterations=3)``
+    in DuckDB.
 
     Mirrors, per iteration: (1) assignment = argmin over squared
     distance with ties to the lowest centroid id, (2) per-component
     means rounded at the same 1e-9 quantum the Spark side uses, (3)
-    empty clusters keep their previous centroid.  Init is the k
-    lowest-id vectors; the final assignment (after ``iterations`` mean
-    updates) feeds the cluster summary."""
+    empty clusters keep their previous centroid.  Init is the 8
+    lowest-id vectors; the final assignment (after
+    ``_KMEANS_ITERATIONS`` mean updates) feeds the cluster summary."""
     sq = (
-        f"list_sum(list_transform(range(1, {dim} + 1), "
+        f"list_sum(list_transform(range(1, {_DIM} + 1), "
         "i -> (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])))"
     )
     parts = [
         "emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
         (
             "c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cl, v AS cent "
-            f"FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT {k}) t)"
+            "FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT 8) t)"
         ),
     ]
-    for it in range(iterations + 1):
+    for it in range(_KMEANS_ITERATIONS + 1):
         parts.append(
             f"""a{it} AS (
   SELECT vec_id, v, cl, sq FROM (
@@ -371,10 +379,10 @@ def _kmeans_sql(k: int = 8, iterations: int = 3, dim: int = 64, quantize: int = 
   ) t WHERE rn = 1
 )"""
         )
-        if it < iterations:
+        if it < _KMEANS_ITERATIONS:
             parts.append(
-                f"m{it} AS (SELECT cl, pos, round(avg(v[pos]), {quantize}) AS m "
-                f"FROM a{it}, range(1, {dim} + 1) t(pos) GROUP BY cl, pos)"
+                f"m{it} AS (SELECT cl, pos, round(avg(v[pos]), 9) AS m "
+                f"FROM a{it}, range(1, {_DIM} + 1) t(pos) GROUP BY cl, pos)"
             )
             parts.append(
                 f"c{it + 1} AS (SELECT c{it}.cl, coalesce(mm.cent, c{it}.cent) AS cent "
@@ -386,16 +394,16 @@ def _kmeans_sql(k: int = 8, iterations: int = 3, dim: int = 64, quantize: int = 
         + ",\n".join(parts)
         + f"""
 SELECT cl AS cluster, count(*) AS n_vectors, round(avg(sq), 4) AS avg_sq_dist
-FROM a{iterations} GROUP BY cl
+FROM a{_KMEANS_ITERATIONS} GROUP BY cl
 """
     )
 
 
-def _kmeans_cte(k: int = 8, iterations: int = 3) -> str:
+def _kmeans_cte() -> str:
     """The Lloyd CTE chain of :func:`_kmeans_sql` without its final
-    SELECT — the final assignment lives in ``a{iterations}`` — so other
+    SELECT — the final assignment lives in ``a3`` — so other
     oracles (q73 SemDedup) can build on the identical clustering."""
-    base = _kmeans_sql(k=k, iterations=iterations)
+    base = _kmeans_sql()
     return base.rsplit("SELECT cl AS cluster", 1)[0].rstrip().rstrip(",")
 
 
@@ -442,25 +450,18 @@ def q96_knn_pq(spark, sf_dir):
     )
 
 
-def _pq_sql(
-    m: int = 4,
-    k: int = 16,
-    iterations: int = 2,
-    dim: int = 64,
-    quantize: int = 9,
-    k_top: int = 10,
-    n_queries: int = 5,
-) -> str:
-    """Generated replay of the whole PQ pipeline in DuckDB: one
-    ``_kmeans_sql``-style Lloyd chain PER SUBSPACE over the vector
-    slice, encode = the final assignment (argmin, ties to the lowest
-    centroid id), per-(query, centroid) LUTs, ADC = the same
-    left-to-right sum of LUT lookups, nearest-rank top-k."""
-    dsub = dim // m
+def _pq_sql() -> str:
+    """Generated replay of q96's whole PQ pipeline in DuckDB: one
+    ``_kmeans_sql``-style Lloyd chain (k=16) PER SUBSPACE over the
+    vector slice, encode = the final assignment (argmin, ties to the
+    lowest centroid id), per-(query, centroid) LUTs for the 5 queries,
+    ADC = the same left-to-right sum of LUT lookups, nearest-rank
+    top-10."""
+    dsub = _DIM // _PQ_M
     parts = [
         "emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
     ]
-    for s in range(m):
+    for s in range(_PQ_M):
         lo, hi = s * dsub + 1, (s + 1) * dsub
         p = f"s{s}"
         parts.append(
@@ -468,13 +469,13 @@ def _pq_sql(
         )
         parts.append(
             f"{p}_c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cl, v AS cent "
-            f"FROM (SELECT vec_id, v FROM {p}_emb ORDER BY vec_id LIMIT {k}) t)"
+            f"FROM (SELECT vec_id, v FROM {p}_emb ORDER BY vec_id LIMIT 16) t)"
         )
         sq = (
             f"list_sum(list_transform(range(1, {dsub} + 1), "
             "i -> (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])))"
         )
-        for it in range(iterations + 1):
+        for it in range(_PQ_ITERATIONS + 1):
             parts.append(
                 f"""{p}_a{it} AS (
   SELECT vec_id, v, cl, sq FROM (
@@ -487,9 +488,9 @@ def _pq_sql(
   ) t WHERE rn = 1
 )"""
             )
-            if it < iterations:
+            if it < _PQ_ITERATIONS:
                 parts.append(
-                    f"{p}_m{it} AS (SELECT cl, pos, round(avg(v[pos]), {quantize}) AS m "
+                    f"{p}_m{it} AS (SELECT cl, pos, round(avg(v[pos]), 9) AS m "
                     f"FROM {p}_a{it}, range(1, {dsub} + 1) t(pos) GROUP BY cl, pos)"
                 )
                 parts.append(
@@ -497,28 +498,28 @@ def _pq_sql(
                     f"FROM {p}_c{it} LEFT JOIN (SELECT cl, list(m ORDER BY pos) AS cent "
                     f"FROM {p}_m{it} GROUP BY cl) mm ON {p}_c{it}.cl = mm.cl)"
                 )
-    code_cols = ", ".join(f"s{s}_a{iterations}.cl AS code{s}" for s in range(m))
+    code_cols = ", ".join(f"s{s}_a{_PQ_ITERATIONS}.cl AS code{s}" for s in range(_PQ_M))
     code_joins = " ".join(
-        f"JOIN s{s}_a{iterations} USING (vec_id)" for s in range(1, m)
+        f"JOIN s{s}_a{_PQ_ITERATIONS} USING (vec_id)" for s in range(1, _PQ_M)
     )
     parts.append(
-        f"codes AS (SELECT vec_id, {code_cols} FROM s0_a{iterations} {code_joins})"
+        f"codes AS (SELECT vec_id, {code_cols} FROM s0_a{_PQ_ITERATIONS} {code_joins})"
     )
     parts.append(
-        f"q AS (SELECT vec_id AS query_id, v FROM emb ORDER BY vec_id LIMIT {n_queries})"
+        "q AS (SELECT vec_id AS query_id, v FROM emb ORDER BY vec_id LIMIT 5)"
     )
-    for s in range(m):
+    for s in range(_PQ_M):
         lo = s * dsub
         parts.append(
             f"lut{s} AS (SELECT q.query_id, c.cl, "
             f"list_sum(list_transform(range(1, {dsub} + 1), "
             f"i -> (q.v[{lo} + i] - c.cent[i]) * (q.v[{lo} + i] - c.cent[i]))) AS d "
-            f"FROM q CROSS JOIN s{s}_c{iterations} c)"
+            f"FROM q CROSS JOIN s{s}_c{_PQ_ITERATIONS} c)"
         )
-    dist_sum = " + ".join(f"l{s}.d" for s in range(m))
+    dist_sum = " + ".join(f"l{s}.d" for s in range(_PQ_M))
     lut_joins = " ".join(
         f"JOIN lut{s} l{s} ON l{s}.cl = codes.code{s} AND l{s}.query_id = l0.query_id"
-        for s in range(1, m)
+        for s in range(1, _PQ_M)
     )
     parts.append(
         f"adc AS (SELECT l0.query_id, codes.vec_id, ({dist_sum}) AS adc_dist "
@@ -536,7 +537,7 @@ def _pq_sql(
 SELECT query_id, vec_id,
        round(adc_dist * 1000000, 0) / 1000000 AS adc_dist,
        CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {k_top}
+FROM ranked WHERE rank <= 10
 """
     )
 

@@ -28,29 +28,25 @@ from defenda_data_lake_spark.plans.catalog_shared import R, _t
 # planner would expand the chain exponentially (2^24 scans).
 
 
-def _rep5_sql(expr: str, mi: str, n_passes: int = B.N_PASSES) -> str:
+def _rep5_sql(expr: str, mi: str) -> str:
     pat = f"(SELECT ' ' || pair || ' ' FROM {mi})"
     rep = f"(SELECT ' ' || replace(pair, ' ', '') || ' ' FROM {mi})"
-    for _ in range(n_passes):
+    for _ in range(B.N_PASSES):
         expr = f"replace({expr}, {pat}, {rep})"
     return expr
 
 
-def _learn_ctes(
-    n_merges: int = B.N_MERGES,
-    learn_words: int = B.LEARN_WORDS,
-    max_word_len: int = B.MAX_WORD_LEN,
-) -> str:
+def _learn_ctes() -> str:
     parts = [
         f"""dwords AS MATERIALIZED (
   SELECT w, count(*) AS cnt FROM (
     SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w FROM documents
-  ) WHERE w <> '' AND length(w) <= {max_word_len} GROUP BY w
+  ) WHERE w <> '' AND length(w) <= {B.MAX_WORD_LEN} GROUP BY w
 ),
-lw AS (SELECT w, cnt FROM dwords ORDER BY cnt DESC, w LIMIT {learn_words}),
+lw AS (SELECT w, cnt FROM dwords ORDER BY cnt DESC, w LIMIT {B.LEARN_WORDS}),
 s0 AS MATERIALIZED (SELECT cnt, ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS st FROM lw)"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, B.N_MERGES + 1):
         parts.append(
             f"""p{i} AS (
   SELECT pair, sum(cnt) AS c FROM (
@@ -67,7 +63,7 @@ s{i} AS MATERIALIZED (SELECT cnt, {_rep5_sql('st', f'm{i}')} AS st FROM s{i-1})"
 _CHARSPACED_W = "' ' || regexp_replace(w, '(.)', '\\1 ', 'g')"
 
 
-def _apply_ctes(n_merges: int = B.N_MERGES) -> str:
+def _apply_ctes() -> str:
     """Application as a chain of 24 materialized CTEs (5 nested
     replaces each) rather than one 120-deep nested expression — the
     flat form trips DuckDB's binder recursion limit (128); MATERIALIZED
@@ -76,19 +72,19 @@ def _apply_ctes(n_merges: int = B.N_MERGES) -> str:
     parts = [
         f"app0 AS MATERIALIZED (SELECT w, {_CHARSPACED_W} AS st FROM dwords)"
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, B.N_MERGES + 1):
         parts.append(
             f"app{i} AS MATERIALIZED (SELECT w, {_rep5_sql('st', f'm{i}')} AS st FROM app{i-1})"
         )
     parts.append(
-        f"app AS (SELECT w, len(string_split(trim(st), ' ')) AS n_tok FROM app{n_merges})"
+        f"app AS (SELECT w, len(string_split(trim(st), ' ')) AS n_tok FROM app{B.N_MERGES})"
     )
     return ",\n".join(parts)
 
 
-def _merge_union_sql(n_merges: int = B.N_MERGES) -> str:
+def _merge_union_sql() -> str:
     return "\nUNION ALL\n".join(
-        f"SELECT {i} AS rank, pair FROM m{i}" for i in range(1, n_merges + 1)
+        f"SELECT {i} AS rank, pair FROM m{i}" for i in range(1, B.N_MERGES + 1)
     )
 
 

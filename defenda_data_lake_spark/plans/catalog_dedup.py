@@ -460,7 +460,7 @@ def q42_simhash_pairs(spark, sf_dir):
     return D.simhash_near_duplicates(docs, max_hamming=3)
 
 
-def _simhash_sql(max_hamming: int = 3) -> str:
+def _simhash_sql() -> str:
     """Reproduce the SimHash pipeline in DuckDB: word bigrams →
     md5_number_upper 64-bit hash → per-bit ±1 vote → sign → 16-bit
     block join → Hamming verify."""
@@ -503,7 +503,7 @@ SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) AS INT) AS hamming
 FROM blocked a JOIN blocked b
   ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-WHERE bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) <= {max_hamming}
+WHERE bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) <= 3
 """
 
 

@@ -383,19 +383,21 @@ def q100_pagerank(spark, sf_dir):
     )
 
 
-def _pagerank_sql(iterations: int = 5, damping_pct: int = 85) -> str:
-    """Unrolled fixed-point PageRank in DuckDB: BIGINT ranks in 1e-12
+def _pagerank_sql() -> str:
+    """Unrolled 5-round fixed-point PageRank in DuckDB: BIGINT ranks in 1e-12
     units, ``//`` floor division mirroring Spark's ``div`` (all values
     non-negative, so floor == truncate), per-round CAST back to BIGINT
     because DuckDB widens ``sum`` to HUGEINT."""
+    from defenda_data_lake_spark.operators.graph import DAMPING_PCT
+
     scale = 10**12
     rounds = []
     prev = "r0"
-    for i in range(1, iterations + 1):
+    for i in range(1, 6):
         rounds.append(f"""
 r{i} AS (
   SELECT e.dst AS node_id,
-         CAST(p.b + ({damping_pct} * sum(r.rank_e12 // d.outdeg)) // 100
+         CAST(p.b + ({DAMPING_PCT} * sum(r.rank_e12 // d.outdeg)) // 100
               AS BIGINT) AS rank_e12
   FROM edges e
   JOIN {prev} r ON e.src = r.node_id
@@ -415,7 +417,7 @@ deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
 nodes AS (SELECT DISTINCT src AS node_id FROM edges),
 params AS (
   SELECT CAST({scale} // count(*) AS BIGINT) AS r_init,
-         CAST(({100 - damping_pct} * {scale}) // (100 * count(*)) AS BIGINT) AS b
+         CAST(({100 - DAMPING_PCT} * {scale}) // (100 * count(*)) AS BIGINT) AS b
   FROM nodes
 ),
 r0 AS (SELECT node_id, r_init AS rank_e12 FROM nodes CROSS JOIN params),

@@ -176,7 +176,7 @@ def q109_image_dhash(spark, sf_dir):
     return M.dhash_near_duplicates(media, max_hamming=3)
 
 
-def _dhash_sql(max_hamming: int = 3) -> str:
+def _dhash_sql() -> str:
     """Reproduce the dHash pipeline in DuckDB: text code points ->
     9x8 pixel grid -> horizontal gradient-sign bits (weight
     ``2^(row*8+col)``) -> 16-bit block join -> Hamming verify — the
@@ -216,7 +216,7 @@ SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) AS INT) AS hamming
 FROM blocked a JOIN blocked b
   ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-WHERE bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) <= {max_hamming}
+WHERE bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) <= 3
 """
 
 
@@ -258,7 +258,7 @@ def q114_audio_fingerprint(spark, sf_dir):
     return M.audio_near_duplicates(media, max_hamming=3)
 
 
-def _afp_sql(max_hamming: int = 3) -> str:
+def _afp_sql() -> str:
     """Reproduce the envelope fingerprint in DuckDB: text code points
     -> |cp%256 - 128| magnitudes -> 65 two-sample frames over the
     first 130 -> gradient-sign bits (weight ``2^j``) -> 16-bit block
@@ -302,7 +302,7 @@ SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) AS INT) AS hamming
 FROM blocked a JOIN blocked b
   ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-WHERE bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) <= {max_hamming}
+WHERE bit_count(CAST(xor(CAST(a.sig AS UBIGINT), CAST(b.sig AS UBIGINT)) AS UBIGINT)) <= 3
 """
 
 

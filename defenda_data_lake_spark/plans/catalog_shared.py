@@ -223,13 +223,10 @@ def _cache_partitions(size: int, cores: int) -> int:
 
 
 def warm_table_cache(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: list[str] | None = None,
-    max_bytes: int = 2 << 30,
-    partitions: int | None = None,
+    spark: SparkSession, sf_dir: str, max_bytes: int = 2 << 30
 ) -> dict[str, int]:
-    """Pin hot tables in Spark's in-memory columnar cache — the local
+    """Pin every table of ``sf_dir`` that fits ``max_bytes`` in Spark's
+    in-memory columnar cache — the local
     analog of a cluster's NVMe/Delta-style table cache for interactive
     workloads that re-scan the same tables query after query.
 
@@ -295,11 +292,10 @@ def warm_table_cache(
     except Exception:
         pass  # pre-3.3 Sparks don't have the conf (and don't need it)
 
-    if tables is None:
-        tables = sorted(
-            _os.path.basename(p)[: -len(".parquet")]
-            for p in _glob.glob(_os.path.join(sf_dir, "*.parquet"))
-        )
+    tables = sorted(
+        _os.path.basename(p)[: -len(".parquet")]
+        for p in _glob.glob(_os.path.join(sf_dir, "*.parquet"))
+    )
     try:
         cores = spark.sparkContext.defaultParallelism
     except Exception:
@@ -334,7 +330,7 @@ def warm_table_cache(
         if size > (256 << 10):
             key = _CO_PARTITION.get(name)
             grp = _CO_GROUP.get(name)
-            n_parts = partitions or (
+            n_parts = (
                 group_parts[grp]
                 if grp is not None
                 else _cache_partitions(size, cores)

@@ -33,7 +33,6 @@ partition-registration cron (generate_partitions.py) is unnecessary.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from defenda_data_lake_spark.lake import create_events_table, land
@@ -66,7 +65,7 @@ def start_ingest(
         from defenda_data_lake_spark.sources import FileLandingSource
 
         source = FileLandingSource(landing_path, max_files_per_trigger)
-    lines = source.load(spark).filter(F.trim(F.col("raw")) != "")
+    lines = source.load(spark)
     source_col = "source" if "source" in lines.columns else None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -22,10 +22,10 @@ from pyspark.sql import DataFrame
 KERNEL_BYTES_PER_TASK = 2 << 20
 
 
-def kernel_parallelism(df: DataFrame, bytes_per_task: int = KERNEL_BYTES_PER_TASK) -> int:
+def kernel_parallelism(df: DataFrame) -> int:
     """Target partition count for a CPU-dense Arrow kernel over ``df``:
     proportional to driver-visible input bytes (one task per
-    ``bytes_per_task``), capped at the cluster's default parallelism.
+    ``KERNEL_BYTES_PER_TASK``), capped at the cluster's default parallelism.
     Unknown size falls back to full parallelism — the scale-safe
     default.  The point is the SMALL side: paying a round-robin
     exchange plus ``defaultParallelism`` task schedulings to spread a
@@ -40,7 +40,7 @@ def kernel_parallelism(df: DataFrame, bytes_per_task: int = KERNEL_BYTES_PER_TAS
     size = _input_bytes(df)
     if size is None:
         return par
-    return min(par, int(size // bytes_per_task) + 1)
+    return min(par, int(size // KERNEL_BYTES_PER_TASK) + 1)
 
 
 def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -157,12 +157,7 @@ def pair_join_hint(df: DataFrame) -> str:
     return "merge"
 
 
-def scaled_keyed_partitions(
-    df: DataFrame,
-    expansion: float = 8.0,
-    bytes_per_task: int = 8 << 20,
-    cap_multiple: int = 4,
-) -> int:
+def scaled_keyed_partitions(df: DataFrame) -> int:
     """Partition count for an *explicit* keyed ``repartition`` feeding a
     CPU-dense stage (pair-expansion joins, signature kernels).
 
@@ -171,12 +166,13 @@ def scaled_keyed_partitions(
     CPU-heavy shuffle into one task) — but it also means a flat
     ``defaultParallelism`` count over-partitions tiny inputs, paying
     ~10-20 ms of scheduling per empty-ish task.  Scale the count with
-    the driver-visible input size instead: ``input_bytes * expansion /
-    bytes_per_task``, clamped to [defaultParallelism / 2, cap_multiple *
-    defaultParallelism].  When input size is unknown (object stores,
-    computed inputs), fall back to ``defaultParallelism`` — on a real
-    cluster that is the sane default, and the clamp keeps the count
-    proportional to the cluster everywhere."""
+    the driver-visible input size instead: ``input_bytes * 8 / 8 MB``
+    (an 8x expansion over the input, 8 MB per task), clamped to
+    [defaultParallelism / 2, 4 * defaultParallelism].  When input size
+    is unknown (object stores, computed inputs), fall back to
+    ``defaultParallelism`` — on a real cluster that is the sane default,
+    and the clamp keeps the count proportional to the cluster
+    everywhere."""
     import os
 
     try:
@@ -186,8 +182,8 @@ def scaled_keyed_partitions(
     size = _input_bytes(df)
     if size is None:
         return par
-    want = int(size * expansion // bytes_per_task) + 1
-    return max(min(want, cap_multiple * par), max(par // 2, 1))
+    want = int(size * 8.0 // (8 << 20)) + 1
+    return max(min(want, 4 * par), max(par // 2, 1))
 
 
 def bounded_local_df(spark, rows, schema: str) -> DataFrame:

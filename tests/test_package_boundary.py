@@ -1,5 +1,6 @@
 """The product boundary: the lake stands apart from the catalog, every
-package module has a caller, and so does every top-level function.
+package module has a caller, so does every top-level function, and
+every defaulted parameter has a setter.
 
 Two closures of package imports.  The lake closure starts at the lake
 path (``LAKE_PATH`` plus every module of ``functions`` and ``utils``)
@@ -19,6 +20,19 @@ definition's references to itself do not count.  ``NO_CALLER_YET``
 names the definitions kept without one, each with its reason; it must
 match the scan exactly, so a new caller-less name fails and so does an
 entry that got a caller or was deleted.
+
+Per parameter: every parameter with a default, of every ``def`` in the
+package (methods, nested and private functions and ``__init__``
+included), must be set by some call in the package, a root file,
+``scripts/`` or ``tests/``.  A call is matched to a definition by the
+callee's name (a class name stands for its ``__init__``), and it sets
+the parameter when it passes it by keyword, passes enough positional
+arguments to reach it, forwards ``*args`` or ``**kwargs``, or names the
+definition in ``functools.partial(fn, …)`` with such arguments.  A
+parameter nothing sets is a setting nobody uses: it goes, its default
+folded into the code.  ``NO_SETTER_YET`` names the parameters kept
+without a setter, each with its reason, and must match the scan
+exactly, as ``NO_CALLER_YET`` does.
 Static AST walk, no Spark needed.
 """
 
@@ -46,6 +60,7 @@ LAKE_PATH = [
 ROOT_PACKAGES = ["functions", "utils"]  # every module in them is a root
 ROOT_FILES = ["__spark_entry__.py", "bench.py", "scripts/check_oracle.py"]
 ROOT_DIRS = ["perfbench"]
+SETTER_DIRS = ["scripts", "tests"]  # set parameters, reach no module
 
 ENTRY_POINT = "lake API entry point a deployment calls"
 WAITS_FOR_ITEM_1 = "waits for ROADMAP item 1 (compaction on the lake path)"
@@ -67,6 +82,15 @@ NO_CALLER_YET = {
     "operators.dedup.exact_duplicate_groups": REFERENCE,
     "operators.dedup.word_shingles": REFERENCE,
     "operators.text.fingerprint": REFERENCE,
+}
+
+DEPLOYMENT_ADDRESS = "deployment address: the cluster a deployment runs on"
+STREAM_TUNING = "deployment tuning ROADMAP item 7's stream workload will set"
+
+# Defaulted parameters no call sets, as ``module.[Class.]function(name)``.
+NO_SETTER_YET = {
+    "session.get_spark(master)": DEPLOYMENT_ADDRESS,
+    "streaming.ingest.start_ingest(max_files_per_trigger)": STREAM_TUNING,
 }
 
 
@@ -236,3 +260,96 @@ def test_every_public_definition_has_a_caller():
     no_caller = sorted(found - NO_CALLER_YET.keys())
     stale = sorted(NO_CALLER_YET.keys() - found)  # got a caller, or is gone
     assert (no_caller, stale) == ([], [])
+
+
+def _callee(func: ast.expr) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def _calls() -> dict[str, list[tuple[int, bool, set[str], bool]]]:
+    """Callee name -> ``(n_positional, forwards_args, keywords,
+    forwards_kwargs)`` for every call in the package, the root files,
+    ``scripts/`` and ``tests/``; ``partial(fn, …)`` counts as a call of
+    ``fn``."""
+    files = sorted(_package_modules().values()) + _root_files()
+    for d in SETTER_DIRS:
+        files += sorted((REPO / d).rglob("*.py"))
+    calls: dict[str, list] = {}
+    for path in dict.fromkeys(files):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            name, args = _callee(node.func), node.args
+            if name == "partial" and args:
+                name, args = _callee(args[0]), args[1:]
+            if name is None:
+                continue
+            calls.setdefault(name, []).append(
+                (
+                    len(args),
+                    any(isinstance(a, ast.Starred) for a in args),
+                    {k.arg for k in node.keywords if k.arg},
+                    any(k.arg is None for k in node.keywords),
+                )
+            )
+    return calls
+
+
+def _unset_parameters() -> set[str]:
+    """``module.[Class.]function(name)`` of every defaulted parameter of
+    a package ``def`` that no call sets (see the module docstring)."""
+    calls = _calls()
+    unset = set()
+    for module, path in _package_modules().items():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        owner = {
+            id(stmt): cls.name
+            for cls in ast.walk(tree)
+            if isinstance(cls, ast.ClassDef)
+            for stmt in cls.body
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            cls = owner.get(id(fn))
+            static = any(
+                isinstance(d, ast.Name) and d.id == "staticmethod"
+                for d in fn.decorator_list
+            )
+            bound = 1 if cls and not static else 0  # self / cls
+            name = cls if cls and fn.name == "__init__" else fn.name
+            positional = fn.args.posonlyargs + fn.args.args
+            first = len(positional) - len(fn.args.defaults)
+            params = [
+                (arg.arg, i - bound)
+                for i, arg in enumerate(positional)
+                if i >= first
+            ]
+            params += [
+                (arg.arg, None)
+                for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if default is not None
+            ]
+            qual = module.removeprefix(f"{PACKAGE}.")
+            qual += f".{cls}.{fn.name}" if cls else f".{fn.name}"
+            for param, index in params:
+                if not any(
+                    param in keywords
+                    or kwargs
+                    or (index is not None and (star or n > index))
+                    for n, star, keywords, kwargs in calls.get(name, [])
+                ):
+                    unset.add(f"{qual}({param})")
+    return unset
+
+
+def test_every_defaulted_parameter_is_set():
+    assert set(NO_SETTER_YET.values()) <= {DEPLOYMENT_ADDRESS, STREAM_TUNING}
+    found = _unset_parameters()
+    no_setter = sorted(found - NO_SETTER_YET.keys())
+    stale = sorted(NO_SETTER_YET.keys() - found)  # got a setter, or is gone
+    assert (no_setter, stale) == ([], [])

@@ -101,3 +101,49 @@ def test_kafka_source_without_connector_raises_actionable(spark):
         # connector present in this build: the contract column exists (a
         # direct producer supplies no ``source`` column)
         assert df.columns == ["raw"]
+
+
+class _TombstoneSource:
+    """A text file stream whose ``TOMBSTONE`` lines read as NULL
+    records, as a Kafka tombstone (a message with no value) does."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+
+    def load(self, spark):
+        from pyspark.sql import functions as F
+
+        value = F.col("value")
+        lines = spark.readStream.format("text").load(self.path)
+        return lines.select(F.when(value != "TOMBSTONE", value).alias("raw"))
+
+
+def test_stream_quarantines_a_null_record(spark, tmp_path):
+    """A NULL record is quarantined as ``ProcessingFailed``, as batch
+    and Firehose intake do, so landed plus quarantined rows equal the
+    records read."""
+    from defenda_data_lake_spark.lake import EVENTS_TABLE
+    from defenda_data_lake_spark.streaming.ingest import start_ingest
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "c.json").write_text(
+        json.dumps({"summary": "beside a tombstone"})
+        + "\nTOMBSTONE\n"
+        + json.dumps({"summary": "beside a tombstone"})
+        + "\n"
+    )
+    query = start_ingest(
+        spark,
+        checkpoint_path=str(tmp_path / "ckpt"),
+        quarantine_path=str(tmp_path / "quarantine"),
+        source=_TombstoneSource(str(landing)),
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    landed = spark.table(EVENTS_TABLE).filter("summary = 'beside a tombstone'")
+    assert landed.count() == 2
+    bad = spark.read.json(str(tmp_path / "quarantine")).collect()
+    assert [row["_status"] for row in bad] == ["ProcessingFailed"]
