@@ -8,8 +8,10 @@ but in one Spark session:
   Parquet + zstd, hive-partitioned by processing-time
   ``year/month/day/hour`` (partition pruning ≡ the reference's only
   query-cost lever, README.md:114,230);
-* ``land`` — the one landing path: normalized rows → partitioned
-  append plus quarantine.  ``ingest_batch`` and ``start_ingest`` in
+* ``land`` — the one landing path: one unpersisted write stages every
+  normalized row under the table, then the driver writes the quarantine
+  from the staged failures and moves the Ok files into their hour
+  partitions.  ``ingest_batch`` and ``start_ingest`` in
   ``streaming.ingest`` write through it (replaces the
   S3→lambda→Firehose→lambda→S3 hop chain);
 * ``spark.sql`` — the full Presto-surface replacement, including the
@@ -18,7 +20,10 @@ but in one Spark session:
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from defenda_data_lake_spark.operators.intake import ndjson_intake
 from defenda_data_lake_spark.operators.pipeline import (
@@ -30,6 +35,7 @@ from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA, SHELL_FIELDS
 
 DATABASE = "defenda_data_lake"
 EVENTS_TABLE = f"{DATABASE}.events"
+PARTITION_COLUMNS = ("year", "month", "day", "hour")
 
 
 def create_events_table(spark: SparkSession, location: str | None = None) -> None:
@@ -60,26 +66,113 @@ def land(
 ) -> None:
     """The one write of the lake: append ``normalized``'s ``_status =
     'Ok'`` rows to ``defenda_data_lake.events`` and every other row's
-    non-shell columns (``_status``, ``_raw``) to the quarantine as JSON (the reference's result
-    envelope, processor.py:59-76).  ``normalized`` is persisted for the
-    two writes, so the plugin kernel runs once per event."""
-    normalized = normalized.persist()
+    ``_status`` and ``_raw`` to the quarantine as JSON lines (the
+    reference's result envelope, processor.py:59-76).
+
+    One Spark job writes every row once, unpersisted, into a staging
+    directory under the table (``_landing-<id>``, skipped by table scans),
+    partitioned by ``status`` and the processing-time hour.  The driver
+    then writes the quarantine from the staged rows that are not Ok (a
+    second job, only when there are any), moves the staged Ok files into
+    their hour partition's LOCATION, registers a new hour and refreshes
+    the table.  The quarantine is written before any file moves, so a
+    failed quarantine write lands nothing.  The staging directory is
+    deleted whether or not the landing succeeds."""
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    table = hadoop.Path(_catalog(spark).getTable(DATABASE, "events").location())
+    fs = table.getFileSystem(spark._jsc.hadoopConfiguration())
+    staging = hadoop.Path(table, f"_landing-{uuid.uuid4().hex}")
+    status = normalized["_status"]
+    if not quarantine_path:
+        normalized = normalized.filter(status == STATUS_OK)
+    # a row that is not Ok has every shell column NULL: its ``details``
+    # slot carries ``_raw``, so every staged file holds exactly the shell
+    # columns, and the quarantine write maps it back
+    details = F.when(status == STATUS_OK, normalized["details"]).otherwise(
+        normalized["_raw"]
+    )
+    staged = add_partition_columns(
+        normalized.select(
+            *[details.alias(c) if c == "details" else c for c in SHELL_FIELDS],
+            status.alias("status"),
+        )
+    )
     try:
-        good = normalized.filter(normalized["_status"] == STATUS_OK)
-        good = add_partition_columns(good.select(*SHELL_FIELDS))
-        good.write.mode("append").insertInto(EVENTS_TABLE)
+        _write_unsorted(staged, staging.toString())
+        failed = [
+            s.getPath().toString()
+            for s in fs.listStatus(staging)
+            if s.isDirectory() and s.getPath().getName() != f"status={STATUS_OK}"
+        ]
+        if failed:
+            spark.read.schema(EVENT_SHELL_SCHEMA).option(
+                "basePath", staging.toString()
+            ).parquet(*failed).select(
+                F.col("status").alias("_status"), F.col("details").alias("_raw")
+            ).write.mode("append").json(quarantine_path)
+        hours = fs.globStatus(
+            hadoop.Path(staging, f"status={STATUS_OK}/year=*/month=*/day=*/hour=*")
+        )
+        for hour in hours or []:
+            _move_into_hour(spark, fs, table, hour.getPath())
         # appending into an already-scanned partition leaves the
         # session's file-status cache stale; refresh so concurrent
         # readers see the new files immediately
         spark.catalog.refreshTable(EVENTS_TABLE)
-        if quarantine_path:
-            envelope = [c for c in normalized.columns if c not in SHELL_FIELDS]
-            bad = normalized.filter(normalized["_status"] != STATUS_OK)
-            bad.select(*envelope).write.mode("append").json(quarantine_path)
     finally:
-        # blocking: an asynchronous release competes with the caller's
-        # next job (measured on the read-back after a batch)
-        normalized.unpersist(blocking=True)
+        fs.delete(staging, True)
+
+
+def _write_unsorted(staged: DataFrame, path: str) -> None:
+    """Write ``staged`` as parquet partitioned by status and hour, without
+    the planned-write sort Spark puts before a ``partitionBy``: each task
+    keeps one open file per partition instead (a landing has one hour and
+    at most three statuses).  The setting is scoped to this write, on the
+    frame's own session (a stream micro-batch runs in the stream's clone
+    of the session), because the session's other partitioned writes keep
+    their sorted, one-file-at-a-time output."""
+    conf = staged.sparkSession.conf
+    key = "spark.sql.maxConcurrentOutputFileWriters"
+    previous = conf.get(key, None)
+    conf.set(key, "3")
+    try:
+        staged.write.partitionBy("status", *PARTITION_COLUMNS).parquet(path)
+    finally:
+        if previous is None:
+            conf.unset(key)
+        else:
+            conf.set(key, previous)
+
+
+def _move_into_hour(spark: SparkSession, fs, table, staged_hour) -> None:
+    """Move one staged hour's files into the hour's partition LOCATION:
+    the catalog's, when the hour is registered (``register_hour_partition``
+    registers bare ``Y/M/D/H`` directories), else the table's hive
+    ``year=…/hour=…`` directory, registered after the move, as
+    ``insertInto`` would."""
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    names, path = [], staged_hour
+    for _ in PARTITION_COLUMNS:
+        names.insert(0, path.getName())
+        path = path.getParent()
+    parts = tuple(name.split("=", 1)[1] for name in names)
+    location = _hour_location(spark, parts)
+    if location:
+        target = hadoop.Path(location)
+    else:
+        target = hadoop.Path(table, "/".join(names))
+    fs.mkdirs(target)
+    for f in fs.listStatus(staged_hour):
+        name = f.getPath().getName()
+        if f.isFile() and not name.startswith(("_", ".")):
+            if not fs.rename(f.getPath(), hadoop.Path(target, name)):
+                raise OSError(f"could not move {f.getPath()} into {target}")
+    if not location:
+        spark.sql(
+            f"ALTER TABLE {EVENTS_TABLE} ADD IF NOT EXISTS PARTITION "
+            f"({_partition_spec(*parts)}) "
+            f"LOCATION '{target.toString()}'"
+        )
 
 
 def ingest_batch(
@@ -150,13 +243,28 @@ def register_hour_partition(
     )
     location '{base_location}/{year}/{month}/{day}/{hour}'
     """
-    # isEmpty reads the command's local result; count() would submit a job
-    if spark.sql(
-        f"SHOW PARTITIONS {DATABASE}.events "
-        f"PARTITION (year='{year}', month='{month}', day='{day}', hour='{hour}')"
-    ).isEmpty():
+    if _hour_location(spark, parts) is None:
         spark.sql(query)
     return query
+
+
+def _partition_spec(year: str, month: str, day: str, hour: str) -> str:
+    """The ``PARTITION (…)`` clause body of one hour."""
+    return f"year='{year}', month='{month}', day='{day}', hour='{hour}'"
+
+
+def _catalog(spark: SparkSession):
+    """The session's external catalog.  Its lookups are plain method
+    calls: no SQL to parse and plan, and no job."""
+    return spark._jsparkSession.sharedState().externalCatalog()
+
+
+def _hour_location(spark: SparkSession, parts: tuple[str, str, str, str]) -> str | None:
+    """The catalog LOCATION of the hour ``parts`` (year, month, day,
+    hour), or None when the hour is not registered; submits no job."""
+    spec = spark._jvm.PythonUtils.toScalaMap(dict(zip(PARTITION_COLUMNS, parts)))
+    hour = _catalog(spark).getPartitionOption(DATABASE, "events", spec)
+    return hour.get().location().toString() if hour.isDefined() else None
 
 
 def query_pandas(spark: SparkSession, sql: str):

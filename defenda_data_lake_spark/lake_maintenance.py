@@ -22,7 +22,7 @@ import uuid
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
-from defenda_data_lake_spark.lake import EVENTS_TABLE
+from defenda_data_lake_spark.lake import EVENTS_TABLE, _hour_location, _partition_spec
 
 
 def partition_path(
@@ -175,14 +175,8 @@ def expire_partitions(
         if part_time + datetime.timedelta(hours=1) > cutoff:
             kept += 1
             continue
-        spec = f"year='{y}', month='{mo}', day='{d}', hour='{h}'"
-        location = next(
-            r.data_type
-            for r in spark.sql(
-                f"DESCRIBE FORMATTED {EVENTS_TABLE} PARTITION ({spec})"
-            ).collect()
-            if r.col_name == "Location"
-        )
+        spec = _partition_spec(y, mo, d, h)
+        location = _hour_location(spark, (y, mo, d, h))
         path = spark._jvm.org.apache.hadoop.fs.Path(location)
         fs = path.getFileSystem(conf)
         size = fs.getContentSummary(path).getLength() if fs.exists(path) else 0

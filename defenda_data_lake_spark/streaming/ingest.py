@@ -22,12 +22,14 @@ Semantics preserved:
 * delivery is at least once, as with Firehose: no stage drops a
   re-sent record.
 
-Scale notes: each micro-batch is a narrow scan → mapInPandas →
-partitioned append; no shuffle.  For very high event rates, raise
+Scale notes: each micro-batch is a narrow scan → mapInPandas → one
+staged parquet write; no shuffle, and a second job (the quarantine
+write) only when a record failed.  For very high event rates, raise
 ``maxFilesPerTrigger`` and pre-size landing files ~128 MB so each task
-gets one file.  ``foreachBatch`` writes through ``insertInto`` so new
-hours appear in the catalog immediately — the reference's 10-minute
-partition-registration cron (generate_partitions.py) is unnecessary.
+gets one file.  ``land`` registers a new hour as it moves the staged
+files in, so new hours appear in the catalog immediately — the
+reference's 10-minute partition-registration cron
+(generate_partitions.py) is unnecessary.
 """
 
 from __future__ import annotations

@@ -420,3 +420,39 @@ def test_registered_hour_check_submits_no_job(lake):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("register-again") == []
     assert location() == before
+
+
+def test_landing_into_a_registered_hour_uses_its_location(spark, tmp_path):
+    """An hour registered with ``register_hour_partition`` (a bare
+    ``Y/M/D/H`` LOCATION) keeps that LOCATION when a batch lands into it:
+    the new files go to the catalog's directory and the rows are visible.
+    It drops the module's table, so it stays after every test that uses
+    the ``lake`` fixture."""
+    from defenda_data_lake_spark.lake import register_hour_partition
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    n = 5
+    with open(landing / "events.json", "w") as f:
+        for i in range(n):
+            f.write(json.dumps({"srcaddr": f"198.51.100.{i}"}) + "\n")
+    base = tmp_path / "firehose_output"
+    try:
+        # the processing-time hour may turn between registering it and
+        # landing; a second try lands well inside the next hour
+        for attempt in range(2):
+            table = tmp_path / f"table{attempt}"
+            spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+            create_events_table(spark, location=str(table))
+            stmt = register_hour_partition(spark, str(base))
+            ingest_batch(spark, str(landing), mode="ndjson")
+            partitions = spark.sql(f"SHOW PARTITIONS {EVENTS_TABLE}").collect()
+            if len(partitions) == 1:
+                break
+        hour_dir = base.joinpath(*(v.split("=")[1] for v in partitions[0][0].split("/")))
+        assert f"location '{hour_dir}'" in stmt
+        assert spark.table(EVENTS_TABLE).count() == n
+        assert len(list(hour_dir.glob("*.parquet"))) >= 1
+        assert not list(table.glob("year=*"))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")

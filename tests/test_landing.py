@@ -3,8 +3,10 @@ event, and batch and stream intake land the same rows from the same
 landing files."""
 
 import functools
+import glob
 import gzip
 import json
+import os
 from collections import Counter
 
 import pytest
@@ -12,6 +14,7 @@ import pytest
 from defenda_data_lake_spark import lake
 from defenda_data_lake_spark.lake import EVENTS_TABLE, create_events_table, ingest_batch
 from defenda_data_lake_spark.operators import pipeline
+from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA
 from tests.fixtures.events import ALL_FIXTURES, deep_copy
 
 
@@ -226,5 +229,161 @@ def test_ingest_batch_rejects_unknown_mode(spark, tmp_path):
         with pytest.raises(ValueError, match="mode"):
             ingest_batch(spark, str(landing), mode="json")
         assert spark.table(EVENTS_TABLE).count() == 0
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+
+
+def _write_well_formed(landing, n):
+    landing.mkdir()
+    with open(landing / "events.json", "w") as f:
+        for i in range(n):
+            f.write(json.dumps({"srcaddr": f"198.51.100.{i}", "start": 1418530010 + i}) + "\n")
+
+
+def _jobs_in_group(spark, group, run):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _with_landing_plans(spark, run):
+    """Run ``run``; return its result and the physical plans of the SQL
+    executions it ran over a staging directory."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        found = store.executionsList()
+        return [found.apply(i) for i in range(found.size())]
+
+    seen = {e.executionId() for e in executions()}
+    result = run()
+    plans = (e.physicalPlanDescription() for e in executions() if e.executionId() not in seen)
+    return result, [plan for plan in plans if "_landing-" in plan]
+
+
+def _table_dir(spark):
+    return lake._catalog(spark).getTable(lake.DATABASE, "events").location().getPath()
+
+
+def _assert_landed_files(spark):
+    """Every landed file holds exactly the shell columns, and the table
+    directory holds only hour partitions: no staging directory is left."""
+    table = _table_dir(spark)
+    assert all(name.startswith("year=") for name in os.listdir(table)), os.listdir(table)
+    files = glob.glob(os.path.join(table, "year=*", "*", "*", "*", "*.parquet"))
+    assert files
+    for path in files:
+        assert spark.read.parquet(path).schema == EVENT_SHELL_SCHEMA
+
+
+def test_well_formed_batch_lands_in_one_job(spark, tmp_path):
+    """A batch of well-formed lines lands in exactly one Spark job, into
+    the batch's external table: no cache, and no quarantine write when no
+    record failed."""
+    n = 20
+    _write_well_formed(tmp_path / "landing", n)
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    create_events_table(spark, location=str(tmp_path / "table"))
+    try:
+        jobs, plans = _with_landing_plans(
+            spark,
+            lambda: _jobs_in_group(
+                spark,
+                "land-batch",
+                lambda: ingest_batch(
+                    spark,
+                    str(tmp_path / "landing"),
+                    mode="ndjson",
+                    quarantine_path=str(tmp_path / "quarantine"),
+                ),
+            ),
+        )
+        assert len(jobs) == 1
+        # the staged write runs without the planned-write sort
+        assert len(plans) == 1 and "Sort" not in plans[0], plans
+        assert spark.table(EVENTS_TABLE).count() == n
+        _assert_landed_files(spark)
+        assert not (tmp_path / "quarantine").exists()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+
+
+def test_well_formed_stream_batch_lands_in_one_job(spark, tmp_path):
+    """A stream micro-batch of well-formed lines lands in exactly one
+    Spark job, into the stream's managed table.  The stream runs its jobs
+    in the job group of its run id."""
+    from defenda_data_lake_spark.streaming.ingest import start_ingest
+
+    n = 20
+    _write_well_formed(tmp_path / "landing", n)
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    try:
+        def run():
+            query = start_ingest(
+                spark,
+                landing_path=str(tmp_path / "landing"),
+                checkpoint_path=str(tmp_path / "ckpt"),
+                quarantine_path=str(tmp_path / "quarantine"),
+                trigger_seconds=1,
+            )
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
+            return query
+
+        query, plans = _with_landing_plans(spark, run)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+        assert len(jobs) == 1
+        # the micro-batch runs in the stream's clone of the session: the
+        # staged write skips the planned-write sort there too
+        assert len(plans) == 1 and "Sort" not in plans[0], plans
+        assert spark.table(EVENTS_TABLE).count() == n
+        _assert_landed_files(spark)
+        assert not (tmp_path / "quarantine").exists()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+
+
+def test_failed_quarantine_write_lands_nothing(spark, tmp_path, monkeypatch):
+    """The quarantine is written before any good row lands: when its
+    write fails, ``land`` raises, the table is as it was, the staging
+    directory is gone, and a re-run lands each well-formed line once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    n = 12
+    landing = tmp_path / "landing"
+    _write_well_formed(landing, n)
+    with open(landing / "events.json", "a") as f:
+        f.write("{not json\n")
+    quarantine = str(tmp_path / "quarantine")
+
+    def failing_json(self, path, *args, **kwargs):
+        raise RuntimeError("quarantine storage unavailable")
+
+    spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
+    create_events_table(spark, location=str(tmp_path / "table"))
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "json", failing_json)
+            with pytest.raises(RuntimeError, match="quarantine storage"):
+                ingest_batch(spark, str(landing), mode="ndjson", quarantine_path=quarantine)
+        assert spark.table(EVENTS_TABLE).count() == 0
+        assert os.listdir(tmp_path / "table") == []
+
+        ingest_batch(spark, str(landing), mode="ndjson", quarantine_path=quarantine)
+        srcaddrs = [
+            r["a"]
+            for r in spark.sql(
+                f"SELECT get_json_object(details, '$.srcaddr') AS a FROM {EVENTS_TABLE}"
+            ).collect()
+        ]
+        assert sorted(srcaddrs) == sorted(f"198.51.100.{i}" for i in range(n))
+        assert spark.read.json(quarantine).count() == 1
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {EVENTS_TABLE}")
