@@ -151,10 +151,7 @@ def _move_into_hour(spark: SparkSession, fs, table, staged_hour) -> None:
     ``year=…/hour=…`` directory, registered after the move, as
     ``insertInto`` would."""
     hadoop = spark._jvm.org.apache.hadoop.fs
-    names, path = [], staged_hour
-    for _ in PARTITION_COLUMNS:
-        names.insert(0, path.getName())
-        path = path.getParent()
+    names = staged_hour.toUri().getPath().split("/")[-len(PARTITION_COLUMNS) :]
     parts = tuple(name.split("=", 1)[1] for name in names)
     location = _hour_location(spark, parts)
     if location:
