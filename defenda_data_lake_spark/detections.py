@@ -38,26 +38,22 @@ def _auth_failures(events: DataFrame) -> DataFrame:
     ).withColumn("src_ip", F.get_json_object("details", "$.sourceipaddress"))
 
 
-def failed_login_bursts(
-    events: DataFrame,
-    threshold: int = 5,
-    window_minutes: int = 10,
-) -> DataFrame:
-    """Brute-force shape: >= ``threshold`` failed authentications from
-    one source IP within a tumbling window (failure definition:
+def failed_login_bursts(events: DataFrame) -> DataFrame:
+    """Brute-force shape: >= 5 failed authentications from one source
+    IP within a tumbling 10-minute window (failure definition:
     ``_auth_failures``)."""
     failures = _auth_failures(events)
     return (
         failures.filter(F.col("src_ip").isNotNull())
         .groupBy(
-            F.window("event_time", f"{window_minutes} minutes").alias("w"),
+            F.window("event_time", "10 minutes").alias("w"),
             "src_ip",
         )
         .agg(
             F.count("*").alias("n_failures"),
             F.collect_set("source").alias("sources"),
         )
-        .filter(F.col("n_failures") >= threshold)
+        .filter(F.col("n_failures") >= 5)
         .select(
             F.col("w.start").alias("window_start"),
             "src_ip",
@@ -67,17 +63,12 @@ def failed_login_bursts(
     )
 
 
-def password_spray(
-    events: DataFrame,
-    min_accounts: int = 5,
-    max_per_account: int = 3,
-    window_minutes: int = 60,
-) -> DataFrame:
+def password_spray(events: DataFrame) -> DataFrame:
     """Password-spray shape: one source IP touching MANY accounts with
     FEW attempts each inside a window — the inverse of a brute-force
-    burst (which hammers one account).  Flags windows where an IP
-    failed against >= ``min_accounts`` distinct users while averaging
-    <= ``max_per_account`` attempts per user.
+    burst (which hammers one account).  Flags 60-minute windows where
+    an IP failed against >= 5 distinct users while averaging <= 3
+    attempts per user.
 
     Same scale shape as ``failed_login_bursts``: one keyed aggregation
     on (window, ip) with map-side partial counts; spray sources are by
@@ -90,7 +81,7 @@ def password_spray(
     )
     return (
         failures.groupBy(
-            F.window("event_time", f"{window_minutes} minutes").alias("w"),
+            F.window("event_time", "60 minutes").alias("w"),
             "src_ip",
         )
         .agg(
@@ -98,11 +89,8 @@ def password_spray(
             F.count("*").alias("n_failures"),
         )
         .filter(
-            (F.col("n_accounts") >= min_accounts)
-            & (
-                F.col("n_failures")
-                <= F.col("n_accounts") * F.lit(max_per_account)
-            )
+            (F.col("n_accounts") >= 5)
+            & (F.col("n_failures") <= F.col("n_accounts") * F.lit(3))
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -113,15 +101,11 @@ def password_spray(
     )
 
 
-def beaconing_candidates(
-    events: DataFrame,
-    min_events: int = 10,
-    max_cv: float = 0.2,
-) -> DataFrame:
+def beaconing_candidates(events: DataFrame) -> DataFrame:
     """C2-beaconing shape: a (source, destination) pair emitting events
-    at suspiciously REGULAR intervals — many callbacks whose
-    inter-event gaps have a low coefficient of variation
-    (stddev/mean).  Humans and bursty services are irregular; malware
+    at suspiciously REGULAR intervals — at least 10 callbacks whose
+    inter-event gaps have a coefficient of variation (stddev/mean) of
+    at most 0.2.  Humans and bursty services are irregular; malware
     check-ins on a timer are not.
 
     Scale shape: one window (lag over event time) and one aggregation,
@@ -147,9 +131,9 @@ def beaconing_candidates(
             F.stddev_pop("gap_s").alias("stddev_gap_s"),
         )
         .filter(
-            (F.col("n_intervals") >= min_events - 1)
+            (F.col("n_intervals") >= 9)  # 10 events
             & (F.col("mean_gap_s") > 0)
-            & (F.col("stddev_gap_s") / F.col("mean_gap_s") <= max_cv)
+            & (F.col("stddev_gap_s") / F.col("mean_gap_s") <= 0.2)
         )
         .withColumn(
             "cv", F.col("stddev_gap_s") / F.col("mean_gap_s")

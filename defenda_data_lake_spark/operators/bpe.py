@@ -103,16 +103,14 @@ def word_counts(df: DataFrame) -> DataFrame:
     return corpus_words(df).groupBy("w").agg(F.count("*").alias("cnt"))
 
 
-def learn_bpe(
-    top_words: Sequence[tuple[str, int]], n_merges: int = N_MERGES
-) -> list[str]:
+def learn_bpe(top_words: Sequence[tuple[str, int]]) -> list[str]:
     """Pure-Python merge learning over a bounded ``(word, count)``
     list — deterministic, and replayed verbatim by the SQL oracle
     (tests pin Python == DuckDB on the same corpus).  Returns merges
     as pair strings ``'l r'`` in rank order."""
     states = {w: " " + " ".join(w) + " " for w, _ in top_words}
     merges: list[str] = []
-    for _ in range(n_merges):
+    for _ in range(N_MERGES):
         pc: dict[str, int] = {}
         for w, cnt in top_words:
             sy = states[w].strip().split(" ")
@@ -224,27 +222,18 @@ def _token_count_arrow(merges: Sequence[str]):
     return n_tok
 
 
-def word_token_counts(
-    df: DataFrame, merges: Sequence[str], kernel: str = "auto"
-) -> DataFrame:
+def word_token_counts(df: DataFrame, merges: Sequence[str]) -> DataFrame:
     """``(w, n_tok)`` over the corpus's DISTINCT words — the expensive
     rewrite runs once per distinct word, never once per instance.
 
-    ``kernel``: ``"expr"`` = the chained-literal-replace codegen
-    projection (no Python stage — the oracle-replayable form);
-    ``"arrow"`` = the vectorized pandas kernel (same semantics, for
-    production-sized merge tables); ``"auto"`` = expr while the chain
-    fits under :data:`MAX_EXPR_REPLACES` nested calls, arrow past it
-    (a 256-merge table overflows the JVM stack in Column conversion —
-    the measured r10 ceiling)."""
-    if kernel not in ("auto", "expr", "arrow"):
-        raise ValueError(f"kernel must be auto/expr/arrow (got {kernel!r})")
-    if kernel == "auto":
-        kernel = (
-            "expr" if len(merges) * N_PASSES <= MAX_EXPR_REPLACES else "arrow"
-        )
+    While the chain fits under :data:`MAX_EXPR_REPLACES` nested calls
+    the count is the chained-literal-replace codegen projection (no
+    Python stage — the oracle-replayable form); past it, the
+    vectorized pandas kernel (same semantics, for production-sized
+    merge tables: a 256-merge table overflows the JVM stack in Column
+    conversion — the measured r10 ceiling)."""
     distinct = corpus_words(df).select("w").distinct()
-    if kernel == "expr":
+    if len(merges) * N_PASSES <= MAX_EXPR_REPLACES:
         return distinct.select(
             "w", token_count_expr(F.col("w"), merges).cast("long").alias("n_tok")
         )

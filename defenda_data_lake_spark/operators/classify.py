@@ -44,22 +44,18 @@ from pyspark.sql import functions as F
 from defenda_data_lake_spark.operators.dedup import normalized_text
 
 
-def _doc_words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, word) stream: normalized text split on single spaces (the
-    canonical form emitted by ``normalized_text``)."""
+def _doc_words(df: DataFrame) -> DataFrame:
+    """(id, word) stream: ``text`` normalized and split on single spaces
+    (the canonical form emitted by ``normalized_text``)."""
     return df.select(
-        F.col(id_col).alias("_nb_id"),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("word"),
+        F.col("doc_id").alias("_nb_id"),
+        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("word"),
     ).filter(F.length("word") > 0)
 
 
-def nb_train(
-    train_df: DataFrame,
-    label_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """Fit the NB model on ``train_df`` (``label_col`` must be 0/1 int).
+def nb_train(train_df: DataFrame, label_col: str) -> tuple[DataFrame, DataFrame]:
+    """Fit the NB model on ``train_df``'s ``doc_id``/``text`` rows
+    (``label_col`` must be 0/1 int).
 
     Returns ``(model, totals)``: ``model`` is one row per train word
     with integer class counts; ``totals`` is ONE row of scalar
@@ -68,10 +64,10 @@ def nb_train(
     time so the model tables stay mergeable/inspectable.
     """
     labeled = train_df.select(
-        F.col(id_col).alias("_nb_id"),
+        F.col("doc_id").alias("_nb_id"),
         F.col(label_col).cast("long").alias("_nb_y"),
     )
-    words = _doc_words(train_df, id_col, text_col).join(labeled, "_nb_id")
+    words = _doc_words(train_df).join(labeled, "_nb_id")
     model = words.groupBy("word").agg(
         F.sum("_nb_y").alias("c_pos"),
         F.sum(F.lit(1) - F.col("_nb_y")).alias("c_neg"),
@@ -91,19 +87,13 @@ def nb_train(
     return model, totals
 
 
-def nb_score(
-    df: DataFrame,
-    model: DataFrame,
-    totals: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Score every row of ``df`` under a trained model: returns
-    ``(id_col, n_words, score)`` where ``score`` is the NB log-odds
-    (positive => classified positive).  Unseen words take the smoothed
-    zero-count odds.  ``model`` is broadcast (vocabulary-sized);
-    ``totals`` is a broadcast single row."""
-    words = _doc_words(df, id_col, text_col)
+def nb_score(df: DataFrame, model: DataFrame, totals: DataFrame) -> DataFrame:
+    """Score every ``doc_id``/``text`` row of ``df`` under a trained
+    model: returns ``(doc_id, n_words, score)`` where ``score`` is the
+    NB log-odds (positive => classified positive).  Unseen words take
+    the smoothed zero-count odds.  ``model`` is broadcast
+    (vocabulary-sized); ``totals`` is a broadcast single row."""
+    words = _doc_words(df)
     scored = (
         words.join(F.broadcast(model), "word", "left")
         .crossJoin(F.broadcast(totals))
@@ -125,21 +115,19 @@ def nb_score(
     return scored.groupBy("_nb_id").agg(
         F.count("*").alias("n_words"),
         (F.first("_nb_prior") + F.sum("_nb_lo")).alias("score"),
-    ).select(F.col("_nb_id").alias(id_col), "n_words", "score")
+    ).select(F.col("_nb_id").alias("doc_id"), "n_words", "score")
 
 
-def train_split_expr(id_col: str, salt: str = "nbsplit", train_pct: int = 8000) -> Column:
+def train_split_expr(id_col: str) -> Column:
     """Deterministic md5 train-membership predicate (the q38 split
-    pattern, reusing ``sampling.hash_bucket``): True for
-    ~``train_pct``/10000 of rows, same rows on any engine."""
+    pattern, reusing ``sampling.hash_bucket``): True for ~80% of rows,
+    same rows on any engine."""
     from defenda_data_lake_spark.operators.sampling import hash_bucket
 
-    return hash_bucket(id_col, salt) < train_pct
+    return hash_bucket(id_col, "nbsplit") < 8000
 
 
-def nb_quality_scores(
-    df: DataFrame, label_expr: Column, train_pct: int = 8000
-) -> DataFrame:
+def nb_quality_scores(df: DataFrame, label_expr: Column) -> DataFrame:
     """End-to-end pipeline: deterministic train split of ``doc_id`` ->
     NB fit on the train rows' ``text`` under ``label_expr`` -> score
     the corpus.  Returns ``(doc_id, n_words, score, predicted)``.
@@ -154,7 +142,7 @@ def nb_quality_scores(
     labeled = df.withColumn(
         "_nb_label", F.coalesce(label_expr.cast("long"), F.lit(0))
     )
-    train = labeled.filter(train_split_expr("doc_id", train_pct=train_pct))
+    train = labeled.filter(train_split_expr("doc_id"))
     model, totals = nb_train(train, "_nb_label")
     scored = nb_score(df, model, totals)
     return scored.withColumn(
@@ -223,9 +211,9 @@ def nb_evaluate_scored(scored: DataFrame) -> DataFrame:
     )
 
 
-def nb_calibration(df: DataFrame, label_expr: Column, bins: int = 10) -> DataFrame:
+def nb_calibration(df: DataFrame, label_expr: Column) -> DataFrame:
     """Reliability diagram of the :func:`nb_quality_scores` classifier
-    on the held-out split: equal-frequency score bins vs observed
+    on the held-out split: 10 equal-frequency score bins vs observed
     positive rate — "are the classifier's probabilities honest", the
     calibration gate that belongs next to q106's accuracy gate before
     scores drive corpus pruning (a quality filter that thresholds on
@@ -256,11 +244,11 @@ def nb_calibration(df: DataFrame, label_expr: Column, bins: int = 10) -> DataFra
     test = labeled.filter(~train_split_expr("doc_id"))
     scored = nb_score(test, model, totals)
     return nb_calibration_scored(
-        scored.join(test.select("doc_id", "_nb_y"), "doc_id"), bins=bins
+        scored.join(test.select("doc_id", "_nb_y"), "doc_id")
     )
 
 
-def nb_calibration_scored(scored: DataFrame, bins: int = 10) -> DataFrame:
+def nb_calibration_scored(scored: DataFrame) -> DataFrame:
     """:func:`nb_calibration`'s binning on an ALREADY-scored labeled
     frame (``score`` raw log-odds, ``_nb_y`` 0/1, ``doc_id``):
     round-first, clamp at +-30, ntile over (rounded score, id), means
@@ -281,7 +269,7 @@ def nb_calibration_scored(scored: DataFrame, bins: int = 10) -> DataFrame:
     )
     w = Window.orderBy(score_r.asc(), F.col("doc_id").asc())
     binned = scored.select(
-        F.ntile(bins).over(w).alias("bin"),
+        F.ntile(10).over(w).alias("bin"),
         prob.alias("_prob"),
         F.col("_nb_y").alias("_y"),
     )

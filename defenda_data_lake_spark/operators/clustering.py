@@ -10,7 +10,7 @@ Determinism: init = the ``k`` lowest-id vectors; assignment ties break
 on centroid id; iteration count is fixed (no convergence RNG).
 
 Cross-engine reproducibility: after every mean update the centroid
-components are *quantized* to ``quantize`` decimal places (the same
+components are *quantized* to 9 decimal places (the same
 scale-round-unscale scheme as ``plans.catalog.R``).  Without this, the
 engines' different summation orders leave each centroid off by an ULP
 and the drift compounds through iterations; with it, any engine that
@@ -107,25 +107,20 @@ def _assignment_plan(base: DataFrame, cents: list[list[float]]) -> DataFrame:
     )
 
 
-def _lloyd(
-    base: DataFrame, k: int, iterations: int, quantize: int | None
-) -> list[list[float]]:
+def _lloyd(base: DataFrame, k: int, iterations: int) -> list[list[float]]:
     """The Lloyd loop over a cached (id, vec) plan: deterministic init
-    (k lowest-id vectors), ``iterations`` mean updates with the 1e-q
+    (k lowest-id vectors), ``iterations`` mean updates with the 1e-9
     centroid quantization, empty clusters keep their position.
     Returns the final centroids (driver-side plain lists)."""
     init_rows = base.orderBy("id").limit(k).collect()
     centroids: list[list[float]] = [
         [float(x) for x in r["vec"]] for r in init_rows
     ]
-    scale = 10 ** quantize if quantize is not None else None
     for _ in range(iterations):
         assigned = _assignment_plan(base, centroids)
-        mean_col = F.avg(F.col("c").cast("double"))
-        if scale is not None:
-            # same scheme as plans.catalog.R: round in the scaled
-            # domain so DuckDB's round(x, n) lands on the same double
-            mean_col = F.round(mean_col * scale, 0) / scale
+        # same scheme as plans.catalog.R: round in the scaled domain so
+        # DuckDB's round(x, n) lands on the same double
+        mean_col = F.round(F.avg(F.col("c").cast("double")) * 10**9, 0) / 10**9
         means = (
             assigned.select("cluster", F.posexplode("vec").alias("pos", "c"))
             .groupBy("cluster", "pos")
@@ -147,29 +142,10 @@ def _lloyd(
     return centroids
 
 
-def kmeans_train(
-    df: DataFrame, k: int = 8, iterations: int = 5, quantize: int | None = 9
-) -> list[list[float]]:
-    """Train-only entry: the final centroids of the ``embedding``
-    column after ``iterations`` Lloyd updates (the deterministic loop
-    :func:`kmeans_assign` uses),
-    returned as plain driver-side lists — the building block for
-    consumers that need the CODEBOOK rather than the assignment
-    (``operators/pq.py`` trains one per subspace)."""
-    base = ensure_min_parallelism(
-        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
-        kernel_parallelism(df),
-    ).cache()
-    try:
-        return _lloyd(base, k, iterations, quantize)
-    finally:
-        base.unpersist()
-
-
 def kmeans_assign(
-    df: DataFrame, k: int = 8, iterations: int = 5, keep_vec: bool = False
+    df: DataFrame, iterations: int = 5, keep_vec: bool = False
 ) -> DataFrame:
-    """Assign every ``embedding`` to one of ``k`` clusters after a fixed
+    """Assign every ``embedding`` to one of 8 clusters after a fixed
     number of Lloyd iterations with 1e-9 centroid quantization.
     Returns (id, cluster, sq_dist), ``id`` the ``vec_id``, plus
     the vector itself as ``vec`` when ``keep_vec`` (for consumers like
@@ -179,7 +155,7 @@ def kmeans_assign(
         kernel_parallelism(df),
     ).cache()
     try:
-        centroids = _lloyd(base, k, iterations, 9)
+        centroids = _lloyd(base, 8, iterations)
         cols = ["id", "cluster", "sq_dist"] + (["vec"] if keep_vec else [])
         return _assignment_plan(base, centroids).select(*cols)
     finally:
@@ -203,27 +179,20 @@ def _cap_from_bytes(max_group_bytes: int, dim: int) -> int:
     return max(1, max_group_bytes // (16 * (dim + _GRAM_BLOCK_ROWS)))
 
 
-def semdedup(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
-    threshold: float = 0.4,
-    max_group_rows: int | None = None,
-    max_group_bytes: int | None = None,
-) -> DataFrame:
+def semdedup(df: DataFrame, max_group_bytes: int | None = None) -> DataFrame:
     """SemDedup-style semantic deduplication of ``(vec_id, embedding)``
-    rows: cluster the embedding space (fixed-iteration Lloyd,
+    rows: cluster the embedding space (8 clusters, 3 Lloyd iterations,
     deterministic init), then mark as duplicates the vectors that have a
     higher-priority (lower-id) near-identical neighbor *within their own
-    cluster* (cosine ≥ ``threshold``).  The cluster step is what makes
+    cluster* (cosine ≥ 0.4).  The cluster step is what makes
     this scale: pair comparison is confined to same-cluster vectors, so
-    the pair volume is Σ n_c² instead of N² — at 100 TB you raise ``k``
-    with corpus size (k ∝ N/target_cluster_size) and the per-cluster
-    work stays bounded, while the cluster equi-join shuffles on a single
-    int key.
+    the pair volume is Σ n_c² instead of N² — at 100 TB the cluster
+    count would grow with corpus size (∝ N/target_cluster_size) so the
+    per-cluster work stays bounded, while the cluster equi-join
+    shuffles on a single int key.
 
     The drop rule is the non-greedy form (drop if ANY lower-id
-    same-cluster neighbor is ≥ threshold, retained or not) — the
+    same-cluster neighbor is ≥ 0.4, retained or not) — the
     standard approximation; it is order-independent and replayable in
     plain SQL, where the greedy chain would be sequential.
 
@@ -236,13 +205,16 @@ def semdedup(
     flops.  Row blocks bound the similarity-MATRIX memory, but the
     cluster's vector matrix ``V`` (n_c · dim doubles) still lives in
     one task — a skewed giant cluster is an OOM risk unless
-    ``max_group_rows`` is set.
+    ``max_group_bytes`` is set.
 
-    ``max_group_rows`` bounds per-task heap: a cluster larger than the
-    cap is split into ``m = ceil(n_c / cap)`` sub-buckets by id hash,
-    and every *pair* of sub-buckets (including a bucket with itself)
-    becomes one kernel group, so each task holds at most ~2·cap
-    vectors while all intra-cluster pairs are still compared.  OUTPUT-
+    ``max_group_bytes`` bounds per-task heap: it sets a rows cap from
+    the ACTUAL vector dimensionality (:func:`_cap_from_bytes`), so the
+    footprint stays flat whether embeddings are 16-dim test fixtures or
+    4k-dim production vectors.  A cluster larger than the cap is split
+    into ``m = ceil(n_c / cap)`` sub-buckets by id hash, and every
+    *pair* of sub-buckets (including a bucket with itself) becomes one
+    kernel group, so each task holds at most ~2·cap vectors while all
+    intra-cluster pairs are still compared.  OUTPUT-
     IDENTICAL to the uncapped form (a pinned parity test asserts it):
     each vector is shipped m times instead of once — the standard
     replication-for-memory trade, chosen per cluster so unskewed
@@ -250,29 +222,17 @@ def semdedup(
     broadcast of the k-row cluster-size table decides m; duplicates
     found in multiple pair groups collapse with one distinct.
 
-    ``max_group_bytes`` is the scale-robust spelling of the same knob:
-    the rows cap is derived from the ACTUAL vector dimensionality
-    against this per-task byte budget (:func:`_cap_from_bytes`), so
-    the footprint stays flat whether embeddings are 16-dim test
-    fixtures or 4k-dim production vectors.  Mutually exclusive with
-    ``max_group_rows`` (which remains for explicit-cap callers and the
-    parity tests).  The OUTPUT is cap-independent either way.
-
     Returns ``(id, cluster, sq_dist, is_duplicate)``."""
     import numpy as np
-
-    if max_group_rows is not None and max_group_bytes is not None:
-        raise ValueError(
-            "pass at most one of max_group_rows / max_group_bytes"
-        )
 
     # the assignment feeds BOTH branches below (the dup kernel and the
     # join probe side); without materialization the Lloyd assignment
     # expressions and the source scan would execute twice per action —
     # localCheckpoint pins the one copy (same precedent as connected
     # components in operators/dedup.py)
-    assigned = kmeans_assign(df, k, iterations, keep_vec=True).localCheckpoint()
+    assigned = kmeans_assign(df, 3, keep_vec=True).localCheckpoint()
 
+    max_group_rows = None
     if max_group_bytes is not None:
         if max_group_bytes < 1:
             raise ValueError(
@@ -303,7 +263,7 @@ def semdedup(
             # former per-row Python loop was ~n interpreter
             # iterations per group — guide §4.2); the comparison set
             # and therefore the marked set are identical.
-            mask = S >= threshold
+            mask = S >= 0.4
             mask &= col[None, :] > np.arange(lo, hi)[:, None]
             has_earlier |= mask.any(axis=0)
         return pd.DataFrame({"dup_id": pd.Series(ids[has_earlier], dtype="int64")})
@@ -313,10 +273,6 @@ def semdedup(
             dup_ids, schema="dup_id long"
         )
     else:
-        if max_group_rows < 1:
-            raise ValueError(
-                f"max_group_rows must be >= 1 (got {max_group_rows})"
-            )
         sizes = assigned.groupBy("cluster").agg(F.count("*").alias("n_c"))
         m = F.ceil(F.col("n_c") / F.lit(max_group_rows)).cast("int")
         sized = assigned.join(

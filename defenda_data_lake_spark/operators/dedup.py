@@ -182,9 +182,9 @@ def word_shingle_postings(df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingle hashes per document: (id, shingle)."""
-    return word_shingle_postings(df, n).select("id", "shingle")
+def word_shingles(df: DataFrame) -> DataFrame:
+    """Distinct word trigram shingle hashes per document: (id, shingle)."""
+    return word_shingle_postings(df, 3).select("id", "shingle")
 
 
 def exact_duplicate_groups(df: DataFrame) -> DataFrame:
@@ -204,12 +204,14 @@ def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, num_hashes: int = 8, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signature of each document's ``text``, keyed by its
-    ``doc_id``.  A document whose text yields no shingles gets no row
-    (the agg-form contract).
+#: MinHash families per signature (``h0`` … ``h7``)
+MINHASH_FAMILIES = 8
+
+
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """MinHash signature of each document's ``text`` word trigrams,
+    keyed by its ``doc_id``.  A document whose text yields no shingles
+    gets no row (the agg-form contract).
 
     Hash family i is the i-th 32-bit hex chunk of ``md5(p || shingle)``
     where p cycles through ``'' , 'x', 'xx', …`` every 4 families: one
@@ -239,7 +241,7 @@ def minhash_signatures(
         kernel_parallelism,
     )
 
-    n_digests = (num_hashes + 3) // 4
+    n_digests = (MINHASH_FAMILIES + 3) // 4
     prefixes = [b"x" * d for d in range(n_digests)]
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -272,17 +274,16 @@ def minhash_signatures(
 
         for batch in batches:
             ids: list = []
-            cols: list[list[str]] = [[] for _ in range(num_hashes)]
+            cols: list[list[str]] = [[] for _ in range(MINHASH_FAMILIES)]
             for doc_id, text in zip(batch["id"], batch["text"]):
                 # .split() with no argument already collapses/trims all
                 # whitespace runs, so tokens equal normalized_text's
                 words = str(text).lower().split()
                 if not words:
                     words = [""]
-                if len(words) >= shingle_n:
+                if len(words) >= 3:
                     uniq = {
-                        " ".join(words[j : j + shingle_n])
-                        for j in range(len(words) - shingle_n + 1)
+                        " ".join(words[j : j + 3]) for j in range(len(words) - 2)
                     }
                 else:
                     uniq = {" ".join(words)}
@@ -293,18 +294,19 @@ def minhash_signatures(
                 # compares identically under lexicographic and numeric
                 # order, so the min of each 8-hex-char family chunk is
                 # the min of its big-endian uint64 view — one numpy
-                # column-min over all shingles instead of num_hashes
+                # column-min over all shingles instead of MINHASH_FAMILIES
                 # Python min() passes over sliced strings
                 hexcat = b"".join(shingle_hex(s) for s in uniq)
                 arr = np.frombuffer(hexcat, dtype=">u8").reshape(
                     len(uniq), n_digests * 4
                 )
-                mins = arr[:, :num_hashes].min(axis=0).astype(">u8").tobytes()
-                for i in range(num_hashes):
+                mins = arr[:, :MINHASH_FAMILIES].min(axis=0)
+                mins = mins.astype(">u8").tobytes()
+                for i in range(MINHASH_FAMILIES):
                     cols[i].append(mins[i * 8 : (i + 1) * 8].decode("ascii"))
                 ids.append(doc_id)
             yield pd.DataFrame(
-                {"id": ids, **{f"h{i}": cols[i] for i in range(num_hashes)}}
+                {"id": ids, **{f"h{i}": col for i, col in enumerate(cols)}}
             )
 
     narrow = df.select(F.col("doc_id").alias("id"), "text")
@@ -314,7 +316,10 @@ def minhash_signatures(
         gen,
         schema=T.StructType(
             [T.StructField("id", df.schema["doc_id"].dataType)]
-            + [T.StructField(f"h{i}", T.StringType()) for i in range(num_hashes)]
+            + [
+                T.StructField(f"h{i}", T.StringType())
+                for i in range(MINHASH_FAMILIES)
+            ]
         ),
     )
 
@@ -345,14 +350,11 @@ def band_structs_expr(hs: Sequence[str], bands: int) -> Column:
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    num_hashes: int = 8,
-    bands: int = 2,
-    shingle_n: int = 3,
-    max_bucket_docs: int | None = None,
+    df: DataFrame, max_bucket_docs: int | None = None
 ) -> DataFrame:
-    """LSH banding over MinHash signatures: docs agreeing on all hashes
-    of any band become a candidate ``doc_id`` pair (id_a < id_b).  Equi-join on the
+    """LSH banding over the 8-family word-trigram MinHash signatures in
+    2 bands: docs agreeing on all hashes of any band become a candidate
+    ``doc_id`` pair (id_a < id_b).  Equi-join on the
     band signature — no cross product.
 
     ``max_bucket_docs`` skips buckets whose membership exceeds the
@@ -370,8 +372,10 @@ def minhash_lsh_candidates(
     array is never built."""
     # one row per (doc, band) via explode — NOT a union of per-band
     # selects, so the signature kernel runs once, not per band
-    sigs = minhash_signatures(df, num_hashes, shingle_n)
-    band_structs = band_structs_expr([f"h{i}" for i in range(num_hashes)], bands)
+    sigs = minhash_signatures(df)
+    band_structs = band_structs_expr(
+        [f"h{i}" for i in range(MINHASH_FAMILIES)], 2
+    )
     banded = sigs.select("id", F.explode(band_structs).alias("bs")).select(
         "id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
     )
@@ -405,15 +409,13 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_bucket_dedupe(
-    df: DataFrame, min_hash_agreement: float = 0.5
-) -> DataFrame:
+def minhash_bucket_dedupe(df: DataFrame) -> DataFrame:
     """Claimant-based near-dedup over 8 MinHash families of word
     trigrams in 2 bands: per LSH bucket, the first document by
     ``doc_id``-as-string (string order deliberately, the order Q77's
     oracle replays) claims the bucket; every other member whose FULL
-    minhash signature agrees with the claimant's on at least
-    ``min_hash_agreement`` of the families (the MinHash estimate of
+    minhash signature agrees with the claimant's on at least half of
+    the families (the MinHash estimate of
     Jaccard similarity) is marked a duplicate of it.  A doc flagged in
     several bands resolves ``dup_of`` to the string-min claimant.
 
@@ -427,7 +429,7 @@ def minhash_bucket_dedupe(
     → one exchange on (band, band_sig) where a window pass picks the
     claimant → per-doc min aggregation → one join back to the input."""
     sigs = minhash_signatures(df)
-    hs = [f"h{i}" for i in range(8)]
+    hs = [f"h{i}" for i in range(MINHASH_FAMILIES)]
     banded = sigs.select(
         F.col("id").cast("string").alias("id_s"),
         *hs,
@@ -446,7 +448,7 @@ def minhash_bucket_dedupe(
     ) / F.lit(float(len(hs)))
     flagged = claimed.filter(
         (F.col("id_s") != F.col("first_id"))
-        & (agreement >= F.lit(min_hash_agreement))
+        & (agreement >= F.lit(0.5))
     )
     dup_map = flagged.groupBy("id_s").agg(F.min("first_id").alias("dup_of"))
     return df.join(
@@ -480,10 +482,10 @@ def _word_chunks(df: DataFrame, chunk_words: int) -> DataFrame:
     )
 
 
-def chunk_level_dedupe(df: DataFrame, chunk_words: int = 50) -> DataFrame:
+def chunk_level_dedupe(df: DataFrame) -> DataFrame:
     """Paragraph-granularity dedup (the Dolma/CCNet pipeline step,
     adapted to word-chunks since this corpus has no newlines): split
-    each document's ``text`` into NON-overlapping ``chunk_words``-word chunks,
+    each document's ``text`` into NON-overlapping 50-word chunks,
     drop every chunk whose exact normalized content already occurred
     EARLIER in the corpus (first occurrence = min (doc, position) —
     encoded as one zero-padded sortable string so any engine's plain
@@ -500,7 +502,7 @@ def chunk_level_dedupe(df: DataFrame, chunk_words: int = 50) -> DataFrame:
     free); reassembly is one groupBy(doc) with a sorted collect_list
     bounded by the document's own chunk count.  Two exchanges total,
     both on high-cardinality keys."""
-    ex = _word_chunks(df, chunk_words)
+    ex = _word_chunks(df, 50)
     occ = first_occurrence_key("chunk_level_dedupe")
     hashed = ex.select("id", "start", "chunk", occ.alias("occ"), F.md5("chunk").alias("h"))
     first_occ = F.min("occ").over(Window.partitionBy("h"))
@@ -526,12 +528,10 @@ def chunk_level_dedupe(df: DataFrame, chunk_words: int = 50) -> DataFrame:
     )
 
 
-def boilerplate_chunk_removal(
-    df: DataFrame, chunk_words: int = 20, min_doc_freq: int = 3
-) -> DataFrame:
-    """C4/CCNet boilerplate-line removal, adapted to word-chunks (this
-    corpus has no newlines): a ``text`` chunk whose exact normalized content
-    occurs in at least ``min_doc_freq`` DISTINCT documents is
+def boilerplate_chunk_removal(df: DataFrame, min_doc_freq: int = 3) -> DataFrame:
+    """C4/CCNet boilerplate-line removal, adapted to 20-word chunks
+    (this corpus has no newlines): a ``text`` chunk whose exact
+    normalized content occurs in at least ``min_doc_freq`` DISTINCT documents is
     boilerplate (headers, nav bars, license blurbs) and is removed from
     EVERY document — including the first occurrence, which is what
     distinguishes this from :func:`chunk_level_dedupe` (first
@@ -556,8 +556,7 @@ def boilerplate_chunk_removal(
     violating the no-row-lost contract every other operator here
     honors."""
     ex = _word_chunks(
-        df.withColumn("text", F.coalesce(F.col("text"), F.lit(""))),
-        chunk_words,
+        df.withColumn("text", F.coalesce(F.col("text"), F.lit(""))), 20
     )
     hashed = ex.select("id", "start", "chunk", F.md5("chunk").alias("h"))
     freq = hashed.groupBy("h").agg(F.count_distinct("id").alias("df_docs"))
@@ -586,11 +585,9 @@ def boilerplate_chunk_removal(
     )
 
 
-def _sharded_postings(
-    df: DataFrame, shingle_n: int, max_shingle_docs: int | None
-) -> DataFrame:
-    """Shingle postings repartitioned by shingle with the optional
-    hot-shingle guard applied — the shared front half of every
+def _sharded_postings(df: DataFrame, max_shingle_docs: int | None) -> DataFrame:
+    """Word-trigram shingle postings repartitioned by shingle with the
+    optional hot-shingle guard applied — the shared front half of every
     inverted-index operator here.
 
     The keyed repartition pins parallelism: the postings shuffle is
@@ -612,7 +609,7 @@ def _sharded_postings(
     sort saves.)"""
     from defenda_data_lake_spark.utils.partitioning import scaled_keyed_partitions
 
-    postings = word_shingle_postings(df, shingle_n)
+    postings = word_shingle_postings(df, 3)
     postings = postings.repartition(scaled_keyed_partitions(df), "shingle")
     if max_shingle_docs is not None:
         postings = postings.withColumn(
@@ -623,7 +620,6 @@ def _sharded_postings(
 
 def _postings_pair_counts(
     df: DataFrame,
-    shingle_n: int,
     max_shingle_docs: int | None,
     extra_on: Column | None = None,
 ) -> DataFrame:
@@ -636,7 +632,7 @@ def _postings_pair_counts(
     Returns ``(id_a, id_b, inter_size, size_a, size_b)``."""
     from defenda_data_lake_spark.utils.partitioning import pair_join_hint
 
-    postings = _sharded_postings(df, shingle_n, max_shingle_docs).hint(
+    postings = _sharded_postings(df, max_shingle_docs).hint(
         pair_join_hint(df)
     )
     a = postings.alias("a")
@@ -660,11 +656,10 @@ def _postings_pair_counts(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    shingle_n: int = 3,
     threshold: float = 0.5,
     max_shingle_docs: int | None = None,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard similarity of ``text`` for all
+    """Exact word-trigram Jaccard similarity of ``text`` for all
     candidate ``doc_id`` pairs sharing at least one shingle
     (inverted-index join), keeping pairs with ``jaccard >= threshold``.
 
@@ -696,9 +691,7 @@ def ngram_jaccard_pairs(
     size_bound = F.least(
         F.col("a.set_size"), F.col("b.set_size")
     ) >= F.lit(threshold) * F.greatest(F.col("a.set_size"), F.col("b.set_size"))
-    pairs = _postings_pair_counts(
-        df, shingle_n, max_shingle_docs, extra_on=size_bound
-    )
+    pairs = _postings_pair_counts(df, max_shingle_docs, extra_on=size_bound)
     return (
         pairs.select(
             "id_a",
@@ -713,14 +706,11 @@ def ngram_jaccard_pairs(
 
 
 def ngram_containment_pairs(
-    df: DataFrame,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_docs: int | None = None,
+    df: DataFrame, max_shingle_docs: int | None = None
 ) -> DataFrame:
     """Near-containment ``doc_id`` pairs: ``containment = |A ∩ B| /
-    min(|A|, |B|)`` over word-n-gram shingle sets of ``text``, keeping pairs at or above
-    ``threshold``.  Catches a document embedded inside a larger one
+    min(|A|, |B|)`` over word-trigram shingle sets of ``text``, keeping
+    pairs at or above 0.8.  Catches a document embedded inside a larger one
     (quotes, concatenated crawls, page-plus-boilerplate) that Jaccard
     misses — a small doc fully contained in a big one has high
     containment but low Jaccard.
@@ -731,7 +721,7 @@ def ngram_containment_pairs(
     bucket-grouped form loses at scale).  There is no size-ratio prune
     here — containment is size-asymmetric by design, so no pair can be
     excluded by sizes alone."""
-    pairs = _postings_pair_counts(df, shingle_n, max_shingle_docs)
+    pairs = _postings_pair_counts(df, max_shingle_docs)
     return pairs.select(
         "id_a",
         "id_b",
@@ -739,11 +729,11 @@ def ngram_containment_pairs(
             F.col("inter_size")
             / F.least(F.col("size_a"), F.col("size_b")).cast("double")
         ).alias("containment"),
-    ).filter(F.col("containment") >= threshold)
+    ).filter(F.col("containment") >= 0.8)
 
 
-def ngram_novelty(df: DataFrame, shingle_n: int = 3) -> DataFrame:
-    """Per-document n-gram novelty: of a ``text``'s distinct shingles,
+def ngram_novelty(df: DataFrame) -> DataFrame:
+    """Per-document trigram novelty: of a ``text``'s distinct shingles,
     how many appear in NO document with a smaller id — the standard
     incremental-dedup signal for ordered corpora (crawl snapshots,
     dated dumps): a document whose shingles are all already claimed by
@@ -761,7 +751,7 @@ def ngram_novelty(df: DataFrame, shingle_n: int = 3) -> DataFrame:
     long-keyed shuffles total; every intermediate row is fixed-width."""
     from defenda_data_lake_spark.utils.partitioning import pair_join_hint
 
-    postings = _sharded_postings(df, shingle_n, None).hint(
+    postings = _sharded_postings(df, None).hint(
         pair_join_hint(df)
     )
     claims = postings.groupBy("shingle").agg(F.min("id").alias("first_doc"))
@@ -788,14 +778,9 @@ def ngram_novelty(df: DataFrame, shingle_n: int = 3) -> DataFrame:
 # ------------------------------------------------------- decontamination
 
 
-def ngram_contamination(
-    train: DataFrame,
-    test: DataFrame,
-    n: int = 8,
-    max_shingle_docs: int | None = None,
-) -> DataFrame:
+def ngram_contamination(train: DataFrame, test: DataFrame) -> DataFrame:
     """Train/test contamination report: for every (train doc, test doc)
-    pair sharing at least one word ``n``-gram of ``text`` (documents
+    pair sharing at least one word 8-gram of ``text`` (documents
     keyed by ``doc_id``), the count of shared
     distinct n-grams and the fraction of the TEST doc's n-gram set they
     cover — the standard eval-decontamination primitive (long n-grams,
@@ -808,17 +793,11 @@ def ngram_contamination(
     suite) is typically millions of times smaller than the training
     corpus, so its postings broadcast and the train corpus streams
     through map-side; at worst it's one hash-partitioned join keyed by
-    shingle.  Long n-grams make ubiquitous shingles rare, but
-    ``max_shingle_docs`` (applied to the TRAIN posting lists, document
-    frequency within train) is available for degenerate boilerplate."""
-    tp = word_shingle_postings(train, n).select(
+    shingle.  Long n-grams make ubiquitous shingles rare."""
+    tp = word_shingle_postings(train, 8).select(
         F.col("id").alias("train_doc"), "shingle"
     )
-    if max_shingle_docs is not None:
-        tp = tp.withColumn(
-            "df_", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("df_") <= max_shingle_docs).drop("df_")
-    sp = word_shingle_postings(test, n).select(
+    sp = word_shingle_postings(test, 8).select(
         F.col("id").alias("test_doc"),
         "shingle",
         F.col("set_size").alias("test_size"),
@@ -1102,20 +1081,18 @@ def hamming_block_pairs(
     sigs: DataFrame,
     id_col: str = "id",
     sig_col: str = "sig",
-    max_hamming: int = 3,
-    blocks: int = 4,
     size_hint_df: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs over any 64-bit integer signature column
     (SimHash, image dHash, ...) by pigeonhole blocking: split the
-    signature into ``blocks`` segments, equi-join per segment, verify
-    Hamming distance with ``bit_count(xor)``.  Returns
+    signature into 4 16-bit blocks, equi-join per block, verify
+    Hamming distance <= 3 with ``bit_count(xor)``.  Returns
     ``(id_a, id_b, hamming)`` with ``id_a < id_b``, one row per
     qualifying pair.
 
-    Recall is COMPLETE for ``max_hamming < blocks`` (two signatures
-    within the radius must agree on at least one whole block); the
-    constructor refuses otherwise rather than silently losing pairs.
+    Recall is COMPLETE: two signatures within distance 3 differ in at
+    most 3 of the 4 blocks, so they agree on at least one whole block
+    (the pigeonhole argument).
 
     Scale: one keyed exchange on (block, block_key); pair expansion is
     bucket-grouped (collect_list + double explode, JVM-side — the
@@ -1125,16 +1102,7 @@ def hamming_block_pairs(
     bucket group.  ``size_hint_df``: frame whose driver-visible input
     size scales the exchange's partition count (pass the source table
     when ``sigs`` is a kernel output with no file lineage)."""
-    if max_hamming >= blocks:
-        # the pigeonhole argument is the recall guarantee: with
-        # max_hamming >= blocks a qualifying pair can differ in every
-        # block and silently never become a candidate (ValueError, not
-        # assert — asserts vanish under `python -O`)
-        raise ValueError(
-            f"complete recall needs max_hamming < blocks "
-            f"(got {max_hamming} >= {blocks}); raise blocks or lower the radius"
-        )
-    width = 64 // blocks
+    width = 16
     sigs = sigs.select(
         F.col(id_col).alias("id"), F.col(sig_col).alias("_hb_sig")
     )
@@ -1148,7 +1116,7 @@ def hamming_block_pairs(
                 .bitwiseAND(F.lit((1 << width) - 1))
                 .alias("block_key"),
             )
-            for b in range(blocks)
+            for b in range(4)
         ]
     )
     blocked = sigs.select(
@@ -1188,28 +1156,25 @@ def hamming_block_pairs(
             ).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 
-def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_near_duplicates(df: DataFrame) -> DataFrame:
     """Near-duplicate ``doc_id`` pairs by SimHash: 64-bit ``text``
     signature + :func:`hamming_block_pairs` (pigeonhole join over 4
-    blocks, complete recall for ``max_hamming < 4``)."""
+    blocks, Hamming distance <= 3)."""
     return hamming_block_pairs(
-        simhash_signatures(df),
-        sig_col="simhash",
-        max_hamming=max_hamming,
-        size_hint_df=df,
+        simhash_signatures(df), sig_col="simhash", size_hint_df=df
     )
 
 
-def duplicate_span_coverage(df: DataFrame, gram_words: int = 5) -> DataFrame:
+def duplicate_span_coverage(df: DataFrame) -> DataFrame:
     """Per-document fraction of ``text`` tokens covered by corpus-REPEATED word
     n-grams — the span-granular duplication signal behind
     suffix-array substring dedup (mark text that appears more than
     once anywhere in the corpus), computed at word-gram resolution so
-    it stays a relational program: positional ``gram_words``-grams per
+    it stays a relational program: positional 5-word grams per
     doc, gram occurrence count over the whole corpus, and for each doc
     the UNION length of its repeated-gram intervals
     ``[start, start + n)`` via gaps-and-islands (running max of
@@ -1234,7 +1199,7 @@ def duplicate_span_coverage(df: DataFrame, gram_words: int = 5) -> DataFrame:
     t = df.select(
         F.col("doc_id").alias("id"), w.alias("_w"), F.size(w).alias("n_words")
     )
-    n = gram_words
+    n = 5
     # q78's chunking pattern (explode a start sequence, slice per row —
     # codegen, no interpreted HOF lambda), at stride 1; the greatest()
     # guard keeps sequence() from going descending on short docs, and
@@ -1298,10 +1263,10 @@ def duplicate_span_coverage(df: DataFrame, gram_words: int = 5) -> DataFrame:
     return out.withColumn("dup_coverage", cov)
 
 
-def duplicate_span_removal(df: DataFrame, gram_words: int = 5) -> DataFrame:
+def duplicate_span_removal(df: DataFrame) -> DataFrame:
     """REMOVE corpus-repeated ``text`` spans instead of just measuring them
     (:func:`duplicate_span_coverage`): every token covered by a
-    NON-FIRST occurrence of a corpus-repeated ``gram_words``-gram is
+    NON-FIRST occurrence of a corpus-repeated 5-word gram is
     dropped; the corpus-first occurrence (zero-padded (doc, start)
     min, the q78 scheme) keeps its text.  The word-gram relaxation of
     Lee et al.'s suffix-array exact-substring dedup, as a relational
@@ -1322,7 +1287,7 @@ def duplicate_span_removal(df: DataFrame, gram_words: int = 5) -> DataFrame:
     t = df.select(
         F.col("doc_id").alias("id"), w.alias("_w"), F.size(w).alias("n_words")
     )
-    n = gram_words
+    n = 5
     starts = F.sequence(
         F.lit(1), F.greatest(F.col("n_words") - n + 1, F.lit(1))
     )

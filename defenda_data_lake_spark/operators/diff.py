@@ -34,7 +34,6 @@ def snapshot_diff(
     new: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    null_safe_keys: bool = True,
 ) -> DataFrame:
     """Per-key diff of two snapshots: returns one row per key present
     in either side with ``diff_type`` ∈ ``added`` (new only) / ``removed``
@@ -50,15 +49,10 @@ def snapshot_diff(
     map nested deeper inside a struct/array compare column is not —
     pre-flatten such columns before diffing.
 
-    ``null_safe_keys`` (default on) pairs NULL key components with
-    each other.  The trade, measured: Spark compiles a null-safe
-    equi-join key to the ``(coalesce(k), isnull(k))`` composite, which
-    no bucketing layout matches — BUCKETED snapshots then shuffle
-    anyway ("Bucketed: false (disabled by query planner)" in the
-    scan).  For real primary keys (non-nullable), pass ``False``:
-    plain equality is semantically identical and keeps the full-outer
-    sort-merge join bucket-local with ZERO exchange
-    (``test_bucketed_diff_is_shuffle_free`` pins this)."""
+    NULL key components pair with each other (a null-safe join).
+    Spark compiles a null-safe equi-join key to the ``(coalesce(k),
+    isnull(k))`` composite, which no bucketing layout matches, so
+    BUCKETED snapshots still shuffle."""
     keys = list(key_cols)
     if not keys:
         raise ValueError("key_cols must not be empty")
@@ -99,7 +93,7 @@ def snapshot_diff(
             *[F.col(k).alias(f"_dn_{k}") for k in keys],
             F.struct(F.lit(1).alias("_present")).alias("_dn_vals"),
         )
-        return _diff_tail(o, n, keys, [], null_safe_keys, set())
+        return _diff_tail(o, n, keys, [], set())
     o = old.select(
         *[F.col(k).alias(f"_do_{k}") for k in keys],
         F.struct(*[cmp_field(c) for c in cmps]).alias("_do_vals"),
@@ -109,7 +103,7 @@ def snapshot_diff(
         F.struct(*[cmp_field(c) for c in cmps]).alias("_dn_vals"),
         *[F.col(c).alias(f"_dnv_{c}") for c in cmps if c in map_cols],
     )
-    return _diff_tail(o, n, keys, cmps, null_safe_keys, map_cols)
+    return _diff_tail(o, n, keys, cmps, map_cols)
 
 
 def _diff_tail(
@@ -117,13 +111,11 @@ def _diff_tail(
     n: DataFrame,
     keys: list,
     cmps: list,
-    null_safe_keys: bool,
     map_cols: set,
 ) -> DataFrame:
     cond = None
     for k in keys:
-        a, b = F.col(f"_do_{k}"), F.col(f"_dn_{k}")
-        c = a.eqNullSafe(b) if null_safe_keys else (a == b)
+        c = F.col(f"_do_{k}").eqNullSafe(F.col(f"_dn_{k}"))
         cond = c if cond is None else cond & c
     j = o.join(n, cond, "full")
     # presence = the side's struct row existed (a struct whose FIELDS
@@ -159,39 +151,35 @@ def sampled_snapshot_diff_summary(
     new: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    prefix_hex: int = 1,
 ) -> DataFrame:
     """Reconciliation ESTIMATE from a coordinated key sample — "how
     much drifted?" before paying for the full join: both snapshots are
-    filtered MAP-SIDE to keys whose ``md5`` starts with
-    ``prefix_hex`` zeros (the same fixed-threshold coordinated
-    sampling as ``sketches.hash_sample_sketch``, keyed on the key
-    VALUES so both sides keep exactly the same keys), the sample is
-    diffed, and counts scale by ``16^prefix_hex``.  Unbiased per key;
-    relative stderr per type ≈ ``sqrt(16^prefix_hex / n_type)``.
+    filtered MAP-SIDE to keys whose ``md5`` starts with a ``0`` hex
+    digit (the same fixed-threshold coordinated sampling as
+    ``sketches.hash_sample_sketch``, keyed on the key VALUES so both
+    sides keep exactly the same keys), the sample is diffed, and
+    counts scale by 16.  Unbiased per key; relative stderr per type ≈
+    ``sqrt(16 / n_type)``.
 
     Scale: the sample filter is evaluated in each scan stage, so the
-    full-outer join exchanges ``~1/16^prefix_hex`` of the keys — the
-    estimate costs a fraction of the reconciliation it previews.
+    full-outer join exchanges ``~1/16`` of the keys — the estimate
+    costs a fraction of the reconciliation it previews.
 
     Returns per observed diff type: ``sample_rows`` (exact, on the
-    sample) and ``est_rows = 16^prefix_hex · sample_rows`` (BIGINT,
+    sample) and ``est_rows = 16 · sample_rows`` (BIGINT,
     integer-exact).  A type with no sampled rows is absent — with a
     deterministic sample, identically absent in any replay."""
-    if not 1 <= prefix_hex <= 8:
-        raise ValueError(f"prefix_hex must be 1..8; got {prefix_hex}")
     keys = list(key_cols)
     if not keys:
         raise ValueError("key_cols must not be empty")
-    scale = 16 ** prefix_hex
     khash = F.md5(
         F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
     )
-    keep = F.substring(khash, 1, prefix_hex) == F.lit("0" * prefix_hex)
+    keep = F.substring(khash, 1, 1) == F.lit("0")
     d = snapshot_diff(old.filter(keep), new.filter(keep), keys, compare_cols)
     return d.groupBy("diff_type").agg(
         F.count("*").alias("sample_rows"),
-        (F.count("*") * F.lit(scale)).cast("long").alias("est_rows"),
+        (F.count("*") * F.lit(16)).cast("long").alias("est_rows"),
     )
 
 

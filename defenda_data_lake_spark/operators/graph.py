@@ -77,13 +77,11 @@ def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
 
 def pagerank(
     edges: DataFrame,
-    iterations: int = 5,
-    materialize: bool = True,
     symmetric_input: bool = False,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Fixed-point PageRank over a directed simple ``(src, dst)`` edge
-    list, damping ``DAMPING_PCT``.
+    list: 5 rounds, damping ``DAMPING_PCT``.
 
     ``symmetric_input``: pass True when the edge list is undirected
     (both orientations present — :func:`symmetrize` output).  Every
@@ -104,23 +102,21 @@ def pagerank(
     is not redistributed — the GraphX ``staticPageRank`` convention,
     which keeps every round a pure join+agg.
 
-    ``materialize`` (default on — the ``connected_components`` /
-    q125/q112 house convention): the loop-invariant edge⋈outdeg
-    relation and each round's rank table are pinned with eager
-    ``localCheckpoint``.  Without it the returned plan embeds the
-    edge-derivation subtree once per round plus once for the |V|
-    scalar — measured at sf0.1 (q100: an orders⋈lineitem edge
-    derivation) as 8.0 s per execution against 1.5 s pinned, with
-    Catalyst re-analysis of the unrolled tree dominating.  Every
-    Pregel-style engine materializes the edge relation between
-    supersteps for exactly this reason; the rank table is |V|-sized.
-    Values are identical either way (the update is exact integer
-    math); pass False for a fully lazy single-plan form.  NOTE:
-    ``localCheckpoint`` stores blocks NON-reliably — on a real cluster
-    an executor loss makes downstream actions fail instead of
-    recomputing lineage (acceptable for interactive/bench sessions;
-    a cluster deployment that needs fault tolerance mid-query should
-    swap in reliable ``checkpoint()`` at the same call sites).
+    Materialized (the ``connected_components`` / q125/q112 house
+    convention): the loop-invariant edge⋈outdeg relation and each
+    round's rank table are pinned with eager ``localCheckpoint``.
+    Without the checkpoints the plan would embed the edge-derivation
+    subtree once per round plus once for the |V| scalar — measured at
+    sf0.1 (q100: an orders⋈lineitem edge derivation) as 8.0 s per
+    execution against 1.5 s pinned, with Catalyst re-analysis of the
+    unrolled tree dominating.  Every Pregel-style engine materializes
+    the edge relation between supersteps for exactly this reason; the
+    rank table is |V|-sized.  NOTE: ``localCheckpoint`` stores blocks
+    NON-reliably — on a real cluster an executor loss makes downstream
+    actions fail instead of recomputing lineage (acceptable for
+    interactive/bench sessions; a cluster deployment that needs fault
+    tolerance mid-query should swap in reliable ``checkpoint()`` at the
+    same call sites).
 
     The |E|-sized relation is built and materialized ONCE: outdeg
     rides a window count over ``src`` (one shuffle+sort of the edge
@@ -155,8 +151,6 @@ def pagerank(
     so values are identical under any partitioning/join strategy (the
     equivalence is pinned by ``test_pagerank_broadcast_ranks_matches``
     on asymmetric data with dangling nodes)."""
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
     from pyspark.sql.window import Window
 
     e = edges.select("src", "dst")
@@ -177,10 +171,8 @@ def pagerank(
         # read through the contribution join (matched on src), so the
         # NULL is unreachable — dangling nodes contribute nothing,
         # exactly the window form's semantics.
-        contrib_edges = e.repartition("dst")
-        if materialize:
-            # computed once; feeds deg, nodes, and every round's join
-            contrib_edges = contrib_edges.localCheckpoint(eager=True)
+        # computed once; feeds deg, nodes, and every round's join
+        contrib_edges = e.repartition("dst").localCheckpoint(eager=True)
         deg = contrib_edges.groupBy("src").agg(
             F.count(F.lit(1)).alias("outdeg")
         )
@@ -197,23 +189,18 @@ def pagerank(
                     "left",
                 )
             )
-        if materialize:
-            nodes = nodes.localCheckpoint(eager=True)
+        nodes = nodes.localCheckpoint(eager=True)
     else:
+        # computed once; feeds nodes and every round's join
         contrib_edges = e.withColumn(
             "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        )
-        if materialize:
-            # computed once; feeds nodes and every round's join
-            contrib_edges = contrib_edges.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         nodes = contrib_edges.select(F.col("src").alias("node_id"))
         if not symmetric_input:
             nodes = nodes.union(
                 contrib_edges.select(F.col("dst").alias("node_id"))
             )
-        nodes = nodes.distinct()
-        if materialize:
-            nodes = nodes.localCheckpoint(eager=True)
+        nodes = nodes.distinct().localCheckpoint(eager=True)
     # |V| is the one driver scalar — needed as a literal in the teleport
     # term, same as the oracle's scalar CTE.
     n = nodes.count()
@@ -226,7 +213,7 @@ def pagerank(
     base = ((100 - DAMPING_PCT) * SCALE) // (100 * n)
 
     ranks = nodes.withColumn("rank_e12", F.lit(SCALE // n).cast("long"))
-    for _ in range(iterations):
+    for _ in range(5):
         rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
         incoming = (
             contrib_edges.join(
@@ -243,6 +230,7 @@ def pagerank(
         # the broadcast path carries outdeg on the rank table (see the
         # invariant build above) — keep it through the round update
         keep = ["node_id", "outdeg"] if broadcast_ranks else ["node_id"]
+        # |V|-sized; the checkpoint truncates the per-round lineage growth
         ranks = (
             nodes.join(inc_side, "node_id", "left")
             .select(
@@ -254,10 +242,8 @@ def pagerank(
                     )
                 ).alias("rank_e12"),
             )
+            .localCheckpoint(eager=True)
         )
-        if materialize:
-            # |V|-sized; truncates the per-round lineage growth
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         "node_id",
         "rank_e12",
@@ -268,7 +254,7 @@ def pagerank(
     )
 
 
-def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     UNDIRECTED simple ``(src, dst)`` graph (pass :func:`symmetrize` output: both
     orientations present, no self-loops, no duplicates).
@@ -286,22 +272,18 @@ def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
     on the wedge apex, one closing-edge semi-ish join; per-triangle
     work is pure integer counting, so the result is engine-exact.
 
-    ``materialize`` (default on — the :func:`pagerank` /
-    ``connected_components`` house convention): the edge list and the
-    oriented relation are pinned with eager ``localCheckpoint``.
+    Materialized (the :func:`pagerank` / ``connected_components``
+    house convention): the edge list and the oriented relation are
+    pinned with eager ``localCheckpoint``.
     Both are multi-referenced (edges by the degree agg and the
     orientation; oriented by the two wedge legs and the closing
     edge), so a lazy plan re-derives the caller's edge subtree —
     when that subtree ends in a Python candidate stage (q101's
-    MinHash kernel), it executes once per un-reused reference.
-    Values are identical either way (pure integer counting); pass
-    False for a fully lazy single-plan form.  Same non-reliable-
-    storage caveat as :func:`pagerank`: an executor loss fails the
+    MinHash kernel), it executes once per un-reused reference.  Same
+    non-reliable-storage caveat as :func:`pagerank`: an executor loss fails the
     downstream action rather than recomputing lineage."""
-    e = edges.select("src", "dst")
-    if materialize:
-        # computed once; feeds the degree agg and the orientation join
-        e = e.localCheckpoint(eager=True)
+    # computed once; feeds the degree agg and the orientation join
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
     deg = e.groupBy(F.col("src").alias("node_id")).agg(
         F.count("*").alias("degree")
     )
@@ -321,10 +303,9 @@ def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
             | ((F.col("deg_src") == F.col("deg_dst")) & (F.col("src") < F.col("dst")))
         )
         .select("src", "dst")
-    )
-    if materialize:
         # consumed three ways: both wedge legs and the closing edge
-        oriented = oriented.localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
+    )
     a = oriented.select(F.col("src").alias("apex"), F.col("dst").alias("b"))
     c = oriented.select(F.col("src").alias("apex"), F.col("dst").alias("c"))
     # wedges from a common apex; b < c dedupes the unordered neighbor pair

@@ -15,8 +15,8 @@ the training-data-pipeline operator family the engine adds on top.
 Scale notes (100 TB):
 
 * **Blocking, not all-pairs.**  Candidates are generated by an
-  equi-join on a deterministic *blocking key* (the first
-  ``block_tokens`` tokens of the normalized text).  Blocking is the
+  equi-join on a deterministic *blocking key* (the first 3 tokens of
+  the normalized text).  Blocking is the
   standard record-linkage trade: recall is bounded by the blocking
   scheme (pairs that disagree in the first tokens are never compared —
   documented, deliberate), cost is bounded by block sizes.  The join is
@@ -25,15 +25,14 @@ Scale notes (100 TB):
 * **Degenerate-block cap.**  A blocking key shared by thousands of
   rows (empty text, boilerplate headers) contributes quadratic pairs
   and near-zero discrimination — the same hazard as a degenerate LSH
-  bucket.  ``max_block_rows`` drops such blocks with a windowed count
-  BEFORE the self-join (mirrors ``minhash_lsh_candidates``'s
+  bucket.  Blocks of more than 1000 rows are dropped with a windowed
+  count BEFORE the self-join (mirrors ``minhash_lsh_candidates``'s
   ``max_bucket_docs`` cap; the count runs in the same exchange the
   join needs, so the guard adds no extra shuffle).
-* **Bounded comparison cost.**  Distances are computed on a
-  ``prefix_len``-char prefix with Spark's *thresholded*
-  ``levenshtein(a, b, threshold)`` (JVM codegen, early-exits the DP
-  once the distance provably exceeds the threshold — O(prefix_len x
-  max_distance) per pair instead of O(prefix_len^2)).  No Python in
+* **Bounded comparison cost.**  Distances are computed on a 64-char
+  prefix with Spark's *thresholded* ``levenshtein(a, b, 8)`` (JVM
+  codegen, early-exits the DP once the distance provably exceeds the
+  threshold — O(64 x 8) per pair instead of O(64^2)).  No Python in
   the hot path.
 * One exchange on the blocking key (window + self-join share it);
   per-pair work is a bounded JVM expression.  Skewed keys are exactly
@@ -49,41 +48,31 @@ from pyspark.sql.window import Window
 from defenda_data_lake_spark.operators.dedup import normalized_text
 
 
-def blocking_key(col: Column, block_tokens: int = 3) -> Column:
-    """First ``block_tokens`` whitespace tokens of the normalized text,
-    re-joined with single spaces — the deterministic blocking key.
-    Rows with fewer tokens block on what they have."""
-    return F.array_join(
-        F.slice(F.split(normalized_text(col), " "), 1, block_tokens), " "
-    )
+def blocking_key(col: Column) -> Column:
+    """First 3 whitespace tokens of the normalized text, re-joined with
+    single spaces — the deterministic blocking key.  Rows with fewer
+    tokens block on what they have."""
+    return F.array_join(F.slice(F.split(normalized_text(col), " "), 1, 3), " ")
 
 
-def candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_tokens: int = 3,
-    prefix_len: int = 64,
-    max_block_rows: int = 1000,
-    neighbor_window: int | None = None,
-) -> DataFrame:
-    """Candidate pair generation shared by :func:`edit_distance_pairs`
-    and the scaling probe's guard-stripped strawman: blocking + cap +
-    (all-pairs | sorted-neighborhood) expansion, WITHOUT the distance
-    computation.  Returns ``(id_a, id_b, _pa, _pb)`` where ``_pa/_pb``
-    are the two normalized prefixes still to be compared."""
-    norm = normalized_text(F.col(text_col))
+def candidate_pairs(df: DataFrame, neighbor_window: int | None) -> DataFrame:
+    """Candidate pair generation of :func:`edit_distance_pairs`:
+    blocking + cap + (all-pairs | sorted-neighborhood) expansion,
+    WITHOUT the distance computation.  Returns ``(id_a, id_b, _pa,
+    _pb)`` where ``_pa/_pb`` are the two normalized 64-char ``text``
+    prefixes still to be compared."""
+    norm = normalized_text(F.col("text"))
     side = df.select(
-        F.col(id_col).alias("_lk_id"),
-        F.substring(norm, 1, prefix_len).alias("_lk_prefix"),
-        blocking_key(F.col(text_col), block_tokens).alias("_lk_block"),
+        F.col("doc_id").alias("_lk_id"),
+        F.substring(norm, 1, 64).alias("_lk_prefix"),
+        blocking_key(F.col("text")).alias("_lk_block"),
     ).filter(F.col("_lk_prefix").isNotNull() & (F.length("_lk_prefix") > 0))
 
     # degenerate-block cap: count within the blocking exchange, BEFORE
     # the pair expansion fans out
     side = side.withColumn(
         "_lk_block_n", F.count("*").over(Window.partitionBy("_lk_block"))
-    ).filter(F.col("_lk_block_n") <= F.lit(max_block_rows))
+    ).filter(F.col("_lk_block_n") <= F.lit(1000))
 
     if neighbor_window is None:
         a = side.select(
@@ -126,24 +115,17 @@ def candidate_pairs(
 
 
 def edit_distance_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_tokens: int = 3,
-    prefix_len: int = 64,
-    max_distance: int = 8,
-    max_block_rows: int = 1000,
-    neighbor_window: int | None = None,
+    df: DataFrame, neighbor_window: int | None = None
 ) -> DataFrame:
-    """Within-block record pairs whose normalized-text prefixes are
-    within ``max_distance`` character edits.
+    """Within-block ``doc_id`` pairs whose normalized ``text`` prefixes
+    are within 8 character edits.
 
     ``neighbor_window=None`` compares ALL pairs inside each block —
     exact within the blocking scheme, but per-block cost is quadratic,
     so block sizes growing with the corpus (fixed-vocabulary blocking
     keys at 100 TB) blow up: the 32x probe (SCALING.md round-7
     "edit-distance linkage") measured 8.2x wall growth for the
-    all-pairs form, and that only because the ``max_block_rows`` cap
+    all-pairs form, and that only because the 1000-row block cap
     starts DROPPING the fattest blocks outright (recall loss) — the
     uncapped quadratic is unbounded.  ``neighbor_window=w`` switches to
     SORTED-NEIGHBORHOOD candidates (Hernandez-Stolfo): each block is
@@ -158,14 +140,11 @@ def edit_distance_pairs(
 
     Returns ``(id_a, id_b, distance)`` with ``id_a < id_b`` (column
     order when the id column is numeric) and ``distance`` the exact
-    Levenshtein distance between the two ``prefix_len``-char prefixes
+    Levenshtein distance between the two 64-char prefixes
     (exact because the thresholded form returns the true distance
     whenever it is <= the threshold).
     """
-    pairs = candidate_pairs(
-        df, id_col, text_col, block_tokens, prefix_len, max_block_rows,
-        neighbor_window,
-    )
+    pairs = candidate_pairs(df, neighbor_window)
     # Two semantics-preserving guards before the DP, measured ~20x at
     # the 32x probe (37.4 s unguarded -> 1.9 s, best-of-3; SCALING.md round-7
     # "edit-distance linkage"): equal prefixes (the dominant near-dup
@@ -175,8 +154,8 @@ def edit_distance_pairs(
     # distance) skips the DP entirely for hopeless pairs.
     dist = F.when(F.col("_pa") == F.col("_pb"), F.lit(0)).otherwise(
         F.when(
-            F.abs(F.length("_pa") - F.length("_pb")) > max_distance, F.lit(-1)
-        ).otherwise(F.levenshtein(F.col("_pa"), F.col("_pb"), max_distance))
+            F.abs(F.length("_pa") - F.length("_pb")) > 8, F.lit(-1)
+        ).otherwise(F.levenshtein(F.col("_pa"), F.col("_pb"), 8))
     )
     return (
         pairs.withColumn("distance", dist)

@@ -4,19 +4,15 @@ Media travel as opaque ``binary`` columns plus a typed metadata struct
 (the lakehouse-standard pattern); decode / feature-extract / resize /
 chunk run as Arrow-batched ``mapInPandas`` stages.
 
-Decode paths, in order of preference at ``fake=False``:
-
-* **PNG** — real, dependency-free: pure-Python chunk parse + zlib
-  inflate + scanline unfilter (all five PNG filter types), 8-bit
-  gray/RGB/gray-alpha/RGBA.
-* **WAV** — real, dependency-free: stdlib ``wave`` PCM decode.
-* **Anything else** — Pillow when importable (images); otherwise
-  ``NotImplementedError`` at the exact point the codec would run.
-
-``fake=True`` (default, and the correctness-oracle path — q44)
-produces a deterministic fake decode (stable per content hash) that
-exercises the real Spark plumbing — schema, batching, partitioning —
-end to end without any codec.
+``decode_media`` and ``resize_images`` are codec-free: a
+deterministic fake decode (stable per content hash — the
+correctness-oracle path, q44) and a pass-through resize exercise the
+real Spark plumbing — schema, batching, partitioning — end to end
+without any codec.  The perceptual hashes (``image_dhash``,
+``audio_fingerprint``) do decode: PNG through a dependency-free
+pure-Python decoder (chunk parse + zlib inflate + scanline unfilter,
+all five PNG filter types, 8-bit gray/RGB/gray-alpha/RGBA), WAV
+through the stdlib ``wave`` module.
 
 Scale notes: binary payloads never pass through the driver, and the
 metadata struct lets Catalyst prune the (huge) binary column away for
@@ -156,20 +152,6 @@ def _decode_png(payload: bytes) -> tuple[int, int, int, bytearray]:
     return width, height, channels, _png_unfilter(raw, width, height, channels)
 
 
-def _decode_wav(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Stdlib WAV decode: (n_frames, sample_rate, n_channels, pcm)."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        return (
-            w.getnframes(),
-            w.getframerate(),
-            w.getnchannels(),
-            w.readframes(w.getnframes()),
-        )
-
-
 def _encode_png(width: int, height: int, channels: int, pixels: bytes) -> bytes:
     """Minimal deterministic PNG encoder (8-bit, filter type 0 on every
     scanline, one IDAT, fixed zlib level) — the write half of the
@@ -221,19 +203,14 @@ def _resize_nearest(
     return bytes(out)
 
 
-def resize_images(
-    media: DataFrame, out_width: int, out_height: int, fake: bool = True
-) -> DataFrame:
+def resize_images(media: DataFrame, out_width: int, out_height: int) -> DataFrame:
     """Resize each image payload to ``out_width x out_height``,
-    returning the standard media layout (new payload + updated meta).
+    returning the standard media layout (payload + updated meta).
 
-    ``fake=False`` really resizes: dependency-free PNG decode →
-    nearest-neighbor resample → deterministic PNG re-encode (both
-    halves pure Python + zlib, so the output bytes are reproducible).
-    ``fake=True`` (the no-codec plumbing path, same policy as
-    ``decode_media``) passes the payload through untouched and stamps
-    the TARGET dimensions into the metadata struct — schema, batching
-    and partitioning behave exactly like the real path.
+    The no-codec plumbing path, same policy as ``decode_media``: the
+    payload passes through untouched and the TARGET dimensions are
+    stamped into the metadata struct — schema, batching and
+    partitioning behave as a real resize's would.
 
     Scale: Arrow-batched ``mapInPandas``; payloads stay on executors,
     one narrow stage, no shuffle."""
@@ -264,17 +241,7 @@ def resize_images(
         for batch in batches:
             rows = []
             for media_id, content in zip(batch["media_id"], batch["content"]):
-                payload = bytes(content) if content is not None else b""
-                if fake:
-                    out_payload = payload
-                else:
-                    w, h, ch, px = _decode_png(payload)
-                    out_payload = _encode_png(
-                        out_width,
-                        out_height,
-                        ch,
-                        _resize_nearest(w, h, ch, px, out_width, out_height),
-                    )
+                out_payload = bytes(content) if content is not None else b""
                 rows.append(
                     {
                         "media_id": media_id,
@@ -293,117 +260,37 @@ def resize_images(
     return media.select("media_id", "content").mapInPandas(kernel, out_schema)
 
 
-def _mean_feature(values) -> list[float]:
-    """Deterministic real-decode feature: per-slice mean of the decoded
-    samples over ``FEATURE_DIM`` slices, normalized to [0, 1] — a
-    decode-verifying signature (any pixel/sample change moves it), not
-    a learned embedding."""
-    import numpy as np
-
-    arr = np.asarray(values, dtype=np.float64)
-    if arr.size == 0:
-        return [0.0] * FEATURE_DIM
-    bounds = np.linspace(0, arr.size, FEATURE_DIM + 1, dtype=int)
-    out = []
-    for i in range(FEATURE_DIM):
-        lo, hi = bounds[i], bounds[i + 1]
-        out.append(float(arr[lo:hi].mean()) if hi > lo else 0.0)
-    return out
-
-
-def _decode_real(payload: bytes) -> dict:
-    """Dispatch one payload on its magic bytes to a real decoder.
-
-    Image rows report (width, height, n_channels); audio rows map
-    n_frames→width, sample_rate→height, channels→n_channels (the
-    DECODED_SCHEMA is modality-neutral by design).  Features are
-    per-slice means of the decoded bytes/samples scaled to [0, 1]."""
-    import numpy as np
-
-    if payload[:8] == _PNG_SIG:
-        width, height, channels, pixels = _decode_png(payload)
-        feature = _mean_feature(np.frombuffer(bytes(pixels), dtype=np.uint8) / 255.0)
-        return {
-            "width": width,
-            "height": height,
-            "n_channels": channels,
-            "feature": feature,
-        }
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        n_frames, rate, channels, pcm = _decode_wav(payload)
-        samples = np.frombuffer(pcm, dtype="<i2").astype(np.float64)
-        feature = _mean_feature((samples / 32768.0 + 1.0) / 2.0)
-        return {
-            "width": n_frames,
-            "height": rate,
-            "n_channels": channels,
-            "feature": feature,
-        }
-    try:  # optional Pillow path for other image formats
-        import io
-
-        from PIL import Image  # type: ignore
-
-        img = Image.open(io.BytesIO(payload))
-        arr = np.asarray(img.convert("RGB"), dtype=np.uint8)
-        return {
-            "width": img.width,
-            "height": img.height,
-            "n_channels": arr.shape[2] if arr.ndim == 3 else 1,
-            "feature": _mean_feature(arr / 255.0),
-        }
-    except ImportError:
-        raise NotImplementedError(
-            "payload is neither PNG nor WAV and Pillow is not installed; "
-            "the dependency-free decoders cover image/png + audio/wav"
-        )
+def _fake_decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Deterministic fake decode: dims and features derived from the
+    payload's content hash."""
+    for batch in batches:
+        rows = []
+        for media_id, content in zip(batch["media_id"], batch["content"]):
+            payload = bytes(content) if content is not None else b""
+            digest = hashlib.md5(payload).digest()
+            width = 16 + digest[0] % 64
+            height = 16 + digest[1] % 64
+            feature = [
+                (int.from_bytes(digest[i : i + 2], "big") % 1000) / 1000.0
+                for i in range(0, min(len(digest) - 1, FEATURE_DIM * 2), 2)
+            ]
+            rows.append(
+                {
+                    "media_id": media_id,
+                    "width": width,
+                    "height": height,
+                    "n_channels": 3,
+                    "feature": feature,
+                }
+            )
+        yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
 
 
-def _make_decoder(fake: bool):
-    def decode_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not fake:
-                rows = []
-                for media_id, content in zip(batch["media_id"], batch["content"]):
-                    payload = bytes(content) if content is not None else b""
-                    decoded = _decode_real(payload)
-                    rows.append({"media_id": media_id, **decoded})
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in DECODED_SCHEMA.fields]
-                )
-                continue
-            rows = []
-            for media_id, content in zip(batch["media_id"], batch["content"]):
-                payload = bytes(content) if content is not None else b""
-                digest = hashlib.md5(payload).digest()
-                # deterministic fake: dims/features derived from content
-                width = 16 + digest[0] % 64
-                height = 16 + digest[1] % 64
-                feature = [
-                    (int.from_bytes(digest[i : i + 2], "big") % 1000) / 1000.0
-                    for i in range(0, min(len(digest) - 1, FEATURE_DIM * 2), 2)
-                ]
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "width": width,
-                        "height": height,
-                        "n_channels": 3,
-                        "feature": feature,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
-
-    return decode_batches
-
-
-def decode_media(media: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode + feature-extract each media row.  ``fake=True`` is the
-    deterministic content-hash stub (the oracle path, q44);
-    ``fake=False`` really decodes — PNG and WAV dependency-free, other
-    image formats via Pillow when importable (see module docstring)."""
+def decode_media(media: DataFrame) -> DataFrame:
+    """Decode + feature-extract each media row: the deterministic
+    content-hash stub (the oracle path, q44; see module docstring)."""
     return media.select("media_id", "content").mapInPandas(
-        _make_decoder(fake), schema=DECODED_SCHEMA
+        _fake_decode, schema=DECODED_SCHEMA
     )
 
 
@@ -539,29 +426,24 @@ def image_dhash(media: DataFrame) -> DataFrame:
     ).mapInPandas(kernel, out)
 
 
-def dhash_near_duplicates(media: DataFrame, max_hamming: int = 3) -> DataFrame:
+def dhash_near_duplicates(media: DataFrame) -> DataFrame:
     """Near-duplicate IMAGE pairs ``(id_a, id_b, hamming)``: dHash per
     image, then the pigeonhole Hamming block join over 4 blocks shared
-    with SimHash text dedup (``hamming_block_pairs`` — complete recall
-    for ``max_hamming < 4``, one keyed exchange, no cartesian).
+    with SimHash text dedup (``hamming_block_pairs`` — Hamming distance
+    <= 3 with complete recall, one keyed exchange, no cartesian).
     NULL-hash rows (empty payloads) cannot pair and are dropped
     first."""
     from defenda_data_lake_spark.operators.dedup import hamming_block_pairs
 
     sigs = image_dhash(media).filter(F.col("dhash").isNotNull())
     return hamming_block_pairs(
-        sigs,
-        id_col="media_id",
-        sig_col="dhash",
-        max_hamming=max_hamming,
-        size_hint_df=media,
+        sigs, id_col="media_id", sig_col="dhash", size_hint_df=media
     )
 
 
-def synthetic_gray_png(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Manufacture a REAL 9x8 grayscale PNG per row from a text column:
+def synthetic_gray_png(df: DataFrame) -> DataFrame:
+    """Manufacture a REAL 9x8 grayscale PNG per ``doc_id`` row from its
+    ``text``:
     pixel ``i`` (row-major) is the code point of character ``i`` of the
     text modulo 256, zero past the end.  This is the container's image
     CORPUS GENERATOR — no image dataset or codec library ships in the
@@ -583,7 +465,7 @@ def synthetic_gray_png(
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             payloads = []
-            for text in batch[text_col]:
+            for text in batch["text"]:
                 s = "" if text is None else str(text)
                 px = bytes(
                     (ord(s[i]) % 256) if i < len(s) else 0
@@ -592,13 +474,13 @@ def synthetic_gray_png(
                 payloads.append(_encode_png(_DHASH_W, _DHASH_H, 1, px))
             yield pd.DataFrame(
                 {
-                    "media_id": batch[id_col],
+                    "media_id": batch["doc_id"],
                     "content": pd.Series(payloads, dtype=object),
                 }
             )
 
     made = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(text_col)
+        F.col("doc_id").cast("long").alias("doc_id"), F.col("text")
     ).mapInPandas(kernel, out)
     return as_media_table(made, "media_id", "content", media_type="image")
 
@@ -638,9 +520,9 @@ def _audio_fp64(payload: bytes) -> int | None:
 
     if payload is None or len(payload) == 0:
         return None
-    # open directly (not via _decode_wav) because the sample WIDTH must
-    # be checked too: reinterpreting 8- or 24-bit PCM as int16 would
-    # silently fingerprint garbage instead of failing loudly
+    # the sample WIDTH must be checked too: reinterpreting 8- or
+    # 24-bit PCM as int16 would silently fingerprint garbage instead of
+    # failing loudly
     with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
         channels, width = w.getnchannels(), w.getsampwidth()
         if channels != 1:
@@ -695,28 +577,23 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
     ).mapInPandas(kernel, out)
 
 
-def audio_near_duplicates(media: DataFrame, max_hamming: int = 3) -> DataFrame:
+def audio_near_duplicates(media: DataFrame) -> DataFrame:
     """Near-duplicate AUDIO pairs ``(id_a, id_b, hamming)`` via the
     envelope fingerprint + the pigeonhole Hamming block join over 4
-    blocks shared with SimHash/dHash (complete recall for
-    ``max_hamming < 4``, one keyed exchange, no cartesian).
+    blocks shared with SimHash/dHash (Hamming distance <= 3 with
+    complete recall, one keyed exchange, no cartesian).
     NULL-fingerprint rows cannot pair and are dropped first."""
     from defenda_data_lake_spark.operators.dedup import hamming_block_pairs
 
     sigs = audio_fingerprint(media).filter(F.col("afp").isNotNull())
     return hamming_block_pairs(
-        sigs,
-        id_col="media_id",
-        sig_col="afp",
-        max_hamming=max_hamming,
-        size_hint_df=media,
+        sigs, id_col="media_id", sig_col="afp", size_hint_df=media
     )
 
 
-def synthetic_pcm_wav(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Manufacture a REAL mono 16-bit 8 kHz WAV per row from a text column:
+def synthetic_pcm_wav(df: DataFrame) -> DataFrame:
+    """Manufacture a REAL mono 16-bit 8 kHz WAV per ``doc_id`` row from
+    its ``text``:
     sample ``i`` is ``((codepoint(text[i]) % 256) - 128) * 256`` — one
     sample per character.  The audio analog of
     :func:`synthetic_gray_png`: no audio dataset ships in the test
@@ -756,14 +633,14 @@ def synthetic_pcm_wav(
         for batch in batches:
             yield pd.DataFrame(
                 {
-                    "media_id": batch[id_col],
+                    "media_id": batch["doc_id"],
                     "content": pd.Series(
-                        [encode(t) for t in batch[text_col]], dtype=object
+                        [encode(t) for t in batch["text"]], dtype=object
                     ),
                 }
             )
 
     made = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(text_col)
+        F.col("doc_id").cast("long").alias("doc_id"), F.col("text")
     ).mapInPandas(kernel, out)
     return as_media_table(made, "media_id", "content", media_type="audio")

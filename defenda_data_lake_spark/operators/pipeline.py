@@ -181,7 +181,6 @@ def order_plugins(plugins: list[Plugin]) -> list[Plugin]:
 def run_pipeline(
     event: dict,
     plugins: list[Plugin],
-    metadata: dict | None = None,
     presorted: bool = False,
 ) -> dict | None:
     """Route one event through ``plugins`` in ascending priority
@@ -191,11 +190,11 @@ def run_pipeline(
     per task instead of once per event).
 
     The built-in plugins share one key index through
-    ``metadata[KEY_INDEX]`` instead of each walking the event again."""
+    ``metadata[KEY_INDEX]`` instead of each walking the event again;
+    ``metadata`` is new for every event."""
     if not isinstance(event, dict):
         raise TypeError(f"event is type {type(event)}, should be a dict")
-    metadata = metadata if metadata is not None else {}
-    metadata.pop(KEY_INDEX, None)
+    metadata: dict = {}
     keepers = _index_keepers()
     executed: list[str] = []
     for plugin in plugins if presorted else order_plugins(plugins):
@@ -215,7 +214,6 @@ def run_pipeline(
             if event is None:
                 return None
             executed.append(plugin.name)
-    metadata.pop(KEY_INDEX, None)
     event["plugins"] = list(event.get("plugins") or []) + executed
     return event
 

@@ -8,7 +8,7 @@ Neighbor Search", TPAMI 2011):
 
 * TRAIN: split the vector into ``m`` contiguous subvectors; per
   subspace, a ``k``-centroid codebook via the house deterministic
-  Lloyd loop (``clustering.kmeans_train`` — k lowest-id init, 1e-9
+  Lloyd loop (``clustering._lloyd`` — k lowest-id init, 1e-9
   centroid quantization, fixed iterations), so the codebooks — and
   therefore every code and every ADC distance — replay in any SQL
   engine (the q96 oracle does, subspace by subspace).
@@ -28,7 +28,7 @@ Scale (100 TB): training touches the raw vectors (``m·(iters+1)``
 bounded jobs); the search scan reads ``m`` bytes-ish per row instead
 of ``4·dim``, the per-query top-k plans as WindowGroupLimit (each map
 task keeps its own top-k BEFORE the exchange, so the shuffle carries
-O(queries × k_top) rows per task), and the corpus is never joined or
+O(queries × 10) rows per task), and the corpus is never joined or
 shuffled in full.
 """
 
@@ -42,11 +42,6 @@ from pyspark.sql import functions as F
 from defenda_data_lake_spark.operators.clustering import _dlit, _sq_dist_sql
 
 Codebooks = list[list[list[float]]]  #: [subspace][centroid][component]
-
-
-def _check_pq(dim: int, m: int) -> None:
-    if m < 1 or dim % m != 0:
-        raise ValueError(f"m must divide the dimension; got dim={dim}, m={m}")
 
 
 def _dist_array_sql(sub_sql: str, cents: list[list[float]]) -> str:
@@ -81,23 +76,20 @@ def _py_sq_dist(q: Sequence[float], c: Sequence[float]) -> float:
     return acc
 
 
-def pq_train(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    iterations: int = 2,
-    dim: int | None = None,
-) -> Codebooks:
-    """Train ``m`` per-subspace codebooks of ``k`` centroids each over
-    contiguous ``embedding`` slices — one deterministic Lloyd run per
-    subspace, centroids quantized at 1e-9 like :func:`kmeans_assign`.
-    Returns driver-side plain lists (the whole codebook is
-    ``m·k·dim/m`` floats — broadcast-literal sized by construction)."""
+def pq_train(df: DataFrame, dim: int | None = None) -> Codebooks:
+    """Train 4 per-subspace codebooks of 16 centroids each
+    over contiguous ``embedding`` slices — one deterministic 2-iteration
+    Lloyd run per subspace, centroids quantized at 1e-9 like
+    :func:`kmeans_assign`.  Returns driver-side plain lists (the whole
+    codebook is ``16·dim`` floats — broadcast-literal sized by
+    construction)."""
     if dim is None:
         dim = len(
             df.select(F.col("embedding").alias("v")).first()["v"]
         )
-    _check_pq(dim, m)
+    m = 4
+    if dim % m != 0:
+        raise ValueError(f"m must divide the dimension; got dim={dim}, m={m}")
     dsub = dim // m
 
     # FUSED training: the m per-subspace Lloyd runs are independent,
@@ -139,12 +131,12 @@ def pq_train(
         kernel_parallelism(df),
     ).cache()
     try:
-        init_rows = base.orderBy("id").limit(k).collect()
+        init_rows = base.orderBy("id").limit(16).collect()
         books: Codebooks = [
             [[float(x) for x in r[f"v{s}"]] for r in init_rows]
             for s in range(m)
         ]
-        for _ in range(iterations):
+        for _ in range(2):
             branches = []
             for s in range(m):
                 assigned = _assignment_plan(
@@ -186,11 +178,9 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    df: DataFrame, codebooks: Codebooks, id_col: str = "vec_id"
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: Codebooks) -> DataFrame:
     """Encode every ``embedding`` as ``m`` nearest-centroid ids
-    (``pq_code``, array<int>) —
+    (``pq_code``, array<int>) beside its ``vec_id`` —
     a shuffle-free pure-JVM projection over literal codebooks.  Two
     projection steps: the per-subspace distance arrays are computed
     (and their literal trees parsed) ONCE under a name, then the
@@ -198,11 +188,6 @@ def pq_encode(
     expression tree of the former inline-twice form."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
-    # the bound names must not shadow an input column (e.g. the id)
-    taken = {c.lower() for c in df.columns}
-    prefix = "__pq_da"
-    while any(f"{prefix}{s}" in taken for s in range(m)):
-        prefix = "_" + prefix
     da_cols = []
     for s in range(m):
         sub = (
@@ -210,13 +195,13 @@ def pq_encode(
             "v -> CAST(v AS DOUBLE))"
         )
         da_cols.append(
-            f"{_dist_array_sql(sub, codebooks[s])} AS `{prefix}{s}`"
+            f"{_dist_array_sql(sub, codebooks[s])} AS `__pq_da{s}`"
         )
     argmins = ", ".join(
-        _argmin_from_dists_sql(f"`{prefix}{s}`") for s in range(m)
+        _argmin_from_dists_sql(f"`__pq_da{s}`") for s in range(m)
     )
-    return df.selectExpr(f"`{id_col}`", *da_cols).selectExpr(
-        f"`{id_col}`", f"array({argmins}) AS `pq_code`"
+    return df.selectExpr("`vec_id`", *da_cols).selectExpr(
+        "`vec_id`", f"array({argmins}) AS `pq_code`"
     )
 
 
@@ -224,9 +209,8 @@ def pq_topk(
     codes: DataFrame,
     queries: Sequence[tuple],
     codebooks: Codebooks,
-    k_top: int = 10,
 ) -> DataFrame:
-    """ADC top-``k_top`` per query over a :func:`pq_encode` output.
+    """ADC top-10 per query over a :func:`pq_encode` output.
     ``queries`` = [(query_id, vector)] — a small driver-side block,
     like every ANN kernel here.  The per-query distance is a sum of
     ``element_at`` lookups into LITERAL per-subspace tables (constant-
@@ -267,6 +251,6 @@ def pq_topk(
     )
     return (
         exploded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
+        .filter(F.col("rank") <= 10)
         .select("query_id", "vec_id", "adc_dist", "rank")
     )

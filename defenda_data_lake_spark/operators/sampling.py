@@ -40,15 +40,13 @@ def _threshold(fraction: float) -> int:
     return round(fraction * BUCKETS)
 
 
-def with_split(
-    df: DataFrame, id_col: str, test_fraction: float = 0.1, salt: str = "split"
-) -> DataFrame:
+def with_split(df: DataFrame, id_col: str, salt: str = "split") -> DataFrame:
     """Append a stable ``'train'``/``'test'`` ``split`` column: rows
-    whose bucket falls below ``test_fraction`` of the space are test."""
+    whose bucket falls in the lowest 10% of the space are test."""
     return df.withColumn(
         "split",
         F.when(
-            hash_bucket(id_col, salt) < _threshold(test_fraction),
+            hash_bucket(id_col, salt) < _threshold(0.1),
             F.lit("test"),
         ).otherwise(F.lit("train")),
     )
@@ -84,14 +82,12 @@ def temperature_resample(
     df: DataFrame,
     id_col: str,
     group_col: str,
-    target_fraction: float = 0.5,
-    salt: str = "temp",
 ) -> DataFrame:
     """α=0.5 temperature rebalancing of a grouped corpus (the
     multilingual/multi-domain pre-training mix recipe): per-group keep
     rates are proportional to ``sqrt(n_g)/n_g`` so over-represented
     groups are downsampled toward a flatter mix while the total kept
-    volume targets ``target_fraction`` of the corpus.  Membership is
+    volume targets half of the corpus.  Membership is
     the same deterministic md5 bucket as every sampler here, so the
     draw is reproducible in any engine.
 
@@ -125,7 +121,7 @@ def temperature_resample(
         F.col(group_col).alias("_rate_key"),
         F.least(
             F.lit(1.0),
-            F.lit(target_fraction)
+            F.lit(0.5)
             * F.col("_n_total")
             * F.col("_w_g")
             / F.col("_sum_w")
@@ -142,7 +138,7 @@ def temperature_resample(
     return joined.withColumn(
         "keep",
         (
-            hash_bucket(id_col, salt)
+            hash_bucket(id_col, "temp")
             < F.floor(F.col("rate") * F.lit(float(BUCKETS))).cast("long")
         ).cast("int"),
     )
@@ -179,11 +175,10 @@ def weighted_sample(
     id_col: str,
     weight_col: str | Column,
     k: int,
-    salt: str = "wsample",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement (top-``k``):
     Efraimidis–Spirakis A-Res with hash-derived randomness.  Each row
-    draws ``u`` from ``md5(salt || id)`` (32-bit resolution, uniform in
+    draws ``u`` from ``md5('wsample' || id)`` (32-bit resolution, uniform in
     (0, 1)) and gets priority ``ln(u) / w``; the ``k`` largest
     priorities ARE a weighted sample without replacement — a row's
     inclusion probability is proportional to its weight, and the whole
@@ -207,7 +202,7 @@ def weighted_sample(
     unit weight instead of poisoning the draw with NaN/Inf; positive
     fractional weights pass through untouched (0 < w < 1 is a
     legitimate down-weight, e.g. a quality score)."""
-    keyed = df.withColumn("priority", es_priority(id_col, weight_col, salt))
+    keyed = df.withColumn("priority", es_priority(id_col, weight_col))
     topk = keyed.orderBy(F.col("priority").desc(), F.col(id_col)).limit(k)
     return topk.withColumn(
         "sample_rank",
@@ -223,7 +218,6 @@ def group_weighted_sample(
     id_col: str,
     weight_col: str | Column,
     k: int,
-    salt: str = "gwsample",
 ) -> DataFrame:
     """Per-group weighted sampling without replacement: the ``k``
     highest Efraimidis–Spirakis priorities WITHIN each group — e.g.
@@ -235,7 +229,9 @@ def group_weighted_sample(
     WindowGroupLimit (same property q55 asserts), so every map task
     keeps only its own top-k per group BEFORE the exchange — the
     shuffle carries O(groups x k) rows per task, not the corpus."""
-    keyed = df.withColumn("priority", es_priority(id_col, weight_col, salt))
+    keyed = df.withColumn(
+        "priority", es_priority(id_col, weight_col, "gwsample")
+    )
     w = Window.partitionBy(group_col).orderBy(
         F.col("priority").desc(), F.col(id_col)
     )
@@ -248,18 +244,15 @@ def token_budget_select(
     df: DataFrame,
     token_col: str,
     key_col: str,
+    budget_ratio: tuple[int, int],
     tie_cols: Sequence[str] = (),
-    descending: bool = True,
-    budget_tokens: int | None = None,
-    budget_ratio: tuple[int, int] | None = None,
     buckets: int = 64,
 ) -> DataFrame:
     """Greedy token-budget selection: order rows by ``key_col``
-    (``descending`` = best-first), take the maximal prefix whose
-    cumulative ``token_col`` stays within the budget — "fill a 10B-token
-    training mix with the highest-quality documents first", the standard
-    curation closing step.  The budget is either an absolute
-    ``budget_tokens`` or ``budget_ratio=(num, den)`` of the total token
+    descending (best-first), take the maximal prefix whose cumulative
+    ``token_col`` stays within the budget — "fill a training mix with
+    the highest-quality documents first", the standard curation closing
+    step.  The budget is ``budget_ratio=(num, den)`` of the total token
     count (kept while ``den·cum <= num·total`` — exact integer
     arithmetic, no float threshold).
 
@@ -296,14 +289,9 @@ def token_budget_select(
 
     Returns the selected rows (original columns) + ``cum_tokens`` = the
     global cumulative token count, BIGINT."""
-    if (budget_tokens is None) == (budget_ratio is None):
-        raise ValueError("pass exactly one of budget_tokens / budget_ratio")
-    if budget_tokens is not None and budget_tokens < 0:
-        raise ValueError(f"budget_tokens must be >= 0; got {budget_tokens}")
-    if budget_ratio is not None:
-        num, den = budget_ratio
-        if num < 0 or den <= 0:
-            raise ValueError(f"need num >= 0 and den > 0; got {budget_ratio}")
+    num, den = budget_ratio
+    if num < 0 or den <= 0:
+        raise ValueError(f"need num >= 0 and den > 0; got {budget_ratio}")
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1; got {buckets}")
     cols = df.columns
@@ -326,11 +314,8 @@ def token_budget_select(
     tb = t.withColumn("_tb_bucket", bucket)
     tok = F.col(token_col).cast("long")
 
-    key_order = F.col(key_col).desc() if descending else F.col(key_col).asc()
-    row_order = [key_order, *[F.col(c) for c in tie_cols]]
-    bucket_order = (
-        F.col("_tb_bucket").desc() if descending else F.col("_tb_bucket").asc()
-    )
+    row_order = [F.col(key_col).desc(), *[F.col(c) for c in tie_cols]]
+    bucket_order = F.col("_tb_bucket").desc()
 
     # tiny side: per-bucket totals (map-side combined), exclusive prefix
     # offsets in global order, grand total — <= buckets rows end to end
@@ -351,12 +336,9 @@ def token_budget_select(
     sel = tb.join(F.broadcast(offs), "_tb_bucket").select(
         *cols, F.col("_tb_total"), cum
     )
-    if budget_tokens is not None:
-        keep = F.col("cum_tokens") <= F.lit(int(budget_tokens)).cast("long")
-    else:
-        keep = F.col("cum_tokens") * F.lit(int(den)) <= (
-            F.col("_tb_total") * F.lit(int(num))
-        )
+    keep = F.col("cum_tokens") * F.lit(int(den)) <= (
+        F.col("_tb_total") * F.lit(int(num))
+    )
     return sel.filter(keep).select(*cols, "cum_tokens")
 
 
@@ -365,21 +347,16 @@ def group_token_budget_select(
     token_col: str,
     key_col: str,
     group_col: str,
+    budget_ratio: tuple[int, int],
     tie_cols: Sequence[str] = (),
-    descending: bool = True,
-    budgets: dict[str, int] | None = None,
-    budget_ratio: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Per-group token-budget selection — the MIX-SPEC operator: fill
     each group (language, source, domain) to its own token target with
-    that group's best rows first.  ``budgets`` is an explicit spec
-    ``{group: max_tokens}`` (groups absent from the spec contribute
-    NOTHING — a strict mix); ``budget_ratio=(num, den)`` instead keeps
-    each group's best prefix while ``den·cum <= num·group_total``
-    (exact integer arithmetic).  This is how a curation pipeline turns
-    "30% code, 20% multilingual, cap forum data at 1B tokens" into a
-    concrete training set; :func:`token_budget_select` is the
-    ungrouped twin for one global budget.
+    that group's best (highest ``key_col``) rows first:
+    ``budget_ratio=(num, den)`` keeps each group's best prefix while
+    ``den·cum <= num·group_total`` (exact integer arithmetic).
+    :func:`token_budget_select` is the ungrouped twin for one global
+    budget.
 
     Scale: ONE hash exchange on ``group_col``; the cumulative window
     is bounded by the group (no unpartitioned window anywhere).  Skew
@@ -391,14 +368,9 @@ def group_token_budget_select(
 
     Returns the selected rows + ``cum_tokens`` = within-group
     cumulative token count, BIGINT."""
-    if (budgets is None) == (budget_ratio is None):
-        raise ValueError("pass exactly one of budgets / budget_ratio")
-    if budgets is not None and any(v < 0 for v in budgets.values()):
-        raise ValueError("budgets must be >= 0")
-    if budget_ratio is not None:
-        num, den = budget_ratio
-        if num < 0 or den <= 0:
-            raise ValueError(f"need num >= 0 and den > 0; got {budget_ratio}")
+    num, den = budget_ratio
+    if num < 0 or den <= 0:
+        raise ValueError(f"need num >= 0 and den > 0; got {budget_ratio}")
     cols = df.columns
     t = df.filter(
         F.col(token_col).isNotNull()
@@ -406,33 +378,18 @@ def group_token_budget_select(
         & F.col(group_col).isNotNull()
     )
     tok = F.col(token_col).cast("long")
-    key_order = F.col(key_col).desc() if descending else F.col(key_col).asc()
     w_cum = Window.partitionBy(group_col).orderBy(
-        key_order, *[F.col(c) for c in tie_cols]
+        F.col(key_col).desc(), *[F.col(c) for c in tie_cols]
     )
     cum = F.sum(tok).over(w_cum).alias("cum_tokens")
-    if budgets is not None:
-        # literal spec map: element_at yields NULL for unlisted groups,
-        # and NULL <= n is NULL -> filtered out (strict mix)
-        entries = [
-            x
-            for kv in sorted(budgets.items())
-            for x in (F.lit(kv[0]), F.lit(int(kv[1])).cast("long"))
-        ]
-        budget = F.element_at(
-            F.create_map(*entries), F.col(group_col).cast("string")
-        )
-        sel = t.select(*cols, cum)
-        keep = F.col("cum_tokens") <= budget
-    else:
-        # the group total rides the SAME exchange as the cumsum window
-        # (both partition by group_col); filter on the materialized
-        # column — a window expression can't sit in a WHERE
-        w_all = Window.partitionBy(group_col)
-        sel = t.select(*cols, cum, F.sum(tok).over(w_all).alias("_gtb_total"))
-        keep = F.col("cum_tokens") * F.lit(int(den)) <= (
-            F.col("_gtb_total") * F.lit(int(num))
-        )
+    # the group total rides the SAME exchange as the cumsum window
+    # (both partition by group_col); filter on the materialized
+    # column — a window expression can't sit in a WHERE
+    w_all = Window.partitionBy(group_col)
+    sel = t.select(*cols, cum, F.sum(tok).over(w_all).alias("_gtb_total"))
+    keep = F.col("cum_tokens") * F.lit(int(den)) <= (
+        F.col("_gtb_total") * F.lit(int(num))
+    )
     return sel.filter(keep).select(*cols, "cum_tokens")
 
 def dsir_feature_array():
@@ -454,67 +411,54 @@ def dsir_feature_array():
     return F.concat(w, bigrams)
 
 
-def dsir_bucket_of(feat, buckets: int):
+#: DSIR feature hash buckets
+DSIR_BUCKETS = 1024
+
+
+def dsir_bucket_of(feat):
     """The engine-portable feature→bucket hash (first 8 md5 hex chars,
     the :func:`hash_bucket` scheme)."""
     return (
-        F.conv(F.substring(F.md5(feat), 1, 8), 16, 10).cast("long") % buckets
+        F.conv(F.substring(F.md5(feat), 1, 8), 16, 10).cast("long")
+        % DSIR_BUCKETS
     )
 
 
-def dsir_bucket_counts(
-    df: DataFrame, target: Column, buckets: int = 1024
-) -> DataFrame:
+def dsir_bucket_counts(df: DataFrame, target: Column) -> DataFrame:
     """The fitted DSIR "model": per-bucket raw and target feature
     counts from ONE corpus pass — ``(bucket, raw_c, tgt_c)``,
-    <= ``buckets`` rows, consumed by :func:`dsir_importance_weights`."""
+    <= ``DSIR_BUCKETS`` rows, consumed by :func:`dsir_importance_weights`."""
     feats = df.select(
         target.alias("_is_target"),
         F.explode(dsir_feature_array()).alias("feat"),
     ).select(
-        "_is_target", dsir_bucket_of(F.col("feat"), buckets).alias("bucket")
+        "_is_target", dsir_bucket_of(F.col("feat")).alias("bucket")
     )
     counts = feats.groupBy("bucket").agg(
         F.count("*").alias("raw_c"),
         F.sum(F.when(F.col("_is_target"), 1).otherwise(0)).alias("tgt_c"),
     )
-    # the counts table is <= `buckets` rows but sits on a full corpus
+    # the counts table is <= DSIR_BUCKETS rows but sits on a full corpus
     # pass; without pinning it, the totals row and the ratio broadcast
     # would each recompute the feature explode — THREE corpus passes
     # instead of two (the q92 precedent)
     return counts.localCheckpoint(eager=True)
 
-def dsir_bucket_ratios(
-    counts: DataFrame, buckets: int = 1024, alpha: float = 0.5
-) -> DataFrame:
-    """Per-bucket add-``alpha`` smoothed log ratio ``(bucket, logr)``
-    from a fitted counts table — THE one definition of the DSIR
-    smoothing formula, shared by the batch scorer and the streaming
-    model-row fold so the two can never drift.  ``buckets``/``alpha``
-    must match the fit; a counts table with a bucket id outside the
-    declared space raises (the cheap detectable half of a mismatched
-    ``buckets`` — the undetectable half, declaring MORE buckets than
-    the fit, only mis-smooths the denominators, so pass the same
-    constant everywhere).
+def dsir_bucket_ratios(counts: DataFrame) -> DataFrame:
+    """Per-bucket add-0.5 smoothed log ratio ``(bucket, logr)`` from a
+    fitted counts table — THE one definition of the DSIR smoothing
+    formula.
 
     Totals via a one-row broadcast crossJoin (the q97-datasheet
-    pattern): the counts table is <= ``buckets`` rows, the totals one.
-    """
-    denom = alpha * buckets
+    pattern): the counts table is <= ``DSIR_BUCKETS`` rows, the totals
+    one."""
+    alpha = 0.5
+    denom = alpha * DSIR_BUCKETS
     torow = counts.agg(
         F.sum("raw_c").alias("_raw_tot"), F.sum("tgt_c").alias("_tgt_tot")
     )
-    checked_bucket = F.when(
-        F.col("bucket") < buckets, F.col("bucket")
-    ).otherwise(
-        F.expr(
-            f"raise_error(concat('dsir_bucket_ratios: bucket ', "
-            f"cast(bucket as string), ' >= declared space {buckets} — "
-            f"counts were fitted with a larger `buckets`'))"
-        )
-    )
     return counts.crossJoin(F.broadcast(torow)).select(
-        checked_bucket.alias("bucket"),
+        "bucket",
         F.log(
             ((F.col("tgt_c") + F.lit(alpha)) / (F.col("_tgt_tot") + F.lit(denom)))
             / ((F.col("raw_c") + F.lit(alpha)) / (F.col("_raw_tot") + F.lit(denom)))
@@ -522,9 +466,7 @@ def dsir_bucket_ratios(
     )
 
 
-def dsir_importance_weights(
-    df: DataFrame, target: Column, buckets: int = 1024, alpha: float = 0.5
-) -> DataFrame:
+def dsir_importance_weights(df: DataFrame, target: Column) -> DataFrame:
     """DSIR — Data Selection via Importance Resampling (Xie et al.
     2023, arXiv:2302.03169): score every document by how much more
     likely its content is under a TARGET-domain bag-of-hashed-ngrams
@@ -539,10 +481,10 @@ def dsir_importance_weights(
     guaranteed a nonzero raw count.
 
     Features are unigrams + bigrams of the normalized ``text``, hashed
-    into ``buckets`` buckets via the first 8 hex chars of md5 — the
+    into ``DSIR_BUCKETS`` buckets via the first 8 hex chars of md5 — the
     same engine-portable scheme as :func:`hash_bucket`, so a SQL
     oracle replays the bucketing bit-for-bit.  Bucket probabilities
-    are add-``alpha`` smoothed; the per-document weight is the MEAN of
+    are add-0.5 smoothed; the per-document weight is the MEAN of
     ``ln(p_target(b)/p_raw(b))`` over the document's feature
     OCCURRENCES (length-normalized log importance weight — the paper's
     sum-form ranks long documents first regardless of fit).
@@ -554,7 +496,7 @@ def dsir_importance_weights(
     bigrams — slice-based, so one-word docs yield an empty bigram
     array, never a descending ``sequence``); bucket counts for BOTH
     models come from ONE corpus pass (a single agg keyed by the
-    ≤``buckets``-row bucket id, carrying raw and target counts
+    ≤``DSIR_BUCKETS``-row bucket id, carrying raw and target counts
     together); totals + log-ratios are arithmetic over that tiny
     table, which then BROADCASTS back into the feature stream; the
     only corpus-sized exchange is the final per-doc mean.  Nothing
@@ -566,10 +508,10 @@ def dsir_importance_weights(
     ).select(
         "id",
         "_is_target",
-        dsir_bucket_of(F.col("feat"), buckets).alias("bucket"),
+        dsir_bucket_of(F.col("feat")).alias("bucket"),
     )
-    counts = dsir_bucket_counts(df, target, buckets=buckets)
-    ratios = dsir_bucket_ratios(counts, buckets=buckets, alpha=alpha)
+    counts = dsir_bucket_counts(df, target)
+    ratios = dsir_bucket_ratios(counts)
     return (
         feats.join(F.broadcast(ratios), "bucket")
         .groupBy("id")

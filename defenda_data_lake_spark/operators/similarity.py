@@ -58,10 +58,10 @@ def cosine_col(a_col: str, b_col: str):
     return _cos(F.col(a_col), F.col(b_col))
 
 
-def with_cosine(df: DataFrame, a_col: str, b_col: str, out: str = "cosine") -> DataFrame:
-    """Append a cosine-similarity column between two array columns
+def with_cosine(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Append a ``cosine`` similarity column between two array columns
     (computed in double precision)."""
-    return df.withColumn(out, cosine_col(a_col, b_col))
+    return df.withColumn("cosine", cosine_col(a_col, b_col))
 
 
 def quantize_embeddings(df: DataFrame) -> DataFrame:
@@ -110,10 +110,8 @@ def quantize_embeddings(df: DataFrame) -> DataFrame:
     return df.mapInPandas(kernel, schema=schema)
 
 
-def quantized_cosine_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
-    """Brute-force cosine top-k over int8-quantized vectors: quantize
+def quantized_cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Brute-force cosine top-10 over int8-quantized vectors: quantize
     both sides, then run the standard matmul kernel on the int8 arrays
     (scale cancels in cosine).  Integer dot products are exact in the
     float64 matmul (|q| <= 127, so dims into the thousands stay within
@@ -125,7 +123,7 @@ def quantized_cosine_topk(
     q_queries = quantize_embeddings(queries).select(
         "vec_id", F.col("q_embedding").alias("embedding")
     )
-    return cosine_topk(q_corpus, q_queries, k=k)
+    return cosine_topk(q_corpus, q_queries)
 
 
 def _collect_queries(queries: DataFrame):
@@ -280,19 +278,12 @@ def semantic_contamination(
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    partition_col: str = "label",
-    n_probe: int = 1,
-) -> DataFrame:
-    """IVF-style approximate top-k over ``(vec_id, embedding)`` rows:
-    the corpus is partitioned into inverted lists (here: an existing
-    ``partition_col``; in a full pipeline, a k-means assignment), a
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-style approximate top-10 over ``(vec_id, embedding)`` rows:
+    the corpus is partitioned into inverted lists (here: the existing
+    ``label`` column; in a full pipeline, a k-means assignment), a
     centroid is computed per list as the element-wise mean vector, and
-    each query probes only the ``n_probe`` lists whose centroids are
-    nearest.
+    each query probes only the list whose centroid is nearest.
 
     Deterministic end-to-end (mean centroids, fixed tie-breaks), so the
     approximate result is still oracle-checkable.
@@ -315,7 +306,7 @@ def ivf_topk(
     dim = Q.shape[1]
     # per-component means: one shuffle of (lists x dim) partial sums
     cent_rows = (
-        corpus.groupBy(F.col(partition_col).alias("list_id"))
+        corpus.groupBy(F.col("label").alias("list_id"))
         .agg(
             *[
                 F.avg(F.col("embedding")[i].cast("double")).alias(f"m{i}")
@@ -338,14 +329,14 @@ def ivf_topk(
     allowed: dict = {}
     l_arr = np.array(list_ids)
     for j, qid in enumerate(q_ids):
-        order = np.lexsort((l_arr, -sims[j]))[:n_probe]
+        order = np.lexsort((l_arr, -sims[j]))[:1]
         allowed[qid] = set(l_arr[order].tolist())
     probed_lists = sorted({l for s in allowed.values() for l in s})
 
-    corpus_sel = corpus.filter(F.col(partition_col).isin(probed_lists)).select(
+    corpus_sel = corpus.filter(F.col("label").isin(probed_lists)).select(
         F.col("vec_id"),
         F.col("embedding"),
-        F.col(partition_col).alias("__list_id"),
+        F.col("label").alias("__list_id"),
     )
     # partition-local exact cosine over the probed lists' rows, partial
     # top-k per task, global top-k window finish
@@ -372,7 +363,7 @@ def ivf_topk(
                     continue
                 cand_cos = (C[mask] @ b_Q[j]) / (nc[mask] * nq[j])
                 cand_ids = ids[mask]
-                keep = _partial_topk_rows(cand_cos, cand_ids, k)
+                keep = _partial_topk_rows(cand_cos, cand_ids, 10)
                 outs.append(
                     pd.DataFrame(
                         {
@@ -391,7 +382,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
     )
 
 
@@ -431,14 +422,10 @@ def _bits_to_str(bits_row) -> str:
 
 
 def lsh_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    num_planes: int = 8,
-    dim: int = 64,
+    corpus: DataFrame, queries: DataFrame, num_planes: int = 8
 ) -> DataFrame:
-    """LSH-bucketed approximate top-k over ``(vec_id, embedding)``
-    rows: corpus and queries are hashed
+    """LSH-bucketed approximate top-10 over 64-dim ``(vec_id,
+    embedding)`` rows: corpus and queries are hashed
     with the same deterministic hyperplanes; candidates come only from
     the query's bucket, then exact cosine ranks them.
 
@@ -448,7 +435,7 @@ def lsh_cosine_topk(
     With a broadcast query block the bucket restriction happens inside
     the scoring kernel itself (a per-row bucket compare) — no join, no
     second pass over the corpus."""
-    planes = np.array(_hyperplanes(dim, num_planes), dtype=np.float64)
+    planes = np.array(_hyperplanes(64, num_planes), dtype=np.float64)
     q_ids, Q = _collect_queries(queries)
     q_buckets = [_bits_to_str(row) for row in (Q @ planes.T) >= 0.0]
 
@@ -475,7 +462,7 @@ def lsh_cosine_topk(
                     continue
                 cand_cos = (C[mask] @ b_Q[j]) / (nc[mask] * nq[j])
                 cand_ids = ids[mask]
-                keep = _partial_topk_rows(cand_cos, cand_ids, k)
+                keep = _partial_topk_rows(cand_cos, cand_ids, 10)
                 outs.append(
                     pd.DataFrame(
                         {
@@ -500,25 +487,21 @@ def lsh_cosine_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
     )
 
 
-def lsh_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    num_planes: int = 6,
-    dim: int = 64,
-) -> DataFrame:
-    """LSH-bucketed embedding near-dup ``vec_id`` pairs: the corpus is hashed once
-    with deterministic hyperplanes, pairs come from an *equi-join on the
-    bucket signature* (shuffle keyed on bucket — never a cross join),
-    then exact cosine verifies the threshold.
+def lsh_near_duplicates(corpus: DataFrame) -> DataFrame:
+    """LSH-bucketed embedding near-dup ``vec_id`` pairs: the 64-dim
+    corpus is hashed once with 6 deterministic hyperplanes, pairs come
+    from an *equi-join on the bucket signature* (shuffle keyed on
+    bucket — never a cross join), then exact cosine keeps pairs at or
+    above 0.4.
 
     Approximate by construction (pairs straddling a bucket boundary are
     missed) but fully deterministic, so the result is oracle-checkable
     by replaying the same hyperplanes in SQL."""
-    planes = _hyperplanes(dim, num_planes)
+    planes = _hyperplanes(64, 6)
     hashed = corpus.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("vec"),
@@ -532,7 +515,7 @@ def lsh_near_duplicates(
     )
     pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
     return (
-        with_cosine(pairs, "va", "vb", out="cosine")
-        .filter(F.col("cosine") >= threshold)
+        with_cosine(pairs, "va", "vb")
+        .filter(F.col("cosine") >= 0.4)
         .select("id_a", "id_b", "cosine")
     )

@@ -37,8 +37,9 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.split(F.trim(F.col(text_col)), " ")
 
 
-def token_count_col(text_col: str = "text") -> Column:
-    return F.size(tokens_col(text_col))
+def token_count_col() -> Column:
+    """Whitespace token count of ``text``."""
+    return F.size(tokens_col("text"))
 
 
 def marker_hits_col(text_col: str, markers: list[str]) -> Column:
@@ -131,16 +132,16 @@ REDACTION_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def redact(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII scrubbing for training corpora: ``text_redacted`` replaces
-    every match of each of ``REDACTION_PATTERNS`` with ``<LABEL>``,
-    and replacements are counted per label (``n_redactions`` total,
-    ``redaction_counts`` map) so curation can filter documents that
-    are mostly PII.
+def redact(df: DataFrame) -> DataFrame:
+    """PII scrubbing of ``text`` for training corpora:
+    ``text_redacted`` replaces every match of each of
+    ``REDACTION_PATTERNS`` with ``<LABEL>``, and replacements are
+    counted per label (``n_redactions`` total, ``redaction_counts``
+    map) so curation can filter documents that are mostly PII.
 
     Pure codegen projection — a chain of ``regexp_replace`` /
     ``regexp_count`` over the scan, no shuffle, no Python."""
-    redacted = F.col(text_col)
+    redacted = F.col("text")
     counts = []
     for label, pattern in REDACTION_PATTERNS:
         counts.append(
@@ -398,21 +399,13 @@ def oov_rate(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
     )
 
 
-def normalize_unicode(
-    df: DataFrame,
-    text_col: str = "text",
-    form: str = "NFC",
-    strip_accents: bool = False,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Unicode-normalize a text column (NFC/NFKC/NFD/NFKD via Python's
-    ``unicodedata`` — the canonicalization step that makes visually
-    identical strings byte-identical BEFORE hashing/dedup/tokenizing;
-    without it, a composed ``é`` and ``e``+combining-acute are
-    different shingles, different exact-dup hashes, different tokens).
-    ``strip_accents=True`` additionally drops combining marks after an
-    NFD pass (the CCNet/fastText preprocessing convention), then
-    re-normalizes to ``form``.
+def normalize_unicode(df: DataFrame, out_col: str | None = None) -> DataFrame:
+    """NFC-normalize ``text`` (via Python's ``unicodedata`` — the
+    canonicalization step that makes visually identical strings
+    byte-identical BEFORE hashing/dedup/tokenizing; without it, a
+    composed ``é`` and ``e``+combining-acute are different shingles,
+    different exact-dup hashes, different tokens) into ``out_col``
+    (``text`` itself when not given).
 
     Spark has no built-in Unicode-normalization expression, so this is
     a deliberate Arrow-batched ``pandas_udf`` — the sanctioned Python
@@ -425,30 +418,14 @@ def normalize_unicode(
 
     from pyspark.sql.functions import pandas_udf
 
-    if form not in ("NFC", "NFKC", "NFD", "NFKD"):
-        raise ValueError(f"unknown normalization form: {form!r}")
-
     # no type hints on the kernel: `from __future__ import annotations`
     # stringifies them and pandas is module-local here, so pyspark's
     # hint resolution would fail — the explicit returnType suffices
     def _norm_series(s):
-        def one(x):
-            if x is None:
-                return None
-            y = unicodedata.normalize(form, x)
-            if strip_accents:
-                y = "".join(
-                    ch
-                    for ch in unicodedata.normalize("NFD", y)
-                    if not unicodedata.combining(ch)
-                )
-                y = unicodedata.normalize(form, y)
-            return y
-
-        return s.map(one)
+        return s.map(lambda x: x if x is None else unicodedata.normalize("NFC", x))
 
     kernel = pandas_udf(_norm_series, "string")
-    return df.withColumn(out_col or text_col, kernel(F.col(text_col)))
+    return df.withColumn(out_col or "text", kernel(F.col("text")))
 
 
 def source_unigram_js(df: DataFrame) -> DataFrame:

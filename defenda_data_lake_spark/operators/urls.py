@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def extract_domain(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add ``domain``: the URL's host, normalized — lowercased,
+def extract_domain(df: DataFrame) -> DataFrame:
+    """Add ``domain``: the ``url`` column's host, normalized — lowercased,
     trailing dot stripped, and one leading ``www.`` label dropped, the
     conventional display form C4-style pipelines key on.
     Unparseable / relative URLs yield NULL (``try_parse_url`` — the
@@ -42,7 +42,7 @@ def extract_domain(df: DataFrame, url_col: str = "url") -> DataFrame:
 
     Pure codegen projection — no UDF, no shuffle; safe to run in the
     same stage as the parquet scan at any corpus size."""
-    host = F.lower(F.try_parse_url(F.col(url_col), F.lit("HOST")))
+    host = F.lower(F.try_parse_url(F.col("url"), F.lit("HOST")))
     host = F.regexp_replace(host, r"\.$", "")
     host = F.regexp_replace(host, r"^www\.", "")
     return df.withColumn("domain", host)
@@ -61,19 +61,14 @@ def domain_suffixes(domain_col) -> "F.Column":
     )
 
 
-def blocklist_filter(
-    df: DataFrame,
-    blocklist: DataFrame,
-    domain_col: str = "domain",
-    include_subdomains: bool = True,
-) -> DataFrame:
-    """Drop rows whose domain is on the blocklist — including rows on
-    any SUBDOMAIN of a blocked entry when ``include_subdomains``
-    (Dolma's contract: blocking ``tracker.biz`` blocks
-    ``cdn.tracker.biz``).  ``blocklist`` is a DataFrame with the
-    blocked domains in ``blocked_domain`` (already normalized the same
-    way as ``domain_col``).  NULL domains survive (no URL is not
-    evidence of a blocked URL — filter those separately if unwanted).
+def blocklist_filter(df: DataFrame, blocklist: DataFrame) -> DataFrame:
+    """Drop rows whose ``domain`` is on the blocklist — including rows
+    on any SUBDOMAIN of a blocked entry (Dolma's contract: blocking
+    ``tracker.biz`` blocks ``cdn.tracker.biz``).  ``blocklist`` is a
+    DataFrame with the blocked domains in ``blocked_domain`` (already
+    normalized the same way as ``domain``).  NULL domains survive (no
+    URL is not evidence of a blocked URL — filter those separately if
+    unwanted).
 
     Plan: the suffix chain turns subdomain matching into an EQUI-join
     (explode ~3-6 suffix rows per doc, broadcast the blocklist, LEFT
@@ -83,36 +78,25 @@ def blocklist_filter(
     bl = F.broadcast(
         blocklist.select(F.col("blocked_domain").alias("_bl_domain")).distinct()
     )
-    if include_subdomains:
-        probe = df.select(
-            F.col(domain_col).alias("_bl_probe_domain"),
-            F.explode(domain_suffixes(F.col(domain_col))).alias("_bl_sfx"),
-        )
-        hits = (
-            probe.join(bl, probe["_bl_sfx"] == bl["_bl_domain"], "left_semi")
-            .select(F.col("_bl_probe_domain").alias("_bl_hit"))
-            .distinct()
-        )
-        # hit DOMAINS (not doc ids) come back — the hit set is bounded
-        # by distinct blocked-matching domains, broadcastable by the
-        # same argument as the blocklist itself
-        return df.join(
-            F.broadcast(hits),
-            df[domain_col] == hits["_bl_hit"],
-            "left_anti",
-        )
-    return df.join(bl, df[domain_col] == bl["_bl_domain"], "left_anti")
+    probe = df.select(
+        F.col("domain").alias("_bl_probe_domain"),
+        F.explode(domain_suffixes(F.col("domain"))).alias("_bl_sfx"),
+    )
+    hits = (
+        probe.join(bl, probe["_bl_sfx"] == bl["_bl_domain"], "left_semi")
+        .select(F.col("_bl_probe_domain").alias("_bl_hit"))
+        .distinct()
+    )
+    # hit DOMAINS (not doc ids) come back — the hit set is bounded by
+    # distinct blocked-matching domains, broadcastable by the same
+    # argument as the blocklist itself
+    return df.join(F.broadcast(hits), df["domain"] == hits["_bl_hit"], "left_anti")
 
 
-def domain_caps(
-    df: DataFrame,
-    max_per_domain: int,
-    domain_col: str = "domain",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep at most ``max_per_domain`` rows per domain — the C4-style
+def domain_caps(df: DataFrame, max_per_domain: int) -> DataFrame:
+    """Keep at most ``max_per_domain`` rows per ``domain`` — the C4-style
     anti-dominance cap on a training mix.  Survivors are the first
-    ``max_per_domain`` by ``id_col`` ascending (a deterministic
+    ``max_per_domain`` by ``doc_id`` ascending (a deterministic
     arrival-order proxy); the kept rank rides along in
     ``domain_rank`` (1-based).  NULL domains are all kept
     (they form no site, so no site dominates).
@@ -131,17 +115,17 @@ def domain_caps(
     from pyspark.sql import Window
 
     part_key = F.coalesce(
-        F.col(domain_col),
-        F.concat(F.lit(" null "), F.col(id_col).cast("string")),
+        F.col("domain"),
+        F.concat(F.lit(" null "), F.col("doc_id").cast("string")),
     )
-    w = Window.partitionBy(part_key).orderBy(id_col)
+    w = Window.partitionBy(part_key).orderBy("doc_id")
     ranked = df.withColumn("_dc_rank", F.row_number().over(w))
     return (
         ranked.filter(F.col("_dc_rank") <= max_per_domain)
         .withColumn(
             "domain_rank",
             F.when(
-                F.col(domain_col).isNotNull(), F.col("_dc_rank")
+                F.col("domain").isNotNull(), F.col("_dc_rank")
             ).cast("int"),
         )
         .drop("_dc_rank")

@@ -40,7 +40,7 @@ def q89_ann_recall(spark, sf_dir):
     truth = S.cosine_topk(emb, queries, k=10).select(
         "query_id", "neighbor_id"
     )
-    approx = S.lsh_cosine_topk(emb, queries, k=10, num_planes=6).select(
+    approx = S.lsh_cosine_topk(emb, queries, num_planes=6).select(
         "query_id", "neighbor_id", F.lit(1).alias("_hit")
     )
     marked = truth.join(approx, ["query_id", "neighbor_id"], "left")
@@ -125,7 +125,7 @@ def q45_embedding_dedup(spark, sf_dir):
     This is the scale path registered as THE catalog plan; its DuckDB
     oracle replays the same buckets (``Q45_SQL``)."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = S.lsh_near_duplicates(emb, threshold=0.4, num_planes=6, dim=64)
+    pairs = S.lsh_near_duplicates(emb)
     return pairs.select("id_a", "id_b", R("cosine", 6).alias("cosine"))
 
 
@@ -193,7 +193,7 @@ def q48_knn_quantized(spark, sf_dir):
     exactly reproducible in the oracle."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return S.quantized_cosine_topk(emb, queries, k=10).select(
+    return S.quantized_cosine_topk(emb, queries).select(
         "query_id",
         "neighbor_id",
         R("cosine", 6).alias("cosine"),
@@ -235,7 +235,7 @@ def q41_knn_lsh(spark, sf_dir):
     result is value-checked."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return S.lsh_cosine_topk(emb, queries, k=10, num_planes=6).select(
+    return S.lsh_cosine_topk(emb, queries, num_planes=6).select(
         "query_id", "neighbor_id", R("cosine", 6).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
@@ -281,7 +281,7 @@ def q46_knn_ivf(spark, sf_dir):
     exact cosine ranks within it.  Deterministic → value-checked."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return S.ivf_topk(emb, queries, k=10, n_probe=1).select(
+    return S.ivf_topk(emb, queries).select(
         "query_id", "neighbor_id", R("cosine", 6).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
@@ -334,7 +334,7 @@ def q47_kmeans_clusters(spark, sf_dir):
     from defenda_data_lake_spark.operators.clustering import kmeans_assign
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = kmeans_assign(emb, k=8, iterations=3)
+    assigned = kmeans_assign(emb, iterations=3)
     return assigned.groupBy("cluster").agg(
         F.count("*").alias("n_vectors"),
         R(F.avg("sq_dist"), 4).alias("avg_sq_dist"),
@@ -432,7 +432,7 @@ def q96_knn_pq(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    books = pq_train(emb, m=4, k=16, iterations=2, dim=64)
+    books = pq_train(emb, dim=64)
     codes = pq_encode(emb, books)
     queries = [
         (r["vec_id"], list(r["embedding"]))
@@ -441,7 +441,7 @@ def q96_knn_pq(spark, sf_dir):
         .limit(5)
         .collect()
     ]
-    top = pq_topk(codes, queries, books, k_top=10)
+    top = pq_topk(codes, queries, books)
     return top.select(
         F.col("query_id").cast("long").alias("query_id"),
         "vec_id",
@@ -571,9 +571,7 @@ def q73_semdedup(spark, sf_dir):
     # identical to the uncapped form at every cap (the operator's
     # pinned parity test sweeps caps 1/3/10000 and the byte form), so
     # the oracle needs no mirror.
-    out = semdedup(
-        emb, k=8, iterations=3, threshold=0.4, max_group_bytes=64 << 20
-    )
+    out = semdedup(emb, max_group_bytes=64 << 20)
     return out.groupBy("cluster").agg(
         F.count("*").alias("n_vectors"),
         F.sum(F.col("is_duplicate").cast("long")).alias("n_duplicates"),
@@ -619,7 +617,7 @@ def q105_prototypicality(spark, sf_dir):
     from defenda_data_lake_spark.operators.clustering import kmeans_assign
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = kmeans_assign(emb, k=8, iterations=3)
+    assigned = kmeans_assign(emb, iterations=3)
     w = Window.partitionBy("cluster").orderBy(F.col("sq_dist").asc(), F.col("id").asc())
     return assigned.select(
         F.col("id").alias("vec_id"),
@@ -817,7 +815,7 @@ def q126_embedding_drift(spark, sf_dir):
     from defenda_data_lake_spark.operators.sampling import hash_bucket
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = kmeans_assign(emb, k=8, iterations=3)
+    assigned = kmeans_assign(emb, iterations=3)
     agg = (
         assigned.withColumn("_old", hash_bucket("id", "embdrift") < 5000)
         .groupBy("cluster")

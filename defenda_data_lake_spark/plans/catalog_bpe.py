@@ -312,7 +312,6 @@ def q117_token_budget_bpe(spark, sf_dir):
         token_col="n_tok_b",
         key_col="score",
         tie_cols=["doc_id"],
-        descending=True,
         budget_ratio=(1, 4),
         buckets=32,
     )
@@ -357,7 +356,6 @@ def q118_group_token_budget_bpe(spark, sf_dir):
         key_col="score",
         group_col="lang",
         tie_cols=["doc_id"],
-        descending=True,
         budget_ratio=(1, 4),
     )
     return sel.select(

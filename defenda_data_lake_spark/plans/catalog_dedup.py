@@ -50,10 +50,7 @@ def q31_dedup_minhash(spark, sf_dir):
     and zero discriminating signal.  The oracle mirrors the cap with a
     HAVING over the same bucket grouping."""
     docs = _t(spark, sf_dir, "documents")
-    return D.minhash_lsh_candidates(
-        docs, num_hashes=8, bands=2, shingle_n=3,
-        max_bucket_docs=_Q31_MAX_BUCKET_DOCS,
-    )
+    return D.minhash_lsh_candidates(docs, max_bucket_docs=_Q31_MAX_BUCKET_DOCS)
 
 # q31's capped variant: buckets above _Q31_MAX_BUCKET_DOCS are skipped
 # (mirrors minhash_lsh_candidates(max_bucket_docs=...)); q49/q63 keep
@@ -78,7 +75,7 @@ def q77_bucket_dedupe(spark, sf_dir):
     ``dup_of`` that claimant.  State-bounded verification: one
     signature per bucket."""
     docs = _t(spark, sf_dir, "documents")
-    out = D.minhash_bucket_dedupe(docs, min_hash_agreement=0.5)
+    out = D.minhash_bucket_dedupe(docs)
     return out.select("doc_id", "dup_of")
 
 
@@ -118,7 +115,7 @@ def q78_chunk_dedupe(spark, sf_dir):
     surviving chunks — the Dolma/CCNet boilerplate-paragraph step that
     document-level dedup misses.  Two uniform-keyed exchanges."""
     docs = _t(spark, sf_dir, "documents")
-    out = D.chunk_level_dedupe(docs, chunk_words=50)
+    out = D.chunk_level_dedupe(docs)
     return out.select(
         F.col("id").alias("doc_id"), "n_chunks", "n_dropped", "clean_text"
     )
@@ -158,7 +155,7 @@ def q81_dup_span_coverage(spark, sf_dir):
     word-gram relaxation of suffix-array substring dedup).  Two
     uniform-keyed windows (gram hash, then doc), no pair expansion."""
     docs = _t(spark, sf_dir, "documents")
-    out = D.duplicate_span_coverage(docs, gram_words=5)
+    out = D.duplicate_span_coverage(docs)
     return out.select(
         F.col("id").alias("doc_id"),
         F.col("n_words").cast("long").alias("n_words"),
@@ -227,7 +224,7 @@ def q82_dup_span_removal(spark, sf_dir):
     choice share the exchange), covered-position anti-join, bounded
     per-doc reassembly."""
     docs = _t(spark, sf_dir, "documents")
-    out = D.duplicate_span_removal(docs, gram_words=5)
+    out = D.duplicate_span_removal(docs)
     return out.select(
         F.col("id").alias("doc_id"),
         F.col("n_words").cast("long").alias("n_words"),
@@ -291,7 +288,7 @@ def q49_dup_clusters(spark, sf_dir):
     only driver traffic is one scalar per round.  Exact — the oracle
     replays reachability with a recursive CTE."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(docs, num_hashes=8, bands=2, shingle_n=3)
+    pairs = D.minhash_lsh_candidates(docs)
     return D.duplicate_clusters(docs, pairs)
 
 
@@ -332,10 +329,10 @@ def q51_decontamination(spark, sf_dir):
     from defenda_data_lake_spark.operators.sampling import with_split
 
     docs = _t(spark, sf_dir, "documents")
-    tagged = with_split(docs, "doc_id", test_fraction=0.1, salt="split")
+    tagged = with_split(docs, "doc_id")
     train = tagged.filter(F.col("split") == "train")
     test = tagged.filter(F.col("split") == "test")
-    out = D.ngram_contamination(train, test, n=8)
+    out = D.ngram_contamination(train, test)
     return out.select(
         "train_doc", "test_doc", "n_shared", R("test_overlap", 4).alias("test_overlap")
     )
@@ -377,7 +374,7 @@ def q32_dedup_jaccard(spark, sf_dir):
     bounded — and the oracle mirrors both choices."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
-        docs, shingle_n=3, threshold=0.3, max_shingle_docs=_Q32_MAX_SHINGLE_DOCS
+        docs, threshold=0.3, max_shingle_docs=_Q32_MAX_SHINGLE_DOCS
     )
     return pairs.select(
         "id_a", "id_b", R("jaccard", 4).alias("jaccard")
@@ -420,9 +417,9 @@ def q98_leakage_safe_split(spark, sf_dir):
     from defenda_data_lake_spark.operators.sampling import with_split
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(docs, num_hashes=8, bands=2, shingle_n=3)
+    pairs = D.minhash_lsh_candidates(docs)
     clusters = D.duplicate_clusters(docs, pairs)
-    return with_split(clusters, "cluster_id", test_fraction=0.1, salt="clsplit")
+    return with_split(clusters, "cluster_id", salt="clsplit")
 
 
 Q98_SQL = f"""
@@ -457,7 +454,7 @@ def q42_simhash_pairs(spark, sf_dir):
     DuckDB's ``md5_number_upper`` reproduces exactly, so even this
     pandas-hosted operator is value-checked."""
     docs = _t(spark, sf_dir, "documents")
-    return D.simhash_near_duplicates(docs, max_hamming=3)
+    return D.simhash_near_duplicates(docs)
 
 
 def _simhash_sql() -> str:
@@ -515,7 +512,7 @@ def q58_ngram_novelty(spark, sf_dir):
     ``ngram_novelty``): shingles claimed by their minimum doc id, two
     narrow long-keyed shuffles, shingle kernel runs once."""
     docs = _t(spark, sf_dir, "documents")
-    out = D.ngram_novelty(docs, shingle_n=3)
+    out = D.ngram_novelty(docs)
     return out.select(
         "doc_id",
         "n_shingles",
@@ -547,7 +544,7 @@ def q60_containment_pairs(spark, sf_dir):
     SCALING.md round-4 A/B), hot-shingle guard on."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.ngram_containment_pairs(
-        docs, shingle_n=3, threshold=0.8, max_shingle_docs=_Q32_MAX_SHINGLE_DOCS
+        docs, max_shingle_docs=_Q32_MAX_SHINGLE_DOCS
     )
     return pairs.select(
         "id_a", "id_b", R("containment", 4).alias("containment")
@@ -588,7 +585,7 @@ def q63_candidate_verify(spark, sf_dir):
     vectorized Arrow/numpy kernel."""
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = D.minhash_lsh_candidates(docs, num_hashes=8, bands=2, shingle_n=3)
+    pairs = D.minhash_lsh_candidates(docs)
     ea = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     eb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     # candidates broadcast into the first embedding scan; the enriched
@@ -636,11 +633,7 @@ def q102_edit_distance_pairs(spark, sf_dir):
     from defenda_data_lake_spark.operators import linkage as LK
 
     docs = _t(spark, sf_dir, "documents")
-    return LK.edit_distance_pairs(
-        docs, "doc_id", "text",
-        block_tokens=3, prefix_len=64, max_distance=8, max_block_rows=1000,
-        neighbor_window=10,
-    )
+    return LK.edit_distance_pairs(docs, neighbor_window=10)
 
 
 Q102_SQL = r"""
@@ -748,7 +741,7 @@ def q107_quality_survivors(spark, sf_dir):
     exact integer, so survivor identity is engine-stable with no
     rounding contract."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(docs, num_hashes=8, bands=2, shingle_n=3)
+    pairs = D.minhash_lsh_candidates(docs)
     out = D.quality_survivor_dedupe(docs, pairs, "n_chars")
     return out.select("doc_id", "cluster_id", "cluster_size", "n_chars")
 
@@ -797,7 +790,7 @@ def q111_boilerplate_removal(spark, sf_dir):
     per-doc reassembly — no window over the corpus-wide hash
     partitioning, no first-occurrence ordering, no id sign constraint."""
     docs = _t(spark, sf_dir, "documents")
-    out = D.boilerplate_chunk_removal(docs, chunk_words=20, min_doc_freq=2)
+    out = D.boilerplate_chunk_removal(docs, min_doc_freq=2)
     return out.select(
         F.col("id").alias("doc_id"), "n_chunks", "n_boiler", "clean_text"
     )

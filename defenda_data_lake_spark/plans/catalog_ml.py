@@ -46,8 +46,8 @@ def _nb_scored_view(spark, sf_dir):
             F.coalesce((F.col("n_chars") >= 300).cast("long"), F.lit(0)),
         )
         train = labeled.filter(CL.train_split_expr("doc_id"))
-        model, totals = CL.nb_train(train, "_nb_y", "doc_id", "text")
-        scored = CL.nb_score(docs, model, totals, "doc_id", "text")
+        model, totals = CL.nb_train(train, "_nb_y")
+        scored = CL.nb_score(docs, model, totals)
         return scored.join(
             labeled.select(
                 "doc_id",
@@ -145,8 +145,7 @@ def q95_sampled_diff(spark, sf_dir):
         ).otherwise(F.col("o_totalprice")),
     )
     return sampled_snapshot_diff_summary(
-        old, new, ["o_orderkey"], ["o_totalprice", "o_orderstatus"],
-        prefix_hex=1,
+        old, new, ["o_orderkey"], ["o_totalprice", "o_orderstatus"]
     )
 
 
@@ -212,7 +211,7 @@ def q97_corpus_datasheet(spark, sf_dir):
     words = docs.select(
         F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
     ).filter(F.length("word") > 0)
-    vocab = hll_distinct(words, "word", p=8)
+    vocab = hll_distinct(words, "word")
     return stats.crossJoin(F.broadcast(vocab)).select(
         "n_docs",
         "n_langs",
@@ -365,12 +364,7 @@ def q100_pagerank(spark, sf_dir):
     # pinned edge relation is dst-partitioned once instead (see
     # operators/graph.py docstring; values exact-integer identical,
     # equivalence pinned in tests/test_r13_optimizations.py).
-    pr = pagerank(
-        symmetrize(raw),
-        iterations=5,
-        symmetric_input=True,
-        broadcast_ranks=True,
-    )
+    pr = pagerank(symmetrize(raw), symmetric_input=True, broadcast_ranks=True)
     return pr.select(
         F.concat(
             F.when(F.col("node_id") % 2 == 0, F.lit("c")).otherwise(
@@ -446,7 +440,7 @@ def q101_triangle_counts(spark, sf_dir):
     from defenda_data_lake_spark.operators.graph import symmetrize, triangle_counts
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(docs, num_hashes=8, bands=2, shingle_n=3)
+    pairs = D.minhash_lsh_candidates(docs)
     return triangle_counts(symmetrize(pairs, src="id_a", dst="id_b"))
 
 
@@ -732,7 +726,7 @@ def q123_classifier_calibration(spark, sf_dir):
     )
 
     scored = _nb_scored_view(spark, sf_dir).filter(~F.col("_nb_train"))
-    return nb_calibration_scored(scored, bins=10).orderBy("bin")
+    return nb_calibration_scored(scored).orderBy("bin")
 
 
 Q123_SQL = f"""
@@ -792,9 +786,7 @@ def q127_preference_pairs(spark, sf_dir):
     from defenda_data_lake_spark.operators import dedup as D
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, num_hashes=8, bands=2, shingle_n=3
-    )
+    pairs = D.minhash_lsh_candidates(docs)
     clusters = D.duplicate_clusters(docs, pairs)
     scored = _nb_scored_view(spark, sf_dir)
     r4 = lambda c: F.round(c * 10000, 0) / 10000  # noqa: E731

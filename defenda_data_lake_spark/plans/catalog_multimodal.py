@@ -48,7 +48,7 @@ def q44_multimodal_decode(spark, sf_dir):
         "doc_id",
         "payload",
     )
-    return M.decode_media(media, fake=True).select(
+    return M.decode_media(media).select(
         "media_id", "width", "height", "n_channels"
     )
 
@@ -132,7 +132,7 @@ def q74_resize_plumbing(spark, sf_dir):
         "doc_id",
         "payload",
     )
-    out = M.resize_images(media, 32, 24, fake=True)
+    out = M.resize_images(media, 32, 24)
     return out.select(
         "media_id",
         F.md5("content").alias("payload_md5"),
@@ -172,8 +172,8 @@ def q109_image_dhash(spark, sf_dir):
     pair expansion, complete recall at hamming <= 3 with 4 blocks, no
     cartesian (plan-pinned in test_multimodal.py)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 72)
-    media = M.synthetic_gray_png(docs, text_col="text", id_col="doc_id")
-    return M.dhash_near_duplicates(media, max_hamming=3)
+    media = M.synthetic_gray_png(docs)
+    return M.dhash_near_duplicates(media)
 
 
 def _dhash_sql() -> str:
@@ -254,8 +254,8 @@ def q114_audio_fingerprint(spark, sf_dir):
     and drop), and the two only coincide while n_chars == length(text)
     — the q109 oracle defends the same way."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 130)
-    media = M.synthetic_pcm_wav(docs, text_col="text", id_col="doc_id")
-    return M.audio_near_duplicates(media, max_hamming=3)
+    media = M.synthetic_pcm_wav(docs)
+    return M.audio_near_duplicates(media)
 
 
 def _afp_sql() -> str:

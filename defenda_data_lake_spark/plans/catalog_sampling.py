@@ -42,7 +42,6 @@ def q92_token_budget(spark, sf_dir):
         token_col="n_tok",
         key_col="score",
         tie_cols=["doc_id"],
-        descending=True,
         budget_ratio=(1, 4),
         buckets=32,
     )
@@ -99,7 +98,6 @@ def q93_group_token_budget(spark, sf_dir):
         key_col="score",
         group_col="lang",
         tie_cols=["doc_id"],
-        descending=True,
         budget_ratio=(1, 4),
     )
     return sel.select(
@@ -218,7 +216,7 @@ def q38_dataset_split(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     return (
-        with_split(docs, "doc_id", test_fraction=0.1, salt="split")
+        with_split(docs, "doc_id")
         .groupBy("source", "split")
         .agg(
             F.count("*").alias("n_docs"),
@@ -305,9 +303,7 @@ def q59_temperature_mix(spark, sf_dir):
     tiny aggregation, rates broadcast back onto the corpus, the corpus
     itself is never shuffled before the summary group-by."""
     docs = _t(spark, sf_dir, "documents")
-    tagged = SA.temperature_resample(
-        docs, "doc_id", "source", target_fraction=0.5, salt="temp"
-    )
+    tagged = SA.temperature_resample(docs, "doc_id", "source")
     return tagged.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("keep").alias("n_kept"),
@@ -358,7 +354,7 @@ def q72_weighted_sample(spark, sf_dir):
     from defenda_data_lake_spark.operators.sampling import weighted_sample
 
     docs = _t(spark, sf_dir, "documents")
-    out = weighted_sample(docs, "doc_id", "n_chars", k=100, salt="wsample")
+    out = weighted_sample(docs, "doc_id", "n_chars", k=100)
     return out.select(
         F.col("sample_rank").cast("long").alias("sample_rank"),
         "doc_id",
@@ -398,9 +394,7 @@ def q75_group_weighted_sample(spark, sf_dir):
     from defenda_data_lake_spark.operators.sampling import group_weighted_sample
 
     docs = _t(spark, sf_dir, "documents")
-    out = group_weighted_sample(
-        docs, "source", "doc_id", "n_chars", k=20, salt="gwsample"
-    )
+    out = group_weighted_sample(docs, "source", "doc_id", "n_chars", k=20)
     return out.select(
         "source",
         F.col("sample_rank").cast("long").alias("sample_rank"),
@@ -443,9 +437,7 @@ def q112_dsir_weights(spark, sf_dir):
     table broadcasts back into the feature stream, and the only
     corpus-sized exchange is the final per-doc mean."""
     docs = _t(spark, sf_dir, "documents")
-    out = SA.dsir_importance_weights(
-        docs, F.col("lang") == "en", buckets=1024, alpha=0.5
-    )
+    out = SA.dsir_importance_weights(docs, F.col("lang") == "en")
     return out.select(
         F.col("id").alias("doc_id"),
         "n_feats",

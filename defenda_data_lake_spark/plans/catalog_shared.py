@@ -69,13 +69,17 @@ def _sql_over(
     return df
 
 
+#: per-table parquet footprint above which a table or a derived view
+#: over it stays unpinned (see :func:`warm_table_cache`)
+CACHE_BUDGET_BYTES = 2 << 30
+
+
 def derived_view(
     spark: SparkSession,
     sf_dir: str,
     name: str,
     build,
     source_table: str | None = None,
-    max_bytes: int = 2 << 30,
 ) -> DataFrame:
     """Memoized MATERIALIZED PROJECTION over the canonical tables —
     the engine's computed-column cache (VERDICT r8 item 2, the q20
@@ -87,8 +91,8 @@ def derived_view(
     Delta/Iceberg generated column.
 
     Scale policy mirrors :func:`warm_table_cache`: if ``source_table``
-    is given and its parquet footprint exceeds ``max_bytes``, the
-    projection is returned UNPINNED — at 100 TB the fact table's
+    is given and its parquet footprint exceeds ``CACHE_BUDGET_BYTES``,
+    the projection is returned UNPINNED — at 100 TB the fact table's
     derived view streams (same plan, fused into each consumer), while
     at interactive scale it pins.  Values are byte-identical either
     way; :func:`clear_table_cache` unpins and forgets."""
@@ -107,7 +111,7 @@ def derived_view(
         pin = True
         if source_table is not None:
             size = _path_bytes(_os.path.join(sf_dir, f"{source_table}.parquet"))
-            pin = size is not None and size <= max_bytes
+            pin = size is not None and size <= CACHE_BUDGET_BYTES
         if pin:
             df = df.persist()
         _DERIVED_CACHE[key] = df
@@ -222,13 +226,11 @@ def _cache_partitions(size: int, cores: int) -> int:
     return int(min(2 * cores, max(max(8, cores // 4), size // (1 << 20))))
 
 
-def warm_table_cache(
-    spark: SparkSession, sf_dir: str, max_bytes: int = 2 << 30
-) -> dict[str, int]:
-    """Pin every table of ``sf_dir`` that fits ``max_bytes`` in Spark's
-    in-memory columnar cache — the local
-    analog of a cluster's NVMe/Delta-style table cache for interactive
-    workloads that re-scan the same tables query after query.
+def warm_table_cache(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """Pin every table of ``sf_dir`` that fits ``CACHE_BUDGET_BYTES``
+    in Spark's in-memory columnar cache — the local analog of a
+    cluster's NVMe/Delta-style table cache for interactive workloads
+    that re-scan the same tables query after query.
 
     Two things happen per table:
 
@@ -250,8 +252,8 @@ def warm_table_cache(
       (15x DuckDB); size-proportional caching restores the full
       core count exactly when the data is big enough to use it.
 
-    Scale safety: ``max_bytes`` is a per-table budget — at 100 TB the
-    fact tables blow the budget and are skipped (their scans are
+    Scale safety: ``CACHE_BUDGET_BYTES`` is a per-table budget — at
+    100 TB the fact tables blow the budget and are skipped (their scans are
     many-split and parallel anyway), while dimensions still pin.  This
     is deliberately the same policy a cluster cache applies: cache what
     is small and hot, stream what is big.
@@ -303,7 +305,7 @@ def warm_table_cache(
     sizes: dict[str, int] = {}
     for name in tables:
         size = _path_bytes(_os.path.join(sf_dir, f"{name}.parquet"))
-        if size is not None and size <= max_bytes:
+        if size is not None and size <= CACHE_BUDGET_BYTES:
             sizes[name] = size
 
     # co-grouped tables must share ONE partition count or the join

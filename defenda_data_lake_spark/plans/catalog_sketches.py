@@ -27,7 +27,7 @@ def q79_hll_distinct(spark, sf_dir):
     words = docs.select(
         "lang", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
     ).filter(F.length("word") > 0)
-    est = hll_distinct(words, "word", ["lang"], p=8)
+    est = hll_distinct(words, "word", ["lang"])
     exact = words.groupBy("lang").agg(
         F.countDistinct("word").alias("exact_distinct")
     )
@@ -91,7 +91,7 @@ def q80_bloom_distinct(spark, sf_dir):
     words = docs.select(
         "lang", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
     ).filter(F.length("word") > 0)
-    est = bloom_cardinality(words, "word", ["lang"], m_hex_digits=4, k=2)
+    est = bloom_cardinality(words, "word", ["lang"])
     exact = words.groupBy("lang").agg(
         F.countDistinct("word").alias("exact_distinct")
     )
@@ -143,7 +143,7 @@ def q83_count_min_words(spark, sf_dir):
     words = docs.select(
         "lang", F.explode(F.split(F.trim(F.col("text")), " ")).alias("word")
     ).filter(F.length("word") > 0)
-    cells = count_min_table(words, "word", ["lang"], d=3, w_hex_digits=3)
+    cells = count_min_table(words, "word", ["lang"])
     exact = words.groupBy("lang", "word").agg(
         F.count("*").alias("exact_cnt")
     )
@@ -159,7 +159,7 @@ def q83_count_min_words(spark, sf_dir):
         .filter(F.col("_rk") <= 10)
         .drop("_rk")
     )
-    est = count_min_lookup(cells, top, "word", ["lang"], d=3, w_hex_digits=3)
+    est = count_min_lookup(cells, top, "word", ["lang"])
     return est.select("lang", "word", "exact_cnt", "cm_estimate")
 
 
@@ -212,9 +212,7 @@ def q88_quantile_sketch(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events")
-    est = histogram_quantiles(
-        ev, "value", ["event_type"], width=1.0, quantiles=(0.5, 0.9, 0.99)
-    )
+    est = histogram_quantiles(ev, "value", ["event_type"])
     return est.select(
         "event_type",
         "quantile",
@@ -272,9 +270,9 @@ def q90_hll_rollup(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    daily = hll_register_table(ev, "user_id", ["event_type", "day"], p=8)
+    daily = hll_register_table(ev, "user_id", ["event_type", "day"])
     merged = hll_merge(daily.drop("day"), ["event_type"])
-    est = hll_estimate_from_registers(merged, ["event_type"], p=8)
+    est = hll_estimate_from_registers(merged, ["event_type"])
     return est.select(
         "event_type", R("hll_estimate", 4).alias("distinct_users_est")
     )
@@ -343,9 +341,8 @@ def q91_overlap_sketch(spark, sf_dir):
     before = base.filter(F.col("l_shipdate") < cut)
     after = base.filter(F.col("l_shipdate") >= cut)
     est = hash_sample_overlap(
-        hash_sample_sketch(before, "l_partkey", prefix_hex=1),
-        hash_sample_sketch(after, "l_partkey", prefix_hex=1),
-        prefix_hex=1,
+        hash_sample_sketch(before, "l_partkey"),
+        hash_sample_sketch(after, "l_partkey"),
     )
     flags = base.groupBy("l_partkey").agg(
         F.max(F.when(F.col("l_shipdate") < cut, 1).otherwise(0)).alias("_ia"),

@@ -406,7 +406,6 @@ def q56_contrastive_pairs(spark, sf_dir):
         ),
         "qv",
         "cv",
-        out="cosine",
     )
     wpos = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("cand_id")
@@ -486,7 +485,7 @@ FROM pos JOIN neg USING (query_id)
 def q33_text_tokens(spark, sf_dir):
     """Token counting per language (whitespace + BPE-ish regex)."""
     docs = _t(spark, sf_dir, "documents")
-    n_tokens = X.token_count_col("text")
+    n_tokens = X.token_count_col()
     n_subtokens = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\w+|[^\w\s]"), 0))
     return (
         docs.select("lang", n_tokens.alias("n_tok"), n_subtokens.alias("n_sub"))
@@ -891,7 +890,7 @@ def q71_pii_redaction(spark, sf_dir):
     from defenda_data_lake_spark.operators.text import redact
 
     docs = _t(spark, sf_dir, "documents")
-    out = redact(docs, "text")
+    out = redact(docs)
     return out.select(
         "doc_id",
         F.md5("text_redacted").alias("redacted_md5"),
@@ -1023,7 +1022,7 @@ def q108_unicode_normalize(spark, sf_dir):
     synthetic composed/decomposed rows in test_text_quality.py
     (the q74 resize-plumbing precedent)."""
     docs = _t(spark, sf_dir, "documents")
-    out = X.normalize_unicode(docs, "text", form="NFC", out_col="text_nfc")
+    out = X.normalize_unicode(docs, out_col="text_nfc")
     return out.select(
         "doc_id",
         "text_nfc",
@@ -1068,14 +1067,12 @@ def q110_domain_curation(spark, sf_dir):
         .otherwise(F.lit("not a url"))
     )
     with_url = docs.withColumn("url", url)
-    dom = U.extract_domain(with_url, "url")
+    dom = U.extract_domain(with_url)
     blocklist = spark.createDataFrame(
         [("tracker.biz",), ("ads.example.com",)], "blocked_domain string"
     )
-    kept = U.blocklist_filter(dom, blocklist, "domain")
-    capped = U.domain_caps(
-        kept, max_per_domain=3, domain_col="domain", id_col="doc_id"
-    )
+    kept = U.blocklist_filter(dom, blocklist)
+    capped = U.domain_caps(kept, max_per_domain=3)
     return capped.select("doc_id", "domain", "domain_rank")
 
 

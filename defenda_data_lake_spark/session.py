@@ -8,8 +8,10 @@ overridden down for local testing):
   TPC-H-ish join/agg surface efficient at 100 TB without hand-tuning
   per-query partition counts.
 * ``spark.sql.shuffle.partitions`` is only the *initial* number — AQE
-  coalesces.  On a 1000-executor cluster you would raise the default to
-  ~2-4x total cores; locally we pin it to the core count.
+  coalesces.  On a 1000-executor cluster you would raise it to ~2-4x
+  total cores; ``get_spark`` sets it to ``SPARK_GRAFT_CPUS`` (the
+  host's core count when unset), the same count as the ``local``
+  master's threads.
 * Arrow enabled: every Python-side operator in this package is hosted in
   ``mapInPandas``/``pandas_udf`` (Arrow-batched), never row-at-a-time UDFs.
 * Under a ``local`` master, Python workers fork from ``worker_daemon``
@@ -67,19 +69,17 @@ def default_driver_memory() -> str:
 def get_spark(
     app_name: str = "defenda-data-lake-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's standard config
     and the Presto-compatibility SQL functions registered."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # coalesce small shuffles down to the advisory size instead of

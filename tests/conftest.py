@@ -19,7 +19,6 @@ def spark(tmp_path_factory):
     warehouse = tmp_path_factory.mktemp("warehouse")
     spark = get_spark(
         app_name="defenda-tests",
-        shuffle_partitions=4,
         extra_conf={"spark.sql.warehouse.dir": str(warehouse)},
     )
     yield spark

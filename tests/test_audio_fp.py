@@ -95,7 +95,7 @@ def test_audio_pairs_recall_vs_bruteforce(spark):
     }
     got = {
         (r["id_a"], r["id_b"])
-        for r in audio_near_duplicates(media, max_hamming=3).collect()
+        for r in audio_near_duplicates(media).collect()
     }
     assert got == want and want  # non-trivial set
 

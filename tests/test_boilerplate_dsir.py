@@ -12,31 +12,36 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------- boilerplate
 
 
+def _words(tag: str, n: int) -> str:
+    """``n`` distinct words: ``tag0 tag1 …``."""
+    return " ".join(f"{tag}{i}" for i in range(n))
+
+
 def test_boilerplate_chunk_removal_drops_every_occurrence(spark):
     from defenda_data_lake_spark.operators.dedup import boilerplate_chunk_removal
 
+    # 20-word chunks
+    a, d, x, p, st = (_words(t, 20) for t in "adxps")
     docs = spark.createDataFrame(
         [
-            (1, "a b c d e f"),   # chunks(3): 'a b c' | 'd e f'
-            (2, "a b c x y z"),   # shares 'a b c' with docs 1 and 3
-            (3, "a b c"),         # whole doc is the boilerplate chunk
-            (4, "p q r"),         # unique: untouched
-            (5, "s t u s t u"),   # chunk repeated within ONE doc only:
-        ],                        # df_docs=1 -> NOT boilerplate
+            (1, f"{a} {d}"),   # chunks: a | d
+            (2, f"{a} {x}"),   # shares a with docs 1 and 3
+            (3, a),            # whole doc is the boilerplate chunk
+            (4, p),            # unique: untouched
+            (5, f"{st} {st}"), # chunk repeated within ONE doc only:
+        ],                     # df_docs=1 -> NOT boilerplate
         ["doc_id", "text"],
     )
     out = {
         r["id"]: (r["n_chunks"], r["n_boiler"], r["clean_text"])
-        for r in boilerplate_chunk_removal(
-            docs, chunk_words=3, min_doc_freq=2
-        ).collect()
+        for r in boilerplate_chunk_removal(docs, min_doc_freq=2).collect()
     }
     # unlike chunk_level_dedupe, the FIRST occurrence is removed too
-    assert out[1] == (2, 1, "d e f")
-    assert out[2] == (2, 1, "x y z")
+    assert out[1] == (2, 1, d)
+    assert out[2] == (2, 1, x)
     assert out[3] == (1, 1, "")      # fully boilerplate -> empty doc
-    assert out[4] == (1, 0, "p q r")
-    assert out[5] == (2, 0, "s t u s t u")  # distinct-DOC freq, not occurrences
+    assert out[4] == (1, 0, p)
+    assert out[5] == (2, 0, f"{st} {st}")  # distinct-DOC freq, not occurrences
 
 
 def test_boilerplate_vs_first_occurrence_semantics(spark):
@@ -53,13 +58,11 @@ def test_boilerplate_vs_first_occurrence_semantics(spark):
     )
     first = {
         r["id"]: r["clean_text"]
-        for r in chunk_level_dedupe(docs, chunk_words=3).collect()
+        for r in chunk_level_dedupe(docs).collect()
     }
     none = {
         r["id"]: r["clean_text"]
-        for r in boilerplate_chunk_removal(
-            docs, chunk_words=3, min_doc_freq=2
-        ).collect()
+        for r in boilerplate_chunk_removal(docs, min_doc_freq=2).collect()
     }
     assert first == {1: "a b c", 2: "", 3: ""}
     assert none == {1: "", 2: "", 3: ""}
@@ -75,9 +78,7 @@ def test_boilerplate_negative_ids_allowed(spark):
     )
     out = {
         r["id"]: r["n_boiler"]
-        for r in boilerplate_chunk_removal(
-            docs, chunk_words=3, min_doc_freq=2
-        ).collect()
+        for r in boilerplate_chunk_removal(docs, min_doc_freq=2).collect()
     }
     assert out == {-1: 1, 2: 1}
 
@@ -96,9 +97,7 @@ def test_null_text_docs_are_never_dropped(spark):
     )
     cleaned = {
         r["id"]: (r["n_chunks"], r["clean_text"])
-        for r in boilerplate_chunk_removal(
-            docs, chunk_words=3, min_doc_freq=2
-        ).collect()
+        for r in boilerplate_chunk_removal(docs, min_doc_freq=2).collect()
     }
     assert set(cleaned) == {1, 2, 3}
     assert cleaned[2] == (1, "")  # one empty chunk, retained

@@ -8,7 +8,6 @@ unpartitioned corpus window)."""
 import re
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from defenda_data_lake_spark.operators import bpe as B
@@ -289,17 +288,25 @@ def test_q117_no_unpartitioned_corpus_window(spark):
         assert "HashAggregate" in head or "FileScan" not in head
 
 
+def _no_op_pad() -> list[str]:
+    """Merges of uppercase symbols, which never occur in the lowercased
+    a-z word stream: twice the alphabet pushes a learned table past the
+    expr ceiling without changing any token count."""
+    pad = [f"Q {c}" for c in "abcdefghijklmnopqrstuvwxyz"]
+    return pad + pad
+
+
 def test_arrow_kernel_matches_expr_kernel(spark):
     """The Arrow token-count kernel (production-sized merge tables)
     and the codegen replace chain produce identical (w, n_tok) rows —
-    same literal-replace semantics, different execution strategy."""
+    same literal-replace semantics, different execution strategy.  The
+    learned table runs the chain; padded with no-op merges past
+    MAX_EXPR_REPLACES, the same table runs the Arrow kernel."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     merges = B.learn_bpe_spark(docs)
-    expr_rows = sorted(
-        map(tuple, B.word_token_counts(docs, merges, kernel="expr").collect())
-    )
+    expr_rows = sorted(map(tuple, B.word_token_counts(docs, merges).collect()))
     arrow_rows = sorted(
-        map(tuple, B.word_token_counts(docs, merges, kernel="arrow").collect())
+        map(tuple, B.word_token_counts(docs, merges + _no_op_pad()).collect())
     )
     assert expr_rows == arrow_rows and len(expr_rows) > 20
 
@@ -317,11 +324,9 @@ def test_kernel_auto_switches_past_expr_ceiling(spark):
     )
     assert "Python" not in plan_small
 
-    # pad with no-op merges (uppercase symbols never occur in the
-    # lowercased a-z word stream) to push the chain past the converter
+    # pad with no-op merges to push the chain past the converter
     # ceiling without depending on the corpus's vocabulary size
-    pad = [f"Q {c}" for c in "abcdefghijklmnopqrstuvwxyz"]
-    big = small + pad + pad
+    big = small + _no_op_pad()
     assert len(big) * B.N_PASSES > B.MAX_EXPR_REPLACES
     wtc = B.word_token_counts(docs, big)
     plan_big = wtc._jdf.queryExecution().executedPlan().toString()
@@ -330,16 +335,10 @@ def test_kernel_auto_switches_past_expr_ceiling(spark):
     # the pad merges are no-ops, so the arrow result must equal the
     # 24-merge expr result row-for-row
     assert rows == sorted(
-        map(tuple, B.word_token_counts(docs, small, kernel="expr").collect())
+        map(tuple, B.word_token_counts(docs, small).collect())
     )
     # ...and the full accounting composes with the arrow path
     total = (
         B.tokenize_corpus(docs, big).agg(F.sum("n_tokens")).collect()[0][0]
     )
     assert total > 0
-
-
-def test_kernel_rejects_unknown_name(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    with pytest.raises(ValueError, match="kernel must be"):
-        B.word_token_counts(docs, ["a b"], kernel="gpu")

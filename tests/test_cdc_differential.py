@@ -70,24 +70,23 @@ def _py_boilerplate(rows, chunk_words, min_doc_freq):
 def test_boilerplate_matches_python_reference_random(spark):
     rng = random.Random(7)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    boiler = "copy right footer text"  # planted 4-word boilerplate
+    # planted boilerplate: one whole 20-word chunk
+    boiler = " ".join(f"footer{i}" for i in range(20))
     rows = []
     for doc_id in range(40):
-        words = [rng.choice(vocab) for _ in range(rng.randint(0, 12))]
+        words = [rng.choice(vocab) for _ in range(rng.randint(0, 60))]
         if rng.random() < 0.5:
             # insert the boilerplate at a chunk boundary so it repeats
             # verbatim as a chunk across documents
-            at = 4 * rng.randint(0, max(len(words) // 4, 1))
+            at = 20 * rng.randint(0, max(len(words) // 20, 1))
             words[at:at] = boiler.split()
         rows.append((doc_id, " ".join(words)))
 
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r["id"]: (r["n_chunks"], r["n_boiler"], r["clean_text"])
-        for r in boilerplate_chunk_removal(
-            docs, chunk_words=4, min_doc_freq=2
-        ).collect()
+        for r in boilerplate_chunk_removal(docs, min_doc_freq=2).collect()
     }
-    want = _py_boilerplate(rows, 4, 2)
+    want = _py_boilerplate(rows, 20, 2)
     assert got == want
     assert sum(v[1] for v in got.values()) > 0  # non-trivial removal

@@ -86,12 +86,42 @@ def events(spark):
     return spark.createDataFrame(rows, EVENT_SHELL_SCHEMA)
 
 
-def test_failed_login_bursts(events):
-    hits = failed_login_bursts(events, threshold=5, window_minutes=10).collect()
+def _failures(ip, minutes, users, hour="2026-01-01T10"):
+    """Failed logins from ``ip``, one per ``(minute, user)``."""
+    return [
+        _event(
+            f"{hour}:{m:02d}:00+00:00",
+            summary="fail",
+            success=False,
+            sourceipaddress=ip,
+            user=user,
+        )
+        for m, user in zip(minutes, users)
+    ]
+
+
+def test_failed_login_bursts(spark):
+    """The defaults: >= 5 failures in one 10-minute tumbling window.
+    Each fixture IP sits one failure, or one window edge, from them."""
+    from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA
+
+    alice = ["alice@example.com"] * 5
+    rows = [
+        # 5 failures spread over [10:00, 10:10) -> burst; a 5-minute
+        # window would split them
+        *_failures("203.0.113.9", [0, 2, 4, 6, 9], alice),
+        # 4 failures in one window -> one short of the threshold
+        *_failures("198.51.100.7", [0, 1, 2, 3], alice),
+        # 5 failures across the 10:10 edge -> 3 + 2; a 15-minute or
+        # longer window would hold all five
+        *_failures("192.0.2.44", [7, 8, 9, 10, 11], alice),
+    ]
+    events = spark.createDataFrame(rows, EVENT_SHELL_SCHEMA)
+    hits = failed_login_bursts(events).collect()
     assert len(hits) == 1
     assert hits[0]["src_ip"] == "203.0.113.9"
     assert hits[0]["n_failures"] == 5
-    assert "gsuite" in hits[0]["sources"]
+    assert hits[0]["sources"] == ["gsuite"]
 
 
 def test_first_seen_ips(events):
@@ -153,101 +183,88 @@ def test_rare_event_scores_collapse_ids(events):
 
 
 def test_password_spray(spark):
+    """The defaults: >= 5 accounts and <= 3 failures per account in one
+    60-minute window.  Each fixture IP sits one account, one failure
+    or one window edge from them."""
     from defenda_data_lake_spark.detections import password_spray
     from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA
 
+    users = [f"user{a}@example.com" for a in range(6)]
     rows = [
-        # sprayer: 6 accounts, 1 failure each, same hour
-        *[
-            _event(
-                f"2026-02-01T08:{10 + i:02d}:00+00:00",
-                summary="fail",
-                success=False,
-                sourceipaddress="203.0.113.50",
-                user=f"user{i}@example.com",
-            )
-            for i in range(6)
-        ],
-        # brute-forcer: 6 failures against ONE account -> excluded by
-        # the attempts-per-account ceiling? No — 6 <= 1 * 3 fails, so
-        # n_accounts=1 < min_accounts excludes it first
-        *[
-            _event(
-                f"2026-02-01T09:{10 + i:02d}:00+00:00",
-                summary="fail",
-                success=False,
-                sourceipaddress="198.51.100.99",
-                user="victim@example.com",
-            )
-            for i in range(6)
-        ],
-        # noisy-but-legit: 5 accounts but hammering (4 tries each)
-        *[
-            _event(
-                f"2026-02-01T10:{(i * 2) % 60:02d}:00+00:00",
-                summary="fail",
-                success=False,
-                sourceipaddress="192.0.2.200",
-                user=f"svc{i % 5}@example.com",
-            )
-            for i in range(20)
-        ],
+        # sprayer: 5 accounts x 3 failures in [08:00, 09:00) -> hit;
+        # account 4 only in the last minutes, so a 30-minute window
+        # sees 4 accounts
+        *_failures(
+            "203.0.113.50",
+            [a * 3 + k for a in range(4) for k in range(3)] + [57, 58, 59],
+            [users[a] for a in range(5) for _ in range(3)],
+            hour="2026-02-01T08",
+        ),
+        # 4 accounts, one failure each -> one account short
+        *_failures("198.51.100.99", [1, 2, 3, 4], users, hour="2026-02-01T08"),
+        # 5 accounts, 16 failures -> one failure over 5 x 3
+        *_failures(
+            "192.0.2.200",
+            range(16),
+            [users[a % 5] for a in range(16)],
+            hour="2026-02-01T10",
+        ),
+        # 6 accounts across the 13:00 edge -> 3 + 3; a 120-minute
+        # window would hold all six
+        *_failures("198.51.100.120", [50, 54, 58], users[:3], "2026-02-01T12"),
+        *_failures("198.51.100.120", [1, 5, 9], users[3:], "2026-02-01T13"),
     ]
     events = spark.createDataFrame(rows, EVENT_SHELL_SCHEMA)
-    hits = password_spray(
-        events, min_accounts=5, max_per_account=3, window_minutes=60
-    ).collect()
+    hits = password_spray(events).collect()
     assert len(hits) == 1
     assert hits[0]["src_ip"] == "203.0.113.50"
-    assert hits[0]["n_accounts"] == 6
-    assert hits[0]["n_failures"] == 6
+    assert hits[0]["n_accounts"] == 5
+    assert hits[0]["n_failures"] == 15
 
 
 def test_beaconing_candidates(spark):
+    """The defaults: >= 10 events whose gaps have a coefficient of
+    variation <= 0.2.  Each fixture pair sits one event, or 0.01 of
+    CV, from them."""
+    from datetime import datetime, timedelta, timezone
+
     from defenda_data_lake_spark.detections import beaconing_candidates
     from defenda_data_lake_spark.schema import EVENT_SHELL_SCHEMA
 
+    def flows(src, dst, gaps):
+        t = datetime(2026, 3, 1, tzinfo=timezone.utc)
+        out = []
+        for gap in [0, *gaps]:
+            t += timedelta(seconds=gap)
+            out.append(
+                _event(
+                    t.isoformat(),
+                    category="netflow",
+                    summary="flow",
+                    sourceipaddress=src,
+                    destinationipaddress=dst,
+                )
+            )
+        return out
+
     rows = [
-        # beacon: exactly every 60s, 12 callbacks
-        *[
-            _event(
-                f"2026-03-01T00:{i:02d}:00+00:00",
-                category="netflow",
-                summary="flow",
-                sourceipaddress="10.0.0.5",
-                destinationipaddress="203.0.113.200",
-            )
-            for i in range(12)
-        ],
-        # human-ish: irregular gaps (same count)
-        *[
-            _event(
-                f"2026-03-01T01:{m:02d}:{s:02d}+00:00",
-                category="netflow",
-                summary="flow",
-                sourceipaddress="10.0.0.9",
-                destinationipaddress="198.51.100.30",
-            )
-            for m, s in [(0, 0), (0, 11), (2, 37), (3, 2), (7, 55), (8, 0),
-                         (13, 40), (14, 2), (21, 8), (22, 0), (30, 30), (31, 0)]
-        ],
-        # regular but too few events
-        *[
-            _event(
-                f"2026-03-01T02:{i:02d}:00+00:00",
-                category="netflow",
-                summary="flow",
-                sourceipaddress="10.0.0.7",
-                destinationipaddress="192.0.2.9",
-            )
-            for i in range(4)
-        ],
+        # 10 callbacks every 60 s -> hit
+        *flows("10.0.0.5", "203.0.113.200", [60] * 9),
+        # 9 callbacks every 60 s -> one event short
+        *flows("10.0.0.7", "192.0.2.9", [60] * 8),
+        # gaps 100 +- 19 s: CV 0.19 -> hit
+        *flows("10.0.0.8", "198.51.100.31", [81, 119] * 5),
+        # gaps 100 +- 21 s: CV 0.21 -> too irregular
+        *flows("10.0.0.9", "198.51.100.30", [79, 121] * 5),
     ]
     events = spark.createDataFrame(rows, EVENT_SHELL_SCHEMA)
-    hits = beaconing_candidates(events, min_events=10, max_cv=0.2).collect()
-    assert len(hits) == 1
-    h = hits[0]
-    assert (h["src_ip"], h["dst_ip"]) == ("10.0.0.5", "203.0.113.200")
-    assert h["n_intervals"] == 11
-    assert h["mean_gap_s"] == 60.0
-    assert h["cv"] == 0.0
+    hits = {
+        (h["src_ip"], h["dst_ip"]): h
+        for h in beaconing_candidates(events).collect()
+    }
+    assert set(hits) == {("10.0.0.5", "203.0.113.200"), ("10.0.0.8", "198.51.100.31")}
+    regular = hits[("10.0.0.5", "203.0.113.200")]
+    assert regular["n_intervals"] == 9
+    assert regular["mean_gap_s"] == 60.0
+    assert regular["cv"] == 0.0
+    assert hits[("10.0.0.8", "198.51.100.31")]["cv"] == pytest.approx(0.19)

@@ -145,9 +145,7 @@ def test_sampled_diff_estimates_full_report(spark):
     ).filter(F.col("k") % 4 != 1)       # %4==1 keys -> 'removed'
     est = {
         r["diff_type"]: r["est_rows"]
-        for r in sampled_snapshot_diff_summary(
-            old, new, ["k"], prefix_hex=1
-        ).collect()
+        for r in sampled_snapshot_diff_summary(old, new, ["k"]).collect()
     }
     exact = {
         r["diff_type"]: r["n_rows"]
@@ -155,55 +153,6 @@ def test_sampled_diff_estimates_full_report(spark):
     }
     for t, truth in exact.items():
         assert abs(est[t] - truth) / truth < 0.25, (t, est[t], truth)
-
-
-def test_bucketed_diff_is_shuffle_free(spark, tmp_path):
-    """SCALING.md's claim, proven: when both snapshots are bucketed on
-    the key, snapshot_diff's full-outer sort-merge join runs over
-    co-located buckets with NO exchange of either side."""
-    import uuid
-
-    db = f"diffbkt_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    try:
-        base = spark.range(0, 2000).select(
-            F.col("id").alias("k"),
-            (F.col("id") % 7).cast("string").alias("v"),
-        )
-        for name, df in (
-            ("old", base.filter(F.col("k") % 13 != 0)),
-            (
-                "new",
-                base.filter(F.col("k") % 17 != 0).withColumn(
-                    "v",
-                    F.when(F.col("k") % 5 == 0, F.lit("X")).otherwise(
-                        F.col("v")
-                    ),
-                ),
-            ),
-        ):
-            (
-                df.write.mode("overwrite")
-                .bucketBy(8, "k")
-                .sortBy("k")
-                .saveAsTable(f"{db}.{name}")
-            )
-        old = spark.table(f"{db}.old")
-        new = spark.table(f"{db}.new")
-        d = snapshot_diff(old, new, ["k"], null_safe_keys=False)
-        d.collect()
-        plan = d._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        assert "FullOuter" in plan
-        assert "Exchange" not in plan
-        # and the result is still correct
-        got = {
-            r["diff_type"]
-            for r in d.filter(F.col("diff_type") != "unchanged").collect()
-        }
-        assert got == {"added", "removed", "modified"}
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 def test_diff_empty_sides(spark):

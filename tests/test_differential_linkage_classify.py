@@ -53,21 +53,18 @@ def test_edit_distance_pairs_differential(spark):
     from defenda_data_lake_spark.operators.linkage import edit_distance_pairs
 
     docs = _linkage_corpus()
-    kw = dict(block_tokens=3, prefix_len=24, max_distance=6, max_block_rows=1000)
     df = spark.createDataFrame(docs, ["doc_id", "text"])
 
-    got = {
-        (r.id_a, r.id_b): r.distance
-        for r in edit_distance_pairs(df, "doc_id", "text", neighbor_window=None, **kw).collect()
-    }
+    got = {(r.id_a, r.id_b): r.distance for r in edit_distance_pairs(df).collect()}
 
-    # pure-Python reference: same blocking, all pairs, same prefixes
+    # pure-Python reference: same blocking (3 tokens), all pairs, same
+    # 64-char prefixes, distance <= 8
     sides = []
     for i, text in docs:
         norm = _norm(text)
         if not norm:
             continue
-        pfx = norm[:24]
+        pfx = norm[:64]
         blk = " ".join(norm.split(" ")[:3])
         sides.append((i, pfx, blk))
     want = {}
@@ -78,7 +75,7 @@ def test_edit_distance_pairs_differential(spark):
             if ba != bb:
                 continue
             d = _lev(pa, pb)
-            if d <= 6:
+            if d <= 8:
                 want[(min(ia, ib), max(ia, ib))] = d
     assert got == want and len(want) > 10  # the corpus must exercise links
 
@@ -87,14 +84,10 @@ def test_neighborhood_pairs_subset_of_allpairs(spark):
     from defenda_data_lake_spark.operators.linkage import edit_distance_pairs
 
     df = spark.createDataFrame(_linkage_corpus(seed=11), ["doc_id", "text"])
-    kw = dict(block_tokens=3, prefix_len=24, max_distance=6, max_block_rows=1000)
-    allp = {
-        (r.id_a, r.id_b): r.distance
-        for r in edit_distance_pairs(df, "doc_id", "text", neighbor_window=None, **kw).collect()
-    }
+    allp = {(r.id_a, r.id_b): r.distance for r in edit_distance_pairs(df).collect()}
     near = {
         (r.id_a, r.id_b): r.distance
-        for r in edit_distance_pairs(df, "doc_id", "text", neighbor_window=10, **kw).collect()
+        for r in edit_distance_pairs(df, neighbor_window=10).collect()
     }
     assert set(near) <= set(allp)
     assert all(allp[k] == v for k, v in near.items())

@@ -6,6 +6,7 @@ import os
 
 import pytest
 
+from defenda_data_lake_spark.plans import catalog_shared
 from defenda_data_lake_spark.plans.catalog import (
     CATALOG,
     _T_CACHE,
@@ -56,15 +57,17 @@ def test_cached_plan_scans_memory(spark, cold_cache):
     assert len(live_scans) == plan.count("FileScan parquet")
 
 
-def test_size_budget_skips_big_tables(spark, cold_cache):
-    cached = warm_table_cache(spark, SF_DIR, max_bytes=1)
+def test_size_budget_skips_big_tables(spark, cold_cache, monkeypatch):
+    # every fixture table is over a 1-byte budget
+    monkeypatch.setattr(catalog_shared, "CACHE_BUDGET_BYTES", 1)
+    cached = warm_table_cache(spark, SF_DIR)
     assert cached == {}
     assert not any(
         df.storageLevel.useMemory for df in _T_CACHE.values()
     )
 
 
-def test_derived_view_memoizes_pins_and_clears(spark, cold_cache):
+def test_derived_view_memoizes_pins_and_clears(spark, cold_cache, monkeypatch):
     """derived_view: values identical to an uncached build, the second
     call reuses the pinned plan (memoized), and over-budget sources
     return unpinned; clear_table_cache forgets and unpersists."""
@@ -94,8 +97,9 @@ def test_derived_view_memoizes_pins_and_clears(spark, cold_cache):
     def build2(s, d):
         return build(s, d).select("k", "event_type")
 
+    monkeypatch.setattr(catalog_shared, "CACHE_BUDGET_BYTES", 1)
     big = derived_view(
-        spark, SF_DIR, "ev_k_unpinned", build2, source_table="events", max_bytes=1
+        spark, SF_DIR, "ev_k_unpinned", build2, source_table="events"
     )
     assert not big.storageLevel.useMemory
     assert sorted(map(tuple, big.collect())) == sorted(
@@ -146,12 +150,13 @@ def test_clear_leaves_nonwarm_sessions_alone(spark, cold_cache):
     spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
 
 
-def test_clear_restores_guard_even_with_empty_cache(spark, cold_cache):
+def test_clear_restores_guard_even_with_empty_cache(spark, cold_cache, monkeypatch):
     """ADVICE r11, converse case: warm_table_cache that cached ZERO
     tables (budget excludes everything) still set the conf, so
     clear_table_cache must still restore it."""
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
-    cached = warm_table_cache(spark, SF_DIR, max_bytes=0)
+    monkeypatch.setattr(catalog_shared, "CACHE_BUDGET_BYTES", 0)
+    cached = warm_table_cache(spark, SF_DIR)
     assert not cached and not _T_CACHE
     assert (
         spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")

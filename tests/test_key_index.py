@@ -301,13 +301,3 @@ def test_subclasses_of_built_ins_leave_no_index(tmp_path):
     log: list = []
     result = run_pipeline({"A": 1}, [plugin, _Spy(50, log)])
     assert result["a"] == 1 and log == [False]
-
-
-def test_shared_metadata_does_not_leak_an_index():
-    from defenda_data_lake_spark.operators.plugins import GsuiteLogin
-
-    # a stale index claiming a "kind" key must not route the event
-    metadata = {KEY_INDEX: ({"kind"}, None)}
-    result = run_pipeline({"a": 1}, [GsuiteLogin()], metadata)
-    assert "gsuite_login" not in result["plugins"]
-    assert KEY_INDEX not in metadata

@@ -35,7 +35,7 @@ def test_edit_distance_links_typos(spark):
     )
     got = {
         (r.id_a, r.id_b): r.distance
-        for r in edit_distance_pairs(df, "doc_id", "text", max_distance=3).collect()
+        for r in edit_distance_pairs(df).collect()
     }
     assert got == {(1, 2): 1}
 
@@ -50,21 +50,23 @@ def test_edit_distance_threshold_is_exact_distance(spark):
             (2, "alpha beta gamma delt"),  # 1 deletion after normalize
         ],
     )
-    rows = edit_distance_pairs(df, "doc_id", "text", max_distance=5).collect()
+    rows = edit_distance_pairs(df).collect()
     assert [(r.id_a, r.id_b, r.distance) for r in rows] == [(1, 2, 1)]
 
 
 def test_degenerate_block_cap_drops_oversized_block(spark):
-    # 30 identical docs: one block of 30 -> quadratic pairs unless
-    # capped; with the cap at 10 the whole block is dropped while the
-    # small block still links
-    rows = [(i, "same boiler plate text") for i in range(30)]
-    rows += [(100, "rare unique doc body"), (101, "rare unique doc bodyx")]
-    df = _docs(spark, rows)
-    got = edit_distance_pairs(
-        df, "doc_id", "text", max_distance=3, max_block_rows=10
-    ).collect()
-    assert [(r.id_a, r.id_b) for r in got] == [(100, 101)]
+    # 1001 identical docs: one block one row over the 1000-row cap ->
+    # half a million pairs unless capped; capped, the whole block is
+    # dropped while the small block still links, and a block AT the
+    # cap still links
+    rows = [(i, "same boiler plate text") for i in range(1001)]
+    rows += [(5000 + i, "capped but kept") for i in range(1000)]
+    rows += [(9000, "rare unique doc body"), (9001, "rare unique doc bodyx")]
+    pairs = edit_distance_pairs(_docs(spark, rows))
+    at_cap = pairs.filter(F.col("id_a").between(5000, 8999)).count()
+    assert at_cap == 1000 * 999 // 2
+    got = pairs.filter(~F.col("id_a").between(5000, 8999)).collect()
+    assert [(r.id_a, r.id_b) for r in got] == [(9000, 9001)]
 
 
 def test_q102_plan_no_cartesian_one_exchange(spark):
@@ -113,35 +115,42 @@ def test_nb_null_label_treated_negative(spark):
     # oracle's CASE ... ELSE 0), not silently vanish from the counts:
     # 'nullword' appears only in the NULL-labeled doc, so a doc made of
     # it must score negative
+    # (doc ids 1, 3 and 4 all fall in the 80% train split)
     rows = [
         (1, "goodword goodword", 10),
-        (2, "nullword nullword", None),
+        (4, "nullword nullword", None),
         (3, "goodword nullword", 10),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, flag long")
+    assert df.filter(train_split_expr("doc_id")).count() == 3
     scored = {
         r.doc_id: r.score
-        for r in nb_quality_scores(
-            df, F.col("flag") > 0, train_pct=10000
-        ).collect()
+        for r in nb_quality_scores(df, F.col("flag") > 0).collect()
     }
-    assert scored[2] < 0 < scored[1]
+    assert scored[4] < 0 < scored[1]
 
 
 def test_train_split_shares_hash_with_sampling_split(spark):
-    # the classifier's split reuses sampling.hash_bucket: selecting the
-    # LOW pct buckets equals with_split's test set at the same fraction
-    # (with_split puts low buckets in 'test'; train_split_expr keeps
-    # low buckets — same hash, complementary orientation)
+    # the classifier's split reuses sampling.hash_bucket: both keep the
+    # LOW buckets, so under the same salt with_split's 10% test set is
+    # inside the classifier's 80% train split (with_split puts low
+    # buckets in 'test'; train_split_expr keeps low buckets — same
+    # hash, complementary orientation)
     from defenda_data_lake_spark.operators.sampling import with_split
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = docs.filter(train_split_expr("doc_id", salt="s", train_pct=1000))
-    b = with_split(docs, "doc_id", test_fraction=0.1, salt="s").filter(
-        F.col("split") == "test"
+    a = docs.filter(train_split_expr("doc_id")).select("doc_id")
+    b = (
+        with_split(docs, "doc_id", salt="nbsplit")
+        .filter(F.col("split") == "test")
+        .select("doc_id")
     )
-    assert a.select("doc_id").exceptAll(b.select("doc_id")).count() == 0
-    assert b.select("doc_id").exceptAll(a.select("doc_id")).count() == 0
+    assert b.count() > 0
+    assert b.exceptAll(a).count() == 0
+    assert a.exceptAll(b).count() > 0
+    # under its own salt the same fraction picks other rows
+    other = with_split(docs, "doc_id").filter(F.col("split") == "test")
+    assert other.select("doc_id").exceptAll(a).count() > 0
 
 
 def test_q103_model_join_broadcasts(spark):
@@ -222,8 +231,8 @@ def test_nb_calibration_bins_partition_and_separate(spark):
         rows.append((i, "good clean prose words" if pos else "spam junk noise tokens",
                      1 if pos else 0))
     df = spark.createDataFrame(rows, ["doc_id", "text", "y"])
-    out = nb_calibration(df, F.col("y") == 1, bins=4).orderBy("bin").collect()
-    assert [r.bin for r in out] == [1, 2, 3, 4]
+    out = nb_calibration(df, F.col("y") == 1).orderBy("bin").collect()
+    assert [r.bin for r in out] == list(range(1, 11))
     n_test = df.filter(~train_split_expr("doc_id")).count()
     assert sum(r.n for r in out) == n_test
     # separable corpus: bottom bins all-negative, top bins all-positive
@@ -280,7 +289,7 @@ def test_nb_family_view_matches_standalone_operators(spark):
         fn123, _ = CATALOG["q123_classifier_calibration"]
         g_rows = [tuple(r) for r in fn123(spark, SF).collect()]
         w_rows = [
-            tuple(r) for r in nb_calibration(docs, label, bins=10)
+            tuple(r) for r in nb_calibration(docs, label)
             .orderBy("bin").collect()
         ]
         assert g_rows == w_rows

@@ -23,7 +23,7 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def books(emb):
-    return pq_train(emb, m=4, k=16, iterations=2, dim=64)
+    return pq_train(emb, dim=64)
 
 
 def test_codebook_shapes(books):
@@ -53,7 +53,7 @@ def test_adc_recall_vs_brute(emb, books, spark):
     queries = [(int(ids[i]), [float(x) for x in mat[i]]) for i in range(5)]
 
     codes = pq_encode(emb, books)
-    got = pq_topk(codes, queries, books, k_top=10)
+    got = pq_topk(codes, queries, books)
     by_q = {}
     for r in got.collect():
         by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -69,16 +69,16 @@ def test_adc_recall_vs_brute(emb, books, spark):
 
 def test_rejects_bad_m(emb):
     with pytest.raises(ValueError):
-        pq_train(emb, m=5, k=4, iterations=1, dim=64)
+        pq_train(emb, dim=62)  # 4 subspaces do not divide 62
 
 
 def test_encode_id_col_named_like_an_intermediate(emb, books):
-    """A caller column named like pq_encode's bound distance arrays
-    must not be shadowed by them."""
+    """An input column named like pq_encode's bound distance arrays
+    does not shadow them."""
     want = {r["vec_id"]: tuple(r["pq_code"]) for r in pq_encode(emb, books).collect()}
-    renamed = emb.withColumnRenamed("vec_id", "__pq_da0")
+    clashing = emb.withColumn("__pq_da0", F.lit(7))
     got = {
-        r["__pq_da0"]: tuple(r["pq_code"])
-        for r in pq_encode(renamed, books, id_col="__pq_da0").collect()
+        r["vec_id"]: tuple(r["pq_code"])
+        for r in pq_encode(clashing, books).collect()
     }
     assert got == want

@@ -294,10 +294,10 @@ def test_bpe_learner_invariants(words, rnd):
     for w in words:
         wc[w] = wc.get(w, 0) + 1
     top = sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))
-    merges = learn_bpe(top, n_merges=8)
+    merges = learn_bpe(top)
     shuffled = list(top)
     rnd.shuffle(shuffled)
-    assert learn_bpe(shuffled, n_merges=8) == merges
+    assert learn_bpe(shuffled) == merges
     for w in wc:
         toks = tokenize_py(w, merges)
         assert "".join(toks) == w, (w, toks)
@@ -319,7 +319,7 @@ def test_full_token_accounting_py_total_covers_everything(text):
         learn_bpe,
     )
 
-    merges = learn_bpe([("the", 5), ("hello", 3)], n_merges=4)
+    merges = learn_bpe([("the", 5), ("hello", 3)])
     acc = full_token_accounting_py(text, merges)
     assert all(v >= 0 for v in acc.values())
     assert (

@@ -12,7 +12,7 @@ Covered claims:
   octet rules on the adversarial boundary set;
 * ``_uuid4_str`` is a valid RFC-4122 version-4 UUID string;
 * fused ``pq_train`` returns the SAME codebooks as the per-subspace
-  ``kmeans_train`` loop it replaced.
+  Lloyd loop (``clustering._lloyd``) it replaced.
 """
 
 from __future__ import annotations
@@ -159,61 +159,33 @@ def test_fast_uuid4_is_valid_rfc4122_v4():
 
 
 def test_pq_train_fused_matches_per_subspace_kmeans(spark):
-    from defenda_data_lake_spark.operators.clustering import kmeans_train
+    from defenda_data_lake_spark.operators.clustering import _lloyd
     from defenda_data_lake_spark.operators.pq import pq_train
+    from defenda_data_lake_spark.utils.partitioning import (
+        ensure_min_parallelism,
+        kernel_parallelism,
+    )
     from pyspark.sql import functions as F
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    fused = pq_train(df, m=2, k=4, iterations=2, dim=8)
+    fused = pq_train(df, dim=8)
 
+    # one Lloyd run per 2-wide subspace: 16 centroids, 2 iterations
     reference = []
-    dsub = 4
-    for s in range(2):
-        sliced = df.select(
-            F.col("vec_id"),
-            F.slice(F.col("embedding"), s * dsub + 1, dsub).alias("embedding"),
-        )
-        reference.append(
-            kmeans_train(sliced, k=4, iterations=2, quantize=9)
-        )
+    for s in range(4):
+        sliced = ensure_min_parallelism(
+            df.select(
+                F.col("vec_id").alias("id"),
+                F.slice(F.col("embedding"), s * 2 + 1, 2).alias("vec"),
+            ),
+            kernel_parallelism(df),
+        ).cache()
+        reference.append(_lloyd(sliced, 16, 2))
+        sliced.unpersist()
     assert fused == reference
-
-
-# ------------------------------------- materialized triangle counting
-
-
-def test_triangle_counts_materialized_matches_lazy(spark):
-    """The round-12 ``materialize`` knob on ``triangle_counts`` pins
-    the edge list and the oriented relation with localCheckpoint
-    (q101's plan re-ran its MinHash candidate stage and 60 exchanges
-    otherwise).  Pure integer counting: the pinned and fully lazy
-    forms must agree row-for-row."""
-    from defenda_data_lake_spark.operators.graph import (
-        symmetrize,
-        triangle_counts,
-    )
-
-    rng = random.Random(12)
-    raw = [(rng.randrange(30), rng.randrange(30)) for _ in range(70)]
-    raw = [(a, b) for a, b in raw if a != b]
-    edges = symmetrize(
-        spark.createDataFrame(raw, "id_a long, id_b long"),
-        src="id_a",
-        dst="id_b",
-    )
-
-    def as_map(df):
-        return {
-            r["node_id"]: (r["degree"], r["triangles"], r["clustering"])
-            for r in df.collect()
-        }
-
-    assert as_map(triangle_counts(edges, materialize=True)) == as_map(
-        triangle_counts(edges, materialize=False)
-    )
 
 
 # --------------------------------------- pagerank symmetric-input knob
@@ -239,6 +211,6 @@ def test_pagerank_symmetric_input_matches_general_path(spark):
     def as_map(df):
         return {r["node_id"]: r["rank_e12"] for r in df.collect()}
 
-    general = as_map(pagerank(edges, iterations=3))
-    fast = as_map(pagerank(edges, iterations=3, symmetric_input=True))
+    general = as_map(pagerank(edges))
+    fast = as_map(pagerank(edges, symmetric_input=True))
     assert fast == general

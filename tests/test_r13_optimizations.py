@@ -41,7 +41,7 @@ def test_dlit_nonfinite_values_parse_and_roundtrip(spark, mod):
 
 
 def test_kmeans_with_nonfinite_embedding_component(spark):
-    """A NaN component in one of the k lowest-id vectors becomes a NaN
+    """A NaN component in one of the 8 lowest-id vectors becomes a NaN
     centroid component; the assignment must still build and run (the
     old F.lit form did — the SQL-text rewrite regressed it to an
     AnalysisException until the _dlit guard)."""
@@ -51,7 +51,7 @@ def test_kmeans_with_nonfinite_embedding_component(spark):
         (i, [float(i % 5), float((i * 3) % 7)]) for i in range(1, 30)
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = kmeans_assign(df, k=3, iterations=2).collect()
+    got = kmeans_assign(df, iterations=2).collect()
     assert len(got) == 30
     # NaN-propagating, not failing: the NaN vector's distances are all
     # NaN, its best is NaN, and Spark SQL's NaN = NaN is TRUE (its
@@ -111,51 +111,35 @@ def test_pagerank_broadcast_ranks_matches(spark):
     """VERDICT r12 item 6: the broadcast-ranks dataflow (dst-partitioned
     pinned edges, |V| tables on broadcasts, zero per-round exchanges)
     computes the identical exact-integer ranks as the shuffle form —
-    on ASYMMETRIC input with dangling nodes and varied out-degrees,
-    both materialized and lazy."""
+    on ASYMMETRIC input with dangling nodes and varied out-degrees."""
     from defenda_data_lake_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (5, 4), (1, 6), (7, 3)],
         ["src", "dst"],
     )
-    base = sorted(
-        map(tuple, pagerank(edges, iterations=4, broadcast_ranks=False).collect())
-    )
-    fast = sorted(
-        map(tuple, pagerank(edges, iterations=4, broadcast_ranks=True).collect())
-    )
+    base = sorted(map(tuple, pagerank(edges).collect()))
+    fast = sorted(map(tuple, pagerank(edges, broadcast_ranks=True).collect()))
     assert fast == base
-    lazy = sorted(
-        map(
-            tuple,
-            pagerank(
-                edges, iterations=4, broadcast_ranks=True, materialize=False
-            ).collect(),
-        )
-    )
-    assert lazy == base
 
 
 def test_semdedup_max_group_bytes_parity(spark):
-    """The byte-budget spelling is output-identical to the rows cap
-    and the uncapped form (the cap only changes sub-bucketing)."""
+    """Every byte budget is output-identical to the uncapped form (the
+    cap only changes sub-bucketing), and a budget below 1 is refused."""
     from defenda_data_lake_spark.operators.clustering import semdedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = sorted(map(tuple, semdedup(emb, k=4, iterations=2).collect()))
+    base = sorted(map(tuple, semdedup(emb).collect()))
     for budget in (1, 2048 * 16 * 8, 64 << 20):  # cap 1 / small / 4032
         got = sorted(
             map(
                 tuple,
-                semdedup(
-                    emb, k=4, iterations=2, max_group_bytes=budget
-                ).collect(),
+                semdedup(emb, max_group_bytes=budget).collect(),
             )
         )
         assert got == base, f"budget={budget} diverged"
     with pytest.raises(ValueError):
-        semdedup(emb, k=4, iterations=2, max_group_rows=8, max_group_bytes=8)
+        semdedup(emb, max_group_bytes=0)
 
 
 # --------------------------------------------- symmetrize (explode form)

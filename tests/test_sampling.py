@@ -49,7 +49,7 @@ def test_salt_redraws_assignment(spark):
 
 def test_with_split_partitions_completely(spark):
     df = _docs(spark)
-    rows = with_split(df, "doc_id", test_fraction=0.25).collect()
+    rows = with_split(df, "doc_id").collect()
     by_split = {}
     for r in rows:
         by_split.setdefault(r["split"], set()).add(r["doc_id"])
@@ -191,13 +191,16 @@ def _mk_budget_df(spark, n=500, seed_mod=97):
 
 
 def test_token_budget_absolute_matches_naive(spark):
+    """A ratio budget keeps the naive prefix at the absolute token
+    count it implies: 10·cum <= 3·total <=> cum <= 3·total // 10."""
     from defenda_data_lake_spark.operators.sampling import token_budget_select
 
     df = _mk_budget_df(spark)
     rows = [(r["id"], r["key"], r["tok"]) for r in df.collect()]
-    expect = _naive_budget(rows, 3000)
+    total = sum(t for _, _, t in rows)
+    expect = _naive_budget(rows, 3 * total // 10)
     got = token_budget_select(
-        df, "tok", "key", tie_cols=["id"], budget_tokens=3000, buckets=8
+        df, "tok", "key", tie_cols=["id"], budget_ratio=(3, 10), buckets=8
     )
     assert sorted((r["id"], r["cum_tokens"]) for r in got.collect()) == sorted(
         expect
@@ -224,16 +227,16 @@ def test_token_budget_partitioning_invariant(spark):
 
     df = _mk_budget_df(spark, n=800)
     a = token_budget_select(
-        df, "tok", "key", tie_cols=["id"], budget_tokens=5000, buckets=16
+        df, "tok", "key", tie_cols=["id"], budget_ratio=(1, 3), buckets=16
     )
     b = token_budget_select(
         df.repartition(13), "tok", "key", tie_cols=["id"],
-        budget_tokens=5000, buckets=3,
+        budget_ratio=(1, 3), buckets=3,
     )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_token_budget_ascending_and_null_rows(spark):
+def test_token_budget_null_rows_excluded(spark):
     from defenda_data_lake_spark.operators.sampling import token_budget_select
 
     df = spark.createDataFrame(
@@ -241,13 +244,13 @@ def test_token_budget_ascending_and_null_rows(spark):
         "id long, key double, tok long",
     )
     got = token_budget_select(
-        df, "tok", "key", tie_cols=["id"], descending=False,
-        budget_tokens=20, buckets=4,
+        df, "tok", "key", tie_cols=["id"], budget_ratio=(2, 3), buckets=4
     )
-    # ascending: key 1.0 (id 2) then 3.0 (id 5); NULL key/tok excluded
+    # descending: key 5.0 (id 1) then 3.0 (id 5) fill 20 of the 30
+    # tokens; NULL key/tok rows are neither selected nor counted
     assert [(r["id"], r["cum_tokens"]) for r in
             sorted(got.collect(), key=lambda r: r["cum_tokens"])] == [
-        (2, 10), (5, 20)
+        (1, 10), (5, 20)
     ]
 
 
@@ -258,15 +261,11 @@ def test_token_budget_rejects_bad_args(spark):
 
     df = _mk_budget_df(spark, n=10)
     with pytest.raises(ValueError):
-        token_budget_select(df, "tok", "key")  # neither budget
-    with pytest.raises(ValueError):
-        token_budget_select(
-            df, "tok", "key", budget_tokens=5, budget_ratio=(1, 4)
-        )
+        token_budget_select(df, "tok", "key", budget_ratio=(-1, 4))
     with pytest.raises(ValueError):
         token_budget_select(df, "tok", "key", budget_ratio=(1, 0))
     with pytest.raises(ValueError):
-        token_budget_select(df, "tok", "key", budget_tokens=10, buckets=0)
+        token_budget_select(df, "tok", "key", budget_ratio=(1, 4), buckets=0)
 
 
 def test_token_budget_plan_no_global_window_on_data(spark):
@@ -274,7 +273,7 @@ def test_token_budget_plan_no_global_window_on_data(spark):
 
     df = _mk_budget_df(spark, n=2000)
     got = token_budget_select(
-        df, "tok", "key", tie_cols=["id"], budget_tokens=10_000, buckets=16
+        df, "tok", "key", tie_cols=["id"], budget_ratio=(1, 4), buckets=16
     )
     got.collect()
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -328,31 +327,6 @@ def test_group_token_budget_ratio_matches_naive(spark):
     )
 
 
-def test_group_token_budget_spec_dict(spark):
-    from defenda_data_lake_spark.operators.sampling import (
-        group_token_budget_select,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "en", 9.0, 10),
-            (2, "en", 8.0, 10),
-            (3, "en", 7.0, 10),
-            (4, "fr", 9.0, 10),
-            (5, "fr", 8.0, 10),
-            (6, "zz", 9.0, 10),  # not in spec -> contributes nothing
-        ],
-        "id long, g string, key double, tok long",
-    )
-    got = group_token_budget_select(
-        df, "tok", "key", "g", tie_cols=["id"],
-        budgets={"en": 20, "fr": 100},
-    )
-    kept = sorted((r["id"], r["cum_tokens"]) for r in got.collect())
-    # en: best two fit the 20-token cap; fr: both fit; zz: dropped
-    assert kept == [(1, 10), (2, 20), (4, 10), (5, 20)]
-
-
 def test_group_token_budget_rejects_bad_args(spark):
     import pytest
 
@@ -362,13 +336,9 @@ def test_group_token_budget_rejects_bad_args(spark):
 
     df = spark.createDataFrame([(1, "a", 1.0, 1)], "id long, g string, key double, tok long")
     with pytest.raises(ValueError):
-        group_token_budget_select(df, "tok", "key", "g")
+        group_token_budget_select(df, "tok", "key", "g", budget_ratio=(-1, 2))
     with pytest.raises(ValueError):
-        group_token_budget_select(
-            df, "tok", "key", "g", budgets={"a": 1}, budget_ratio=(1, 2)
-        )
-    with pytest.raises(ValueError):
-        group_token_budget_select(df, "tok", "key", "g", budgets={"a": -1})
+        group_token_budget_select(df, "tok", "key", "g", budget_ratio=(1, 0))
 
 
 def test_token_budget_monotone_in_budget(spark):
@@ -380,15 +350,15 @@ def test_token_budget_monotone_in_budget(spark):
 
     df = _mk_budget_df(spark, n=600)
     prev: set = set()
-    for budget in (1000, 4000, 9000):
+    for num in (1, 4, 9):
         ids = {
             r["id"]
             for r in token_budget_select(
                 df, "tok", "key", tie_cols=["id"],
-                budget_tokens=budget, buckets=8,
+                budget_ratio=(num, 10), buckets=8,
             ).collect()
         }
-        assert prev <= ids, (budget, prev - ids)
+        assert prev <= ids, (num, prev - ids)
         prev = ids
 
 
@@ -399,9 +369,10 @@ def test_token_budget_single_bucket_degenerate(spark):
 
     df = _mk_budget_df(spark, n=200)
     rows = [(r["id"], r["key"], r["tok"]) for r in df.collect()]
-    expect = _naive_budget(rows, 1500)
+    total = sum(t for _, _, t in rows)
+    expect = _naive_budget(rows, 3 * total // 10)
     got = token_budget_select(
-        df, "tok", "key", tie_cols=["id"], budget_tokens=1500, buckets=1
+        df, "tok", "key", tie_cols=["id"], budget_ratio=(3, 10), buckets=1
     )
     assert sorted((r["id"], r["cum_tokens"]) for r in got.collect()) == sorted(
         expect
@@ -417,7 +388,7 @@ def test_token_budget_empty_input(spark):
     df = _mk_budget_df(spark, n=10).filter(F.lit(False))
     assert (
         token_budget_select(
-            df, "tok", "key", tie_cols=["id"], budget_tokens=100, buckets=4
+            df, "tok", "key", tie_cols=["id"], budget_ratio=(1, 2), buckets=4
         ).count()
         == 0
     )

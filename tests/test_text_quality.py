@@ -80,7 +80,7 @@ def test_normalize_unicode_nfc_composes(spark):
         [(1, decomposed), (2, composed), (3, ligature), (4, None), (5, "plain")],
         ["doc_id", "text"],
     )
-    nfc = {r.doc_id: r.text for r in normalize_unicode(df, "text").collect()}
+    nfc = {r.doc_id: r.text for r in normalize_unicode(df).collect()}
     assert nfc[1] == composed == nfc[2]
     assert nfc[3] == ligature            # NFC preserves compatibility chars
     assert nfc[4] is None and nfc[5] == "plain"
@@ -88,31 +88,3 @@ def test_normalize_unicode_nfc_composes(spark):
     for i, t in [(1, decomposed), (2, composed), (3, ligature), (5, "plain")]:
         assert nfc[i] == unicodedata.normalize("NFC", t)
 
-    nfkc = {
-        r.doc_id: r.text
-        for r in normalize_unicode(df, "text", form="NFKC").collect()
-    }
-    assert nfkc[3] == "file"             # ligature folded
-
-
-def test_normalize_unicode_strip_accents(spark):
-    from defenda_data_lake_spark.operators.text import normalize_unicode
-
-    df = spark.createDataFrame(
-        [(1, "école française"), (2, "naïve")], ["doc_id", "text"]
-    )
-    got = {
-        r.doc_id: r.text
-        for r in normalize_unicode(df, "text", strip_accents=True).collect()
-    }
-    assert got == {1: "ecole francaise", 2: "naive"}
-
-
-def test_normalize_unicode_rejects_bad_form(spark):
-    import pytest as _pytest
-
-    from defenda_data_lake_spark.operators.text import normalize_unicode
-
-    df = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
-    with _pytest.raises(ValueError):
-        normalize_unicode(df, "text", form="NFX")
